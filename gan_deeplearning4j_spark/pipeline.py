@@ -9,13 +9,13 @@ Re-expression of the reference's distributed adversarial training:
   on their shard (map), then the driver takes the element-wise mean of worker
   parameters (reduce) — exactly ParameterAveragingTrainingMaster semantics
   (java:324-330, averagingFrequency=10, batchSizePerWorker=200). The map side
-  is ``applyInPandas`` over a worker-id grouping; the reduce side is the A1
-  aggregate (groupBy(layer,param,pos).avg) — or a driver-side numpy mean when
-  the collected weight set is tiny (it always is relative to data).
+  is ``repartition(n_workers).mapInPandas``: one task per worker, each
+  returning its trained tensors as one float32 buffer; the reduce side is a
+  fixed-order float64 mean of the N collected buffers in the driver.
 - J1 weight sync    → ``copy_weights_dict`` (name-mapped parameter copy,
   java:429-460/:474-510/:516-542); the DataFrame form lives in
   operators/weights.py.
-- O2 transfer learning → ``transfer_classifier``: freeze feature layers
+- O2 transfer learning → ``GanPipeline._fit_classifier``: freeze feature layers
   (lr=0, java:84 frozen_learning_rate + :350 setFeatureExtractor), drop the
   old head (:351 removeVertexKeepConnections), add a softmax(10) head
   (:352-363).
@@ -27,11 +27,10 @@ Re-expression of the reference's distributed adversarial training:
 - K8 RMSProp        → ``rmsprop_update`` (new RmsProp(lr, 1e-8, 1e-8),
   java:133; decay/epsilon defaults mirror the reference's).
 
-Training scope note: trainable layers are dense (+activations) — an MLP GAN.
-The conv/pool/upsample/batchnorm kernels are inference-complete (kernels.py)
-but their backward passes are future work; the reference's *distributed
-semantics* (map-fit, average-reduce, freeze, sync, observe) are fully
-re-expressed here and are architecture-independent.
+Training scope note: every layer kind trains — ``net_grads`` backpropagates
+through dense, conv2d, maxpool, upsample, batchnorm, reshape and flatten
+(kernels.backward), so both the MLP GAN and the ``dcgan`` conv topology are
+fitted by the same distributed round.
 """
 
 from __future__ import annotations
@@ -44,6 +43,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -126,10 +126,6 @@ def net_grads(
     return grads, loss
 
 
-# dense-only call sites and tests use the same generic implementation
-mlp_grads = net_grads
-
-
 def rmsprop_update(
     weights: Weights,
     grads: Weights,
@@ -158,43 +154,6 @@ def rmsprop_update(
             ).astype(np.float32)
 
 
-# ---------------------------------------------------------------------------
-# weights dict ⇄ long-form DataFrame (the J1/A1 data model)
-# ---------------------------------------------------------------------------
-
-WEIGHTS_SCHEMA = T.StructType(
-    [
-        T.StructField("layer", T.StringType()),
-        T.StructField("param", T.StringType()),
-        T.StructField("pos", T.IntegerType()),
-        T.StructField("value", T.DoubleType()),
-    ]
-)
-
-
-def weights_to_rows(weights: Weights) -> list[tuple]:
-    rows = []
-    for layer, params in weights.items():
-        for pname, arr in params.items():
-            for pos, v in enumerate(np.asarray(arr, dtype=np.float64).ravel()):
-                rows.append((layer, pname, pos, float(v)))
-    return rows
-
-
-def rows_to_weights(rows, shapes: dict[str, dict[str, tuple]]) -> Weights:
-    flat: dict[tuple[str, str], dict[int, float]] = {}
-    for layer, pname, pos, v in rows:
-        flat.setdefault((layer, pname), {})[pos] = v
-    out: Weights = {}
-    for (layer, pname), posmap in flat.items():
-        shape = shapes[layer][pname]
-        arr = np.zeros(int(np.prod(shape)), dtype=np.float32)
-        for pos, v in posmap.items():
-            arr[pos] = v
-        out.setdefault(layer, {})[pname] = arr.reshape(shape)
-    return out
-
-
 def copy_weights_dict(dst: Weights, src: Weights, layer_map: dict[str, str]) -> None:
     """J1 parameter copy, dict form (java:429-460). The DataFrame broadcast-
     join form is operators.weights.copy_weights; at weight scale (MB) the
@@ -206,7 +165,8 @@ def copy_weights_dict(dst: Weights, src: Weights, layer_map: dict[str, str]) -> 
 
 
 # ---------------------------------------------------------------------------
-# distributed fit (O3): map = local SGD per worker shard, reduce = A1 average
+# distributed fit (O3): map = local SGD per worker shard, reduce = mean of
+# the workers' parameter buffers
 # ---------------------------------------------------------------------------
 
 @dataclass
@@ -216,11 +176,24 @@ class Network:
     lr_by_layer: dict[str, float]
     cache: Weights = field(default_factory=dict)
 
-    def shapes(self) -> dict[str, dict[str, tuple]]:
-        return {
-            layer: {p: arr.shape for p, arr in params.items()}
-            for layer, params in self.weights.items()
-        }
+
+def rows_to_weights(rows, like: Weights) -> Weights:
+    """Decode one round's collected ``(worker, loss, params)`` rows: the
+    float64 element-wise mean of the workers' float32 buffers, summed in the
+    order given (worker order), cast to float32 and cut into arrays shaped
+    like ``like`` (whose iteration order is the buffers' layout)."""
+    flat = np.mean(
+        [np.frombuffer(r["params"], dtype=np.float32) for r in rows], axis=0, dtype=np.float64
+    ).astype(np.float32)
+    out: Weights = {}
+    pos = 0
+    for layer, params in like.items():
+        for pname, arr in params.items():
+            out.setdefault(layer, {})[pname] = flat[pos:pos + arr.size].reshape(arr.shape)
+            pos += arr.size
+    if pos != flat.size:
+        raise ValueError(f"parameter buffer holds {flat.size} values, layout expects {pos}")
+    return out
 
 
 def fit_distributed(
@@ -236,59 +209,52 @@ def fit_distributed(
     """One averaging round (averagingFrequency=local_steps, java:326):
     shard → local RMSProp steps per worker → element-wise parameter mean.
 
+    ``repartition(n_workers)`` deals the rows round-robin into N equal
+    shards; it is a user-sized exchange, so AQE never coalesces it and the
+    N local fits run as N tasks. Each worker (its partition id) seeds its
+    RNG with ``seed + worker`` and yields one row: its final loss and its
+    trainable tensors (layers with lr != 0) as one float32 buffer in
+    ``net.weights`` order. Frozen layers never leave the driver.
+
     Returns the mean final local loss across workers. Updates net.weights
     in place (the reference's TrainingMaster mutates the wrapped net).
     """
-    spark = df.sparkSession
     specs, lr_by_layer = net.specs, net.lr_by_layer
-    shapes = net.shapes()
-    bc_w = spark.sparkContext.broadcast(net.weights)
+    trainable = {l: ps for l, ps in net.weights.items() if lr_by_layer.get(l, 0.0) != 0.0}
+    layout = [(l, p) for l, ps in trainable.items() for p in ps]  # names only: arrays ride the broadcast
+    bc_w = df.sparkSession.sparkContext.broadcast(net.weights)
 
-    sharded = df.withColumn(
-        "__worker", F.pmod(F.xxhash64(F.monotonically_increasing_id(), F.lit(seed)), F.lit(n_workers))
-    )
-
-    out_schema = T.StructType(
-        [
-            T.StructField("layer", T.StringType()),
-            T.StructField("param", T.StringType()),
-            T.StructField("pos", T.IntegerType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("loss", T.DoubleType()),
-        ]
-    )
-
-    def local_fit(key, pdf):
+    def local_fit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        frames = [b for b in batches if len(b)]
+        if not frames:
+            return  # fewer rows than workers: this shard sits the round out
+        pdf = pd.concat(frames, ignore_index=True)
+        worker = TaskContext.get().partitionId()
         w = {l: {p: a.copy() for p, a in ps.items()} for l, ps in bc_w.value.items()}
         cache: Weights = {}
         x = np.stack(pdf[features_col].to_numpy()).astype(np.float32)
         y = np.stack(pdf[label_col].to_numpy()).astype(np.float32)
-        rng = np.random.default_rng(seed + int(key[0]))
+        rng = np.random.default_rng(seed + worker)
         loss = math.nan
         for _ in range(local_steps):
             idx = rng.choice(len(x), size=min(batch_size, len(x)), replace=False)
-            grads, loss = mlp_grads(x[idx], y[idx], specs, w)
+            grads, loss = net_grads(x[idx], y[idx], specs, w)
             rmsprop_update(w, grads, cache, lr_by_layer)
-        rows = weights_to_rows({l: w[l] for l in w if lr_by_layer.get(l, 0.0) != 0.0})
-        out = pd.DataFrame(rows, columns=["layer", "param", "pos", "value"])
-        out["loss"] = loss
-        return out
+        buf = np.concatenate([np.ravel(w[l][p]) for l, p in layout]).astype(np.float32)
+        yield pd.DataFrame({"worker": [worker], "loss": [loss], "params": [buf.tobytes()]})
 
-    long_form = sharded.groupBy("__worker").applyInPandas(local_fit, out_schema)
-    # A1: element-wise mean across workers (+ mean loss piggybacked)
-    averaged = (
-        long_form.groupBy("layer", "param", "pos")
-        .agg(F.avg("value").alias("value"), F.avg("loss").alias("loss"))
-        .collect()
+    rows = sorted(
+        df.repartition(n_workers)
+        .mapInPandas(local_fit, "worker int, loss double, params binary")
+        .collect(),
+        key=lambda r: r["worker"],
     )
-    mean_loss = float(averaged[0]["loss"]) if averaged else math.nan
-    updated = rows_to_weights(
-        [(r["layer"], r["param"], r["pos"], r["value"]) for r in averaged],
-        shapes,
-    )
-    net.weights.update(updated)
     bc_w.unpersist()
-    return mean_loss
+    if not rows:
+        return math.nan
+    for layer, params in rows_to_weights(rows, trainable).items():
+        net.weights[layer].update(params)
+    return float(np.mean([r["loss"] for r in rows]))
 
 
 # ---------------------------------------------------------------------------
@@ -315,36 +281,41 @@ class GanPipeline:
         gen_lr: float = 0.004,   # java:85 (gan_learning_rate drives gen)
         seed: int = DEFAULT_SEED,
     ):
+        dis_hidden = dis_hidden or [128, 64]
+        gen_hidden = gen_hidden or [64, 128]
+        self._wire(
+            build_mlp("dis", feature_dim, dis_hidden, 1, "sigmoid"),
+            build_mlp("gen", latent_dim, gen_hidden, feature_dim, "sigmoid"),
+            feature_dim, feature_dim, latent_dim, n_classes, dis_lr, gen_lr, seed,
+        )
+
+    def _wire(self, dis_specs, gen_specs, dis_input, feature_dim, latent_dim,
+              n_classes, dis_lr, gen_lr, seed) -> None:
+        """Build dis, gen and the gan stack (gen ⊕ frozen dis) from their
+        specs, plus the training state that ``fit`` carries across calls."""
         self.feature_dim = feature_dim
         self.latent_dim = latent_dim
         self.n_classes = n_classes
         self.seed = seed
-        dis_hidden = dis_hidden or [128, 64]
-        gen_hidden = gen_hidden or [64, 128]
-
-        dis_specs = build_mlp("dis", feature_dim, dis_hidden, 1, "sigmoid")
-        gen_specs = build_mlp("gen", latent_dim, gen_hidden, feature_dim, "sigmoid")
         self.dis = Network(
-            dis_specs,
-            init_weights(dis_specs, feature_dim, seed),
+            dis_specs, init_weights(dis_specs, dis_input, seed),
             {s.name: dis_lr for s in dis_specs},
         )
         self.gen = Network(
-            gen_specs,
-            init_weights(gen_specs, latent_dim, seed + 1),
+            gen_specs, init_weights(gen_specs, latent_dim, seed + 1),
             {s.name: gen_lr for s in gen_specs},
         )
         # gan = gen stack + dis stack with dis frozen (lr 0.0, java:84 + :277-308)
-        gan_specs = gen_specs + dis_specs
-        gan_weights = {**{k: {p: a.copy() for p, a in v.items()} for k, v in self.gen.weights.items()},
-                       **{k: {p: a.copy() for p, a in v.items()} for k, v in self.dis.weights.items()}}
+        gan_weights: Weights = {}
+        copy_weights_dict(gan_weights, self.gen.weights, {s.name: s.name for s in gen_specs})
+        copy_weights_dict(gan_weights, self.dis.weights, {s.name: s.name for s in dis_specs})
         self.gan = Network(
-            gan_specs,
-            gan_weights,
+            gen_specs + dis_specs, gan_weights,
             {**{s.name: gen_lr for s in gen_specs}, **{s.name: 0.0 for s in dis_specs}},
         )
         self.cv: Network | None = None
         self.history: list[dict] = []
+        self._rng = np.random.default_rng(seed)
 
     @classmethod
     def dcgan(
@@ -359,7 +330,7 @@ class GanPipeline:
     ) -> "GanPipeline":
         """The reference's conv topology family (dl4jGANComputerVision.java):
 
-        dis: (1,S,S) → conv5×5/2 F → conv5×5/2 2F → flatten → dense 1024 →
+        dis: (1,S,S) → conv5×5/2 F → conv5×5/2 2F → flatten → dense 256 →
              sigmoid(1)                                   (java:118-165)
         gen: latent → dense 2F·(S/4)² → reshape (2F,S/4,S/4) → up×2 →
              conv5×5 F → up×2 → conv5×5 1 sigmoid → flatten (java:173-221)
@@ -368,7 +339,8 @@ class GanPipeline:
         LayerSpec("...", "batchnorm"); kept out of the default topology for
         step-time economy — add them to the spec lists to match exactly.)
         """
-        assert side % 4 == 0, "side must be divisible by 4 (two stride/upsample 2s)"
+        if side % 4:
+            raise ValueError(f"side must be divisible by 4 (two stride/upsample 2s), got {side}")
         f = base_filters
         dis_specs = [
             LayerSpec("dis_reshape", "reshape", {"shape": (1, side, side)}),
@@ -389,29 +361,8 @@ class GanPipeline:
             LayerSpec("gen_flat", "flatten"),
         ]
         self = cls.__new__(cls)
-        self.feature_dim = side * side
-        self.latent_dim = latent_dim
-        self.n_classes = n_classes
-        self.seed = seed
-        self.dis = Network(
-            dis_specs, init_weights(dis_specs, (1, side, side), seed),
-            {s.name: dis_lr for s in dis_specs},
-        )
-        self.gen = Network(
-            gen_specs, init_weights(gen_specs, latent_dim, seed + 1),
-            {s.name: gen_lr for s in gen_specs},
-        )
-        gan_specs = gen_specs + dis_specs
-        gan_weights = {
-            **{k: {p: a.copy() for p, a in v.items()} for k, v in self.gen.weights.items()},
-            **{k: {p: a.copy() for p, a in v.items()} for k, v in self.dis.weights.items()},
-        }
-        self.gan = Network(
-            gan_specs, gan_weights,
-            {**{s.name: gen_lr for s in gen_specs}, **{s.name: 0.0 for s in dis_specs}},
-        )
-        self.cv = None
-        self.history = []
+        self._wire(dis_specs, gen_specs, (1, side, side), side * side, latent_dim,
+                   n_classes, dis_lr, gen_lr, seed)
         return self
 
     # -- O4 steps -----------------------------------------------------------
@@ -444,9 +395,12 @@ class GanPipeline:
         n_workers: int = 2,
         avg_freq: int = 10,         # averagingFrequency, java:326
     ) -> list[dict]:
-        """The adversarial alternation (java:408-621)."""
-        rng = np.random.default_rng(self.seed)
-        for epoch in range(epochs):
+        """The adversarial alternation (java:408-621). Resumable: the RNG and
+        the epoch count live on the pipeline, so ``fit(epochs=1)`` twice
+        trains exactly as ``fit(epochs=2)``."""
+        rng = self._rng
+        start = len(self.history)
+        for epoch in range(start, start + epochs):
             take = rng.choice(len(real), size=min(batch_rows, len(real)), replace=False)
             real_batch = real[take]
 
@@ -584,13 +538,23 @@ class GanPipeline:
 
     def checkpoint(self, spark: SparkSession, path: str) -> None:
         """Weights → parquet + config JSON (engine artifact format; replaces
-        ModelSerializer zips, java:605-618)."""
+        ModelSerializer zips, java:605-618).
+
+        ``{net}_weights.parquet`` holds one row per tensor: ``layer``,
+        ``param``, ``shape array<int>`` and ``value array<float>``, the
+        tensor's values in C order, so ``np.asarray(value, np.float32)
+        .reshape(shape)`` rebuilds it bitwise."""
+        schema = "layer string, param string, shape array<int>, value array<float>"
         os.makedirs(path, exist_ok=True)
         for name, net in [("dis", self.dis), ("gen", self.gen), ("gan", self.gan)] + (
             [("cv", self.cv)] if self.cv else []
         ):
-            rows = weights_to_rows(net.weights)
-            spark.createDataFrame(rows, WEIGHTS_SCHEMA).write.mode("overwrite").parquet(
+            rows = [
+                (layer, pname, list(arr.shape), np.ravel(arr).astype(np.float32).tolist())
+                for layer, params in net.weights.items()
+                for pname, arr in params.items()
+            ]
+            spark.createDataFrame(rows, schema).write.mode("overwrite").parquet(
                 f"{path}/{name}_weights.parquet"
             )
             cfg = [

@@ -3,13 +3,14 @@
 The reference's training loop is a bounded batch loop over minibatch files
 (dl4jGANComputerVision.java:408-621). The streaming re-expression treats each
 micro-batch as one TrainingMaster round: map = local RMSProp steps per worker
-shard, reduce = element-wise parameter mean (the A1 aggregate), with the
+shard, reduce = element-wise mean of the workers' parameter buffers, with the
 averaged weights carried across micro-batches in the driver-held Network —
 exactly the state the reference's TrainingMaster holds between `fit` calls.
 
-Scale shape: the per-batch work is ``fit_distributed`` (applyInPandas over
-worker shards — executors never see the full stream), the weight state is
-O(model), and the stream source provides backpressure/checkpointing. This is
+Scale shape: the per-batch work is ``fit_distributed`` (one mapInPandas task
+per round-robin worker shard — executors never see the full stream, and each
+returns one float32 buffer), the weight state is O(model), and the stream
+source provides backpressure/checkpointing. This is
 the `foreachBatch` variant SURVEY §2.9 O4 defers: deterministic driver loop
 first, streaming facade on top.
 """

@@ -13,9 +13,8 @@ from gan_deeplearning4j_spark.pipeline import (
     Network,
     build_mlp,
     fit_distributed,
-    mlp_grads,
+    net_grads,
     rmsprop_update,
-    weights_to_rows,
 )
 from gan_deeplearning4j_spark.kernels import forward, init_weights
 
@@ -30,9 +29,26 @@ def _toy_data(n=400, dim=16, n_classes=4, seed=666):
 
 def _weights_digest(weights) -> str:
     h = hashlib.sha256()
-    for layer, param, pos, v in sorted(weights_to_rows(weights)):
-        h.update(f"{layer}|{param}|{pos}|{v:.6f};".encode())
+    for layer in sorted(weights):
+        for param in sorted(weights[layer]):
+            arr = np.ascontiguousarray(weights[layer][param])
+            h.update(f"{layer}|{param}|{arr.shape}|{arr.dtype};".encode())
+            h.update(arr.tobytes())
     return h.hexdigest()
+
+
+def _xy_df(spark, x, y):
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("features", T.ArrayType(T.FloatType())),
+            T.StructField("label_vec", T.ArrayType(T.FloatType())),
+        ]
+    )
+    pdf = pd.DataFrame({"features": list(x), "label_vec": list(y)})
+    return spark.createDataFrame(pdf, schema)
 
 
 def test_mlp_grads_match_numeric():
@@ -43,7 +59,7 @@ def test_mlp_grads_match_numeric():
     x = rng.standard_normal((8, 5)).astype(np.float64)
     y = rng.integers(0, 2, (8, 1)).astype(np.float64)
 
-    grads, _ = mlp_grads(x, y, specs, w)
+    grads, _ = net_grads(x, y, specs, w)
 
     def loss_at(wmod):
         p = forward(x.astype(np.float32), specs, wmod)
@@ -64,21 +80,10 @@ def test_mlp_grads_match_numeric():
 
 def test_fit_distributed_reduces_loss(spark):
     """Map-fit + average-reduce actually learns on a separable toy task."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
     x, y = _toy_data(n=300, dim=8, n_classes=2)
-    yv = y.reshape(-1, 1).astype(np.float32)
     specs = build_mlp("clf", 8, [16], 1, "sigmoid")
     net = Network(specs, init_weights(specs, 8, 666), {s.name: 0.05 for s in specs})
-    schema = T.StructType(
-        [
-            T.StructField("features", T.ArrayType(T.FloatType())),
-            T.StructField("label_vec", T.ArrayType(T.FloatType())),
-        ]
-    )
-    pdf = pd.DataFrame({"features": list(x), "label_vec": list(yv)})
-    df = spark.createDataFrame(pdf, schema)
+    df = _xy_df(spark, x, y.reshape(-1, 1).astype(np.float32))
     first = fit_distributed(df, net, n_workers=2, local_steps=5, batch_size=64)
     losses = [first]
     for _ in range(5):
@@ -123,15 +128,113 @@ def test_gan_pipeline_two_epochs_deterministic(spark):
 
 
 def test_checkpoint_roundtrip(spark, tmp_path):
+    """Each saved row is one tensor; its shape and values rebuild the
+    trained weights bitwise."""
     x, y = _toy_data(n=100, dim=8, n_classes=2)
     p = GanPipeline(feature_dim=8, latent_dim=2, dis_hidden=[8], gen_hidden=[8],
                     n_classes=2, seed=666)
     p.fit(spark, x, y, epochs=1, batch_rows=64, n_workers=2, avg_freq=2)
     path = str(tmp_path / "ckpt")
     p.checkpoint(spark, path)
-    saved = spark.read.parquet(f"{path}/dis_weights.parquet")
-    n_params = sum(a.size for ps in p.dis.weights.values() for a in ps.values())
-    assert saved.count() == n_params
+    saved = spark.read.parquet(f"{path}/dis_weights.parquet").collect()
+    rebuilt = {}
+    for r in saved:
+        arr = np.asarray(r["value"], dtype=np.float32).reshape(r["shape"])
+        rebuilt.setdefault(r["layer"], {})[r["param"]] = arr
+    assert len(saved) == sum(len(ps) for ps in p.dis.weights.values())
+    assert rebuilt.keys() == p.dis.weights.keys()
+    for layer, params in p.dis.weights.items():
+        assert rebuilt[layer].keys() == params.keys()
+        for param, arr in params.items():
+            assert rebuilt[layer][param].shape == arr.shape
+            assert rebuilt[layer][param].tobytes() == arr.tobytes(), (layer, param)
+
+
+def test_fit_resumes_across_calls(spark):
+    """fit(epochs=1) twice trains exactly as fit(epochs=2): the RNG and the
+    epoch count carry over between calls."""
+    x, y = _toy_data(n=120, dim=8, n_classes=2)
+
+    def pipeline():
+        return GanPipeline(feature_dim=8, latent_dim=2, dis_hidden=[8],
+                           gen_hidden=[8], n_classes=2, seed=666)
+
+    kw = dict(batch_rows=32, n_workers=2, avg_freq=2)
+    once = pipeline()
+    once.fit(spark, x, y, epochs=2, **kw)
+    twice = pipeline()
+    twice.fit(spark, x, y, epochs=1, **kw)
+    twice.fit(spark, x, y, epochs=1, **kw)
+
+    assert [h["epoch"] for h in twice.history] == [0, 1]
+    assert twice.history == once.history
+    for name in ("dis", "gen", "cv"):
+        assert _weights_digest(getattr(twice, name).weights) == \
+            _weights_digest(getattr(once, name).weights), name
+
+
+def test_fit_distributed_runs_one_task_per_worker(spark):
+    """The map-fit stage of a round runs n_workers tasks in parallel: the
+    worker shuffle is never coalesced into one task."""
+    x, y = _toy_data(n=120, dim=8, n_classes=2)
+    df = _xy_df(spark, x, y.reshape(-1, 1).astype(np.float32)).coalesce(1)
+    specs = build_mlp("t", 8, [4], 1, "sigmoid")
+    net = Network(specs, init_weights(specs, 8, 666), {s.name: 0.05 for s in specs})
+    n_workers = 3
+    sc = spark.sparkContext
+    group = "test_fit_distributed_runs_one_task_per_worker"
+    sc.setJobGroup(group, group)
+    try:
+        fit_distributed(df, net, n_workers=n_workers, local_steps=2, batch_size=16)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = sorted(tracker.getJobIdsForGroup(group))
+    assert jobs
+    # the round's last job ends in the map-fit stage (shuffle read → mapInPandas)
+    fit_stage = max(tracker.getJobInfo(jobs[-1]).stageIds)
+    info = tracker.getStageInfo(fit_stage)
+    assert info.numTasks == n_workers
+    assert info.numCompletedTasks == n_workers
+
+
+def test_fit_distributed_matches_local_replay(spark):
+    """On a shard of one repeated row, every worker takes the same steps as
+    a driver-side replay of net_grads + rmsprop_update, so the averaged
+    round equals the replay within float32 rounding; the frozen layer never
+    moves. Catches a mis-ordered or mis-sized parameter buffer."""
+    batch, steps, n_workers = 8, 3, 2
+    x, y = _toy_data(n=1, dim=6, n_classes=2)
+    x0 = np.repeat(x[:1], batch, axis=0)
+    y0 = np.ones((batch, 1), dtype=np.float32)
+    rows = 3 * batch * n_workers
+    df = _xy_df(spark, np.repeat(x[:1], rows, axis=0), np.ones((rows, 1), np.float32))
+
+    specs = build_mlp("t", 6, [5, 4], 1, "sigmoid")
+    lr = {"t_dense_0": 0.0, "t_dense_1": 0.05, "t_output": 0.02}
+    start = init_weights(specs, 6, 666)
+    net = Network(specs, {l: {p: a.copy() for p, a in ps.items()} for l, ps in start.items()}, lr)
+    fit_distributed(df, net, n_workers=n_workers, local_steps=steps, batch_size=batch)
+
+    replay = {l: {p: a.copy() for p, a in ps.items()} for l, ps in start.items()}
+    cache = {}
+    for _ in range(steps):
+        grads, _ = net_grads(x0, y0, specs, replay)
+        rmsprop_update(replay, grads, cache, lr)
+
+    for param, arr in start["t_dense_0"].items():
+        assert net.weights["t_dense_0"][param].tobytes() == arr.tobytes(), param
+    for layer in ("t_dense_1", "t_output"):
+        for param, arr in replay[layer].items():
+            got = net.weights[layer][param]
+            assert got.shape == arr.shape and got.dtype == np.float32
+            assert not np.array_equal(got, start[layer][param]), (layer, param)
+            np.testing.assert_allclose(got, arr, rtol=1e-6, atol=1e-7, err_msg=f"{layer}.{param}")
+
+
+def test_dcgan_rejects_side_not_divisible_by_4():
+    with pytest.raises(ValueError, match="divisible by 4"):
+        GanPipeline.dcgan(side=30, base_filters=2)
 
 
 def test_dcgan_conv_two_epochs_deterministic(spark):
@@ -211,14 +314,10 @@ def test_fit_distributed_conv_topology(spark):
     reduces loss and is bit-reproducible across runs (the distributed
     conv-GAN evidence, dl4jGANComputerVision.java:408-621 topology family).
     """
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from gan_deeplearning4j_spark.kernels import LayerSpec
 
     side, n = 8, 192
     x, y = _toy_data(n=n, dim=side * side, n_classes=2)
-    yv = y.reshape(-1, 1).astype(np.float32)
     specs = [
         LayerSpec("c_reshape", "reshape", {"shape": (1, side, side)}),
         LayerSpec("c_conv", "conv2d",
@@ -229,12 +328,7 @@ def test_fit_distributed_conv_topology(spark):
         LayerSpec("c_flat", "flatten"),
         LayerSpec("c_out", "dense", {"units": 1, "activation": "sigmoid"}),
     ]
-    schema = T.StructType([
-        T.StructField("features", T.ArrayType(T.FloatType())),
-        T.StructField("label_vec", T.ArrayType(T.FloatType())),
-    ])
-    pdf = pd.DataFrame({"features": list(x), "label_vec": list(yv)})
-    df = spark.createDataFrame(pdf, schema)
+    df = _xy_df(spark, x, y.reshape(-1, 1).astype(np.float32))
 
     def run():
         net = Network(
