@@ -12,7 +12,8 @@ Layout:
 - ``io``         sources/sinks (SURVEY §2.1 S1-S10)
 - ``functions``  column-expression library (elementwise, vector, text, random)
 - ``operators``  relational / aggregate / weights / dedup / similarity / graph ops
-- ``kernels``    pandas-UDF tensor kernels (dense, conv2d, pool, upsample)
+- ``kernels``    numpy tensor kernels (dense, conv2d, pool, upsample) and
+                 their mapInArrow forward pass
 - ``pipeline``   GAN pipeline orchestration (graph builder, fit loop, transfer)
 - ``streaming``  Structured Streaming facades (tumbling windows over events)
 - ``queries``    the registry backing __spark_entry__.py and bench.py

@@ -2,8 +2,10 @@
 
 The reference reads headerless 785-column float CSV via CSVRecordReader
 (dl4jGANComputerVision.java:372-374) and writes CSVs cell-by-cell with
-FileWriter.append (:554-597).  Engine equivalents: schema-declared
-``spark.read.csv`` / ``df.write.csv``, with Parquet as the native format.
+FileWriter.append (:554-597).  Engine equivalents: the MNIST file is a text
+scan split into one ``array<double>`` column (``read_mnist_csv``), other
+headerless CSVs a schema-declared ``spark.read.csv``; sinks are
+``df.write.csv``, with Parquet as the native format.
 
 Note (S7 compat): the reference closes its FileWriter inside the row loop
 (dl4jGANComputerVision.java:569) — a bug.  Engine semantics are "write the
@@ -134,15 +136,28 @@ def read_headerless_csv(
 def read_mnist_csv(
     spark: SparkSession, path: str, n_features: int = 784
 ) -> DataFrame:
-    """S3: scan + project wide pixel columns into a single vector column.
+    """S3: scan the 785-field lines straight into one vector column.
 
     Replaces RecordReaderDataSetIterator(rr, batch, 784, 10)
-    (dl4jGANComputerVision.java:376-377): features become one
-    ``array<double>`` column; batching is implicit in Arrow batches.
+    (dl4jGANComputerVision.java:376-377): each non-blank line is split on
+    commas; the first ``n_features`` cells become one ``features
+    array<double>`` column and the last one ``label int``; batching is
+    implicit in Arrow batches. A text scan, not ``read_headerless_csv``
+    with ``mnist_like_schema``: declaring 785 typed columns and packing
+    them back into an array costs seconds of plan analysis per call, and
+    yields the same rows. Blank lines are skipped as the CSV reader skips
+    them; a line with any other field count raises when an action runs.
     """
-    df = read_headerless_csv(spark, path, mnist_like_schema(n_features))
-    feat = F.array(*[F.col(f"px{i}") for i in range(n_features)]).alias("features")
-    return df.select(feat, F.col("label").cast("int").alias("label"))
+    n = n_features + 1
+    cells = F.split(F.col("value"), ",")
+    checked = F.when(F.size(cells) == n, cells).otherwise(F.raise_error(F.format_string(
+        "%s: MNIST CSV line has %d fields, expected %d", F.lit(path), F.size(cells), F.lit(n)
+    )))
+    lines = spark.read.text(path).filter(F.col("value") != "").select(checked.alias("cells"))
+    return lines.select(
+        F.slice("cells", 1, n_features).cast("array<double>").alias("features"),
+        F.element_at("cells", n).cast("double").cast("int").alias("label"),
+    )
 
 
 def write_headerless_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:

@@ -7,13 +7,15 @@ batchnorm :132-134 et al.; activations :126,162,215,362; forward inference
 `net.output` :170,225,314,551,578).
 
 Engine re-expression: stateless numpy kernels over NCHW float32 arrays,
-driven from Spark via Arrow-batched ``mapInPandas`` — one Arrow batch plays
-the role of one ND4J minibatch (the reference's batchSizePred=500 chunking is
-``spark.sql.execution.arrow.maxRecordsPerBatch``). Weights travel as a
-broadcast dict (they are MB-scale; data is the TB-scale side).
+driven from Spark via ``mapInArrow`` — one Arrow batch plays the role of one
+ND4J minibatch (the reference's batchSizePred=500 chunking is
+``spark.sql.execution.arrow.maxRecordsPerBatch``); its feature list column
+becomes one ``(n, d)`` array through ``list_to_matrix`` with no per-row
+Python objects. Weights travel as a broadcast dict (they are MB-scale; data
+is the TB-scale side).
 
 At 100 TB: inference is embarrassingly parallel — no shuffle at all, the
-kernel pipeline fuses into a single mapInPandas stage over the scan.
+kernel pipeline fuses into a single mapInArrow stage over the scan.
 """
 
 from __future__ import annotations
@@ -22,9 +24,7 @@ from dataclasses import dataclass, field
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import DEFAULT_SEED
@@ -440,8 +440,35 @@ def forward(x: np.ndarray, specs: list[LayerSpec], weights: Weights) -> np.ndarr
 
 
 # ---------------------------------------------------------------------------
-# Spark integration: distributed inference via mapInPandas
+# Spark integration: distributed inference via mapInArrow
 # ---------------------------------------------------------------------------
+
+def list_to_matrix(arr) -> np.ndarray:
+    """Arrow list array of ``n`` equal-length numeric lists → ``(n, d)``
+    numpy view of its values, in the values' dtype.
+
+    Raises ``ValueError`` on a null list or null element, and on lists of
+    different lengths: a reshape of a ragged or null-holding buffer would
+    misalign every later row instead of failing."""
+    import pyarrow.compute as pc
+
+    n = len(arr)
+    if arr.null_count:
+        raise ValueError(f"list column holds {arr.null_count} null rows of {n}")
+    flat = arr.flatten()  # honours slice offsets, unlike .values
+    if flat.null_count:
+        raise ValueError(f"list column holds {flat.null_count} null elements")
+    vals = flat.to_numpy(zero_copy_only=False)
+    if n == 0:
+        return vals.reshape(0, 0)
+    lens = pc.list_value_length(arr).to_numpy()
+    d = int(lens[0])
+    if (lens != d).any():
+        raise ValueError(
+            f"ragged list column: lengths {lens.min()}..{lens.max()} in one batch"
+        )
+    return vals.reshape(n, d)
+
 
 def apply_network(
     df: DataFrame,
@@ -453,8 +480,11 @@ def apply_network(
 ) -> DataFrame:
     """Distributed forward pass: one Arrow batch = one minibatch.
 
-    Weights are shipped once per task via Spark broadcast; the scan→kernel
-    pipeline is a single narrow stage (no shuffle).
+    A ``mapInArrow`` kernel: the batch's feature lists become one ``(n, d)``
+    array (``list_to_matrix``), run through ``forward`` and return as one
+    float32 list column beside the ``keep_cols`` arrays, which pass through
+    untouched. Weights are shipped once per task via Spark broadcast; the
+    scan→kernel pipeline is a single narrow stage (no shuffle).
     """
     spark = df.sparkSession
     keep_cols = keep_cols if keep_cols is not None else [
@@ -467,14 +497,21 @@ def apply_network(
         out_fields + [T.StructField(output_col, T.ArrayType(T.FloatType()))]
     )
 
-    def infer(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        w = bc.value
-        for pdf in batches:
-            x = np.stack(pdf[features_col].to_numpy())
-            y = forward(x, specs, w)
-            y = y.reshape(y.shape[0], -1)
-            out = pdf[keep_cols].copy()
-            out[output_col] = list(y.astype(np.float32))
-            yield out
+    def infer(batches: Iterator) -> Iterator:
+        import pyarrow as pa
 
-    return df.mapInPandas(infer, schema=out_schema)
+        w = bc.value
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            y = forward(list_to_matrix(batch.column(features_col)), specs, w)
+            y = np.ascontiguousarray(y.reshape(len(y), -1), dtype=np.float32)
+            d = y.shape[1]
+            offsets = pa.array(np.arange(0, (len(y) + 1) * d, d, dtype=np.int32))
+            out = pa.ListArray.from_arrays(offsets, pa.array(y.ravel()))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(c) for c in keep_cols] + [out],
+                names=keep_cols + [output_col],
+            )
+
+    return df.mapInArrow(infer, schema=out_schema)

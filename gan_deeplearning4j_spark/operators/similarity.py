@@ -21,6 +21,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import as_double, cosine_similarity, dot
+from ..kernels import list_to_matrix
 from .relational import assert_small
 
 
@@ -316,7 +317,7 @@ def embedding_neardup_lsh(
     singleton and over-``max_bucket`` rows FIRST, then ``collect_list``
     of (id, vector) structs over the same partitioning (no second
     exchange: the aggregate reuses the window's clustering) builds only
-    the surviving buckets, and one ``mapInPandas`` pass scores them —
+    the surviving buckets, and one ``mapInArrow`` pass scores them —
     one numpy matmul per bucket, one Arrow crossing per batch of
     buckets (r13/r14 optimization passes, guide §4/§5). The previous
     ``applyInPandas`` form dispatched a pandas kernel per GROUP (~8k
@@ -384,20 +385,11 @@ def embedding_neardup_lsh(
             ).astype(np.int64)
             structs = pc.list_flatten(items)
             ids_all = structs.field("__id").to_numpy(zero_copy_only=False)
-            vecs = structs.field("__v")
-            vlens = pc.list_value_length(vecs).to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            vals_all = pc.list_flatten(vecs).to_numpy(zero_copy_only=False)
-            n = len(ids_all)
-            if n == 0:
+            if len(ids_all) == 0:
                 continue
             # fixed-dim contract (the signature matmul upstream already
-            # requires it); a ragged corpus must fail loudly, not score
-            d0 = int(vlens[0])
-            assert d0 > 0 and (vlens == d0).all(), \
-                "embedding_neardup_lsh: ragged vectors in bucket batch"
-            allmat = vals_all.reshape(n, d0)
+            # requires it): a ragged or null vector raises, never scores
+            allmat = list_to_matrix(structs.field("__v"))
             bounds = np.zeros(len(sizes) + 1, dtype=np.int64)
             np.cumsum(sizes, out=bounds[1:])
             out_a, out_b, out_s = [], [], []

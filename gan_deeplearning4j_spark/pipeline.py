@@ -23,7 +23,10 @@ Re-expression of the reference's distributed adversarial training:
   fake+smoothed-0] (java:412-426), sync dis→gan, gan step on (noise, 1)
   fooling batch (:462-471), sync gan→gen, classifier step (:512-545).
 - O5 observers      → ``generate_grid`` (latent grid → gen forward → ordered
-  image rows, :550-570) and ``predict`` (chunked test inference, :572-597).
+  image rows, :550-570), ``write_png_grid`` (the same rows, collected in one
+  job and ordered in the driver, as one PNG mosaic) and ``predict``
+  (chunked test inference, :572-597); all three run the ``mapInArrow``
+  forward pass of ``kernels.apply_network``.
 - K8 RMSProp        → ``rmsprop_update`` (new RmsProp(lr, 1e-8, 1e-8),
   java:133; decay/epsilon defaults mirror the reference's).
 
@@ -482,33 +485,39 @@ class GanPipeline:
 
     # -- O5 observers -------------------------------------------------------
 
-    def generate_grid(self, spark: SparkSession, side: int = 10) -> DataFrame:
-        """R3 grid → gen forward → ordered rows (java:550-570 / W3)."""
+    def _grid_frame(self, spark: SparkSession, side: int) -> DataFrame:
+        """R3 grid → gen forward, ``(grid_id, output)`` rows in no set order."""
         from .functions.random import latent_grid
         from .kernels import apply_network
 
         grid = latent_grid(spark, side).select(
             "grid_id", F.array("zi", "zj").cast("array<float>").alias("features")
         )
-        out = apply_network(grid, self.gen.specs, self.gen.weights, keep_cols=["grid_id"])
-        return out.orderBy("grid_id")
+        return apply_network(grid, self.gen.specs, self.gen.weights, keep_cols=["grid_id"])
+
+    def generate_grid(self, spark: SparkSession, side: int = 10) -> DataFrame:
+        """R3 grid → gen forward → ordered rows (java:550-570 / W3)."""
+        return self._grid_frame(spark, side).orderBy("grid_id")
 
     def write_png_grid(self, spark: SparkSession, path: str,
                        side: int = 10) -> bytes:
-        """S12 image sink: render the ``generate_grid`` output as one
+        """S12 image sink: render the ``generate_grid`` rows as one
         side×side PNG mosaic (gan.ipynb raw 425-438 — the reference's
         matplotlib 10×10 figure of generated digits — re-expressed through
         the engine's own pure-stdlib PNG encoder).
 
         The collect is bounded by contract (side² rows, one generated image
-        each — a sink artifact, not a data path). Generator outputs are in
+        each — a sink artifact, not a data path), so it runs as one job on
+        the unordered grid and the driver orders the rows by ``grid_id``; a
+        distributed sort would add a sampling job and a range shuffle for
+        side² rows. Generator outputs are in
         tanh/sigmoid range; values are min-max scaled per-mosaic to uint8,
         matching matplotlib's default imshow normalization. Non-square
         outputs take the widest h≤w factorization. Returns the PNG bytes
         (also written to ``path``)."""
         from .functions.imagecodec import encode_png
 
-        rows = self.generate_grid(spark, side).collect()
+        rows = sorted(self._grid_frame(spark, side).collect(), key=lambda r: r["grid_id"])
         vecs = np.asarray(
             [np.asarray(r["output"], dtype=np.float64) for r in rows]
         )

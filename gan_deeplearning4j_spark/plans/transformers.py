@@ -85,7 +85,7 @@ class ActivationTransformer(_ColTransformer):
 
 
 class NetworkTransformer(Transformer):
-    """K10 forward inference as a pipeline stage (mapInPandas kernels)."""
+    """K10 forward inference as a pipeline stage (mapInArrow kernels)."""
 
     def __init__(self, specs, weights, featuresCol: str = "features",
                  outputCol: str = "output"):

@@ -1607,7 +1607,7 @@ def q_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY grid_id
     """,
     doc="O5/K10/R3/W3: latent grid → generator forward via distributed "
-        "mapInPandas, row-major order preserved (java:550-570). "
+        "mapInArrow, row-major order preserved (java:550-570). "
         "Shape/range-bracket oracle (round-12 promotion of the last "
         "rows-only slots): the forward pass runs for real, and the "
         "deterministic contract is emitted — exactly side*side=100 grid "

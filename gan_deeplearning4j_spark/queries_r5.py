@@ -2,7 +2,7 @@
 
 Opens with the fixed-point GAN-inference twin the round-4 verdict asked
 for: the SAME distributed inference machinery as ``gan_grid_inference``
-(R3 latent grid -> K10 ``kernels.apply_network`` mapInPandas forward ->
+(R3 latent grid -> K10 ``kernels.apply_network`` mapInArrow forward ->
 W3 row-major ordering; reference dl4jGANComputerVision.java:550-570) run
 over a literal-weight integer network, so the GAN serving path earns a
 hash-grade DuckDB oracle the way ``pq_fixed_topk`` did for ANN.
@@ -83,7 +83,7 @@ SELECT grid_id, {outs} FROM h ORDER BY grid_id
     doc="Hash-grade twin of gan_grid_inference (K10+R3+W3, "
         "dl4jGANComputerVision.java:550-570): the REAL distributed "
         "inference path — latent_grid (R3 row-major) -> "
-        "kernels.apply_network mapInPandas forward (K10) — over a "
+        "kernels.apply_network mapInArrow forward (K10) — over a "
         "literal-weight integer generator (2 -> dense-8 relu -> dense-2 "
         "linear). Latents quantize via floor(z*2^6) (power-of-two scale "
         "on the identical IEEE double: engine-invariant); with small-"

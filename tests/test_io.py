@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from gan_deeplearning4j_spark.io import (
@@ -32,6 +33,46 @@ def test_mnist_csv_roundtrip(spark, tmp_path):
     assert len(back) == n
     assert len(back["features"][0]) == d
     assert sorted(back["label"]) == sorted(int(v) for v in y)
+
+
+def _write_lines(path, lines) -> str:
+    path.write_text("\n".join(lines) + "\n")
+    return str(path)
+
+
+@pytest.mark.parametrize("n_fields", [784, 786])
+def test_mnist_csv_wrong_field_count_raises(spark, tmp_path, n_fields):
+    """A line without 785 fields fails the scan instead of becoming nulls
+    or a shorter vector."""
+    good = ",".join(["0.5"] * 784 + ["3"])
+    bad = ",".join(["0.5"] * n_fields)
+    path = _write_lines(tmp_path / "bad.csv", [good, bad])
+    df = read_mnist_csv(spark, path)
+    with pytest.raises(PySparkException, match=f"has {n_fields} fields, expected 785"):
+        df.collect()
+
+
+def test_mnist_csv_text_scan_matches_csv_reader(spark, tmp_path):
+    """The text scan yields the rows of the schema-declared CSV reader packed
+    into one array: integer, negative and exponent-form cells parse alike,
+    and a trailing blank line is skipped by both."""
+    cells = ["0", "-1.5", "1e-05", "0.25"]
+    lines = [
+        ",".join([cells[(i + j) % 4] for j in range(784)] + [str(i % 10)])
+        for i in range(3)
+    ]
+    path = _write_lines(tmp_path / "digits.csv", lines + [""])
+
+    old = read_headerless_csv(spark, path, mnist_like_schema()).select(
+        F.array(*[F.col(f"px{i}") for i in range(784)]).alias("features"),
+        F.col("label").cast("int").alias("label"),
+    )
+    new = read_mnist_csv(spark, path)
+    assert new.schema.simpleString() == "struct<features:array<double>,label:int>"
+    got = [(tuple(r["features"]), r["label"]) for r in new.collect()]
+    want = [(tuple(r["features"]), r["label"]) for r in old.collect()]
+    assert len(got) == 3
+    assert got == want
 
 
 def test_headerless_csv_declared_schema(spark, tmp_path):

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from pyspark.errors import PySparkException
 from pyspark.sql import functions as F
 
 from gan_deeplearning4j_spark.kernels import (
@@ -18,6 +19,7 @@ from gan_deeplearning4j_spark.kernels import (
     k_dense,
     k_maxpool,
     k_upsample,
+    list_to_matrix,
 )
 
 RNG = np.random.default_rng(666)
@@ -115,7 +117,8 @@ def test_conv_pipeline_shapes_like_reference_gen():
 
 
 def test_apply_network_distributed_matches_local(spark):
-    """mapInPandas forward == local numpy forward, row-for-row."""
+    """mapInArrow forward == local numpy forward, row-for-row, for float
+    and double feature lists (the MNIST CSV scan emits doubles)."""
     specs = [
         LayerSpec("d1", "dense", {"units": 16, "activation": "tanh"}),
         LayerSpec("d2", "dense", {"units": 4, "activation": "sigmoid"}),
@@ -123,8 +126,38 @@ def test_apply_network_distributed_matches_local(spark):
     w = init_weights(specs, 8, seed=666)
     x = RNG.standard_normal((50, 8)).astype(np.float32)
     pdf = [(i, [float(v) for v in x[i]]) for i in range(50)]
-    df = spark.createDataFrame(pdf, "id: long, features: array<float>")
-    out = apply_network(df, specs, w).orderBy("id").toPandas()
-    got = np.stack(out["output"].to_numpy())
     want = forward(x, specs, w)
-    np.testing.assert_allclose(got, want, rtol=1e-5, atol=1e-6)
+    for elem in ("float", "double"):
+        df = spark.createDataFrame(pdf, f"id: long, features: array<{elem}>")
+        out = apply_network(df, specs, w).orderBy("id").toPandas()
+        assert list(out["id"]) == list(range(50))
+        got = np.stack(out["output"].to_numpy())
+        np.testing.assert_allclose(got, want, rtol=1e-5, atol=1e-6)
+
+
+def test_list_to_matrix_views_sliced_lists():
+    import pyarrow as pa
+
+    arr = pa.array([[1.0, 2.0], [3.0, 4.0], [5.0, 6.0]], pa.list_(pa.float64()))
+    np.testing.assert_array_equal(list_to_matrix(arr.slice(1)), [[3.0, 4.0], [5.0, 6.0]])
+    assert list_to_matrix(arr.slice(0, 0)).shape == (0, 0)
+
+
+@pytest.mark.parametrize("rows", [
+    [[1.0, 2.0], [3.0]],          # ragged
+    [[1.0, 2.0], None],           # null list
+    [[1.0, 2.0], [3.0, None]],    # null element
+])
+def test_list_to_matrix_rejects_ragged_and_null(rows):
+    import pyarrow as pa
+
+    with pytest.raises(ValueError):
+        list_to_matrix(pa.array(rows, pa.list_(pa.float32())))
+
+
+def test_apply_network_null_features_raise(spark):
+    specs = [LayerSpec("d1", "dense", {"units": 2, "activation": "tanh"})]
+    w = init_weights(specs, 2, seed=666)
+    df = spark.createDataFrame([(0, [1.0, 2.0]), (1, None)], "id: long, features: array<float>")
+    with pytest.raises(PySparkException, match="null rows"):
+        apply_network(df.coalesce(1), specs, w).collect()

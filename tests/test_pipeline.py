@@ -308,6 +308,21 @@ def test_write_png_grid_roundtrip(spark, tmp_path):
     np.testing.assert_array_equal(img, expect)
 
 
+def test_write_png_grid_runs_one_job(spark, tmp_path):
+    """The bounded grid collect is one job: no sampling job or range
+    shuffle of a distributed sort for side² rows."""
+    p = GanPipeline(feature_dim=16, latent_dim=2, dis_hidden=[8],
+                    gen_hidden=[8], n_classes=2, seed=666)
+    sc = spark.sparkContext
+    group = "test_write_png_grid_runs_one_job"
+    sc.setJobGroup(group, group)
+    try:
+        p.write_png_grid(spark, str(tmp_path / "grid.png"), side=3)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
 def test_fit_distributed_conv_topology(spark):
     """O3 over K2/K3/K4: fit_distributed drives the full conv stack (conv →
     maxpool → batchnorm → dense head) — parameter-averaged conv training

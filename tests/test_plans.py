@@ -72,7 +72,8 @@ def test_topk_no_global_sort(spark, sf_dir):
 
 
 def test_inference_is_shuffle_free(spark):
-    """K10 distributed inference must be a single narrow stage."""
+    """K10 distributed inference must be a single narrow stage, and an
+    Arrow one: no per-row pandas objects."""
     import numpy as np
 
     from gan_deeplearning4j_spark.kernels import LayerSpec, apply_network, init_weights
@@ -84,6 +85,7 @@ def test_inference_is_shuffle_free(spark):
     )
     plan = formatted_plan(apply_network(df, specs, w))
     assert "Exchange" not in plan, plan
+    assert "MapInArrow" in plan, plan
 
 
 def test_mllib_pipeline_composes_and_fuses(spark, sf_dir):
