@@ -25,6 +25,7 @@ from typing import Iterator
 
 import numpy as np
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import DEFAULT_SEED
@@ -470,6 +471,17 @@ def list_to_matrix(arr) -> np.ndarray:
     return vals.reshape(n, d)
 
 
+def matrix_to_list(mat: np.ndarray):
+    """``(n, d)`` numpy array → Arrow list array of ``n`` length-``d``
+    lists in the array's dtype: the inverse of ``list_to_matrix``."""
+    import pyarrow as pa
+
+    mat = np.ascontiguousarray(mat)
+    n, d = mat.shape
+    offsets = pa.array(np.arange(n + 1, dtype=np.int32) * d)
+    return pa.ListArray.from_arrays(offsets, pa.array(mat.ravel()))
+
+
 def apply_network(
     df: DataFrame,
     specs: list[LayerSpec],
@@ -483,13 +495,18 @@ def apply_network(
     A ``mapInArrow`` kernel: the batch's feature lists become one ``(n, d)``
     array (``list_to_matrix``), run through ``forward`` and return as one
     float32 list column beside the ``keep_cols`` arrays, which pass through
-    untouched. Weights are shipped once per task via Spark broadcast; the
-    scan→kernel pipeline is a single narrow stage (no shuffle).
+    untouched. The features cross to Python as ``array<float>``: ``forward``
+    computes in float32, and the JVM's double→float cast rounds to nearest
+    even exactly as numpy's does, so a double column costs half the bytes
+    and gives bitwise the same output. Weights are shipped once per task via
+    Spark broadcast; the scan→kernel pipeline is a single narrow stage (no
+    shuffle).
     """
     spark = df.sparkSession
     keep_cols = keep_cols if keep_cols is not None else [
         c for c in df.columns if c != features_col
     ]
+    df = df.withColumn(features_col, F.col(features_col).cast("array<float>"))
     bc = spark.sparkContext.broadcast(weights)
 
     out_fields = [df.schema[c] for c in keep_cols]
@@ -505,10 +522,7 @@ def apply_network(
             if batch.num_rows == 0:
                 continue
             y = forward(list_to_matrix(batch.column(features_col)), specs, w)
-            y = np.ascontiguousarray(y.reshape(len(y), -1), dtype=np.float32)
-            d = y.shape[1]
-            offsets = pa.array(np.arange(0, (len(y) + 1) * d, d, dtype=np.int32))
-            out = pa.ListArray.from_arrays(offsets, pa.array(y.ravel()))
+            out = matrix_to_list(y.reshape(len(y), -1).astype(np.float32, copy=False))
             yield pa.RecordBatch.from_arrays(
                 [batch.column(c) for c in keep_cols] + [out],
                 names=keep_cols + [output_col],

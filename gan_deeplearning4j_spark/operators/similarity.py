@@ -21,8 +21,20 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import as_double, cosine_similarity, dot
-from ..kernels import list_to_matrix
+from ..kernels import list_to_matrix, matrix_to_list
 from .relational import assert_small
+
+
+def _topk_per_key(scored: DataFrame, key: str, k: int, *order) -> DataFrame:
+    """The first ``k`` rows of each ``key`` under ``order``. The literal
+    bound lets Spark run the heap per partition (WindowGroupLimit) before
+    the one exchange."""
+    w = Window.partitionBy(key).orderBy(*order)
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= k)
+        .drop("rn")
+    )
 
 
 def brute_force_topk(
@@ -38,12 +50,7 @@ def brute_force_topk(
     scored = c.crossJoin(F.broadcast(q)).select(
         query_id, id_col, sim.alias("cos_sim")
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.col(id_col))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _topk_per_key(scored, query_id, k, F.desc("cos_sim"), F.col(id_col))
 
 
 def plane_values(dim: int, bits: int) -> list[list[float]]:
@@ -265,12 +272,7 @@ def lsh_bucketed_topk(
         query_id, id_col,
         cosine_similarity(F.col("__cv"), F.col("__qv")).alias("cos_sim"),
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.col(id_col))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _topk_per_key(scored, query_id, k, F.desc("cos_sim"), F.col(id_col))
 
 
 def embedding_neardup(
@@ -362,17 +364,6 @@ def embedding_neardup_lsh(
     )
 
     def score_buckets(batches):
-        # Arrow-native scorer (r14 second pass, guide §4.2): the former
-        # mapInPandas form materialized every (id, vector) struct as a
-        # Python object per ROW before the per-bucket matmul — O(corpus
-        # x bands) object churn at scale. Here the batch's buckets are
-        # flattened once into contiguous buffers (ids int64, vectors one
-        # (n, dim) float64 view) and each bucket scores on numpy SLICES
-        # of those buffers; the only Python loop is per BUCKET, and the
-        # math (argsort, einsum norms, matmul, round) is bit-identical
-        # to the former form — the full pairs relation exceptAll-matched
-        # in both directions at sf0.1 (12-15% faster there; the win is
-        # the per-row boundary, so it grows with the corpus).
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -450,22 +441,14 @@ def ivf_topk(
         query_id, "__qv", "centroid_id",
         cosine_similarity(F.col("__qv"), F.col("__cent")).alias("__cs"),
     )
-    wq = Window.partitionBy(query_id).orderBy(F.desc("__cs"), F.col("centroid_id"))
-    probes = (
-        qc.withColumn("rn", F.row_number().over(wq))
-        .filter(F.col("rn") <= nprobe)
-        .select(query_id, "__qv", "centroid_id")
-    )
+    probes = _topk_per_key(
+        qc, query_id, nprobe, F.desc("__cs"), F.col("centroid_id")
+    ).select(query_id, "__qv", "centroid_id")
     scored = assigned.join(F.broadcast(probes), "centroid_id").select(
         query_id, id_col,
         cosine_similarity(F.col("__cv"), F.col("__qv")).alias("cos_sim"),
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("cos_sim"), F.col(id_col))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _topk_per_key(scored, query_id, k, F.desc("cos_sim"), F.col(id_col))
 
 
 def kmeans_centroids(
@@ -496,16 +479,13 @@ def kmeans_centroids(
         )
         .localCheckpoint(eager=True)
     )
-    w = Window.partitionBy("__kid").orderBy(F.desc("__cs"), F.col("centroid_id"))
     for _ in range(iters):
-        assigned = (
-            c.crossJoin(F.broadcast(cents))
-            .select(
+        assigned = _topk_per_key(
+            c.crossJoin(F.broadcast(cents)).select(
                 "__kid", "__cv", "centroid_id",
                 cosine_similarity(F.col("__cv"), F.col("__cent")).alias("__cs"),
-            )
-            .withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
+            ),
+            "__kid", 1, F.desc("__cs"), F.col("centroid_id"),
         )
         cents = (
             assigned.select("centroid_id", F.posexplode("__cv").alias("pos", "v"))
@@ -546,12 +526,9 @@ def ivf_assign(corpus: DataFrame, vec_col: str, id_col: str,
         id_col, "__cv", "centroid_id",
         cosine_similarity(F.col("__cv"), F.col("__cent")).alias("__cs"),
     )
-    w = Window.partitionBy(id_col).orderBy(F.desc("__cs"), F.col("centroid_id"))
-    assigned = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(id_col, "__cv", "centroid_id")
-    )
+    assigned = _topk_per_key(
+        scored, id_col, 1, F.desc("__cs"), F.col("centroid_id")
+    ).select(id_col, "__cv", "centroid_id")
     return assigned, cents
 
 
@@ -576,6 +553,157 @@ def _l2_normalize(x):
     return x / n
 
 
+# ---------------------------------------------------------------------------
+# The PQ/ADC core. Every scorer below, float or fixed-point, runs these same
+# bodies; the dtype of the input (float64 or int64) is the only difference.
+# ---------------------------------------------------------------------------
+
+def _part_width(total: int, parts: int, what: str) -> int:
+    """``total // parts``; ``ValueError`` when ``parts`` does not divide it."""
+    if parts <= 0 or total % parts:
+        raise ValueError(f"{what}: {total} does not split into {parts} equal parts")
+    return total // parts
+
+
+def _sub_dists(x, books):
+    """``(n, m, k)`` squared L2 from each row's subspace ``j`` to the ``k``
+    centroids of ``books[j]``: the encode distances of corpus rows and the
+    ADC lookup tables (LUTs) of query rows alike."""
+    import numpy as np
+
+    sub = _part_width(x.shape[1], len(books), "vector dim / subspaces")
+    return np.stack([
+        ((x[:, None, j * sub:(j + 1) * sub] - b[None, :, :]) ** 2).sum(axis=2)
+        for j, b in enumerate(books)
+    ], axis=1)
+
+
+def _encode(x, books):
+    """``(n, m)`` nearest-centroid index per subspace (first minimum wins)."""
+    return _sub_dists(x, books).argmin(axis=2)
+
+
+def _adc(lut, codes):
+    """Asymmetric distance: ``dist[i] = sum_j lut[j, codes[i, j]]``."""
+    import numpy as np
+
+    return lut[np.arange(lut.shape[0])[None, :], codes].sum(axis=1)
+
+
+def _lloyd_books(x, m: int, k: int, iters: int):
+    """Per-subspace Lloyd over sample rows ``x``: initial centroids are the
+    first ``k`` rows (deterministic); empty clusters keep their centroid. An
+    integer ``x`` takes the elementwise floor-div mean, so its books stay
+    exact int64 and any re-run reproduces them bit for bit."""
+    import numpy as np
+
+    sub = _part_width(x.shape[1], m, "vector dim / m")
+    integer = np.issubdtype(x.dtype, np.integer)
+    books = []
+    for j in range(m):
+        xs = x[:, j * sub:(j + 1) * sub]
+        cents = xs[:k].copy()
+        for _ in range(iters):
+            a = _encode(xs, [cents])[:, 0]
+            for c in range(k):
+                mask = a == c
+                if mask.any():
+                    cents[c] = (xs[mask].sum(axis=0) // int(mask.sum()) if integer
+                                else xs[mask].mean(axis=0))
+        books.append(cents)
+    return books
+
+
+def _collect_matrix(df: DataFrame, vec_col: str):
+    """Collect a bounded, ordered relation as an Arrow table plus its vector
+    column as one ``(n, d)`` array (null or ragged rows raise)."""
+    t = df.toArrow()
+    return t, list_to_matrix(t.column(vec_col).combine_chunks())
+
+
+def _query_matrix(queries: DataFrame, query_id: str, vec_col: str):
+    """The bounded query side, ordered by id: ``(ids int64[nq], vectors)``."""
+    t, q = _collect_matrix(queries.select(query_id, vec_col).orderBy(query_id), vec_col)
+    return t.column(query_id).to_numpy(), q
+
+
+def _scan(rows: DataFrame, score, query_id: str, id_col: str, dist_col: str,
+          dist_dtype) -> DataFrame:
+    """The partition-local scan every scorer shares: one ``mapInArrow`` pass
+    over ``rows`` = (id, vector or codes, *extra columns). ``score(ids, x,
+    *extra)`` yields ``(query id, matched ids, distances)`` per query; each
+    input batch leaves as one Arrow batch of candidate rows."""
+    import numpy as np
+    import pyarrow as pa
+
+    integer = np.issubdtype(dist_dtype, np.integer)
+    dist_type = pa.int64() if integer else pa.float64()
+
+    def gen(batches):
+        for batch in batches:
+            if batch.num_rows == 0:
+                continue
+            ids, x = batch.column(0).to_numpy(zero_copy_only=False), list_to_matrix(batch.column(1))
+            extra = [c.to_numpy(zero_copy_only=False) for c in batch.columns[2:]]
+            parts = list(score(ids, x, *extra))
+            if not parts:
+                continue
+            qs, hits, dists = zip(*parts)
+            yield pa.RecordBatch.from_arrays([
+                pa.array(np.repeat(qs, [len(h) for h in hits]), pa.int64()),
+                pa.array(np.concatenate(hits), pa.int64()),
+                pa.array(np.concatenate(dists), dist_type),
+            ], names=[query_id, id_col, dist_col])
+
+    return rows.mapInArrow(
+        gen, f"{query_id} long, {id_col} long, {dist_col} {'long' if integer else 'double'}"
+    )
+
+
+def _adc_scan(rows: DataFrame, qids, luts, query_id: str, id_col: str,
+              encode=None) -> DataFrame:
+    """ADC of every query (``luts[qi]``) against every row of ``rows``,
+    whose second column holds PQ codes, or vectors that ``encode`` maps to
+    codes inside the same pass."""
+    def score(ids, x):
+        codes = x if encode is None else encode(x)
+        for qid, lut in zip(qids, luts):
+            yield qid, ids, _adc(lut, codes)
+
+    return _scan(rows, score, query_id, id_col, "adc_dist", luts.dtype)
+
+
+def _ivfpq_scan(rows: DataFrame, qids, q, cents, books, probes, assign,
+                query_id: str, id_col: str) -> DataFrame:
+    """The IVFPQ probe-scan. ``probes[qi]`` are the rows of ``cents`` that
+    query ``qi`` probes; its LUT per probed list comes from its residual
+    against that centroid. Each corpus row is assigned to a list
+    (``assign(x, *extra)`` → row of ``cents``), residual-encoded, and
+    ADC-scored only by the queries that probe its list."""
+    import numpy as np
+
+    nq, nprobe = probes.shape
+    luts = _sub_dists(
+        (q[:, None, :] - cents[probes]).reshape(nq * nprobe, -1), books
+    ).reshape(nq, nprobe, len(books), -1)
+
+    def score(ids, x, *extra):
+        ci = assign(x, *extra)
+        codes = _encode(x - cents[ci], books)
+        for qi, qid in enumerate(qids):
+            mask = np.isin(ci, probes[qi])
+            if not mask.any():
+                continue
+            sel_ci, sel_codes = ci[mask], codes[mask]
+            d = np.empty(len(sel_ci), dtype=luts.dtype)
+            for pj, c in enumerate(probes[qi]):
+                hit = sel_ci == c
+                d[hit] = _adc(luts[qi, pj], sel_codes[hit])
+            yield qid, ids[mask], d
+
+    return _scan(rows, score, query_id, id_col, "adc_dist", luts.dtype)
+
+
 def pq_train_codebooks(
     corpus: DataFrame, vec_col: str, id_col: str, dim: int,
     m: int = 8, k: int = 16, iters: int = 5, sample_rows: int = 2048,
@@ -594,61 +722,41 @@ def pq_train_codebooks(
     rerun-stable."""
     import numpy as np
 
-    assert dim % m == 0
-    sub = dim // m
-    sample = (
-        corpus.select(id_col, vec_col).orderBy(id_col).limit(sample_rows)
-    ).toPandas()
-    x = np.asarray([np.asarray(v, dtype=np.float64) for v in sample[vec_col]])
-    x = _l2_normalize(x)
-    books: list[list[list[float]]] = []
-    for j in range(m):
-        xs = x[:, j * sub:(j + 1) * sub]
-        cents = xs[:k].copy()
-        for _ in range(iters):
-            # assign: (n, k) squared L2
-            d = ((xs[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            a = d.argmin(axis=1)
-            for c in range(k):
-                mask = a == c
-                if mask.any():
-                    cents[c] = xs[mask].mean(axis=0)
-        books.append([[float(v) for v in row] for row in cents])
-    return books
+    _part_width(dim, m, "pq_train_codebooks dim / m")
+    _, x = _collect_matrix(
+        corpus.select(id_col, vec_col).orderBy(id_col).limit(sample_rows), vec_col
+    )
+    books = _lloyd_books(_l2_normalize(x.astype(np.float64)), m, k, iters)
+    return [b.tolist() for b in books]
 
 
 def pq_encode(
     corpus: DataFrame, vec_col: str, id_col: str, dim: int,
     books: list[list[list[float]]],
 ) -> DataFrame:
-    """Encode each vector as ``m`` codebook indices (array<short>).
+    """Encode each vector as ``m`` codebook indices (array<smallint>).
 
     Map-side only: codebooks ride to executors as captured literals inside
     one Arrow-batched pass; no shuffle at any corpus size."""
     import numpy as np
+    import pyarrow as pa
 
-    m = len(books)
-    sub = dim // m
     cents = [np.asarray(b, dtype=np.float64) for b in books]
-    schema = f"{id_col} long, __code array<smallint>"
 
     def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
-            x = np.asarray(
-                [np.asarray(v, dtype=np.float64) for v in pdf[vec_col]]
+            x = _l2_normalize(list_to_matrix(batch.column(1)).astype(np.float64))
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0).cast(pa.int64()),
+                 matrix_to_list(_encode(x, cents).astype(np.int16))],
+                names=[id_col, "__code"],
             )
-            x = _l2_normalize(x)
-            codes = np.empty((len(x), m), dtype=np.int16)
-            for j in range(m):
-                xs = x[:, j * sub:(j + 1) * sub]
-                d = ((xs[:, None, :] - cents[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = d.argmin(axis=1).astype(np.int16)
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(),
-                                "__code": list(codes)})
 
-    return corpus.select(id_col, vec_col).mapInPandas(gen, schema)
+    return corpus.select(id_col, vec_col).mapInArrow(
+        gen, f"{id_col} long, __code array<smallint>"
+    )
 
 
 def pq_topk(
@@ -673,51 +781,16 @@ def pq_topk(
     """
     import numpy as np
 
-    sub = dim // m
     if books is None:
         books = pq_train_codebooks(corpus, vec_col, id_col, dim, m, n_codes)
     if codes is None:
         codes = pq_encode(corpus, vec_col, id_col, dim, books)
-    cents = [np.asarray(b, dtype=np.float64) for b in books]
-    qrows = (
-        queries.select(query_id, vec_col).orderBy(query_id).toPandas()
+    qids, q = _query_matrix(queries, query_id, vec_col)
+    luts = _sub_dists(
+        _l2_normalize(q.astype(np.float64)), [np.asarray(b, dtype=np.float64) for b in books]
     )
-    qids = qrows[query_id].to_numpy()
-    qvecs = _l2_normalize(np.asarray(
-        [np.asarray(v, dtype=np.float64) for v in qrows[vec_col]]
-    ))
-    # LUT[q, j, c] = ||query_q[sub j] - centroid_c[sub j]||^2
-    luts = np.empty((len(qids), m, len(cents[0])), dtype=np.float64)
-    for j in range(m):
-        qs = qvecs[:, j * sub:(j + 1) * sub]
-        luts[:, j, :] = (
-            (qs[:, None, :] - cents[j][None, :, :]) ** 2
-        ).sum(axis=2)
-
-    schema = f"{query_id} long, {id_col} long, adc_dist double"
-
-    def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c = np.asarray(list(pdf["__code"]), dtype=np.int64)  # (n, m)
-            ids = pdf[id_col].to_numpy()
-            for qi, qid in enumerate(qids):
-                # gather-sum: dist[i] = sum_j LUT[qi, j, c[i, j]]
-                d = luts[qi][np.arange(m)[None, :], c].sum(axis=1)
-                yield pd.DataFrame({
-                    query_id: np.full(len(ids), qid, dtype=np.int64),
-                    id_col: ids,
-                    "adc_dist": d,
-                })
-
-    scored = codes.mapInPandas(gen, schema)
-    w = Window.partitionBy(query_id).orderBy("adc_dist", F.col(id_col))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    scored = _adc_scan(codes.select(id_col, "__code"), qids, luts, query_id, id_col)
+    return _topk_per_key(scored, query_id, k, "adc_dist", F.col(id_col))
 
 
 def ivfpq_topk(
@@ -733,122 +806,42 @@ def ivfpq_topk(
     Residual encoding matters: residuals concentrate near the origin, so the
     same 4-bit codebooks quantize them far more finely than raw vectors.
 
-    Scale shape: corpus-side work (assignment + residual + encoding) is one
-    broadcast-centroid map pass producing (id, centroid_id, 8-byte code) —
-    the inverted index. The probe join keys on centroid_id so a query
-    ADC-scans nprobe/n_centroids of the codes; per (query, centroid) the LUT
-    is built from the query's residual against that centroid. Final top-k is
-    the usual per-query heap. Nothing ever shuffles raw vectors.
+    Scale shape: corpus-side work (assignment + residual + encoding + ADC)
+    is one broadcast-centroid map pass; a query ADC-scans only the codes of
+    its nprobe nearest lists (by cosine), with one LUT per (query, probed
+    centroid) built from the query's residual against that centroid. Final
+    top-k is the usual per-query heap. Nothing ever shuffles raw vectors.
     """
     import numpy as np
 
-    sub = dim // m
     # coarse quantizer + assignment (deterministic, ordered init)
     assigned, cents_df = ivf_assign(corpus, vec_col, id_col, n_centroids)
-    cent_rows = cents_df.orderBy("centroid_id").collect()
-    cent_ids = np.asarray([r["centroid_id"] for r in cent_rows], dtype=np.int64)
-    cent_mat = np.asarray([list(r["__cent"]) for r in cent_rows],
-                          dtype=np.float64)
-    cent_of = {int(i): cent_mat[j] for j, i in enumerate(cent_ids)}
+    ct, cents = _collect_matrix(cents_df.orderBy("centroid_id"), "__cent")
+    cent_ids = ct.column("centroid_id").to_numpy()
 
-    # train PQ codebooks on a bounded sample of residuals
-    sample = (
-        assigned.orderBy(id_col).limit(sample_rows)
-        .select(id_col, "__cv", "centroid_id")
-    ).toPandas()
-    res = np.asarray([
-        np.asarray(v, dtype=np.float64) - cent_of[int(c)]
-        for v, c in zip(sample["__cv"], sample["centroid_id"])
-    ])
-    books = []
-    for j in range(m):
-        xs = res[:, j * sub:(j + 1) * sub]
-        cb = xs[:n_codes].copy()
-        for _ in range(5):
-            d = ((xs[:, None, :] - cb[None, :, :]) ** 2).sum(axis=2)
-            a = d.argmin(axis=1)
-            for c in range(n_codes):
-                mask = a == c
-                if mask.any():
-                    cb[c] = xs[mask].mean(axis=0)
-        books.append(cb)
+    def assign(x, cid):
+        return np.searchsorted(cent_ids, cid)  # centroid_id → row of cents
 
-    # encode residuals (map-side; centroids + codebooks ride as literals)
-    def encode_batch(pdf):
-        x = np.asarray([np.asarray(v, dtype=np.float64)
-                        for v in pdf["__cv"]])
-        cs = pdf["centroid_id"].to_numpy()
-        r = x - np.asarray([cent_of[int(c)] for c in cs])
-        codes = np.empty((len(x), m), dtype=np.int64)
-        for j in range(m):
-            xs = r[:, j * sub:(j + 1) * sub]
-            d = ((xs[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-            codes[:, j] = d.argmin(axis=1)
-        return pdf[id_col].to_numpy(), cs, codes
-
-    # query side: nprobe nearest centroids, LUT per (query, centroid) from
-    # the query residual against that centroid
-    qrows = queries.select(query_id, vec_col).orderBy(query_id).toPandas()
-    qids = qrows[query_id].to_numpy()
-    qvecs = np.asarray([np.asarray(v, dtype=np.float64)
-                        for v in qrows[vec_col]])
-    qnorm = np.linalg.norm(qvecs, axis=1, keepdims=True)
-    cnorm = np.linalg.norm(cent_mat, axis=1)
-    cos = (qvecs @ cent_mat.T) / np.maximum(qnorm * cnorm[None, :], 1e-12)
-    probe_order = np.argsort(-cos, axis=1)[:, :nprobe]
-
-    luts: dict[tuple[int, int], object] = {}
-    probe_sets: dict[int, set[int]] = {}
-    for qi, qid in enumerate(qids):
-        probe_sets[int(qid)] = set()
-        for pj in probe_order[qi]:
-            cid = int(cent_ids[pj])
-            probe_sets[int(qid)].add(cid)
-            qres = qvecs[qi] - cent_mat[pj]
-            lut = np.empty((m, n_codes), dtype=np.float64)
-            for j in range(m):
-                qs = qres[j * sub:(j + 1) * sub]
-                lut[j] = ((qs[None, :] - books[j]) ** 2).sum(axis=1)
-            luts[(int(qid), cid)] = lut
-
-    out_schema = f"{query_id} long, {id_col} long, adc_dist double"
-
-    # encode + ADC-scan fused into ONE Python pass (guide §4, same
-    # restructure as ivfpq_topk_fixed): the two-stage form shipped the
-    # (id, centroid_id, code) index JVM -> Python -> JVM -> Python inside
-    # the same task for nothing
-    def encode_score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            ids, cids, c = encode_batch(pdf)
-            for qid, cset in probe_sets.items():
-                mask = np.isin(cids, list(cset))
-                if not mask.any():
-                    continue
-                sel_ids, sel_c, sel_cid = ids[mask], c[mask], cids[mask]
-                d = np.empty(len(sel_ids), dtype=np.float64)
-                for cid in cset:
-                    cmask = sel_cid == cid
-                    if not cmask.any():
-                        continue
-                    lut = luts[(qid, cid)]
-                    d[cmask] = lut[np.arange(m)[None, :], sel_c[cmask]].sum(axis=1)
-                yield pd.DataFrame({
-                    query_id: np.full(mask.sum(), qid, dtype=np.int64),
-                    id_col: sel_ids,
-                    "adc_dist": d,
-                })
-
-    scored = assigned.select(id_col, "__cv", "centroid_id").mapInPandas(
-        encode_score, out_schema
+    # PQ codebooks trained on a bounded sample of residuals
+    st, sx = _collect_matrix(
+        assigned.orderBy(id_col).limit(sample_rows).select(id_col, "__cv", "centroid_id"),
+        "__cv",
     )
-    w = Window.partitionBy(query_id).orderBy("adc_dist", F.col(id_col))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
+    res = sx - cents[assign(sx, st.column("centroid_id").to_numpy())]
+    books = _lloyd_books(res, m, n_codes, 5)
+
+    qids, q = _query_matrix(queries, query_id, vec_col)
+    q = q.astype(np.float64)
+    qnorm = np.linalg.norm(q, axis=1, keepdims=True)
+    cnorm = np.linalg.norm(cents, axis=1)
+    cos = (q @ cents.T) / np.maximum(qnorm * cnorm[None, :], 1e-12)
+    probes = np.argsort(-cos, axis=1)[:, :nprobe]
+
+    scored = _ivfpq_scan(
+        assigned.select(id_col, "__cv", "centroid_id"), qids, q, cents, books,
+        probes, assign, query_id, id_col,
     )
+    return _topk_per_key(scored, query_id, k, "adc_dist", F.col(id_col))
 
 
 # ---------------------------------------------------------------------------
@@ -870,7 +863,9 @@ def ivfpq_topk(
 # Every number after the quantize is an exact int64, so a DuckDB oracle with
 # the trained codebooks inlined as BIGINT literals matches hash-for-hash.
 # The float path stays as the production recall surface (tests pin recall);
-# this is the correctness-evidence surface for the same architecture.
+# this is the correctness-evidence surface for the same architecture, and
+# it runs the same core (_lloyd_books, _encode, _sub_dists, _adc and the
+# scans) on int64.
 # ---------------------------------------------------------------------------
 
 FIXED_POINT_SCALE = 1 << 20
@@ -889,6 +884,22 @@ def _quantize_fixed_np(x, scale: int = FIXED_POINT_SCALE):
     return np.floor(np.asarray(x, dtype=np.float64) * scale).astype(np.int64)
 
 
+def _quantized_rows(corpus: DataFrame, vec_col: str, id_col: str) -> DataFrame:
+    """(id, floor(x·2^20) array<long>) rows, quantized JVM-side."""
+    return corpus.select(
+        F.col(id_col), quantize_fixed_expr(F.col(vec_col)).alias("__xq")
+    )
+
+
+def _nearest_lists(q, coarse, nprobe: int):
+    """``(nq, nprobe)`` coarse-centroid rows nearest each query by int64
+    squared L2; ties break on centroid index (stable argsort == ORDER BY d,
+    cid)."""
+    import numpy as np
+
+    return np.argsort(_sub_dists(q, [coarse])[:, 0], axis=1, kind="stable")[:, :nprobe]
+
+
 def pq_train_codebooks_fixed(
     xq, m: int = 8, k: int = 16, iters: int = 5
 ) -> list[list[list[int]]]:
@@ -901,23 +912,26 @@ def pq_train_codebooks_fixed(
     books bit-for-bit."""
     import numpy as np
 
-    xq = np.asarray(xq, dtype=np.int64)
-    dim = xq.shape[1]
-    assert dim % m == 0
-    sub = dim // m
-    books: list[list[list[int]]] = []
-    for j in range(m):
-        xs = xq[:, j * sub:(j + 1) * sub]
-        cents = xs[:k].copy()
-        for _ in range(iters):
-            d = ((xs[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-            a = d.argmin(axis=1)
-            for c in range(k):
-                mask = a == c
-                if mask.any():
-                    cents[c] = xs[mask].sum(axis=0) // int(mask.sum())
-        books.append([[int(v) for v in row] for row in cents])
-    return books
+    return [b.tolist() for b in _lloyd_books(np.asarray(xq, dtype=np.int64), m, k, iters)]
+
+
+def _oracle_sf_dir(sf_dir: str | None) -> str:
+    import os
+
+    return sf_dir or os.environ.get(
+        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
+    )
+
+
+def _reference_sample(sf_dir: str, sample_rows: int):
+    """The quantized sample both fixed-point models train on: the first
+    ``sample_rows`` oracle-scale embeddings by vec_id, int64 ``(n, dim)``."""
+    import pyarrow.parquet as pq_  # no Spark needed: oracle builder path
+
+    t = pq_.read_table(
+        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
+    ).sort_by("vec_id").slice(0, sample_rows)
+    return _quantize_fixed_np(list_to_matrix(t.column("embedding").combine_chunks()))
 
 
 def pq_fixed_reference_books(
@@ -929,28 +943,13 @@ def pq_fixed_reference_books(
     and the DuckDB oracle builder call this, so they share identical books
     by construction — the 'pretrained model artifact' pattern: at cluster
     scale codebooks are a few KB trained offline and shipped as literals."""
-    import os
-
-    sf_dir = sf_dir or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir(sf_dir)
     key = (sf_dir, dim, m, k, sample_rows)
-    if key in _PQ_FIXED_BOOK_CACHE:
-        return _PQ_FIXED_BOOK_CACHE[key]
-    import pyarrow.parquet as pq_  # no Spark needed: oracle builder path
-
-    t = pq_.read_table(
-        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
-    ).to_pandas()
-    t = t.sort_values("vec_id").head(sample_rows)
-    import numpy as np
-
-    xq = _quantize_fixed_np(np.asarray(
-        [np.asarray(v, dtype=np.float64) for v in t["embedding"]]
-    ))
-    books = pq_train_codebooks_fixed(xq, m=m, k=k)
-    _PQ_FIXED_BOOK_CACHE[key] = books
-    return books
+    if key not in _PQ_FIXED_BOOK_CACHE:
+        _PQ_FIXED_BOOK_CACHE[key] = pq_train_codebooks_fixed(
+            _reference_sample(sf_dir, sample_rows), m=m, k=k
+        )
+    return _PQ_FIXED_BOOK_CACHE[key]
 
 
 _PQ_FIXED_BOOK_CACHE: dict = {}
@@ -964,6 +963,8 @@ def pq_topk_fixed(
     """ADC top-k over fixed-point codes — same scale shape as ``pq_topk``
     (map-side encode, codes-only shuffle for the per-query top-k heap), but
     every distance is an exact int64 so results hash-match a SQL oracle.
+    Encode and ADC run in one pass: the codes are consumed by the scorer and
+    never needed JVM-side.
 
     Returns (query_id, id, adc_dist bigint); smaller is closer; ties broken
     by id.  Self-matches are included (dist need not be 0 after
@@ -971,56 +972,16 @@ def pq_topk_fixed(
     """
     import numpy as np
 
-    sub = dim // m
     if books is None:
         books = pq_fixed_reference_books(dim=dim, m=m, k=n_codes)
     cents = [np.asarray(b, dtype=np.int64) for b in books]
-
-    xq = corpus.select(
-        F.col(id_col), quantize_fixed_expr(F.col(vec_col)).alias("__xq")
+    qids, q = _query_matrix(queries, query_id, vec_col)
+    scored = _adc_scan(
+        _quantized_rows(corpus, vec_col, id_col), qids,
+        _sub_dists(_quantize_fixed_np(q), cents), query_id, id_col,
+        encode=lambda x: _encode(x, cents),
     )
-
-    qrows = queries.select(query_id, vec_col).orderBy(query_id).toPandas()
-    qids = qrows[query_id].to_numpy()
-    qvq = np.asarray(
-        [_quantize_fixed_np(v) for v in qrows[vec_col]], dtype=np.int64
-    )
-    luts = np.empty((len(qids), m, n_codes), dtype=np.int64)
-    for j in range(m):
-        qs = qvq[:, j * sub:(j + 1) * sub]
-        luts[:, j, :] = ((qs[:, None, :] - cents[j][None, :, :]) ** 2).sum(axis=2)
-
-    out_schema = f"{query_id} long, {id_col} long, adc_dist long"
-
-    # encode + ADC-scan fused into ONE Python pass (guide §4, same
-    # restructure as ivfpq_topk_fixed): codes are consumed immediately by
-    # the scorer and never needed JVM-side
-    def encode_score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.asarray(list(pdf["__xq"]), dtype=np.int64)
-            codes = np.empty((len(x), m), dtype=np.int64)
-            for j in range(m):
-                xs = x[:, j * sub:(j + 1) * sub]
-                d = ((xs[:, None, :] - cents[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = d.argmin(axis=1)
-            ids = pdf[id_col].to_numpy()
-            for qi, qid in enumerate(qids):
-                d = luts[qi][np.arange(m)[None, :], codes].sum(axis=1)
-                yield pd.DataFrame({
-                    query_id: np.full(len(ids), qid, dtype=np.int64),
-                    id_col: ids,
-                    "adc_dist": d,
-                })
-
-    scored = xq.mapInPandas(encode_score, out_schema)
-    w = Window.partitionBy(query_id).orderBy("adc_dist", F.col(id_col))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter((F.col("rn") <= k) & (F.col("rn") <= F.lit(k)))
-        .drop("rn")
-    )
+    return _topk_per_key(scored, query_id, k, "adc_dist", F.col(id_col))
 
 
 def ivfpq_fixed_reference(
@@ -1032,33 +993,20 @@ def ivfpq_fixed_reference(
     quantizer = integer Lloyd over the FULL dim (pq_train_codebooks_fixed
     with m=1); residual books = integer Lloyd over sample residuals.  Shared
     verbatim by the Spark query and the oracle builder."""
-    import os
-
     import numpy as np
 
-    sf_dir = sf_dir or os.environ.get(
-        "SPARK_GRAFT_ORACLE_SF_DIR", "/root/testdata/sf0.01"
-    )
+    sf_dir = _oracle_sf_dir(sf_dir)
     key = ("ivfpq", sf_dir, dim, m, n_codes, n_centroids, sample_rows)
-    if key in _PQ_FIXED_BOOK_CACHE:
-        return _PQ_FIXED_BOOK_CACHE[key]
-    import pyarrow.parquet as pq_
-
-    t = pq_.read_table(
-        f"{sf_dir}/embeddings.parquet", columns=["vec_id", "embedding"]
-    ).to_pandas().sort_values("vec_id").head(sample_rows)
-    xq = _quantize_fixed_np(np.asarray(
-        [np.asarray(v, dtype=np.float64) for v in t["embedding"]]
-    ))
-    coarse = np.asarray(
-        pq_train_codebooks_fixed(xq, m=1, k=n_centroids)[0], dtype=np.int64
-    )
-    d = ((xq[:, None, :] - coarse[None, :, :]) ** 2).sum(axis=2)
-    res = xq - coarse[d.argmin(axis=1)]
-    books = pq_train_codebooks_fixed(res, m=m, k=n_codes)
-    ref = ([[int(v) for v in row] for row in coarse], books)
-    _PQ_FIXED_BOOK_CACHE[key] = ref
-    return ref
+    if key not in _PQ_FIXED_BOOK_CACHE:
+        xq = _reference_sample(sf_dir, sample_rows)
+        coarse = np.asarray(
+            pq_train_codebooks_fixed(xq, m=1, k=n_centroids)[0], dtype=np.int64
+        )
+        res = xq - coarse[_encode(xq, [coarse])[:, 0]]
+        _PQ_FIXED_BOOK_CACHE[key] = (
+            coarse.tolist(), pq_train_codebooks_fixed(res, m=m, k=n_codes)
+        )
+    return _PQ_FIXED_BOOK_CACHE[key]
 
 
 def ivfpq_topk_fixed(
@@ -1069,95 +1017,26 @@ def ivfpq_topk_fixed(
     """IVFPQ (coarse list pruning + residual PQ) in the exact int64 domain.
 
     Same inverted-index scale shape as the float ``ivfpq_topk`` — one
-    map-side pass builds (id, centroid_id, code), queries ADC-scan only
-    their nprobe lists — but every distance is an exact integer, so the
-    DuckDB oracle hash-matches. Probe order ties break on centroid index
+    map-side pass assigns, residual-encodes and ADC-scans, queries score
+    only their nprobe lists — but every distance is an exact integer, so
+    the DuckDB oracle hash-matches. Probe order ties break on centroid index
     (stable argsort == ORDER BY d, cid)."""
     import numpy as np
 
-    sub = dim // m
     if ref is None:
         ref = ivfpq_fixed_reference(
             dim=dim, m=m, n_codes=n_codes, n_centroids=n_centroids
         )
     coarse = np.asarray(ref[0], dtype=np.int64)
-    cents = [np.asarray(b, dtype=np.int64) for b in ref[1]]
-
-    xq = corpus.select(
-        F.col(id_col), quantize_fixed_expr(F.col(vec_col)).alias("__xq")
+    books = [np.asarray(b, dtype=np.int64) for b in ref[1]]
+    qids, q = _query_matrix(queries, query_id, vec_col)
+    q = _quantize_fixed_np(q)
+    scored = _ivfpq_scan(
+        _quantized_rows(corpus, vec_col, id_col), qids, q, coarse, books,
+        _nearest_lists(q, coarse, nprobe), lambda x: _encode(x, [coarse])[:, 0],
+        query_id, id_col,
     )
-    qrows = queries.select(query_id, vec_col).orderBy(query_id).toPandas()
-    qids = qrows[query_id].to_numpy()
-    qvq = np.asarray(
-        [_quantize_fixed_np(v) for v in qrows[vec_col]], dtype=np.int64
-    )
-    luts: dict[tuple[int, int], object] = {}
-    probe_sets: dict[int, list[int]] = {}
-    for qi, qid in enumerate(qids):
-        dcent = ((qvq[qi][None, :] - coarse) ** 2).sum(axis=1)
-        order = np.argsort(dcent, kind="stable")[:nprobe]
-        probe_sets[int(qid)] = [int(c) for c in order]
-        for cid in order:
-            qres = qvq[qi] - coarse[cid]
-            lut = np.empty((m, n_codes), dtype=np.int64)
-            for j in range(m):
-                qs = qres[j * sub:(j + 1) * sub]
-                lut[j] = ((qs[None, :] - cents[j]) ** 2).sum(axis=1)
-            luts[(int(qid), int(cid))] = lut
-
-    out_schema = f"{query_id} long, {id_col} long, adc_dist long"
-
-    def score_arrays(ids, cids, c):
-        # ADC over one batch of (id, centroid_id, code) arrays
-        for qid, plist in probe_sets.items():
-            mask = np.isin(cids, plist)
-            if not mask.any():
-                continue
-            sel_ids, sel_c, sel_cid = ids[mask], c[mask], cids[mask]
-            d = np.empty(len(sel_ids), dtype=np.int64)
-            for cid in plist:
-                cmask = sel_cid == cid
-                if not cmask.any():
-                    continue
-                lut = luts[(qid, cid)]
-                d[cmask] = lut[
-                    np.arange(m)[None, :], sel_c[cmask]
-                ].sum(axis=1)
-            yield pd.DataFrame({
-                query_id: np.full(int(mask.sum()), qid, dtype=np.int64),
-                id_col: sel_ids,
-                "adc_dist": d,
-            })
-
-    # encode and ADC-scan fused into ONE Python pass (r13 optimization
-    # pass, guide §4): the two-stage form ran back-to-back mapInPandas
-    # operators, shipping the (id, centroid_id, code) relation
-    # JVM -> Python -> JVM -> Python for no reason — the codes are
-    # consumed immediately by the scorer and never needed JVM-side.
-    def encode_score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.asarray(list(pdf["__xq"]), dtype=np.int64)
-            dc = ((x[:, None, :] - coarse[None, :, :]) ** 2).sum(axis=2)
-            cid = dc.argmin(axis=1)
-            r = x - coarse[cid]
-            codes = np.empty((len(x), m), dtype=np.int64)
-            for j in range(m):
-                xs = r[:, j * sub:(j + 1) * sub]
-                d = ((xs[:, None, :] - cents[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = d.argmin(axis=1)
-            yield from score_arrays(
-                pdf[id_col].to_numpy(), cid.astype(np.int64), codes
-            )
-
-    scored = xq.mapInPandas(encode_score, out_schema)
-    w = Window.partitionBy(query_id).orderBy("adc_dist", F.col(id_col))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    return _topk_per_key(scored, query_id, k, "adc_dist", F.col(id_col))
 
 
 def lsh_plane_ints(dim: int, bits: int = 16) -> list[list[int]]:
@@ -1170,6 +1049,14 @@ def lsh_plane_ints(dim: int, bits: int = 16) -> list[list[int]]:
         [((5 * b + 11 * i + 3) % 17) - 8 for i in range(dim)]
         for b in range(bits)
     ]
+
+
+def _l2_scan(ids, x, qids, q, masks):
+    """Exact int64 squared L2 of each query against its candidate rows
+    (``masks``, one boolean row mask per query)."""
+    for qid, qv, mask in zip(qids, q, masks):
+        if mask.any():
+            yield qid, ids[mask], ((x[mask] - qv[None, :]) ** 2).sum(axis=1)
 
 
 def lsh_topk_fixed(
@@ -1189,61 +1076,30 @@ def lsh_topk_fixed(
     literals and hash-matches.
 
     Scale shape: ONE map-side Arrow pass over the corpus (signature = one
-    integer dgemm per batch, exactly like the float path's profiled kernel);
-    the bounded query set rides inside the closure, so the only shuffle is
-    the final per-query top-k window over candidate rows (~20-30%% of the
-    corpus per query at the test data's bit balance)."""
+    integer matmul per batch, exactly like the float path's profiled
+    kernel); the bounded query set rides inside the closure, so the only
+    shuffle is the final per-query top-k window over candidate rows
+    (~20-30%% of the corpus per query at the test data's bit balance)."""
     import numpy as np
 
-    assert bits % bands == 0
-    bw = bits // bands
+    bw = _part_width(bits, bands, "lsh_topk_fixed bits / bands")
     P = np.asarray(lsh_plane_ints(dim, bits), dtype=np.int64)
 
-    qrows = queries.select(query_id, vec_col).orderBy(query_id).toPandas()
-    qids = qrows[query_id].to_numpy()
-    qvq = np.asarray(
-        [_quantize_fixed_np(v) for v in qrows[vec_col]], dtype=np.int64
-    )
-    qbits = (qvq @ P.T >= 0).astype(np.int64)
-    qband = np.stack(
-        [sum(qbits[:, bw * g + j] << j for j in range(bw))
-         for g in range(bands)], axis=1,
-    )  # (nq, bands)
+    def band_vals(v):  # (n, bands): sign bits of each band, little-endian
+        b = (v @ P.T >= 0).astype(np.int64).reshape(len(v), bands, bw)
+        return (b << np.arange(bw)).sum(axis=2)
 
-    xq = corpus.select(
-        F.col(id_col), quantize_fixed_expr(F.col(vec_col)).alias("__xq")
-    )
-    out_schema = f"{query_id} long, {id_col} long, l2_fixed long"
+    qids, q = _query_matrix(queries, query_id, vec_col)
+    q = _quantize_fixed_np(q)
+    qband = band_vals(q)
 
-    def score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.asarray(list(pdf["__xq"]), dtype=np.int64)
-            ids = pdf[id_col].to_numpy()
-            cbits = (x @ P.T >= 0).astype(np.int64)
-            cband = np.stack(
-                [sum(cbits[:, bw * g + j] << j for j in range(bw))
-                 for g in range(bands)], axis=1,
-            )
-            for qi, qid in enumerate(qids):
-                mask = (cband == qband[qi][None, :]).any(axis=1)
-                if not mask.any():
-                    continue
-                d = ((x[mask] - qvq[qi][None, :]) ** 2).sum(axis=1)
-                yield pd.DataFrame({
-                    query_id: np.full(int(mask.sum()), qid, dtype=np.int64),
-                    id_col: ids[mask],
-                    "l2_fixed": d,
-                })
+    def score(ids, x):
+        cband = band_vals(x)
+        yield from _l2_scan(ids, x, qids, q, ((cband == b).any(axis=1) for b in qband))
 
-    scored = xq.mapInPandas(score, out_schema)
-    w = Window.partitionBy(query_id).orderBy("l2_fixed", F.col(id_col))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    scored = _scan(_quantized_rows(corpus, vec_col, id_col), score,
+                   query_id, id_col, "l2_fixed", np.int64)
+    return _topk_per_key(scored, query_id, k, "l2_fixed", F.col(id_col))
 
 
 def ivf_topk_fixed(
@@ -1266,52 +1122,17 @@ def ivf_topk_fixed(
     if ref is None:
         ref = ivfpq_fixed_reference(dim=dim, n_centroids=n_centroids)
     coarse = np.asarray(ref[0], dtype=np.int64)
+    qids, q = _query_matrix(queries, query_id, vec_col)
+    q = _quantize_fixed_np(q)
+    probes = _nearest_lists(q, coarse, nprobe)
 
-    xq = corpus.select(
-        F.col(id_col), quantize_fixed_expr(F.col(vec_col)).alias("__xq")
-    )
+    def score(ids, x):
+        ci = _encode(x, [coarse])[:, 0]
+        yield from _l2_scan(ids, x, qids, q, (np.isin(ci, p) for p in probes))
 
-    qrows = queries.select(query_id, vec_col).orderBy(query_id).toPandas()
-    qids = qrows[query_id].to_numpy()
-    qvq = np.asarray(
-        [_quantize_fixed_np(v) for v in qrows[vec_col]], dtype=np.int64
-    )
-    probe_sets: dict[int, list[int]] = {}
-    qvecs: dict[int, object] = {}
-    for qi, qid in enumerate(qids):
-        dcent = ((qvq[qi][None, :] - coarse) ** 2).sum(axis=1)
-        order = np.argsort(dcent, kind="stable")[:nprobe]
-        probe_sets[int(qid)] = [int(c) for c in order]
-        qvecs[int(qid)] = qvq[qi]
-
-    out_schema = f"{query_id} long, {id_col} long, l2_fixed long"
-
-    def assign_and_score(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            x = np.asarray(list(pdf["__xq"]), dtype=np.int64)
-            ids = pdf[id_col].to_numpy()
-            dc = ((x[:, None, :] - coarse[None, :, :]) ** 2).sum(axis=2)
-            cids = dc.argmin(axis=1)
-            for qid, plist in probe_sets.items():
-                mask = np.isin(cids, plist)
-                if not mask.any():
-                    continue
-                d = ((x[mask] - qvecs[qid][None, :]) ** 2).sum(axis=1)
-                yield pd.DataFrame({
-                    query_id: np.full(int(mask.sum()), qid, dtype=np.int64),
-                    id_col: ids[mask],
-                    "l2_fixed": d,
-                })
-
-    scored = xq.mapInPandas(assign_and_score, out_schema)
-    w = Window.partitionBy(query_id).orderBy("l2_fixed", F.col(id_col))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .drop("rn")
-    )
+    scored = _scan(_quantized_rows(corpus, vec_col, id_col), score,
+                   query_id, id_col, "l2_fixed", np.int64)
+    return _topk_per_key(scored, query_id, k, "l2_fixed", F.col(id_col))
 
 
 def maxsim_topk_fixed(
@@ -1363,12 +1184,8 @@ def maxsim_topk_fixed(
             score.alias("score"),
         )
     )
-    w = Window.partitionBy(query_id).orderBy(F.desc("score"), id_col)
-    return (
-        sc.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= k)
-        .select(query_id, id_col, "score")
-        .orderBy(query_id, id_col)
+    return _topk_per_key(sc, query_id, k, F.desc("score"), id_col).orderBy(
+        query_id, id_col
     )
 
 

@@ -7,10 +7,12 @@ Re-expression of the reference's distributed adversarial training:
   plan; named layers like addLayer(name, ...) java:132).
 - O3 distributed fit → ``fit_distributed``: workers run local minibatch SGD
   on their shard (map), then the driver takes the element-wise mean of worker
-  parameters (reduce) — exactly ParameterAveragingTrainingMaster semantics
-  (java:324-330, averagingFrequency=10, batchSizePerWorker=200). The map side
-  is ``repartition(n_workers).mapInPandas``: one task per worker, each
-  returning its trained tensors as one float32 buffer; the reduce side is a
+  parameters (reduce) — ParameterAveragingTrainingMaster semantics
+  (java:324-330, averagingFrequency=10, batchSizePerWorker=200) for the
+  parameters; the updater state is not carried (see ``fit_distributed``).
+  The map side is ``repartition(n_workers).mapInArrow``: one task per worker,
+  its shard one ``(n, d)`` array (``kernels.list_to_matrix``), each returning
+  its trained tensors as one float32 buffer; the reduce side is a
   fixed-order float64 mean of the N collected buffers in the driver.
 - J1 weight sync    → ``copy_weights_dict`` (name-mapped parameter copy,
   java:429-460/:474-510/:516-542); the DataFrame form lives in
@@ -41,18 +43,19 @@ from __future__ import annotations
 import json
 import math
 import os
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from . import DEFAULT_SEED
-from .kernels import LayerSpec, Weights, clip_grad, forward, init_weights
+from .kernels import (
+    LayerSpec, Weights, clip_grad, forward, init_weights, list_to_matrix, matrix_to_list,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -177,7 +180,15 @@ class Network:
     specs: list[LayerSpec]
     weights: Weights
     lr_by_layer: dict[str, float]
-    cache: Weights = field(default_factory=dict)
+
+
+def _training_frame(spark: SparkSession, x: np.ndarray, y: np.ndarray) -> DataFrame:
+    """``(features array<float>, label_vec array<float>)`` rows straight from
+    two row-aligned numpy batches, one Arrow table, no per-row objects."""
+    return spark.createDataFrame(pa.table({
+        "features": matrix_to_list(x.astype(np.float32)),
+        "label_vec": matrix_to_list(y.astype(np.float32)),
+    }))
 
 
 def rows_to_weights(rows, like: Weights) -> Weights:
@@ -214,10 +225,16 @@ def fit_distributed(
 
     ``repartition(n_workers)`` deals the rows round-robin into N equal
     shards; it is a user-sized exchange, so AQE never coalesces it and the
-    N local fits run as N tasks. Each worker (its partition id) seeds its
+    N local fits run as N tasks, each a ``mapInArrow`` kernel that reads its
+    shard as two ``(n, d)`` arrays. Each worker (its partition id) seeds its
     RNG with ``seed + worker`` and yields one row: its final loss and its
     trainable tensors (layers with lr != 0) as one float32 buffer in
     ``net.weights`` order. Frozen layers never leave the driver.
+
+    Every round starts RMSProp from an empty cache on every worker, so the
+    first local step of a round is a full ``lr · sign(g)`` step; the
+    reference's ParameterAveragingTrainingMaster averages the updater state
+    across workers and carries it into the next round.
 
     Returns the mean final local loss across workers. Updates net.weights
     in place (the reference's TrainingMaster mutates the wrapped net).
@@ -227,16 +244,18 @@ def fit_distributed(
     layout = [(l, p) for l, ps in trainable.items() for p in ps]  # names only: arrays ride the broadcast
     bc_w = df.sparkSession.sparkContext.broadcast(net.weights)
 
-    def local_fit(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        frames = [b for b in batches if len(b)]
-        if not frames:
+    def local_fit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        batches = [b for b in batches if b.num_rows]
+        if not batches:
             return  # fewer rows than workers: this shard sits the round out
-        pdf = pd.concat(frames, ignore_index=True)
+        shard = pa.Table.from_batches(batches)
         worker = TaskContext.get().partitionId()
         w = {l: {p: a.copy() for p, a in ps.items()} for l, ps in bc_w.value.items()}
         cache: Weights = {}
-        x = np.stack(pdf[features_col].to_numpy()).astype(np.float32)
-        y = np.stack(pdf[label_col].to_numpy()).astype(np.float32)
+        x, y = (
+            list_to_matrix(shard.column(c).combine_chunks()).astype(np.float32)
+            for c in (features_col, label_col)
+        )
         rng = np.random.default_rng(seed + worker)
         loss = math.nan
         for _ in range(local_steps):
@@ -244,11 +263,15 @@ def fit_distributed(
             grads, loss = net_grads(x[idx], y[idx], specs, w)
             rmsprop_update(w, grads, cache, lr_by_layer)
         buf = np.concatenate([np.ravel(w[l][p]) for l, p in layout]).astype(np.float32)
-        yield pd.DataFrame({"worker": [worker], "loss": [loss], "params": [buf.tobytes()]})
+        yield pa.RecordBatch.from_pydict(
+            {"worker": [worker], "loss": [loss], "params": [buf.tobytes()]},
+            schema=pa.schema([("worker", pa.int32()), ("loss", pa.float64()),
+                              ("params", pa.binary())]),
+        )
 
     rows = sorted(
         df.repartition(n_workers)
-        .mapInPandas(local_fit, "worker int, loss double, params binary")
+        .mapInArrow(local_fit, "worker int, loss double, params binary")
         .collect(),
         key=lambda r: r["worker"],
     )
@@ -370,23 +393,12 @@ class GanPipeline:
 
     # -- O4 steps -----------------------------------------------------------
 
-    def _label_df(self, spark: SparkSession, feats: np.ndarray, label: float, noise_seed: int) -> pd.DataFrame:
-        rng = np.random.default_rng(noise_seed)
-        # P6 label smoothing: ±N(0, 0.05) (java:405-406); engine default =
-        # fresh noise per batch (reference reuses one draw — compat quirk)
-        y = label + rng.normal(0, 0.05, (len(feats), 1))
-        return pd.DataFrame(
-            {"features": list(feats.astype(np.float32)), "label_vec": list(y.astype(np.float32))}
-        )
-
-    def _to_df(self, spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
-        schema = T.StructType(
-            [
-                T.StructField("features", T.ArrayType(T.FloatType())),
-                T.StructField("label_vec", T.ArrayType(T.FloatType())),
-            ]
-        )
-        return spark.createDataFrame(pdf, schema)
+    @staticmethod
+    def _smoothed(n: int, label: float, noise_seed: int) -> np.ndarray:
+        """P6 label smoothing: ``label`` ± N(0, 0.05) (java:405-406); engine
+        default = fresh noise per batch (reference reuses one draw — compat
+        quirk)."""
+        return label + np.random.default_rng(noise_seed).normal(0, 0.05, (n, 1))
 
     def fit(
         self,
@@ -412,16 +424,15 @@ class GanPipeline:
             fake_batch = forward(z.astype(np.float32), self.gen.specs, self.gen.weights)
 
             # (b) dis fit on [real:1+ε ∥ fake:0+ε] (java:412-426)
-            dis_pdf = pd.concat(
-                [
-                    self._label_df(spark, real_batch, 1.0, self.seed + epoch * 7),
-                    self._label_df(spark, fake_batch, 0.0, self.seed + epoch * 7 + 1),
-                ],
-                ignore_index=True,
+            dis_df = _training_frame(
+                spark,
+                np.concatenate([real_batch, fake_batch]),
+                np.concatenate([
+                    self._smoothed(len(real_batch), 1.0, self.seed + epoch * 7),
+                    self._smoothed(len(fake_batch), 0.0, self.seed + epoch * 7 + 1),
+                ]),
             )
-            dis_loss = fit_distributed(
-                self._to_df(spark, dis_pdf), self.dis, n_workers, avg_freq, batch_rows
-            )
+            dis_loss = fit_distributed(dis_df, self.dis, n_workers, avg_freq, batch_rows)
 
             # (c) sync dis → gan (J1, java:429-460)
             copy_weights_dict(
@@ -431,10 +442,10 @@ class GanPipeline:
 
             # (d) gan fit: fooling batch (noise, label 1) (java:462-471)
             z2 = rng.uniform(0, 1, (2 * len(real_batch), self.latent_dim)) * 2.0 - 1.0
-            gan_pdf = self._label_df(spark, z2.astype(np.float32), 1.0, self.seed + epoch * 7 + 2)
-            gan_loss = fit_distributed(
-                self._to_df(spark, gan_pdf), self.gan, n_workers, avg_freq, batch_rows
+            gan_df = _training_frame(
+                spark, z2, self._smoothed(len(z2), 1.0, self.seed + epoch * 7 + 2)
             )
+            gan_loss = fit_distributed(gan_df, self.gan, n_workers, avg_freq, batch_rows)
 
             # (e) sync gan → gen (J1, java:474-510)
             copy_weights_dict(
@@ -476,11 +487,8 @@ class GanPipeline:
             {s.name: s.name.replace("dis_", "cv_") for s in self.dis.specs[:-1]},
         )
         onehot = np.eye(self.n_classes, dtype=np.float32)[np.asarray(y, dtype=int)]
-        pdf = pd.DataFrame(
-            {"features": list(x.astype(np.float32)), "label_vec": list(onehot)}
-        )
         return fit_distributed(
-            self._to_df(spark, pdf), self.cv, n_workers, avg_freq, batch_rows
+            _training_frame(spark, x, onehot), self.cv, n_workers, avg_freq, batch_rows
         )
 
     # -- O5 observers -------------------------------------------------------

@@ -7,7 +7,7 @@ shard, reduce = element-wise mean of the workers' parameter buffers, with the
 averaged weights carried across micro-batches in the driver-held Network —
 exactly the state the reference's TrainingMaster holds between `fit` calls.
 
-Scale shape: the per-batch work is ``fit_distributed`` (one mapInPandas task
+Scale shape: the per-batch work is ``fit_distributed`` (one mapInArrow task
 per round-robin worker shard — executors never see the full stream, and each
 returns one float32 buffer), the weight state is O(model), and the stream
 source provides backpressure/checkpointing. This is

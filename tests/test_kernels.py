@@ -20,6 +20,7 @@ from gan_deeplearning4j_spark.kernels import (
     k_maxpool,
     k_upsample,
     list_to_matrix,
+    matrix_to_list,
 )
 
 RNG = np.random.default_rng(666)
@@ -118,7 +119,9 @@ def test_conv_pipeline_shapes_like_reference_gen():
 
 def test_apply_network_distributed_matches_local(spark):
     """mapInArrow forward == local numpy forward, row-for-row, for float
-    and double feature lists (the MNIST CSV scan emits doubles)."""
+    and double feature lists (the MNIST CSV scan emits doubles). The JVM
+    casts doubles to float before the kernel, rounding as numpy's cast
+    does, so both element types give bitwise the same output."""
     specs = [
         LayerSpec("d1", "dense", {"units": 16, "activation": "tanh"}),
         LayerSpec("d2", "dense", {"units": 4, "activation": "sigmoid"}),
@@ -127,32 +130,46 @@ def test_apply_network_distributed_matches_local(spark):
     x = RNG.standard_normal((50, 8)).astype(np.float32)
     pdf = [(i, [float(v) for v in x[i]]) for i in range(50)]
     want = forward(x, specs, w)
+    got = {}
     for elem in ("float", "double"):
         df = spark.createDataFrame(pdf, f"id: long, features: array<{elem}>")
         out = apply_network(df, specs, w).orderBy("id").toPandas()
         assert list(out["id"]) == list(range(50))
-        got = np.stack(out["output"].to_numpy())
-        np.testing.assert_allclose(got, want, rtol=1e-5, atol=1e-6)
+        got[elem] = np.stack(out["output"].to_numpy())
+        np.testing.assert_allclose(got[elem], want, rtol=1e-5, atol=1e-6)
+    np.testing.assert_array_equal(got["double"], got["float"])
 
 
 def test_list_to_matrix_views_sliced_lists():
     import pyarrow as pa
 
-    arr = pa.array([[1.0, 2.0], [3.0, 4.0], [5.0, 6.0]], pa.list_(pa.float64()))
-    np.testing.assert_array_equal(list_to_matrix(arr.slice(1)), [[3.0, 4.0], [5.0, 6.0]])
-    assert list_to_matrix(arr.slice(0, 0)).shape == (0, 0)
+    for t in (pa.float64(), pa.int64()):  # array<long>: the fixed-point scorers' input
+        arr = pa.array([[1, 2], [3, 4], [5, 6]], pa.list_(t))
+        got = list_to_matrix(arr.slice(1))
+        assert got.dtype == t.to_pandas_dtype()
+        np.testing.assert_array_equal(got, [[3, 4], [5, 6]])
+        assert list_to_matrix(arr.slice(0, 0)).shape == (0, 0)
+    # matrix_to_list is the inverse: same values, shape and dtype back
+    for m in (np.random.default_rng(0).standard_normal((4, 3)).astype(np.float32),
+              np.arange(12, dtype=np.int64).reshape(3, 4)[:, 1:],
+              np.zeros((2, 0), dtype=np.float32)):
+        back = list_to_matrix(matrix_to_list(m))
+        assert back.dtype == m.dtype and back.shape == m.shape
+        np.testing.assert_array_equal(back, m)
 
 
 @pytest.mark.parametrize("rows", [
-    [[1.0, 2.0], [3.0]],          # ragged
-    [[1.0, 2.0], None],           # null list
-    [[1.0, 2.0], [3.0, None]],    # null element
+    [[1, 2], [3]],          # ragged
+    [[1, 2], None],         # null list
+    [[1, 2], [3, None]],    # null element
 ])
 def test_list_to_matrix_rejects_ragged_and_null(rows):
     import pyarrow as pa
 
-    with pytest.raises(ValueError):
-        list_to_matrix(pa.array(rows, pa.list_(pa.float32())))
+    for t in (pa.float32(), pa.int64()):
+        arr = pa.array(rows, pa.list_(t))
+        with pytest.raises(ValueError):
+            list_to_matrix(arr)
 
 
 def test_apply_network_null_features_raise(spark):

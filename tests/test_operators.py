@@ -1012,6 +1012,127 @@ def test_ivfpq_fixed_full_probe_equals_pq_on_probed_lists(spark, sf_dir):
         assert qid in {r["vec_id"] for r in rows}
 
 
+def _pq_fixture(spark, n=300, nq=6, dim=16, seed=7):
+    """A small seeded float32 corpus and query set (ids 0..n-1, 0..nq-1)."""
+    rng = np.random.default_rng(seed)
+    x = rng.standard_normal((n, dim)).astype(np.float32)
+    q = rng.standard_normal((nq, dim)).astype(np.float32)
+    corpus = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(x)], "vec_id long, embedding array<float>"
+    )
+    queries = spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(q)], "query_id long, embedding array<float>"
+    )
+    return corpus, queries, x.astype(np.float64), q.astype(np.float64)
+
+
+def _replay_codes(x, books):
+    """Per subspace, the index of the nearest centroid (first minimum)."""
+    sub = x.shape[1] // len(books)
+    return np.stack([
+        [((x[i, j * sub:(j + 1) * sub] - b) ** 2).sum(axis=1).argmin() for i in range(len(x))]
+        for j, b in enumerate(books)
+    ], axis=1)
+
+
+def _replay_lut(v, books):
+    sub = len(v) // len(books)
+    return np.stack([((v[j * sub:(j + 1) * sub] - b) ** 2).sum(axis=1) for j, b in enumerate(books)])
+
+
+def _replay_topk(cands, k):
+    """cands: {qid: [(dist, id), ...]} → sorted (qid, id, dist) rows, k per query."""
+    return sorted((qid, i, d) for qid, c in cands.items() for d, i in sorted(c)[:k])
+
+
+def test_pq_topk_equals_numpy_adc_replay(spark):
+    """The float PQ path, pinned exactly: pq_topk's rows equal a driver-side
+    numpy replay (normalize, encode, LUT, ADC, top-k by (dist, id)) over the
+    same books, distance for distance."""
+    from gan_deeplearning4j_spark.operators.similarity import pq_topk, pq_train_codebooks
+
+    corpus, queries, x, q = _pq_fixture(spark)
+    books = pq_train_codebooks(corpus, "embedding", "vec_id", dim=16, m=4, k=8)
+    got = sorted(
+        (r["query_id"], r["vec_id"], r["adc_dist"])
+        for r in pq_topk(corpus, queries, "embedding", "vec_id", "query_id", dim=16,
+                         k=5, m=4, n_codes=8, books=books).collect()
+    )
+
+    def unit(v):
+        n = np.linalg.norm(v, axis=1, keepdims=True)
+        return v / np.where(n == 0, 1.0, n)
+
+    B = [np.asarray(b) for b in books]
+    codes = _replay_codes(unit(x), B)
+    cands = {}
+    for qid, qv in enumerate(unit(q)):
+        lut = _replay_lut(qv, B)
+        cands[qid] = [(lut[np.arange(4), c].sum(), i) for i, c in enumerate(codes)]
+    assert got == _replay_topk(cands, 5)
+
+
+def test_ivfpq_topk_equals_numpy_adc_replay(spark):
+    """ivfpq_topk pinned exactly: from the engine's coarse assignment
+    (ivf_assign), a numpy replay trains the residual books (first-k init,
+    5 Lloyd iterations), probes the nprobe nearest lists by cosine and
+    ADC-scores each probed row against the query's residual LUT."""
+    from gan_deeplearning4j_spark.operators.similarity import ivf_assign, ivfpq_topk
+
+    corpus, queries, x, q = _pq_fixture(spark)
+    got = sorted(
+        (r["query_id"], r["vec_id"], r["adc_dist"])
+        for r in ivfpq_topk(corpus, queries, "embedding", "vec_id", "query_id", dim=16,
+                            k=5, n_centroids=4, nprobe=2, m=4, n_codes=8).collect()
+    )
+
+    assigned, cents_df = ivf_assign(corpus, "embedding", "vec_id", 4)
+    cent_rows = cents_df.orderBy("centroid_id").collect()
+    cent_ids = [r["centroid_id"] for r in cent_rows]
+    cents = np.asarray([r["__cent"] for r in cent_rows], dtype=np.float64)
+    assert cent_ids == [0, 37, 74, 111]  # ids % 37 == 0, first 4 by id
+    of = {r["vec_id"]: cent_ids.index(r["centroid_id"]) for r in assigned.collect()}
+    ci = np.asarray([of[i] for i in range(len(x))])
+    res = x - cents[ci]
+    books = []
+    for j in range(4):
+        xs = res[:, 4 * j:4 * j + 4]
+        cb = xs[:8].copy()
+        for _ in range(5):
+            a = _replay_codes(xs, [cb])[:, 0]
+            for c in range(8):
+                if (a == c).any():
+                    cb[c] = xs[a == c].mean(axis=0)
+        books.append(cb)
+    codes = _replay_codes(res, books)
+    cos = (q @ cents.T) / np.maximum(
+        np.linalg.norm(q, axis=1, keepdims=True) * np.linalg.norm(cents, axis=1)[None, :], 1e-12
+    )
+    cands = {}
+    for qid in range(len(q)):
+        cands[qid] = []
+        for p in np.argsort(-cos[qid])[:2]:
+            lut = _replay_lut(q[qid] - cents[p], books)
+            cands[qid] += [(lut[np.arange(4), codes[i]].sum(), i)
+                           for i in np.flatnonzero(ci == p)]
+    assert got == _replay_topk(cands, 5)
+
+
+@pytest.mark.parametrize("call", [
+    lambda S: S.pq_train_codebooks(None, "embedding", "vec_id", dim=10, m=3),
+    lambda S: S.pq_train_codebooks_fixed(np.zeros((4, 10), dtype=np.int64), m=3),
+    lambda S: S.lsh_topk_fixed(None, None, "embedding", "vec_id", "query_id",
+                               dim=8, bits=16, bands=5),
+], ids=["pq_train_codebooks", "pq_train_codebooks_fixed", "lsh_topk_fixed"])
+def test_indivisible_subspaces_raise_value_error(call):
+    """dim % m and bits % bands are checked with ValueError, not a bare
+    assert (which `python -O` strips), before any Spark work."""
+    from gan_deeplearning4j_spark.operators import similarity
+
+    with pytest.raises(ValueError, match="equal parts"):
+        call(similarity)
+
+
 def test_merge_upsert_semantics(spark):
     """MERGE primitive: update matched, insert unmatched, delete flagged,
     carry through target columns absent from the update relation."""

@@ -191,7 +191,7 @@ def test_fit_distributed_runs_one_task_per_worker(spark):
     tracker = sc.statusTracker()
     jobs = sorted(tracker.getJobIdsForGroup(group))
     assert jobs
-    # the round's last job ends in the map-fit stage (shuffle read → mapInPandas)
+    # the round's last job ends in the map-fit stage (shuffle read → mapInArrow)
     fit_stage = max(tracker.getJobInfo(jobs[-1]).stageIds)
     info = tracker.getStageInfo(fit_stage)
     assert info.numTasks == n_workers

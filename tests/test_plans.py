@@ -88,6 +88,29 @@ def test_inference_is_shuffle_free(spark):
     assert "MapInArrow" in plan, plan
 
 
+@pytest.mark.parametrize("name", [
+    "pq_encode", "pq_topk", "ivfpq_topk",
+    "pq_topk_fixed", "ivfpq_topk_fixed", "lsh_topk_fixed", "ivf_topk_fixed",
+])
+def test_ann_scorers_cross_to_python_through_arrow(spark, sf_dir, name):
+    """Every vector scorer's Python kernel is a mapInArrow pass on
+    list_to_matrix: no per-row pandas objects."""
+    from gan_deeplearning4j_spark.io import load_table
+    from gan_deeplearning4j_spark.operators import similarity
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    q = emb.filter(F.col("vec_id") < 2).select(F.col("vec_id").alias("query_id"), "embedding")
+    books = [[[0.0] * 8] * 16] * 8
+    if name == "pq_encode":
+        df = similarity.pq_encode(emb, "embedding", "vec_id", 64, books)
+    else:
+        kw = {"books": books} if name == "pq_topk" else {}
+        df = getattr(similarity, name)(emb, q, "embedding", "vec_id", "query_id", dim=64, **kw)
+    plan = formatted_plan(df)
+    assert "MapInArrow" in plan, plan
+    assert "MapInPandas" not in plan, plan
+
+
 def test_mllib_pipeline_composes_and_fuses(spark, sf_dir):
     """Pipeline stages must fuse into one Catalyst plan (no materialization
     boundaries between stages)."""
@@ -604,7 +627,7 @@ def test_r6_promotion_plans(spark, sf_dir):
     # vectors never shuffle, only (query_id, id, dist) candidate rows
     for name in ("ivf_fixed_topk", "lsh_fixed_topk"):
         t = plan_tree(REGISTRY[name].fn(spark, sf_dir))
-        assert t.count("MapInPandas") == 1, (name, t)
+        assert t.count("MapInArrow") == 1, (name, t)
         assert t.count("- Exchange") == 1, (name, t)
         assert "WindowGroupLimit" in t, (name, t)
         assert "Join" not in t, (name, t)
