@@ -171,19 +171,28 @@ def _col2im(dcols: np.ndarray, x_shape, kh: int, kw: int, stride: int, pad: int)
 
 
 def conv2d_backward(dy: np.ndarray, cache: dict) -> tuple[np.ndarray, dict]:
-    """K2 backward. dy: (n, out_c, oh, ow) gradient wrt post-activation."""
+    """K2 backward. dy: (n, out_c, oh, ow) gradient wrt post-activation.
+
+    For stride 1, dx is the full correlation of ``dpre`` with the flipped,
+    channel-transposed kernel: one ``_im2col`` of ``dpre`` padded by
+    ``k - 1 - pad`` and one matmul. Strided convs scatter-add their column
+    gradients back through ``_col2im``."""
     cols, W, y, stride, pad, x_shape, activation = (
         cache["cols"], cache["W"], cache["y"], cache["stride"], cache["pad"],
         cache["x_shape"], cache["activation"],
     )
-    out_c = W.shape[0]
+    out_c, in_c, kh, kw = W.shape
     dpre = (dy * act_grad(y, activation)).transpose(0, 2, 3, 1)  # (n, oh, ow, oc)
     dW = (
         dpre.reshape(-1, out_c).T @ cols.reshape(-1, cols.shape[-1])
     ).reshape(W.shape)
     db = dpre.sum(axis=(0, 1, 2))
-    dcols = dpre @ W.reshape(out_c, -1)
-    dx = _col2im(dcols, x_shape, W.shape[2], W.shape[3], stride, pad)
+    if stride == 1 and kh == kw and pad < kh:
+        dcols, _, _ = _im2col(dpre.transpose(0, 3, 1, 2), kh, kw, 1, kh - 1 - pad)
+        w_flip = W[:, :, ::-1, ::-1].transpose(1, 0, 2, 3).reshape(in_c, -1)
+        dx = (dcols @ w_flip.T).transpose(0, 3, 1, 2)  # (n, in_c, h, w)
+    else:
+        dx = _col2im(dpre @ W.reshape(out_c, -1), x_shape, kh, kw, stride, pad)
     return dx, {"W": dW, "b": db}
 
 

@@ -636,7 +636,8 @@ def simhash_portable(
     by (doc, token) then doc — the shuffle carries token counts, then
     ``bits`` longs per doc; no Python in the path. Bands are contiguous
     15-bit slices, the LSH bucket keys."""
-    assert bits % bands == 0
+    if bands <= 0 or bits % bands:
+        raise ValueError(f"simhash_portable: {bits} bits do not split into {bands} equal bands")
     bw = bits // bands
     toks = df.select(
         F.col(id_col),

@@ -5,25 +5,31 @@ Re-expression of the reference's distributed adversarial training:
 
 - O1 graph builder  → ``build_mlp`` producing a list[LayerSpec] (the logical
   plan; named layers like addLayer(name, ...) java:132).
-- O3 distributed fit → ``fit_distributed``: workers run local minibatch SGD
+- O3 distributed fit → ``fit_rounds``: workers run local minibatch SGD
   on their shard (map), then the driver takes the element-wise mean of worker
   parameters (reduce) — ParameterAveragingTrainingMaster semantics
   (java:324-330, averagingFrequency=10, batchSizePerWorker=200) for the
   parameters; the updater state is not carried (see ``fit_distributed``).
-  The map side is ``repartition(n_workers).mapInArrow``: one task per worker,
-  its shard one ``(n, d)`` array (``kernels.list_to_matrix``), each returning
-  its trained tensors as one float32 buffer; the reduce side is a
-  fixed-order float64 mean of the N collected buffers in the driver.
+  The driver deals worker ``w`` the rows ``w::n`` of each driver-held batch
+  and broadcasts every round's weights and shards at once; the map side is
+  one ``mapInArrow`` over ``spark.range(n)`` in ``n`` partitions (one stage,
+  one task per worker, no shuffle), each task fitting its shard of every
+  round and returning its trained tensors as one float32 buffer; the reduce
+  side is a fixed-order float64 mean of the N buffers in the driver.
+  ``fit_distributed`` runs the same local fit and reduce over a DataFrame's
+  rows (``repartition(n).mapInArrow``) for inputs that live in Spark.
 - J1 weight sync    → ``copy_weights_dict`` (name-mapped parameter copy,
   java:429-460/:474-510/:516-542); the DataFrame form lives in
   operators/weights.py.
-- O2 transfer learning → ``GanPipeline._fit_classifier``: freeze feature layers
+- O2 transfer learning → ``GanPipeline._classifier``: freeze feature layers
   (lr=0, java:84 frozen_learning_rate + :350 setFeatureExtractor), drop the
   old head (:351 removeVertexKeepConnections), add a softmax(10) head
   (:352-363).
-- O4 adversarial loop → ``GanPipeline.fit``: dis step on [real+smoothed-1 ∥
-  fake+smoothed-0] (java:412-426), sync dis→gan, gan step on (noise, 1)
-  fooling batch (:462-471), sync gan→gen, classifier step (:512-545).
+- O4 adversarial loop → ``GanPipeline.fit``: dis round on [real+smoothed-1 ∥
+  fake+smoothed-0] (java:412-426), sync dis→gan and dis→cv, then the gan
+  round on the (noise, 1) fooling batch (:462-471) and the classifier round
+  (:512-545) in one job — both start from post-dis weights only — then sync
+  gan→gen. Two Spark jobs per epoch, neither with a shuffle.
 - O5 observers      → ``generate_grid`` (latent grid → gen forward → ordered
   image rows, :550-570), ``write_png_grid`` (the same rows, collected in one
   job and ordered in the driver, as one PNG mosaic) and ``predict``
@@ -54,7 +60,7 @@ from pyspark.sql import functions as F
 
 from . import DEFAULT_SEED
 from .kernels import (
-    LayerSpec, Weights, clip_grad, forward, init_weights, list_to_matrix, matrix_to_list,
+    LayerSpec, Weights, clip_grad, forward, init_weights, list_to_matrix,
 )
 
 
@@ -182,13 +188,50 @@ class Network:
     lr_by_layer: dict[str, float]
 
 
-def _training_frame(spark: SparkSession, x: np.ndarray, y: np.ndarray) -> DataFrame:
-    """``(features array<float>, label_vec array<float>)`` rows straight from
-    two row-aligned numpy batches, one Arrow table, no per-row objects."""
-    return spark.createDataFrame(pa.table({
-        "features": matrix_to_list(x.astype(np.float32)),
-        "label_vec": matrix_to_list(y.astype(np.float32)),
-    }))
+# one row per worker fit; ``round`` indexes the job's rounds (0 for a
+# DataFrame round)
+_FIT_DDL = "round int, worker int, loss double, params binary"
+_FIT_SCHEMA = pa.schema([("round", pa.int32()), ("worker", pa.int32()),
+                         ("loss", pa.float64()), ("params", pa.binary())])
+
+
+def _trainable(net: Network) -> Weights:
+    """The tensors a round trains and averages (layers with lr != 0), in
+    ``net.weights`` order: the layout of every worker's parameter buffer.
+    Frozen layers never leave the driver."""
+    return {l: ps for l, ps in net.weights.items() if net.lr_by_layer.get(l, 0.0) != 0.0}
+
+
+def _fit_shard(
+    net: Network, x: np.ndarray, y: np.ndarray, worker: int,
+    local_steps: int, batch_size: int, seed: int,
+) -> tuple[float, bytes] | None:
+    """One worker's local fit: ``local_steps`` RMSProp steps on a copy of
+    ``net.weights``, each on a minibatch of ``min(batch_size, len(x))``
+    shard rows drawn by an RNG seeded ``seed + worker``.
+
+    Returns the last step's loss and the trained tensors (``_trainable``
+    layout) as one float32 buffer; ``None`` for an empty shard, which sits
+    the round out (fewer rows than workers)."""
+    if not len(x):
+        return None
+    w = {l: {p: a.copy() for p, a in ps.items()} for l, ps in net.weights.items()}
+    cache: Weights = {}
+    rng = np.random.default_rng(seed + worker)
+    loss = math.nan
+    for _ in range(local_steps):
+        idx = rng.choice(len(x), size=min(batch_size, len(x)), replace=False)
+        grads, loss = net_grads(x[idx], y[idx], net.specs, w)
+        rmsprop_update(w, grads, cache, net.lr_by_layer)
+    buf = np.concatenate([np.ravel(w[l][p]) for l, ps in _trainable(net).items() for p in ps])
+    return loss, buf.astype(np.float32).tobytes()
+
+
+def _fit_rows(fits: list[tuple]) -> pa.RecordBatch:
+    """``(round, worker, loss, params)`` tuples → one ``_FIT_SCHEMA`` batch."""
+    return pa.RecordBatch.from_pylist(
+        [dict(zip(_FIT_SCHEMA.names, f)) for f in fits], schema=_FIT_SCHEMA
+    )
 
 
 def rows_to_weights(rows, like: Weights) -> Weights:
@@ -210,6 +253,66 @@ def rows_to_weights(rows, like: Weights) -> Weights:
     return out
 
 
+def _reduce_round(net: Network, rows) -> float:
+    """A round's reduce: set ``net``'s trained tensors to the mean of the
+    workers' buffers taken in worker order, in place (the reference's
+    TrainingMaster mutates the wrapped net). Returns the mean final local
+    loss; NaN, with ``net`` untouched, when no worker had rows."""
+    if not rows:
+        return math.nan
+    rows = sorted(rows, key=lambda r: r["worker"])
+    for layer, params in rows_to_weights(rows, _trainable(net)).items():
+        net.weights[layer].update(params)
+    return float(np.mean([r["loss"] for r in rows]))
+
+
+def fit_rounds(
+    spark: SparkSession,
+    rounds: list[tuple[Network, np.ndarray, np.ndarray]],
+    n_workers: int = 4,
+    local_steps: int = 10,
+    batch_size: int = 200,
+    seed: int = DEFAULT_SEED,
+) -> list[float]:
+    """Independent averaging rounds (averagingFrequency=local_steps,
+    java:326) over driver-held ``(net, x, y)`` batches, as one Spark job.
+
+    The driver deals worker ``w`` the rows ``w::n_workers`` of each batch
+    and ships every round's network and shards in one broadcast. The job is
+    ``spark.range(n_workers)`` in ``n_workers`` partitions under one
+    ``mapInArrow``: one stage of one task per worker, no shuffle. Each task
+    fits its shard of every round (``_fit_shard``) and yields one
+    ``(round, worker, loss, params)`` row per fit; the driver reduces each
+    round with ``rows_to_weights``.
+
+    The rounds must be independent: each starts from the weights its net
+    holds on the call. Returns each round's mean final local loss and
+    updates each net's weights in place."""
+    payload = []
+    for net, x, y in rounds:
+        x, y = np.asarray(x, np.float32), np.asarray(y, np.float32)
+        payload.append((net, [(x[w::n_workers], y[w::n_workers]) for w in range(n_workers)]))
+    bc = spark.sparkContext.broadcast(payload)
+
+    def fit_workers(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for worker in batch.column("id").to_pylist():
+                fits = []
+                for r, (net, shards) in enumerate(bc.value):
+                    fit = _fit_shard(net, *shards[worker], worker, local_steps, batch_size, seed)
+                    if fit is not None:
+                        fits.append((r, worker, *fit))
+                if fits:
+                    yield _fit_rows(fits)
+
+    rows = spark.range(0, n_workers, 1, n_workers).mapInArrow(fit_workers, _FIT_DDL).collect()
+    bc.unpersist()
+    return [
+        _reduce_round(net, [row for row in rows if row["round"] == r])
+        for r, (net, _, _) in enumerate(rounds)
+    ]
+
+
 def fit_distributed(
     df: DataFrame,
     net: Network,
@@ -220,16 +323,16 @@ def fit_distributed(
     label_col: str = "label_vec",
     seed: int = DEFAULT_SEED,
 ) -> float:
-    """One averaging round (averagingFrequency=local_steps, java:326):
-    shard → local RMSProp steps per worker → element-wise parameter mean.
+    """One averaging round over a DataFrame's rows, for inputs that live in
+    Spark (micro-batches of ``streaming.train``); driver-held batches go
+    through ``fit_rounds``.
 
     ``repartition(n_workers)`` deals the rows round-robin into N equal
     shards; it is a user-sized exchange, so AQE never coalesces it and the
     N local fits run as N tasks, each a ``mapInArrow`` kernel that reads its
-    shard as two ``(n, d)`` arrays. Each worker (its partition id) seeds its
-    RNG with ``seed + worker`` and yields one row: its final loss and its
-    trainable tensors (layers with lr != 0) as one float32 buffer in
-    ``net.weights`` order. Frozen layers never leave the driver.
+    shard as two ``(n, d)`` arrays and runs ``_fit_shard`` with its
+    partition id as the worker. The starting weights ride a broadcast; the
+    reduce (``_reduce_round``) is the one ``fit_rounds`` uses.
 
     Every round starts RMSProp from an empty cache on every worker, so the
     first local step of a round is a full ``lr · sign(g)`` step; the
@@ -237,11 +340,9 @@ def fit_distributed(
     across workers and carries it into the next round.
 
     Returns the mean final local loss across workers. Updates net.weights
-    in place (the reference's TrainingMaster mutates the wrapped net).
+    in place.
     """
     specs, lr_by_layer = net.specs, net.lr_by_layer
-    trainable = {l: ps for l, ps in net.weights.items() if lr_by_layer.get(l, 0.0) != 0.0}
-    layout = [(l, p) for l, ps in trainable.items() for p in ps]  # names only: arrays ride the broadcast
     bc_w = df.sparkSession.sparkContext.broadcast(net.weights)
 
     def local_fit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -249,38 +350,18 @@ def fit_distributed(
         if not batches:
             return  # fewer rows than workers: this shard sits the round out
         shard = pa.Table.from_batches(batches)
-        worker = TaskContext.get().partitionId()
-        w = {l: {p: a.copy() for p, a in ps.items()} for l, ps in bc_w.value.items()}
-        cache: Weights = {}
         x, y = (
             list_to_matrix(shard.column(c).combine_chunks()).astype(np.float32)
             for c in (features_col, label_col)
         )
-        rng = np.random.default_rng(seed + worker)
-        loss = math.nan
-        for _ in range(local_steps):
-            idx = rng.choice(len(x), size=min(batch_size, len(x)), replace=False)
-            grads, loss = net_grads(x[idx], y[idx], specs, w)
-            rmsprop_update(w, grads, cache, lr_by_layer)
-        buf = np.concatenate([np.ravel(w[l][p]) for l, p in layout]).astype(np.float32)
-        yield pa.RecordBatch.from_pydict(
-            {"worker": [worker], "loss": [loss], "params": [buf.tobytes()]},
-            schema=pa.schema([("worker", pa.int32()), ("loss", pa.float64()),
-                              ("params", pa.binary())]),
-        )
+        worker = TaskContext.get().partitionId()
+        fit = _fit_shard(Network(specs, bc_w.value, lr_by_layer), x, y, worker,
+                         local_steps, batch_size, seed)
+        yield _fit_rows([(0, worker, *fit)])
 
-    rows = sorted(
-        df.repartition(n_workers)
-        .mapInArrow(local_fit, "worker int, loss double, params binary")
-        .collect(),
-        key=lambda r: r["worker"],
-    )
+    rows = df.repartition(n_workers).mapInArrow(local_fit, _FIT_DDL).collect()
     bc_w.unpersist()
-    if not rows:
-        return math.nan
-    for layer, params in rows_to_weights(rows, trainable).items():
-        net.weights[layer].update(params)
-    return float(np.mean([r["loss"] for r in rows]))
+    return _reduce_round(net, rows)
 
 
 # ---------------------------------------------------------------------------
@@ -423,16 +504,15 @@ class GanPipeline:
             z = rng.uniform(0, 1, (len(real_batch), self.latent_dim)) * 2.0 - 1.0
             fake_batch = forward(z.astype(np.float32), self.gen.specs, self.gen.weights)
 
-            # (b) dis fit on [real:1+ε ∥ fake:0+ε] (java:412-426)
-            dis_df = _training_frame(
-                spark,
+            # (b) dis round on [real:1+ε ∥ fake:0+ε] (java:412-426)
+            (dis_loss,) = fit_rounds(spark, [(
+                self.dis,
                 np.concatenate([real_batch, fake_batch]),
                 np.concatenate([
                     self._smoothed(len(real_batch), 1.0, self.seed + epoch * 7),
                     self._smoothed(len(fake_batch), 0.0, self.seed + epoch * 7 + 1),
                 ]),
-            )
-            dis_loss = fit_distributed(dis_df, self.dis, n_workers, avg_freq, batch_rows)
+            )], n_workers, avg_freq, batch_rows)
 
             # (c) sync dis → gan (J1, java:429-460)
             copy_weights_dict(
@@ -440,25 +520,24 @@ class GanPipeline:
                 {s.name: s.name for s in self.dis.specs},
             )
 
-            # (d) gan fit: fooling batch (noise, label 1) (java:462-471)
+            # (d) gan round: fooling batch (noise, label 1) (java:462-471),
+            # and (f) the transfer-learned classifier round (O2 +
+            # java:512-545) in the same job: both start from the post-dis
+            # weights only, so fusing them changes no result
             z2 = rng.uniform(0, 1, (2 * len(real_batch), self.latent_dim)) * 2.0 - 1.0
-            gan_df = _training_frame(
-                spark, z2, self._smoothed(len(z2), 1.0, self.seed + epoch * 7 + 2)
-            )
-            gan_loss = fit_distributed(gan_df, self.gan, n_workers, avg_freq, batch_rows)
+            rounds = [(self.gan, z2, self._smoothed(len(z2), 1.0, self.seed + epoch * 7 + 2))]
+            if labels is not None:
+                onehot = np.eye(self.n_classes, dtype=np.float32)[np.asarray(labels[take], dtype=int)]
+                rounds.append((self._classifier(), real_batch, onehot))
+            losses = fit_rounds(spark, rounds, n_workers, avg_freq, batch_rows)
+            gan_loss = losses[0]
+            cv_loss = losses[1] if labels is not None else math.nan
 
             # (e) sync gan → gen (J1, java:474-510)
             copy_weights_dict(
                 self.gen.weights, self.gan.weights,
                 {s.name: s.name for s in self.gen.specs},
             )
-
-            # (f) transfer-learned classifier step (O2 + java:512-545)
-            cv_loss = math.nan
-            if labels is not None:
-                cv_loss = self._fit_classifier(
-                    spark, real_batch, labels[take], n_workers, avg_freq, batch_rows
-                )
 
             self.history.append(
                 {"epoch": epoch, "dis_loss": dis_loss, "gan_loss": gan_loss, "cv_loss": cv_loss}
@@ -467,7 +546,9 @@ class GanPipeline:
 
     # -- O2 transfer learning ----------------------------------------------
 
-    def _fit_classifier(self, spark, x, y, n_workers, avg_freq, batch_rows) -> float:
+    def _classifier(self) -> Network:
+        """The cv net, built on first use, with the dis feature layers
+        synced into it (J1, java:516-542)."""
         if self.cv is None:
             feature_specs = [
                 LayerSpec(s.name.replace("dis_", "cv_"), s.kind, dict(s.cfg))
@@ -481,15 +562,11 @@ class GanPipeline:
             lr = {s.name: 0.0 for s in feature_specs}  # frozen (java:84,350)
             lr["cv_output"] = 0.01
             self.cv = Network(specs, weights, lr)
-        # sync dis features → cv (J1, java:516-542)
         copy_weights_dict(
             self.cv.weights, self.dis.weights,
             {s.name: s.name.replace("dis_", "cv_") for s in self.dis.specs[:-1]},
         )
-        onehot = np.eye(self.n_classes, dtype=np.float32)[np.asarray(y, dtype=int)]
-        return fit_distributed(
-            _training_frame(spark, x, onehot), self.cv, n_workers, avg_freq, batch_rows
-        )
+        return self.cv
 
     # -- O5 observers -------------------------------------------------------
 

@@ -64,7 +64,10 @@ def _lsh_multiprobe_oracle(dim: int = 64, bits: int = 8, k: int = 5,
     folds in both engines, so margins compare identically."""
     from .operators.similarity import plane_values
 
-    assert probes > bits
+    if probes <= bits:
+        raise ValueError(
+            f"_lsh_multiprobe_oracle replays probes > bits only, got probes={probes}, bits={bits}"
+        )
     planes = plane_values(dim, bits)
     dot_cols = ", ".join(
         f"list_dot_product(ve, {_sql_arr(planes[j])}) AS d{j}"

@@ -83,6 +83,48 @@ def test_strided_conv_gradients():
     )
 
 
+def test_stride1_pad2_multichannel_conv_gradients():
+    """The generator's conv shape (gen_conv2d_*, java:203-219): 5×5, stride
+    1, pad 2, several input and output channels. c1's gradient reaches it
+    through c2's input gradient."""
+    specs = [
+        LayerSpec("c1", "conv2d", {"filters": 3, "kernel": 5, "stride": 1, "pad": 2, "activation": "tanh"}),
+        LayerSpec("c2", "conv2d", {"filters": 2, "kernel": 5, "stride": 1, "pad": 2, "activation": "tanh"}),
+        LayerSpec("f", "flatten"),
+        LayerSpec("out", "dense", {"units": 1, "activation": "sigmoid"}),
+    ]
+    _numeric_check(
+        specs, (2, 6, 6),
+        [("c1", "W", (0, 0, 0, 0)), ("c1", "W", (1, 1, 2, 3)), ("c1", "W", (2, 0, 4, 1)),
+         ("c1", "b", (1,)), ("c2", "W", (1, 2, 3, 0))],
+        tol=2e-3,
+    )
+
+
+@pytest.mark.parametrize("layer", ["dis_conv2d_0", "dis_conv2d_1", "gen_conv2d_0", "gen_conv2d_1"])
+def test_conv_input_gradient_matches_scatter_form(layer):
+    """conv2d_backward's dx equals the scatter-add form ``_col2im(dpre @ W)``
+    on the four dcgan conv shapes (stride 2 and stride 1)."""
+    from gan_deeplearning4j_spark.kernels import _col2im, act_grad, conv2d_backward
+
+    rng = np.random.default_rng(11)
+    g = GanPipeline.dcgan(base_filters=4)
+    net, x = ((g.dis, rng.uniform(0, 1, (25, 28 * 28))) if layer.startswith("dis")
+              else (g.gen, rng.uniform(-1, 1, (25, 2))))
+    _, caches = forward_cached(x.astype(np.float32), net.specs, net.weights)
+    cache = caches[[s.name for s in net.specs].index(layer)]
+    dy = rng.standard_normal(cache["y"].shape).astype(np.float32)
+
+    dx, _ = conv2d_backward(dy, cache)
+    W = cache["W"]
+    out_c, _, kh, kw = W.shape
+    dpre = (dy * act_grad(cache["y"], cache["activation"])).transpose(0, 2, 3, 1)
+    scatter = _col2im(dpre @ W.reshape(out_c, -1), cache["x_shape"], kh, kw,
+                      cache["stride"], cache["pad"])
+    assert dx.shape == scatter.shape == cache["x_shape"]
+    assert np.abs(dx - scatter).max() <= 1e-5 * np.abs(scatter).max()
+
+
 def test_conv_gan_trains_end_to_end(spark):
     """A small DCGAN — conv discriminator, upsampling conv generator — runs
     the full distributed adversarial loop (the reference's actual topology

@@ -1133,6 +1133,21 @@ def test_indivisible_subspaces_raise_value_error(call):
         call(similarity)
 
 
+@pytest.mark.parametrize("module, fn, kwargs, match", [
+    ("operators.dedup", "simhash_portable",
+     dict(df=None, text_col="text", id_col="id", bits=60, bands=7), "equal bands"),
+    ("queries_r11", "_lsh_multiprobe_oracle", dict(bits=8, probes=8), "probes > bits"),
+], ids=["simhash_portable", "lsh_multiprobe_oracle"])
+def test_invalid_arguments_raise_value_error(module, fn, kwargs, match):
+    """Argument guards are ValueError, not a bare assert (which `python -O`
+    strips), and fire before any Spark work."""
+    import importlib
+
+    call = getattr(importlib.import_module(f"gan_deeplearning4j_spark.{module}"), fn)
+    with pytest.raises(ValueError, match=match):
+        call(**kwargs)
+
+
 def test_merge_upsert_semantics(spark):
     """MERGE primitive: update matched, insert unmatched, delete flagged,
     carry through target columns absent from the update relation."""

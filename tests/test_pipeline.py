@@ -11,12 +11,14 @@ import pytest
 from gan_deeplearning4j_spark.pipeline import (
     GanPipeline,
     Network,
+    _fit_shard,
     build_mlp,
     fit_distributed,
+    fit_rounds,
     net_grads,
     rmsprop_update,
 )
-from gan_deeplearning4j_spark.kernels import forward, init_weights
+from gan_deeplearning4j_spark.kernels import LayerSpec, forward, init_weights
 
 
 def _toy_data(n=400, dim=16, n_classes=4, seed=666):
@@ -35,6 +37,10 @@ def _weights_digest(weights) -> str:
             h.update(f"{layer}|{param}|{arr.shape}|{arr.dtype};".encode())
             h.update(arr.tobytes())
     return h.hexdigest()
+
+
+def _copy(weights):
+    return {l: {p: a.copy() for p, a in ps.items()} for l, ps in weights.items()}
 
 
 def _xy_df(spark, x, y):
@@ -359,3 +365,101 @@ def test_fit_distributed_conv_topology(spark):
     assert l1 == l2                     # distributed conv fit is deterministic
     assert l1[-1] < l1[0], l1           # and it learns
     assert _weights_digest(n1.weights) == _weights_digest(n2.weights)
+
+
+def _shared_trunk_nets():
+    """Two nets over one frozen trunk layer: a sigmoid head and a softmax
+    head, as the gan and cv nets share the frozen dis layers."""
+    trunk = build_mlp("t", 6, [5], 1, "sigmoid")[:1]
+    a_specs = trunk + [LayerSpec("a_out", "dense", {"units": 1, "activation": "sigmoid"})]
+    b_specs = trunk + [LayerSpec("b_out", "dense", {"units": 3, "activation": "softmax"})]
+    a_w = init_weights(a_specs, 6, 666)
+    b_w = init_weights(b_specs, 6, 667)
+    b_w["t_dense_0"] = _copy(a_w)["t_dense_0"]
+    return (Network(a_specs, a_w, {"t_dense_0": 0.0, "a_out": 0.05}),
+            Network(b_specs, b_w, {"t_dense_0": 0.0, "b_out": 0.02}))
+
+
+def test_fit_rounds_fused_equals_separate(spark):
+    """Independent rounds fitted in one job end exactly as when each runs
+    in its own job: same losses, bitwise the same weights."""
+    x, y = _toy_data(n=40, dim=6, n_classes=3)
+    ya = (y == 0).astype(np.float32).reshape(-1, 1)
+    yb = np.eye(3, dtype=np.float32)[y]
+    kw = dict(n_workers=3, local_steps=3, batch_size=8)
+
+    fused = _shared_trunk_nets()
+    fused_losses = fit_rounds(spark, [(fused[0], x, ya), (fused[1], x, yb)], **kw)
+    apart = _shared_trunk_nets()
+    apart_losses = (fit_rounds(spark, [(apart[0], x, ya)], **kw)
+                    + fit_rounds(spark, [(apart[1], x, yb)], **kw))
+
+    assert fused_losses == apart_losses
+    assert all(np.isfinite(fused_losses))
+    for f, a in zip(fused, apart):
+        assert _weights_digest(f.weights) == _weights_digest(a.weights)
+    assert _weights_digest(fused[0].weights) != _weights_digest(_shared_trunk_nets()[0].weights)
+
+
+def test_fit_epoch_runs_two_shuffle_free_jobs(spark):
+    """An epoch with labels is two Spark jobs, the dis round and the fused
+    gan + classifier round, each one stage of n_workers tasks: no shuffle,
+    no per-round frame."""
+    x, y = _toy_data(n=120, dim=8, n_classes=2)
+    p = GanPipeline(feature_dim=8, latent_dim=2, dis_hidden=[8], gen_hidden=[8],
+                    n_classes=2, seed=666)
+    n_workers = 3
+    sc = spark.sparkContext
+    group = "test_fit_epoch_runs_two_shuffle_free_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        p.fit(spark, x, y, epochs=1, batch_rows=32, n_workers=n_workers, avg_freq=2)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = sorted(tracker.getJobIdsForGroup(group))
+    assert len(jobs) == 2
+    for job in jobs:
+        stages = tracker.getJobInfo(job).stageIds
+        assert len(stages) == 1
+        info = tracker.getStageInfo(stages[0])
+        assert info.numTasks == n_workers
+        assert info.numCompletedTasks == n_workers
+    assert np.isfinite(p.history[-1]["cv_loss"])
+
+
+@pytest.mark.parametrize("rows", [10, 2], ids=["all_workers", "fewer_rows_than_workers"])
+def test_fit_rounds_matches_shard_replay(spark, rows):
+    """A round equals the driver replay of ``_fit_shard`` on the dealt
+    shards ``x[w::n]`` followed by their float64 mean; the frozen layer
+    never moves. With fewer rows than workers the empty shards sit the
+    round out: the mean is over the non-empty ones only."""
+    n_workers, steps, batch, seed = 3, 3, 4, 7
+    x, y = _toy_data(n=rows, dim=6, n_classes=2)
+    y = y.reshape(-1, 1).astype(np.float32)
+    specs = build_mlp("t", 6, [5, 4], 1, "sigmoid")
+    lr = {"t_dense_0": 0.0, "t_dense_1": 0.05, "t_output": 0.02}
+    start = init_weights(specs, 6, 666)
+    net = Network(specs, _copy(start), lr)
+    (loss,) = fit_rounds(spark, [(net, x, y)], n_workers, steps, batch, seed)
+
+    fits = [_fit_shard(Network(specs, start, lr), x[w::n_workers], y[w::n_workers], w,
+                       steps, batch, seed) for w in range(n_workers)]
+    fits = [f for f in fits if f is not None]
+    assert len(fits) == min(rows, n_workers)
+    mean = np.mean([np.frombuffer(buf, np.float32) for _, buf in fits],
+                   axis=0, dtype=np.float64).astype(np.float32)
+    np.testing.assert_allclose(loss, np.mean([l for l, _ in fits]), rtol=1e-6)
+
+    for param, arr in start["t_dense_0"].items():
+        assert net.weights["t_dense_0"][param].tobytes() == arr.tobytes(), param
+    pos = 0
+    for layer in ("t_dense_1", "t_output"):
+        for param, arr in start[layer].items():
+            got = net.weights[layer][param]
+            assert got.shape == arr.shape and got.dtype == np.float32
+            assert not np.array_equal(got, arr), (layer, param)
+            np.testing.assert_allclose(got, mean[pos:pos + arr.size].reshape(arr.shape),
+                                       rtol=1e-6, atol=1e-7, err_msg=f"{layer}.{param}")
+            pos += arr.size
+    assert pos == mean.size
