@@ -31,6 +31,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     headliners = {n: q for n, q in REGISTRY.items() if q.headline}
+    errors: dict[str, str] = {}
     # warm the JVM + parquet footers so per-query numbers reflect execution
     try:
         next(iter(headliners.values())).fn(spark, sf_dir).write.format("noop").mode(
@@ -42,8 +43,8 @@ def main() -> None:
         spark.range(64).repartition(cpus).mapInPandas(
             lambda it: it, "id long"
         ).write.format("noop").mode("overwrite").save()
-    except Exception:
-        pass
+    except Exception as exc:  # noqa: BLE001
+        errors["warmup"] = f"{type(exc).__name__}: {exc}"[:300]
 
     # SPARK_GRAFT_BENCH_REPEATS: run each query n times, report the median
     # (robust against one GC/compilation hiccup) plus per-query population
@@ -56,7 +57,6 @@ def main() -> None:
     timings: dict[str, float] = {}
     sigmas: dict[str, float] = {}
     firsts: dict[str, float] = {}
-    errors: dict[str, str] = {}
     total = 0.0
     total_first = 0.0
     for name, q in headliners.items():

@@ -16,7 +16,9 @@ Layout:
                  their mapInArrow forward pass
 - ``pipeline``   GAN pipeline orchestration (graph builder, fit loop, transfer)
 - ``streaming``  Structured Streaming facades (tumbling windows over events)
-- ``queries``    the registry backing __spark_entry__.py and bench.py
+- ``registry``   the ``register`` decorator and the REGISTRY it fills
+- ``queries``    the query modules' order and the ordered views that
+                 __spark_entry__.py and bench.py read
 """
 
 __version__ = "0.1.0"

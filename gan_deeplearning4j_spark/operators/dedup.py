@@ -424,13 +424,12 @@ def minhash_lsh_candidates(
     ``features`` lets callers share one ``minhash_features`` relation between
     candidate generation and verification.
 
-    Shape: ONE shuffle — groupBy(bucket) with a pair-emitting applyInPandas
-    kernel (ids only, two longs per emitted pair) — plus the small distinct
-    on pairs. The previous form (hot-key count + anti-join + bucket
-    self-join) paid three evaluations of the banded subtree and two extra
-    shuffles for the same output; the in-kernel ``len > max_bucket`` check
-    subsumes the hot-key cap exactly (drop the whole bucket). Skew safety:
-    a bucket is at most ``max_bucket`` ids — bounded memory per group."""
+    Shape: ONE shuffle keyed by (band_id, band_hash) — a count window drops
+    singleton buckets and buckets over ``max_bucket`` before
+    ``collect_list``, and ``bucket_id_pairs`` expands each surviving id
+    list into its (id_a < id_b) pairs with array expressions — plus the
+    small distinct on pairs. Skew safety: a bucket is at most
+    ``max_bucket`` ids — bounded memory per group."""
     rows_per_band = num_hashes // bands
     if features is None:
         features = minhash_features(df, text_col, id_col, num_hashes)

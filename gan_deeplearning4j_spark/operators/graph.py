@@ -425,11 +425,11 @@ def katz_scores(
     code paths cannot drift.
 
     Scale shape (r14: the pagerank_fixed contract propagated — r13
-    verdict ask #8): the undirected edge list is materialized once,
-    its count observed during that job deciding the join strategy;
-    the O(nodes) score vector is broadcast into the per-iteration edge
-    join under ``broadcast_nodes_max`` (edge-count-tested — a free
-    conservative bound on nodes) with lineage left unmaterialized
+    verdict ask #8): the undirected edge list is materialized once, its
+    approximate node count (``approx_count_distinct``) observed during
+    that job deciding the join strategy; the O(nodes) score vector is
+    broadcast into the per-iteration edge join while that count is at
+    most ``broadcast_nodes_max``, with lineage left unmaterialized
     between ``checkpoint_every`` rounds, and falls back to a shuffled
     join with per-round checkpoints above it (an unmaterialized
     shuffled-join chain re-derives prior rounds — the r6 4x lesson).

@@ -1,5 +1,9 @@
 """Query registry backing __spark_entry__.py and bench.py.
 
+This module imports every query module (``BODY_MODULES``, itself first),
+fixes the order of ``registry.REGISTRY``, and serves the ordered views
+of it: ``queries()``, ``oracle_sql()`` and ``headline_queries()``.
+
 One entry per implemented operator family from SURVEY.md §2 plus the
 north-star LLM-data-pipeline operators. Each entry is a (builder, oracle_sql)
 pair; the builder takes (spark, sf_dir) → DataFrame, the oracle is equivalent
@@ -20,7 +24,7 @@ Cross-engine determinism rules (these make the driver's value-hash match):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+import importlib
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -29,7 +33,6 @@ from pyspark.sql import functions as F
 from .functions.money import cents_nonneg
 
 from .session import ensure_engine_conf
-from .io import load_table
 from .functions.elementwise import clip, sigmoid
 from .functions.vector import argmax_index, as_double, cosine_similarity
 from .functions import text as TX
@@ -49,29 +52,8 @@ from .operators.relational import (
 from .operators.similarity import brute_force_topk, lsh_bucketed_topk
 from .operators.weights import copy_weights
 from .functions.random import latent_grid
-
-
-@dataclass
-class Query:
-    fn: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None
-    headline: bool = False  # included in bench.py
-    doc: str = ""
-
-
-REGISTRY: dict[str, Query] = {}
-
-
-def register(name: str, oracle: str | None = None, headline: bool = False,
-             doc: str = ""):
-    def deco(fn):
-        REGISTRY[name] = Query(fn=fn, oracle=oracle, headline=headline, doc=doc)
-        return fn
-    return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return load_table(spark, sf_dir, name)
+from .queries_ext import _banded_lsh_neardup_oracle, _sql_arr
+from .registry import REGISTRY, _t, register
 
 
 # ---------------------------------------------------------------------------
@@ -1302,10 +1284,6 @@ def q_minhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 100 TB serve path.
 
 
-def _sql_arr(row: list[float]) -> str:
-    return "[" + ", ".join(repr(v) for v in row) + "]::DOUBLE[]"
-
-
 def _lsh_topk_oracle(dim: int = 64, bits: int = 8, k: int = 5) -> str:
     """DuckDB replica of lsh_bucketed_topk (all-1-bit-flip multi-probe): the
     exact plane doubles are inlined as literals, so both engines compute the
@@ -1545,36 +1523,6 @@ def q_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = _t(spark, sf_dir, "embeddings")
     return embedding_neardup(emb, "embedding", "vec_id", threshold=0.4)
-
-
-def _banded_lsh_neardup_oracle(dim: int = 64, bands: int = 4,
-                               rows_per_band: int = 8,
-                               threshold: float = 0.35) -> str:
-    """DuckDB replica of embedding_neardup_lsh: per-vector band values from
-    the same literal planes, candidate pairs share ANY band, exact cosine
-    verify at the same rounded threshold."""
-    from .operators.similarity import plane_values
-
-    planes = plane_values(dim, bands * rows_per_band)
-    band_cols = []
-    for b in range(bands):
-        terms = " + ".join(
-            f"(CASE WHEN list_dot_product(ve, "
-            f"{_sql_arr(planes[b * rows_per_band + j])}) >= 0"
-            f" THEN {1 << (rows_per_band - 1 - j)} ELSE 0 END)"
-            for j in range(rows_per_band)
-        )
-        band_cols.append(f"({terms}) AS band{b}")
-    band_select = ", ".join(band_cols)
-    any_band = " OR ".join(f"a.band{b} = b.band{b}" for b in range(bands))
-    return f"""
-    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
-    s AS (SELECT vec_id, ve, {band_select} FROM v)
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           ROUND(list_cosine_similarity(a.ve, b.ve), 6) AS cos_sim
-    FROM s a JOIN s b ON a.vec_id < b.vec_id AND ({any_band})
-    WHERE ROUND(list_cosine_similarity(a.ve, b.ve), 6) >= {threshold}
-    """
 
 
 @register(
@@ -3204,92 +3152,25 @@ def headline_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {name: q.fn for name, q in REGISTRY.items() if q.headline}
 
 
-# Populate REGISTRY with the round-3 widening queries (TPC-H shapes +
-# training-data pipeline ops).  Import at module bottom: queries_ext needs
-# ``register``/``_t`` from this module, which are defined above.
-from . import queries_ext  # noqa: E402,F401  (import side effect: registration)
-from . import queries_r4   # noqa: E402,F401  (import side effect: registration)
-from . import queries_r5   # noqa: E402,F401  (import side effect: registration)
-from . import queries_r6   # noqa: E402,F401  (import side effect: registration)
+# The query modules, in registration order. Importing them fills REGISTRY
+# in whatever order they happen to be imported; the sort below fixes the
+# order as (module position here, definition order within the module), so
+# REGISTRY and queries() do not depend on which module was imported first.
+BODY_MODULES = (
+    "queries", "queries_ext", "queries_r4", "queries_r5", "queries_r6",
+    "queries_r7", "queries_r8", "queries_r9", "queries_r10", "queries_r11",
+    "queries_r12", "queries_r13", "queries_r14", "queries_r15", "queries_r16",
+    "queries_r17",
+)
 
-# Round-7 wave: staged during round 6 behind SPARK_GRAFT_R7, registered
-# unconditionally now that CORRECTNESS_r06 confirmed the full round-6 tail
-# green (44 hash + 6 rows-only).  queries_r7 SELF-registers at its module
-# bottom (not here): that way both import orders work — importing
-# queries_r7 directly re-enters this module, and a register_all() call
-# here would hit the partially initialized module (register_all is also
-# idempotent, so the double-trigger is harmless).
-from . import queries_r7  # noqa: E402,F401  (side effect: registration)
 
-# Round-8 wave: staged during round 7 behind SPARK_GRAFT_R8, registered
-# unconditionally now that CORRECTNESS_r07 confirmed the full round-7
-# window green (50/50 hash-match). queries_r8 SELF-registers at its module
-# bottom (same both-import-orders rationale as queries_r7 above).
-from . import queries_r8  # noqa: E402,F401  (side effect: registration)
+def _load_body_modules() -> None:
+    for mod in BODY_MODULES:
+        importlib.import_module(f".{mod}", __package__)
+    rank = {f"{__package__}.{m}": i for i, m in enumerate(BODY_MODULES)}
+    ordered = sorted(REGISTRY.items(), key=lambda kv: rank[kv[1].fn.__module__])
+    REGISTRY.clear()
+    REGISTRY.update(ordered)
 
-# Round-9 wave: staged during round 8 behind SPARK_GRAFT_R9, registered
-# unconditionally now that CORRECTNESS_r08 confirmed the full round-8
-# window green (49 hash + 1 rows-only-by-design). queries_r9 SELF-registers
-# at its module bottom (same both-import-orders rationale as above).
-from . import queries_r9  # noqa: E402,F401  (side effect: registration)
 
-# Round-10 wave: staged during round 9 behind SPARK_GRAFT_R10, registered
-# unconditionally now that CORRECTNESS_r09 confirmed the full round-9
-# window green (50/50 hash-match). queries_r10 SELF-registers at its module
-# bottom (same both-import-orders rationale as above).
-from . import queries_r10  # noqa: E402,F401  (side effect: registration)
-
-# Round-11 wave: staged during round 10 behind SPARK_GRAFT_R11, registered
-# unconditionally now that CORRECTNESS_r10 confirmed the full round-10
-# window green (50/50 hash-match). queries_r11 SELF-registers at its module
-# bottom (same both-import-orders rationale as above).
-from . import queries_r11  # noqa: E402,F401  (side effect: registration)
-
-# Round-11 live additions: written and certified during round 11 (3 SFs +
-# perturbations + strict parity under the SPARK_GRAFT_R12 gate), then
-# registered LIVE mid-round because the driver window had room (the
-# queries_r10 precedent). queries_r12 SELF-registers at its module bottom.
-from . import queries_r12  # noqa: E402,F401  (side effect: registration)
-
-# Round-12 flip (r11 verdict ask #2): the 8 queries staged during round 11
-# (certified at 3 SFs + 3 perturbations + strict parity under the
-# SPARK_GRAFT_R13 gate) register unconditionally. queries_r13
-# SELF-registers at its module bottom (NOT via a register_all() call
-# here — an attribute access on the module breaks the direct-import
-# order through the circular import; the queries_r7 lesson).
-from . import queries_r13  # noqa: E402,F401  (side effect: registration)
-
-# Round-12 live additions: the data-quality curation wave was written and
-# certified during round 12 (3 SFs + perturbations + strict parity under
-# the SPARK_GRAFT_R14 gate), then registered LIVE mid-round because the
-# driver window has room (13 + 8 = 21 never-green of ~50 — the r10/r11
-# precedent). queries_r14 SELF-registers at its module bottom (see the
-# queries_r13 note above on why not register_all() here).
-from . import queries_r14  # noqa: E402,F401  (side effect: registration)
-
-# Round-13 flip (r12 verdict ask #2): the 10 queries staged during round
-# 12 (certified at 3 SFs + 3 perturbations + strict parity under the
-# SPARK_GRAFT_R15 gate; bracket tolerances re-scaled per ADVICE r12 and
-# re-certified) register unconditionally. queries_r15 SELF-registers at
-# its module bottom (see the queries_r13 note above on why not
-# register_all() here).
-from . import queries_r15  # noqa: E402,F401  (side effect: registration)
-
-# Round-13 live additions: the packing/ordering wave was written and
-# certified during round 13 (3 SFs + 3 perturbations + strict parity
-# under the SPARK_GRAFT_R16 gate, twice — before and after the
-# operators/packing swap), then registered LIVE mid-round because the
-# driver window has room (10 r15 + 6 r16 = 16 never-green of ~50 — the
-# r10/r12/r14 precedent). queries_r16 SELF-registers at its module
-# bottom (see the queries_r13 note above on why not register_all() here).
-from . import queries_r16  # noqa: E402,F401  (side effect: registration)
-
-# Round-13 live additions, second wave: the binary-quantization /
-# truncation / dataloader-manifest queries were certified under the
-# SPARK_GRAFT_R17 gate (3 SFs + 3 perturbations + strict parity,
-# SCALE.md round 13), then registered LIVE mid-round because the driver
-# window still has room (10 r15 + 6 r16 + 4 r17 = 20 never-green of ~50
-# — the r10/r12/r14/r16 precedent). queries_r17 SELF-registers at its
-# module bottom (see the queries_r13 note above on why not
-# register_all() here).
-from . import queries_r17  # noqa: E402,F401  (side effect: registration)
+_load_body_modules()

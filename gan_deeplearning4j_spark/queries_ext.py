@@ -29,7 +29,7 @@ from .functions.windows import bounded_window
 from .functions.text import portable_hash60_sql
 from .operators.dedup import _P, shingle_hashes
 from .operators.relational import salted_join
-from .queries import _t, register
+from .registry import _t, register
 
 # ---------------------------------------------------------------------------
 # DuckDB fragments shared by the gram-hash oracles (replaying
@@ -1121,13 +1121,45 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _sql_arr(row: list[float]) -> str:
+    return "[" + ", ".join(repr(v) for v in row) + "]::DOUBLE[]"
+
+
+def _banded_lsh_neardup_oracle(dim: int = 64, bands: int = 4,
+                               rows_per_band: int = 8,
+                               threshold: float = 0.35) -> str:
+    """DuckDB replica of embedding_neardup_lsh: per-vector band values from
+    the same literal planes, candidate pairs share ANY band, exact cosine
+    verify at the same rounded threshold."""
+    from .operators.similarity import plane_values
+
+    planes = plane_values(dim, bands * rows_per_band)
+    band_cols = []
+    for b in range(bands):
+        terms = " + ".join(
+            f"(CASE WHEN list_dot_product(ve, "
+            f"{_sql_arr(planes[b * rows_per_band + j])}) >= 0"
+            f" THEN {1 << (rows_per_band - 1 - j)} ELSE 0 END)"
+            for j in range(rows_per_band)
+        )
+        band_cols.append(f"({terms}) AS band{b}")
+    band_select = ", ".join(band_cols)
+    any_band = " OR ".join(f"a.band{b} = b.band{b}" for b in range(bands))
+    return f"""
+    WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS ve FROM embeddings),
+    s AS (SELECT vec_id, ve, {band_select} FROM v)
+    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+           ROUND(list_cosine_similarity(a.ve, b.ve), 6) AS cos_sim
+    FROM s a JOIN s b ON a.vec_id < b.vec_id AND ({any_band})
+    WHERE ROUND(list_cosine_similarity(a.ve, b.ve), 6) >= {threshold}
+    """
+
+
 def _semantic_clusters_oracle() -> str:
     """CC walk (recursive CTE) over the exact DuckDB replica of the banded
     hyperplane-LSH pair set — the oracle replays the scale path's candidate
     generation bit-for-bit (inlined plane literals), then closes it
     transitively the same way the engine's min-label propagation does."""
-    from .queries import _banded_lsh_neardup_oracle
-
     pairs = _banded_lsh_neardup_oracle(dim=64, bands=4, rows_per_band=8,
                                        threshold=0.35)
     return f"""
@@ -1612,22 +1644,18 @@ def q_prefix_filter_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_fixed_oracle(dim: int = 64, m: int = 8, n_codes: int = 16,
-                     k: int = 5, nq: int = 4) -> str | None:
+                     k: int = 5, nq: int = 4) -> str:
     """DuckDB replica of the fixed-point ADC pipeline with the trained
     integer codebooks inlined as BIGINT literals (pq_fixed_reference_books
     is shared with the Spark query, so both sides hold identical books by
     construction). All post-quantize math is int64 in both engines — the
-    hash comparison is exact, not ulp-lucky. Returns None (rows-only
-    fallback) if the canonical training corpus is unreadable."""
-    try:
-        from .operators.similarity import (
-            FIXED_POINT_SCALE,
-            pq_fixed_reference_books,
-        )
+    hash comparison is exact, not ulp-lucky."""
+    from .operators.similarity import (
+        FIXED_POINT_SCALE,
+        pq_fixed_reference_books,
+    )
 
-        books = pq_fixed_reference_books(dim=dim, m=m, k=n_codes)
-    except Exception:
-        return None
+    books = pq_fixed_reference_books(dim=dim, m=m, k=n_codes)
     sub = dim // m
     rows = ",\n      ".join(
         f"({j}, {c}, [{', '.join(str(v) for v in cent)}]::BIGINT[])"
@@ -1693,22 +1721,16 @@ def q_pq_fixed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ivfpq_fixed_oracle(dim: int = 64, m: int = 8, n_codes: int = 16,
                         n_centroids: int = 8, nprobe: int = 3, k: int = 5,
-                        nq: int = 4) -> str | None:
+                        nq: int = 4) -> str:
     """DuckDB replica of fixed-point IVFPQ: coarse centroids AND residual
     codebooks inlined as BIGINT literals; assignment, residual encode, probe
     selection and ADC all in exact int64, mirroring ivfpq_topk_fixed
-    term-for-term. Rows-only fallback if the training corpus is absent."""
-    try:
-        from .operators.similarity import (
-            FIXED_POINT_SCALE,
-            ivfpq_fixed_reference,
-        )
+    term-for-term."""
+    from .operators.similarity import FIXED_POINT_SCALE, ivfpq_fixed_reference
 
-        coarse, books = ivfpq_fixed_reference(
-            dim=dim, m=m, n_codes=n_codes, n_centroids=n_centroids
-        )
-    except Exception:
-        return None
+    coarse, books = ivfpq_fixed_reference(
+        dim=dim, m=m, n_codes=n_codes, n_centroids=n_centroids
+    )
     sub = dim // m
     cc_rows = ",\n      ".join(
         f"({cid}, [{', '.join(str(v) for v in cent)}]::BIGINT[])"

@@ -1,60 +1,22 @@
-"""Round-10 query wave — written during round 9, registered in round 10.
-
-Staged behind ``SPARK_GRAFT_R10=1`` during round 9 (same lifecycle as
-queries_r7/r8/r9); CORRECTNESS_r09 came back 50/50 hash-green, so round 10
-flipped the gate and this module now self-registers unconditionally at its
-bottom. All 17 wave entries are oracled and were certified at 3 SFs + 3
-perturbations with python-replay pins before the flip
-(tests/test_queries_r10.py). A "Round-10 LIVE additions" banner below
-appends further queries registered mid-round (same certification bar;
-same lifecycle as the round-9 live additions in queries_r9.py).
+"""Round-10 queries. All 17 wave entries are oracled and were certified at
+3 SFs + 3 perturbations with python-replay pins (tests/test_queries_r10.py).
+The "Round-10 LIVE additions" banner below appends further queries
+(same certification bar).
 """
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries import _t
-
-# name -> (fn, oracle, headline, doc); materialized into the real registry
-# by register_all() (round 10) or under SPARK_GRAFT_R10=1 (round-9 local
-# verification).
-STAGED: dict[str, tuple] = {}
-
-
-def _stage(name: str, oracle: str | None = None, headline: bool = False,
-           doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        STAGED[name] = (fn, oracle, headline, doc)
-        return fn
-    return deco
-
-
-def register_all() -> None:
-    """Register the staged queries — idempotent by fn identity;
-    raises on a name collision with a DIFFERENT query (see queries_r7)."""
-    from .queries import REGISTRY, register
-
-    for name, (fn, oracle, headline, doc) in STAGED.items():
-        if name in REGISTRY:
-            if REGISTRY[name].fn is fn:
-                continue  # repeat register_all() under both import orders
-            raise ValueError(
-                f"register_all: staged query name {name!r} already "
-                "registered by a different module — a silent skip would "
-                "ship the OLD query under this wave's name"
-            )
-        register(name, oracle=oracle, headline=headline, doc=doc)(fn)
+from .registry import _t, register
 
 
 # ---------------------------------------------------------------------------
 # Two-hop reach census over the co-purchase graph
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "graph_2hop_reach",
     oracle="""
     WITH b AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -131,7 +93,7 @@ def q_graph_2hop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Exponentially time-decayed heavy hitters (half-life counting)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "decayed_heavy_hitters",
     oracle="""
     WITH t0 AS (
@@ -187,7 +149,7 @@ def q_decayed_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Zone-map (min/max statistics) pruning audit
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "zonemap_prune_audit",
     oracle="""
     WITH files AS (
@@ -262,7 +224,7 @@ def q_zonemap_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Qini uplift curve (incremental-response ranking evaluation)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "qini_uplift_curve",
     oracle="""
     WITH users AS (
@@ -368,7 +330,7 @@ def q_qini_uplift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Local-DP randomized response with exact debiasing
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "randomized_response_debias",
     oracle="""
     WITH users AS (
@@ -443,7 +405,7 @@ def q_randomized_response_debias(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Empirical-Bayes beta-binomial shrinkage of supplier return rates
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "empirical_bayes_shrinkage",
     oracle="""
     WITH per AS (
@@ -550,7 +512,7 @@ def q_empirical_bayes_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Interval scheduling: max non-overlapping order spans per customer
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "max_nonoverlap_intervals",
     oracle="""
     WITH RECURSIVE spans AS (
@@ -645,7 +607,7 @@ def q_max_nonoverlap_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Neyman optimal stratified-sampling allocation (Hamilton-rounded)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "neyman_allocation",
     oracle="""
     WITH strata AS (
@@ -750,7 +712,7 @@ def q_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Exact KNN-Shapley data valuation (closed form, no sampling)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "knn_shapley_values",
     oracle="""
     WITH q AS (
@@ -869,7 +831,7 @@ def q_knn_shapley_values(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DTW_INF = 10 ** 15
 
 
-@_stage(
+@register(
     "dtw_distance_pairs",
     oracle=f"""
     WITH RECURSIVE q AS (
@@ -1051,7 +1013,7 @@ def q_dtw_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Huffman optimal code lengths over the event-type alphabet
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "huffman_code_lengths",
     oracle="""
     WITH RECURSIVE syms AS (
@@ -1142,7 +1104,7 @@ def q_huffman_code_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Seasonal-hybrid MAD anomaly detection (STL-lite remainder + robust scale)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "stl_mad_anomalies",
     oracle="""
     WITH daily AS (
@@ -1279,7 +1241,7 @@ def q_stl_mad_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Greedy maximum-weight bipartite matching (customer-supplier assignment)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "greedy_assignment_matching",
     oracle="""
     WITH RECURSIVE w AS (
@@ -1383,7 +1345,7 @@ def q_greedy_assignment_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Epsilon-greedy bandit offline replay (Li et al. WSDM'11 replay method)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "bandit_replay_egreedy",
     oracle="""
     WITH RECURSIVE arms AS (
@@ -1503,7 +1465,7 @@ def q_bandit_replay_egreedy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Exact optimal-partitioning changepoint detection (Bellman DP)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "optimal_partition_changepoints",
     oracle="""
     WITH RECURSIVE daily AS (
@@ -1660,7 +1622,7 @@ def q_optimal_partition_changepoints(
 # k-cents < 2^17); ascending packed order == (hi, lo, w) order, the DP's
 # end-sorted order. M list is 1-based with M[1] = 0 (empty prefix).
 
-@_stage(
+@register(
     "weighted_interval_schedule",
     oracle="""
     WITH RECURSIVE spans AS (
@@ -1765,7 +1727,7 @@ def q_weighted_interval_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Selinger join-order advisor (textbook cardinality estimation, exact stats)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "join_order_advisor",
     oracle="""
     WITH st AS (
@@ -1891,7 +1853,7 @@ def q_join_order_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Spark 4 native recursive CTE — hierarchy walk without a driver loop
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "recursive_cte_part_hierarchy",
     oracle="""
     WITH RECURSIVE walk(node, depth, cents) AS (
@@ -1957,7 +1919,7 @@ def q_recursive_cte_part_hierarchy(
 # Spark 4 SQL scalar UDF — macro-inlined, stays inside codegen
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "sql_udf_quality_score",
     oracle="""
     WITH scored AS (
@@ -2016,7 +1978,7 @@ def q_sql_udf_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LATERAL correlated subquery with ORDER BY ... LIMIT (decorrelation path)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "lateral_topk_acctbal",
     oracle="""
     SELECT n.n_name, c.c_custkey, c.bal_cents
@@ -2059,7 +2021,7 @@ def q_lateral_topk_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Spark 4 collations — case-insensitive grouping without lower() rewrites
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "collation_lcase_grouping",
     oracle="""
     WITH v AS (
@@ -2117,7 +2079,7 @@ def q_collation_lcase_grouping(
 # Spark 4 UDTF TABLE argument with PARTITION BY / ORDER BY
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "udtf_table_partition_sessions",
     oracle="""
     WITH u AS (
@@ -2227,7 +2189,7 @@ def q_udtf_table_partition_sessions(
 # Temperature-scaled source mixing weights (UniMax/T5-style, tau = 2)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "temperature_mixture_weights",
     oracle="""
     WITH counts AS (
@@ -2380,7 +2342,6 @@ def er_resolve(
     ).orderBy(F.desc("n_members"), "cluster_id").limit(top_n)
 
 
-
 # Engine-portable ER SQL fragments: concat()/substr()/split_part() parse
 # identically in Spark SQL and DuckDB, so the SAME text builds the dirty
 # corpus and blocking keys in the registered query, its DuckDB oracle, and
@@ -2416,7 +2377,7 @@ def er_keyed(spark: SparkSession) -> DataFrame:
     """)
 
 
-@_stage(
+@register(
     "entity_resolution_golden",
     oracle="""
     WITH dirty AS ({dirty}
@@ -2487,7 +2448,7 @@ def q_entity_resolution_golden(
 # Weighted single-source shortest paths (8-round Bellman-Ford relaxation)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "sssp_weighted_hub",
     oracle="""
     WITH RECURSIVE
@@ -2563,7 +2524,7 @@ def q_sssp_weighted_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SQL:2016 LISTAGG ... WITHIN GROUP (new aggregate surface in Spark 4)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "listagg_region_nations",
     oracle="""
     SELECT r.r_name,
@@ -2604,7 +2565,7 @@ def q_listagg_region_nations(
 # mapInArrow — the Arrow-native batch path (no pandas materialization)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "arrow_argmax_profile",
     oracle="""
     SELECT CAST(list_indexof(embedding, list_max(embedding)) AS BIGINT)
@@ -2665,7 +2626,7 @@ def q_arrow_argmax_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SQL pipe syntax (|>, Spark 4.0) — linear dataflow spelling of a rollup
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "pipe_syntax_pricing",
     oracle="""
     SELECT l_returnflag,
@@ -2718,7 +2679,7 @@ def q_pipe_syntax_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Parameterized SQL (named parameter markers, Spark 4 spark.sql(args=))
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "parameterized_sql_binding",
     oracle="""
     SELECT o_orderpriority,
@@ -2769,7 +2730,7 @@ def q_parameterized_sql_binding(
 # SQL scripting (BEGIN..END procedural blocks, Spark 4.0)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "sql_scripting_compound",
     oracle="""
     SELECT CAST(SUM(CAST(round(o_totalprice * 100) AS BIGINT)
@@ -2833,7 +2794,7 @@ def q_sql_scripting_compound(
 # Deletion-cascade impact plan (GDPR/right-to-erasure propagation audit)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "deletion_cascade_impact",
     oracle="""
     WITH cohort AS (
@@ -2957,7 +2918,7 @@ def q_deletion_cascade_impact(
 # Bitmap aggregate family (exact distinct counting via RLE bitmaps)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "bitmap_distinct_users",
     oracle="""
     SELECT event_type,
@@ -3002,7 +2963,7 @@ def q_bitmap_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Luhn checksum audit (data-quality validation of identifier columns)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "luhn_checksum_audit",
     oracle="""
     WITH acct AS (
@@ -3075,10 +3036,3 @@ def q_luhn_checksum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM scored
         GROUP BY c_nationkey ORDER BY nationkey
     """)
-
-
-# Self-register unconditionally (round 10: the gate was flipped after
-# CORRECTNESS_r09 came back 50/50 green — same lifecycle as queries_r7/r8/r9).
-# register_all() is idempotent, so the historical double-import path
-# (queries.py import + direct test import) stays safe.
-register_all()

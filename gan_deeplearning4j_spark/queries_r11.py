@@ -1,53 +1,14 @@
-"""Round-11 wave — written during round 10, registered in round 11.
-
-Same staging pattern as queries_r7/r8/r9/r10 (see their module docstrings):
-these queries stayed behind ``SPARK_GRAFT_R11=1`` through round 10 so the
-round-10 driver window stayed pinned to its never-green prefix; once
-CORRECTNESS_r10 came back 50/50 green, round 11 made registration
-unconditional (module bottom). Round-12 staging continues in
-queries_r12.py behind ``SPARK_GRAFT_R12``.
-"""
+"""Round-11 queries."""
 
 from __future__ import annotations
-
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.money import cents_nonneg
 
-from .queries import _t
-
-# name -> (fn, oracle, headline, doc); materialized into the real registry
-# by register_all() at the module bottom (kept as a dict so the integrity
-# tests can enumerate the wave independently of the registry).
-STAGED: dict[str, tuple] = {}
-
-
-def _stage(name: str, oracle: str | None = None, headline: bool = False,
-           doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        STAGED[name] = (fn, oracle, headline, doc)
-        return fn
-    return deco
-
-
-def register_all() -> None:
-    """Register the staged queries — idempotent by fn identity;
-    raises on a name collision with a DIFFERENT query (see queries_r7)."""
-    from .queries import REGISTRY, register
-
-    for name, (fn, oracle, headline, doc) in STAGED.items():
-        if name in REGISTRY:
-            if REGISTRY[name].fn is fn:
-                continue  # repeat register_all() under both import orders
-            raise ValueError(
-                f"register_all: staged query name {name!r} already "
-                "registered by a different module — a silent skip would "
-                "ship the OLD query under this wave's name"
-            )
-        register(name, oracle=oracle, headline=headline, doc=doc)(fn)
+from .queries_ext import _sql_arr
+from .registry import _t, register
 
 
 # ---------------------------------------------------------------------------
@@ -118,13 +79,9 @@ def _lsh_multiprobe_oracle(dim: int = 64, bits: int = 8, k: int = 5,
     """
 
 
-def _sql_arr(row) -> str:
-    return "[" + ", ".join(repr(v) for v in row) + "]::DOUBLE[]"
-
-
-@_stage(
+@register(
     "lsh_multiprobe_topk",
-    oracle=None,  # bound after definition (generator needs _sql_arr above)
+    oracle=_lsh_multiprobe_oracle(),
     doc="Multi-probe LSH ANN, 2-bit perturbation depth (Lv et al., "
         "VLDB'07): the recall knob for lsh_bucketed_topk past the 1-bit "
         "flips — probes=16 on bits=8 probes the home bucket, all 8 1-bit "
@@ -150,17 +107,12 @@ def q_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("query_id", "vec_id", F.round("cos_sim", 6).alias("cos_sim"))
 
 
-STAGED["lsh_multiprobe_topk"] = (
-    q_lsh_multiprobe_topk, _lsh_multiprobe_oracle(),
-    STAGED["lsh_multiprobe_topk"][2], STAGED["lsh_multiprobe_topk"][3],
-)
-
 
 # ---------------------------------------------------------------------------
 # Skew ladder demos: salted two-phase aggregation + halo-chunked RANGE frame
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "salted_agg_user_value",
     oracle="""
     SELECT user_id,
@@ -191,7 +143,7 @@ def q_salted_agg_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "range_frame_halo_1h",
     oracle="""
     WITH f AS (
@@ -240,7 +192,7 @@ def q_range_frame_halo_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Incremental MinHash dedup against a persisted signature store
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "minhash_incremental_resume",
     oracle="""
     WITH sh AS (
@@ -351,7 +303,7 @@ def q_minhash_incremental_resume(spark: SparkSession,
 # Corpus novelty decay + watermark lateness audit
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "ngram_novelty_by_batch",
     oracle="""
     WITH g AS (
@@ -423,7 +375,7 @@ def q_ngram_novelty_by_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "watermark_lateness_audit",
     oracle="""
     WITH m AS (
@@ -502,7 +454,7 @@ def q_watermark_lateness_audit(spark: SparkSession,
 # CDC net-effect compaction + two planning advisors
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "cdc_net_effect_compact",
     oracle="""
     WITH base AS (
@@ -577,7 +529,7 @@ def q_cdc_net_effect_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "partition_size_advisor",
     oracle="""
     WITH est AS (
@@ -650,7 +602,7 @@ def q_partition_size_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("tbl")
 
 
-@_stage(
+@register(
     "rendezvous_hash_routing",
     oracle="""
     WITH scored AS (
@@ -756,9 +708,9 @@ def _hot_bucket_oracle() -> str:
     """
 
 
-@_stage(
+@register(
     "hot_bucket_cap_audit",
-    oracle=None,  # bound below (generator wraps simhash_portable_oracle)
+    oracle=_hot_bucket_oracle(),
     doc="LSH bucket observability — the study behind every max_bucket cap "
         "in the dedup family: SimHash 15-bit band buckets are profiled "
         "per band (bucket count, max size, count past the cap, exact "
@@ -795,13 +747,8 @@ def q_hot_bucket_cap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED["hot_bucket_cap_audit"] = (
-    q_hot_bucket_cap_audit, _hot_bucket_oracle(),
-    STAGED["hot_bucket_cap_audit"][2], STAGED["hot_bucket_cap_audit"][3],
-)
 
-
-@_stage(
+@register(
     "session_gap_histogram",
     oracle="""
     WITH g AS (
@@ -868,7 +815,7 @@ def q_session_gap_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Embedding-table health + snapshot version diff
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "embedding_batch_drift",
     oracle="""
     WITH e AS (
@@ -936,7 +883,7 @@ def q_embedding_batch_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "snapshot_diff_audit",
     oracle="""
     WITH early AS (
@@ -1076,9 +1023,9 @@ def _bbit_minhash_oracle() -> str:
     """
 
 
-@_stage(
+@register(
     "bbit_minhash_estimate",
-    oracle=None,  # bound below
+    oracle=_bbit_minhash_oracle(),
     doc="b-bit MinHash (Li & Koenig, WWW'10): 16 one-bit minwise hashes "
         "pack a resemblance sketch into TWO BYTES per doc — 128x smaller "
         "than the 32-long signature the store persists — at the cost of "
@@ -1150,13 +1097,8 @@ def q_bbit_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED["bbit_minhash_estimate"] = (
-    q_bbit_minhash_estimate, _bbit_minhash_oracle(),
-    STAGED["bbit_minhash_estimate"][2], STAGED["bbit_minhash_estimate"][3],
-)
 
-
-@_stage(
+@register(
     "merkle_range_diff",
     oracle="""
     WITH a AS (
@@ -1243,7 +1185,7 @@ def q_merkle_range_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Max-min fair share + CBO cardinality feedback
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "fair_share_waterfill",
     oracle="""
     WITH d AS (
@@ -1344,7 +1286,7 @@ def q_fair_share_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "join_cardinality_qerror",
     oracle="""
     WITH stats AS (
@@ -1428,10 +1370,3 @@ def q_join_cardinality_qerror(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(
         rows, "edge string, est long, actual long, qerror_e3 long"
     ).orderBy("edge")
-
-
-# Self-register unconditionally (round 11: the gate was flipped after
-# CORRECTNESS_r10 came back 50/50 green — same lifecycle as
-# queries_r7/r8/r9/r10). register_all() is idempotent, so the historical
-# double-import path (queries.py import + direct test import) stays safe.
-register_all()

@@ -1,10 +1,4 @@
-"""Round-12 staged queries — written during round 11.
-
-Same staging pattern as queries_r7..r11 (see their module docstrings): new
-queries stay behind ``SPARK_GRAFT_R12=1`` until certification (3 SFs +
-perturbations + strict parity + replica) completes; once certified they are
-either registered LIVE mid-round (if the driver window has room — the r10
-precedent) or left staged for round 12.
+"""Round-11 live additions.
 
 Wave focus (r10 verdict ask #8 — remaining ENGINE surfaces over more
 statistics): the ``_metadata`` hidden-column file audit feeding a
@@ -17,47 +11,14 @@ cume_dist query — dropped on the pre-registration name sweep: the
 registered ★window_rank_family (queries.py) already pins that surface.
 A late twelfth entry (width_bucket_histogram) joined after the first
 certification pass; the registered wave is 11 queries.
-
 """
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries import _t
-
-# name -> (fn, oracle, headline, doc); materialized into the real registry
-# by register_all() at the module bottom (kept as a dict so the integrity
-# tests can enumerate the wave independently of the registry).
-STAGED: dict[str, tuple] = {}
-
-
-def _stage(name: str, oracle: str | None = None, headline: bool = False,
-           doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        STAGED[name] = (fn, oracle, headline, doc)
-        return fn
-    return deco
-
-
-def register_all() -> None:
-    """Register the staged queries — idempotent by fn identity;
-    raises on a name collision with a DIFFERENT query (see queries_r7)."""
-    from .queries import REGISTRY, register
-
-    for name, (fn, oracle, headline, doc) in STAGED.items():
-        if name in REGISTRY:
-            if REGISTRY[name].fn is fn:
-                continue  # repeat register_all() under both import orders
-            raise ValueError(
-                f"register_all: staged query name {name!r} already "
-                "registered by a different module — a silent skip would "
-                "ship the OLD query under this wave's name"
-            )
-        register(name, oracle=oracle, headline=headline, doc=doc)(fn)
+from .registry import _t, register
 
 
 # ---------------------------------------------------------------------------
@@ -65,7 +26,7 @@ def register_all() -> None:
 # map_filter / map_zip_with, try_element_at lookups
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "map_transform_audit",
     oracle="""
     WITH hc AS (
@@ -182,7 +143,7 @@ ORDER BY ALL
 """
 
 
-@_stage(
+@register(
     "group_by_all_pricing",
     oracle=_GROUP_BY_ALL_SQL,
     doc="Modern-SQL grouping syntax parity pin: GROUP BY ALL (group on "
@@ -207,7 +168,7 @@ def q_group_by_all_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Calendar month arithmetic: add_months end-of-month clamping parity
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "calendar_month_clamp_audit",
     oracle="""
     WITH base AS (
@@ -269,7 +230,7 @@ def q_calendar_month_clamp_audit(
 # DataFrame.transpose() — the Spark 4 pivot-to-wide API, bounded input
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "transpose_region_metrics",
     oracle="""
     WITH a AS (
@@ -346,7 +307,7 @@ def q_transpose_region_metrics(
 # Compaction plan over REAL file layout (_metadata hidden column)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "compaction_plan_audit",
     oracle="""
     WITH RECURSIVE b AS (
@@ -462,7 +423,7 @@ def q_compaction_plan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Near-dup cluster quality election — keep-best-of-cluster curation
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "neardup_quality_elect",
     oracle="""
     WITH toks AS (
@@ -584,7 +545,7 @@ def q_neardup_quality_elect(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SQL session variables + EXECUTE IMMEDIATE (dynamic SQL surface)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "session_variable_pricing",
     oracle="""
     WITH t AS (
@@ -643,7 +604,7 @@ def q_session_variable_pricing(
 # DataSketches HLL: mergeable sketches + union, guarantee-bracket oracle
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "hll_sketch_union_bracket",
     oracle="""
     SELECT event_type,
@@ -700,7 +661,7 @@ def q_hll_sketch_union_bracket(
 # SQL table function (RETURNS TABLE) with correlated LATERAL expansion
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "sql_table_udf_tiers",
     oracle="""
     WITH o AS (
@@ -812,9 +773,9 @@ def _split_leakage_oracle() -> str:
     """
 
 
-@_stage(
+@register(
     "neardup_split_leakage",
-    oracle=None,  # bound below (generator wraps portable_hash60_sql)
+    oracle=_split_leakage_oracle(),
     doc="Near-dup TEXT leakage across split borders — distinct from BOTH "
         "★contamination_overlap (external benchmark overlap) and "
         "★split_leakage_audit (ENTITY leakage: one customer's rows in "
@@ -877,17 +838,12 @@ def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-STAGED["neardup_split_leakage"] = (
-    q_split_leakage_audit, _split_leakage_oracle(),
-    STAGED["neardup_split_leakage"][2], STAGED["neardup_split_leakage"][3],
-)
-
 
 # ---------------------------------------------------------------------------
 # width_bucket equi-width histogram (with under/overflow buckets)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "width_bucket_histogram",
     oracle="""
     WITH c AS (
@@ -937,11 +893,3 @@ def q_width_bucket_histogram(
                CAST(MAX(cents) AS BIGINT) AS max_cents
         FROM c GROUP BY bucket ORDER BY bucket
     """)
-
-
-# Self-register unconditionally (round 11: the wave was certified at 3 SFs
-# + 3 perturbations + strict parity and registered LIVE mid-round — the
-# queries_r10 precedent — because the driver window had room: 17 r11 + 11
-# here = 28 never-green entries, inside the ~50-entry window).
-# register_all() is idempotent, so the double-import path stays safe.
-register_all()

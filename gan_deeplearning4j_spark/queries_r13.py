@@ -1,70 +1,25 @@
-"""Round-12 staged queries — written during round 11, LIVE since round 12.
-
-Same staging pattern as queries_r7..r12 (see their module docstrings): new
-queries written after the round-11 live-addition flip stayed behind
-``SPARK_GRAFT_R13=1`` until CORRECTNESS_r11 landed; round 12 flipped the
-gate to unconditional SELF-registration at this module's bottom (r11
-verdict ask #2 — queries.py only imports this module; calling
-``register_all()`` from queries.py is the import-order anti-pattern
-``test_direct_import_of_any_query_module_works`` pins against).
+"""Round-12 queries.
 
 Wave focus: parser/scripting surfaces not yet exercised (SQL UNPIVOT
 keyword incl. INCLUDE NULLS, lateral column aliases, SQL-scripting FOR
 cursor), the regex position/count family, the mask() redaction builtin,
 ISO-week calendar boundary semantics, banker's-rounding ties, and
 try_sum overflow-to-NULL.
-
-Local verification (identical gates to registered queries):
-
-    SPARK_GRAFT_R13=1 python scripts/driver_replica.py <names...>
-    SPARK_GRAFT_R13=1 python scripts/check_parity.py <names...>
 """
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .queries import _t
-
-# name -> (fn, oracle, headline, doc); materialized into the real registry
-# by register_all() (round 12) or under SPARK_GRAFT_R13=1 (round-11 local
-# verification).
-STAGED: dict[str, tuple] = {}
-
-
-def _stage(name: str, oracle: str | None = None, headline: bool = False,
-           doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        STAGED[name] = (fn, oracle, headline, doc)
-        return fn
-    return deco
-
-
-def register_all() -> None:
-    """Register the staged queries — idempotent by fn identity;
-    raises on a name collision with a DIFFERENT query (see queries_r7)."""
-    from .queries import REGISTRY, register
-
-    for name, (fn, oracle, headline, doc) in STAGED.items():
-        if name in REGISTRY:
-            if REGISTRY[name].fn is fn:
-                continue  # repeat register_all() under both import orders
-            raise ValueError(
-                f"register_all: staged query name {name!r} already "
-                "registered by a different module — a silent skip would "
-                "ship the OLD query under this wave's name"
-            )
-        register(name, oracle=oracle, headline=headline, doc=doc)(fn)
+from .registry import _t, register
 
 
 # ---------------------------------------------------------------------------
 # ISO-week calendar boundaries (isoyear != calendar year at the edges)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "iso_week_boundaries",
     oracle="""
     WITH d AS (
@@ -141,7 +96,7 @@ FROM priced GROUP BY l_returnflag ORDER BY l_returnflag
 """
 
 
-@_stage(
+@register(
     "lateral_alias_pricing_chain",
     oracle=_LATERAL_ALIAS_SQL,
     doc="Lateral column aliases — a SELECT item referencing an alias "
@@ -172,7 +127,7 @@ def q_lateral_alias_pricing_chain(
 # SQL UNPIVOT keyword (incl. INCLUDE NULLS semantics)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "unpivot_sql_include_nulls",
     oracle="""
     WITH base AS (
@@ -238,7 +193,7 @@ def q_unpivot_sql_include_nulls(
 # SQL scripting FOR cursor (ordered row iteration, order-sensitive fold)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "sql_scripting_for_cursor",
     oracle="""
     WITH seq AS (
@@ -312,7 +267,7 @@ def q_sql_scripting_for_cursor(
 # mask() builtin vs from-scratch character-class replay
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "mask_builtin_redact",
     oracle="""
     WITH ids AS (
@@ -367,7 +322,7 @@ def q_mask_builtin_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # regexp_count / regexp_instr / regexp_substr position family
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "regexp_position_family",
     oracle="""
     WITH m AS (
@@ -424,7 +379,7 @@ def q_regexp_position_family(
 # bround (banker's rounding) vs round — the half-even semantics pin
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "bround_half_even_audit",
     oracle="""
     WITH h AS (
@@ -482,7 +437,7 @@ def q_bround_half_even_audit(
 # try_sum overflow semantics (NULL, not wraparound, not a crash)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "try_sum_overflow_audit",
     oracle="""
     WITH v AS (
@@ -536,11 +491,3 @@ def q_try_sum_overflow_audit(
                     AS BIGINT) AS overflowed
         FROM v GROUP BY pri ORDER BY pri
     """)
-
-
-# Round-12 flip: SELF-register unconditionally at the module bottom (the
-# queries_r7 pattern — both import orders work because queries.py only
-# IMPORTS this module and never touches its attributes; a direct import
-# of this module first would otherwise hit a partially-initialized
-# module through the circular import).
-register_all()

@@ -1,7 +1,4 @@
-"""Round-12 live-addition queries — written and certified during round 12,
-registered LIVE mid-round (the r10/r11 precedent: certification under the
-``SPARK_GRAFT_R14`` gate — 3 SFs + perturbations + strict parity — then
-unconditional registration because the driver window had room).
+"""Round-12 live additions.
 
 Wave focus (r11 verdict ask #7 — the one LLM-pipeline family with thin
 coverage): rule-based data-quality curation over ``documents``, the
@@ -25,51 +22,14 @@ dedup and tokenization —
   cover 50/90/99% of token mass);
 - ``curation_keep_report``: the composed exact-dedup + quality keep-rate
   report per source.
-
-Local verification (identical gates to registered queries):
-
-    SPARK_GRAFT_R14=1 python scripts/driver_replica.py <names...>
-    SPARK_GRAFT_R14=1 python scripts/check_parity.py <names...>
 """
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries import _t
-
-# name -> (fn, oracle, headline, doc); materialized into the real registry
-# by register_all() (round 13) or under SPARK_GRAFT_R14=1 (round-12 local
-# verification).
-STAGED: dict[str, tuple] = {}
-
-
-def _stage(name: str, oracle: str | None = None, headline: bool = False,
-           doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        STAGED[name] = (fn, oracle, headline, doc)
-        return fn
-    return deco
-
-
-def register_all() -> None:
-    """Register the staged queries — idempotent by fn identity;
-    raises on a name collision with a DIFFERENT query (see queries_r7)."""
-    from .queries import REGISTRY, register
-
-    for name, (fn, oracle, headline, doc) in STAGED.items():
-        if name in REGISTRY:
-            if REGISTRY[name].fn is fn:
-                continue  # repeat register_all() under both import orders
-            raise ValueError(
-                f"register_all: staged query name {name!r} already "
-                "registered by a different module — a silent skip would "
-                "ship the OLD query under this wave's name"
-            )
-        register(name, oracle=oracle, headline=headline, doc=doc)(fn)
+from .registry import _t, register
 
 
 # shared house tokenization (matches the dedup family's oracles exactly):
@@ -175,7 +135,7 @@ _MIN_STOP_TYPES = 2
 _MAX_TOP_BIGRAM_PM = 60
 
 
-@_stage(
+@register(
     "gopher_quality_filters",
     oracle=f"""
     WITH toks AS ({_TOKS_SQL}),
@@ -235,7 +195,7 @@ def q_gopher_quality_filters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "doc_repetition_audit",
     oracle=f"""
     WITH toks AS ({_TOKS_SQL}),
@@ -437,8 +397,7 @@ def _funnel_metrics_arrow(docs: DataFrame) -> DataFrame:
     )
 
 
-
-@_stage(
+@register(
     "quality_filter_funnel",
     oracle=f"""
     WITH toks AS ({_TOKS_SQL}),
@@ -702,7 +661,7 @@ def _gram13_expr():
     ))
 
 
-@_stage(
+@register(
     "contamination_13gram_audit",
     oracle=f"""
     WITH toks AS ({_TOKS_SQL}),
@@ -809,7 +768,7 @@ def q_contamination_13gram_audit(
     )
 
 
-@_stage(
+@register(
     "decontam_drop_plan",
     oracle=f"""
     WITH toks AS ({_TOKS_SQL}),
@@ -880,7 +839,7 @@ def q_decontam_drop_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "unigram_surprise_proxy",
     oracle=f"""
     WITH toks AS ({_TOKS_SQL}),
@@ -928,7 +887,7 @@ def q_unigram_surprise_proxy(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "ngram_coverage_curve",
     oracle=f"""
     WITH toks AS ({_TOKS_SQL}),
@@ -993,7 +952,7 @@ def q_ngram_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "curation_keep_report",
     oracle=f"""
     WITH toks AS ({_TOKS_SQL}),
@@ -1066,9 +1025,3 @@ def q_curation_keep_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("source")
     )
-
-
-# Mid-round-12 live flip: SELF-register unconditionally at the module
-# bottom (the queries_r7 pattern — both import orders work because
-# queries.py only IMPORTS this module and never touches its attributes).
-register_all()

@@ -1,9 +1,4 @@
-"""Round-13 staged queries — written during round 12.
-
-Same staging pattern as queries_r7..r14 (see their module docstrings): new
-queries written after the round-12 live flips stay behind
-``SPARK_GRAFT_R15=1`` until CORRECTNESS_r12 lands and round 13 makes
-registration unconditional.
+"""Round-13 queries.
 
 Wave focus: the last unexercised Spark 4 surfaces (the SQL:2023
 ``regr_*`` linear-regression aggregate family, ``mode()``/``median``/
@@ -16,52 +11,18 @@ Matryoshka truncation drift).
 Name-sweep note: a first draft carried ``variant_props_extract`` and
 ``neardup_threshold_sweep`` — both DROPPED on the pre-registration grep
 (the round-5 registry already pins the VARIANT lane and the threshold
-sweep under exactly those names; re-registering would have silently
-no-op'd and read as padding).
-
-Local verification (identical gates to registered queries):
-
-    SPARK_GRAFT_R15=1 python scripts/driver_replica.py <names...>
-    SPARK_GRAFT_R15=1 python scripts/check_parity.py <names...>
+sweep under exactly those names, and ``register`` raises on a taken
+name).
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.money import cents_nonneg
 
-from .queries import _t
-
-STAGED: dict[str, tuple] = {}
-
-
-def _stage(name: str, oracle: str | None = None, headline: bool = False,
-           doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        STAGED[name] = (fn, oracle, headline, doc)
-        return fn
-    return deco
-
-
-def register_all() -> None:
-    """Register the staged queries — idempotent by fn identity;
-    raises on a name collision with a DIFFERENT query (see queries_r7)."""
-    from .queries import REGISTRY, register
-
-    for name, (fn, oracle, headline, doc) in STAGED.items():
-        if name in REGISTRY:
-            if REGISTRY[name].fn is fn:
-                continue  # repeat register_all() under both import orders
-            raise ValueError(
-                f"register_all: staged query name {name!r} already "
-                "registered by a different module — a silent skip would "
-                "ship the OLD query under this wave's name"
-            )
-        register(name, oracle=oracle, headline=headline, doc=doc)(fn)
+from .registry import _t, register
 
 
 def _agree_or_both_undefined(cmp: "F.Column", native: "F.Column",
@@ -84,7 +45,7 @@ def _agree_or_both_undefined(cmp: "F.Column", native: "F.Column",
 # exact-integer-moment closed form
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "regr_native_bracket",
     oracle="""
     WITH p AS (
@@ -197,7 +158,7 @@ def q_regr_native_bracket(spark: SparkSession, sf_dir: str) -> DataFrame:
 # mode() / median / percentile_disc WITHIN GROUP
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "mode_median_family",
     oracle="""
     WITH p AS (
@@ -274,7 +235,7 @@ def q_mode_median_family(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bitwise aggregates
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "bitwise_agg_audit",
     oracle="""
     SELECT c_mktsegment,
@@ -310,7 +271,7 @@ def q_bitwise_agg_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # approx_top_k with an exactness bracket (distinct domain << sketch budget)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "approx_topk_bracket",
     oracle="""
     WITH cnt AS (
@@ -366,7 +327,7 @@ def q_approx_topk_bracket(spark: SparkSession, sf_dir: str) -> DataFrame:
 # int8 symmetric quantization audit over embeddings (exact integer math)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "embedding_int8_quant_audit",
     oracle="""
     WITH xq AS (
@@ -444,7 +405,7 @@ def q_embedding_int8_quant_audit(
 # Matryoshka truncation drift (cosine at 16/64 dims, fixed point)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "matryoshka_truncation_audit",
     oracle="""
     WITH xq AS (
@@ -562,7 +523,7 @@ def q_matryoshka_truncation_audit(
 # row? (the subtotal-disambiguation surface a NULL-coalescing report needs)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "grouping_id_rollup_audit",
     oracle="""
     SELECT COALESCE(l_returnflag, 'ALL') AS rflag,
@@ -617,7 +578,7 @@ def q_grouping_id_rollup_audit(
 # xpath_* / from_xml: the XML extraction lane (round-trip identity oracle)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "xml_xpath_extract",
     oracle="""
     SELECT o_orderpriority AS pri,
@@ -686,7 +647,7 @@ def q_xml_xpath_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 # corr / covar_pop / stddev_pop, bracketed against exact-moment closed forms
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "corr_covar_bracket",
     oracle="""
     WITH p AS (
@@ -804,7 +765,7 @@ def q_corr_covar_bracket(spark: SparkSession, sf_dir: str) -> DataFrame:
 # histogram_numeric: the streaming adaptive-bin sketch, invariant bracket
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "histogram_numeric_bracket",
     oracle="""
     WITH p AS (
@@ -870,9 +831,3 @@ def q_histogram_numeric_bracket(
             " st -> st.ok)"
         ).alias("centroids_sorted"),
     ).orderBy("l_returnflag")
-
-
-# Round-13 flip: SELF-register unconditionally at the module bottom (the
-# queries_r7 pattern — both import orders work because queries.py only
-# IMPORTS this module and never touches its attributes).
-register_all()

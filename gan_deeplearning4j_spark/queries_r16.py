@@ -1,10 +1,4 @@
-"""Round-13 packing/ordering wave — written, certified, and registered
-LIVE during round 13.
-
-Staged behind ``SPARK_GRAFT_R16=1`` through certification (the
-queries_r7..r15 pattern), then registered live mid-round because the
-driver's never-green window had room (10 r15 + 6 r16 = 16 of ~50 — the
-r10/r12/r14 precedent).
+"""Round-13 packing/ordering wave.
 
 Wave focus (r12 verdict ask #4): training-data PACKING and ORDERING —
 the pretraining-pipeline stage between curation (queries_r14) and the
@@ -33,48 +27,14 @@ interleave), ``shard_balance_audit`` (writer-shard balance) and
 ``temperature_mixture_weights`` (static tau weights) already pin the
 adjacent ops — each query below is a different grain or different
 semantics, stated in its docstring.
-
-Local verification (identical gates to registered queries):
-
-    SPARK_GRAFT_R16=1 python scripts/driver_replica.py <names...>
-    SPARK_GRAFT_R16=1 python scripts/check_parity.py <names...>
 """
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries import _t
-
-STAGED: dict[str, tuple] = {}
-
-
-def _stage(name: str, oracle: str | None = None, headline: bool = False,
-           doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        STAGED[name] = (fn, oracle, headline, doc)
-        return fn
-    return deco
-
-
-def register_all() -> None:
-    """Register the staged queries — idempotent by fn identity;
-    raises on a name collision with a DIFFERENT query (see queries_r7)."""
-    from .queries import REGISTRY, register
-
-    for name, (fn, oracle, headline, doc) in STAGED.items():
-        if name in REGISTRY:
-            if REGISTRY[name].fn is fn:
-                continue  # repeat register_all() under both import orders
-            raise ValueError(
-                f"register_all: staged query name {name!r} already "
-                "registered by a different module — a silent skip would "
-                "ship the OLD query under this wave's name"
-            )
-        register(name, oracle=oracle, headline=headline, doc=doc)(fn)
+from .registry import _t, register
 
 
 # house tokenization (identical to length_bucket_batches / queries_r14):
@@ -174,7 +134,7 @@ def _schedule_taken(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 1. token-window packing with overflow-split semantics
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "token_window_packing",
     headline=True,
     oracle=_SPANS_CTE + """
@@ -221,7 +181,7 @@ def q_token_window_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 2. fragmentation / tail-salvage report (doc grain of the same packing)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "pack_fragmentation_report",
     oracle=_SPANS_CTE + """
     SELECT source,
@@ -297,7 +257,7 @@ def q_pack_fragmentation_report(
 # 3. deterministic seeded epoch shuffle
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "seeded_epoch_shuffle",
     oracle="""
     WITH ep AS (
@@ -375,7 +335,7 @@ def q_seeded_epoch_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 4. epoch domain-mix schedule (rotating modular quotas, wraparound)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "epoch_domain_mix_schedule",
     oracle=_SCHED_CTE + """
     , firsts AS (
@@ -448,7 +408,7 @@ def q_epoch_domain_mix_schedule(
 # 5. repack delta after the quality filter (curation → packing composition)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "repack_delta_audit",
     oracle=r"""
     WITH toks AS (
@@ -516,7 +476,7 @@ def q_repack_delta_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 6. realized-vs-target mix drift per epoch
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "mix_schedule_drift_audit",
     oracle=_SCHED_CTE + """
     , etot AS (
@@ -574,11 +534,3 @@ def q_mix_schedule_drift_audit(
          - F.expr("q * 1000000 div q_sum").cast("long"))
         .alias("drift_ppm"),
     ).orderBy("epoch", "source")
-
-
-# Mid-round-13 live flip: SELF-register unconditionally at the module
-# bottom (the queries_r7 pattern — both import orders work because
-# queries.py only IMPORTS this module and never touches its attributes).
-# Precedent: queries_r10/r12/r14 all registered live mid-round when the
-# driver's never-green window had room (here 10 r15 + 6 r16 = 16 of ~50).
-register_all()

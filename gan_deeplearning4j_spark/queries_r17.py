@@ -1,12 +1,5 @@
-"""Round-13 second wave — written, certified, and registered LIVE
-during round 13.
-
-Staged behind ``SPARK_GRAFT_R17=1`` through certification (the
-queries_r7..r16 pattern: 3 SFs x driver_replica + the three
-perturbation sweeps + strict parity + python-replay pins), then
-registered live mid-round because the driver's never-green window had
-room (10 r15 + 6 r16 + 4 r17 = 20 of ~50 — the r10/r12/r14/r16
-precedent).
+"""Round-13 second wave: embedding-pipeline and training-data accounting
+queries.
 
 Wave focus: the two embedding-pipeline gaps left after the r15
 quantization audits, plus the two training-data accounting ops the
@@ -41,59 +34,25 @@ file shards, not dataloader rank/worker assignment),
 ``length_bucket_batches`` / ``token_window_packing`` (packing itself,
 not the truncation counterfactual or the shard manifest). Each query
 below states its contrast in the docstring.
-
-Local verification (identical gates to registered queries):
-
-    SPARK_GRAFT_R17=1 python scripts/driver_replica.py <names...>
-    SPARK_GRAFT_R17=1 python scripts/check_parity.py <names...>
 """
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .queries import _t
-
-STAGED: dict[str, tuple] = {}
+from .registry import _t, register
 
 _FX = 1 << 20          # fixed-point scale, the similarity-family house value
 _NQ = 8                # hamming_rerank_recall query set = vec_id < 8
 _K = 10                # recall@10
 
 
-def _stage(name: str, oracle: str | None = None, headline: bool = False,
-           doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        STAGED[name] = (fn, oracle, headline, doc)
-        return fn
-    return deco
-
-
-def register_all() -> None:
-    """Register the staged queries — idempotent by fn identity;
-    raises on a name collision with a DIFFERENT query (see queries_r7)."""
-    from .queries import REGISTRY, register
-
-    for name, (fn, oracle, headline, doc) in STAGED.items():
-        if name in REGISTRY:
-            if REGISTRY[name].fn is fn:
-                continue  # repeat register_all() under both import orders
-            raise ValueError(
-                f"register_all: staged query name {name!r} already "
-                "registered by a different module — a silent skip would "
-                "ship the OLD query under this wave's name"
-            )
-        register(name, oracle=oracle, headline=headline, doc=doc)(fn)
-
-
 # ---------------------------------------------------------------------------
 # 1. per-dimension sign-bit quantization health audit
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "binary_sign_quant_audit",
     oracle="""
     SELECT CAST(t.d AS BIGINT) AS d,
@@ -231,7 +190,7 @@ _R17_SIG_CTE = f"""
 """
 
 
-@_stage(
+@register(
     "hamming_rerank_recall",
     oracle=_R17_SIG_CTE + f"""
     , scored AS (
@@ -329,7 +288,7 @@ def q_hamming_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BUDGETS = (16, 32, 64, 128)
 
 
-@_stage(
+@register(
     "context_truncation_waste",
     oracle=f"""
     WITH toks AS (
@@ -419,7 +378,7 @@ _RANKS = 4
 _WORKERS = 2
 
 
-@_stage(
+@register(
     "dataloader_rank_manifest",
     oracle=f"""
     WITH toks AS (
@@ -493,14 +452,3 @@ def q_dataloader_rank_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         _t(spark, sf_dir, "documents"),
         budget=512, ranks=_RANKS, workers=_WORKERS,
     )
-
-
-# Mid-round-13 live flip: SELF-register unconditionally at the module
-# bottom (the queries_r7 pattern — both import orders work because
-# queries.py only IMPORTS this module and never touches its attributes).
-# Precedent: queries_r10/r12/r14/r16 all registered live mid-round when
-# the driver's never-green window had room (here 10 r15 + 6 r16 + 4 r17
-# = 20 of ~50). Certified first under the SPARK_GRAFT_R17 gate: 3 SFs x
-# driver_replica + shuffle3/noaqe/noansi + strict parity (SCALE.md
-# round 13) + the python-replay pins in tests/test_queries_r17.py.
-register_all()

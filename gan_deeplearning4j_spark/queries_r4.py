@@ -35,7 +35,7 @@ from .functions.money import cents_nonneg
 
 from .functions.windows import bounded_window
 from .functions.text import portable_hash60, portable_hash60_sql
-from .queries import _t, register
+from .registry import _t, register
 
 # ---------------------------------------------------------------------------
 # Weighted priority sampling (R4 family: deterministic weighted downsample)

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.windows import bounded_window
-from .queries import _t, register
+from .registry import _t, register
 
 # ---------------------------------------------------------------------------
 # Fixed-weight generator: 2 -> dense(8, relu) -> dense(2, linear)

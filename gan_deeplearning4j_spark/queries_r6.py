@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from .functions.money import cents_nonneg
 
-from .queries import _t, register
+from .registry import _t, register
 
 # ---------------------------------------------------------------------------
 # Fixed-point ANN twins (IVF flat + hyperplane LSH)
@@ -40,19 +40,13 @@ _ANN_K = 5
 
 def _ivf_fixed_oracle(dim: int = _EMB_DIM, n_centroids: int = 8,
                       nprobe: int = 3, k: int = _ANN_K,
-                      nq: int = _ANN_NQ) -> str | None:
+                      nq: int = _ANN_NQ) -> str:
     """DuckDB replica of ivf_topk_fixed: coarse centroids inlined as BIGINT
     literals; assignment, probe selection and the exact in-list scan all in
     int64, mirroring the Spark kernel term-for-term."""
-    try:
-        from .operators.similarity import (
-            FIXED_POINT_SCALE,
-            ivfpq_fixed_reference,
-        )
+    from .operators.similarity import FIXED_POINT_SCALE, ivfpq_fixed_reference
 
-        coarse, _ = ivfpq_fixed_reference(dim=dim, n_centroids=n_centroids)
-    except Exception:
-        return None
+    coarse, _ = ivfpq_fixed_reference(dim=dim, n_centroids=n_centroids)
     cc_rows = ",\n      ".join(
         f"({cid}, [{', '.join(str(v) for v in cent)}]::BIGINT[])"
         for cid, cent in enumerate(coarse)

@@ -1,16 +1,4 @@
-"""Round-7 staged queries — written and verified during round 6, registered
-in round 7.
-
-Why staged: the round-6 driver window is exactly the 50 never-green registry
-entries (pinned by tests/test_registry_integrity.py).  Registering anything
-new before CORRECTNESS_r06 lands would push tail entries past the window, so
-these live behind ``SPARK_GRAFT_R7=1`` (see the bottom of queries.py) until
-round 7 makes the registration unconditional.
-
-Local verification (same gates as registered queries):
-
-    SPARK_GRAFT_R7=1 python scripts/driver_replica.py <names...>
-    SPARK_GRAFT_R7=1 python scripts/check_parity.py <names...>
+"""Round-7 queries.
 
 Every query follows the repo conventions: integer or fixed-point outputs
 (no float hash hazards), BIGINT casts on every count/row_number-derived
@@ -20,52 +8,20 @@ a DuckDB oracle that replays the identical arithmetic.
 
 from __future__ import annotations
 
-from typing import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.money import cents_nonneg, cents_signed
 
 from .functions.windows import bounded_window
-from .queries import _t
-
-# name -> (fn, oracle, headline, doc); materialized into the real registry
-# by register_all() (round 7) or under SPARK_GRAFT_R7=1 (round-6 local
-# verification).
-STAGED: dict[str, tuple] = {}
-
-
-def _stage(name: str, oracle: str | None = None, headline: bool = False,
-           doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        STAGED[name] = (fn, oracle, headline, doc)
-        return fn
-    return deco
-
-
-def register_all() -> None:
-    """Register the staged queries (idempotent — safe to call from both
-    this module's bottom and queries.py under either import order)."""
-    from .queries import REGISTRY, register
-
-    for name, (fn, oracle, headline, doc) in STAGED.items():
-        if name in REGISTRY:
-            if REGISTRY[name].fn is fn:
-                continue  # repeat register_all() under both import orders
-            raise ValueError(
-                f"register_all: staged query name {name!r} already "
-                "registered by a different module — a silent skip would "
-                "ship the OLD query under this wave's name"
-            )
-        register(name, oracle=oracle, headline=headline, doc=doc)(fn)
+from .registry import _t, register
 
 
 # ---------------------------------------------------------------------------
 # Window depth: running distinct count via the first-occurrence trick
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "running_distinct_event_types",
     oracle="""
     WITH e AS (
@@ -130,7 +86,7 @@ def q_running_distinct_event_types(spark: SparkSession,
 # Gaps and islands: longest consecutive-day activity streak
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "longest_daily_streak",
     oracle="""
     WITH d AS (
@@ -181,7 +137,7 @@ def q_longest_daily_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TE_M = 20  # m-estimate smoothing pseudo-count
 
 
-@_stage(
+@register(
     "target_encode_nation",
     oracle=f"""
     WITH oc AS (
@@ -239,7 +195,7 @@ def q_target_encode_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ML feature engineering: the hashing trick
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "feature_hash_counts",
     oracle="""
     WITH t AS (
@@ -284,7 +240,7 @@ def q_feature_hash_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Training-data hygiene: split leakage audit
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "split_leakage_audit",
     oracle="""
     WITH s AS (
@@ -364,7 +320,7 @@ def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 _OOV_K = 10  # tiny synthetic vocab (~40 types); top-10 leaves a real OOV tail
 
 
-@_stage(
+@register(
     "oov_rate_by_lang",
     oracle=f"""
     WITH t AS (
@@ -423,7 +379,7 @@ def q_oov_rate_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Observability: HdrHistogram-style log2-bucketed latency histogram
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "gap_log2_histogram",
     oracle="""
     WITH e AS (
@@ -470,7 +426,7 @@ def q_gap_log2_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # SQL semantics: null-safe equality join (<=> / IS NOT DISTINCT FROM)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "null_safe_join_eqnullsafe",
     oracle="""
     SELECT d.label,
@@ -519,7 +475,7 @@ def q_null_safe_join_eqnullsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ASOF_TOL_US = 3600000000  # 1 hour
 
 
-@_stage(
+@register(
     "asof_tolerance_join",
     oracle=f"""
     WITH e AS (
@@ -607,7 +563,7 @@ def q_asof_tolerance_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Product analytics: DAU/PAU stickiness over fixed 30-day periods
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "dau_mau_stickiness",
     oracle="""
     WITH d AS (
@@ -664,7 +620,7 @@ def q_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Changepoint detection: single best split by between-segment SS gain
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "changepoint_single_split",
     oracle="""
     WITH daily AS (
@@ -743,7 +699,7 @@ def q_changepoint_single_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 _BOOT_B = 50
 
 
-@_stage(
+@register(
     "bootstrap_ci_hash",
     oracle=f"""
     WITH oc AS (
@@ -820,7 +776,7 @@ def q_bootstrap_ci_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Spark 4 Python DataSource API (user-defined source, S-family depth)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "python_datasource_scan",
     oracle="""
     SELECT CAST((r.range * r.range) % 97 AS BIGINT) AS val,
@@ -858,7 +814,7 @@ def q_python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Paired nonparametric test: Wilcoxon signed-rank statistic
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "wilcoxon_signed_rank",
     oracle="""
     WITH e AS (
@@ -933,7 +889,7 @@ def q_wilcoxon_signed_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Matryoshka embeddings: prefix-dimension energy retention
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "matryoshka_truncation_error",
     oracle="""
     WITH x AS (
@@ -1004,7 +960,7 @@ def q_matryoshka_truncation_error(spark: SparkSession,
 # OLAP reporting: day-of-week x hour occupancy heatmap
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "dow_hour_heatmap",
     oracle="""
     WITH e AS (
@@ -1040,7 +996,7 @@ def q_dow_hour_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Sketch algebra: HLL intersection via inclusion-exclusion, bracket-graded
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "hll_intersection_bracket",
     oracle="""
     WITH a AS (SELECT DISTINCT user_id FROM events
@@ -1110,7 +1066,7 @@ _KNN_NQ = 50
 _KNN_K = 5
 
 
-@_stage(
+@register(
     "knn_label_accuracy",
     oracle=f"""
     WITH x AS (
@@ -1191,7 +1147,7 @@ def q_knn_label_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Knee/elbow detection on the power-user curve (Kneedle chord distance)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "knee_point_power_users",
     oracle="""
     WITH per AS (
@@ -1262,7 +1218,7 @@ def q_knee_point_power_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Spark 4 native XML surface (from_xml + xpath), round-trip oracled
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "xml_roundtrip_extract",
     oracle="""
     SELECT o_orderpriority AS priority,
@@ -1397,7 +1353,7 @@ ORDER BY rank
 """
 
 
-@_stage(
+@register(
     "bpe_train_merges_fixed",
     oracle=_BPE_FIX_ORACLE,
     doc="BPE training promoted to hash-grade (the r6 verdict ask): the "
@@ -1435,8 +1391,7 @@ def q_bpe_train_merges_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("rank")
 
 
-
-@_stage(
+@register(
     "kendall_tau_daily",
     oracle="""
     WITH d AS (
@@ -1508,7 +1463,7 @@ def q_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "cohens_kappa_gates",
     oracle="""
     WITH g AS (
@@ -1600,7 +1555,7 @@ def q_cohens_kappa_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "iso_week_rollup",
     oracle="""
     SELECT isoyear(CAST(o_orderdate AS DATE)) AS iso_year,
@@ -1647,8 +1602,7 @@ def q_iso_week_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-@_stage(
+@register(
     "span_corruption_plan",
     oracle="""
     WITH d AS (
@@ -1752,7 +1706,7 @@ def q_span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "curriculum_interleave",
     oracle="""
     WITH d AS (
@@ -1809,7 +1763,7 @@ def q_curriculum_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "k_anonymity_audit",
     oracle="""
     WITH e AS (
@@ -1934,7 +1888,7 @@ def _maxsim_oracle() -> str:
     """
 
 
-@_stage(
+@register(
     "maxsim_fixed_topk",
     oracle=_maxsim_oracle(),
     doc="MaxSim late-interaction retrieval (Khattab & Zaharia, SIGIR'20 "
@@ -1962,7 +1916,7 @@ def q_maxsim_fixed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- BM25 with exact integer arithmetic ------------------------------------
 
-@_stage(
+@register(
     "bm25_int_topk",
     oracle="""
     WITH tok AS (
@@ -2079,7 +2033,7 @@ def bm25_int_topk_df(docs: DataFrame) -> DataFrame:
 
 # --- Reciprocal-rank fusion ------------------------------------------------
 
-@_stage(
+@register(
     "rrf_fusion_topk",
     oracle="""
     WITH p AS (
@@ -2229,7 +2183,7 @@ _KCORE_ORACLE = f"""
 """
 
 
-@_stage(
+@register(
     "k_core_parts",
     oracle=_KCORE_ORACLE,
     doc=f"k-core decomposition (Seidman'83; k={_KCORE_K}) of the part "
@@ -2361,7 +2315,7 @@ def _cms_join_oracle() -> str:
     """
 
 
-@_stage(
+@register(
     "cms_join_cardinality",
     oracle=_cms_join_oracle(),
     doc="Join-size estimation via count-min sketch inner product "
@@ -2438,7 +2392,7 @@ def q_cms_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- DBSCAN-style grid density clustering ----------------------------------
 
-@_stage(
+@register(
     "dbscan_grid_clusters",
     oracle="""
     WITH RECURSIVE
@@ -2547,7 +2501,7 @@ def q_dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # fixed 8-word chunks on this corpus's newline-free text)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "chunk_dedup_ccnet",
     oracle="""
     WITH d AS (
@@ -2601,7 +2555,7 @@ def q_chunk_dedup_ccnet(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Inverted index posting lists (search infrastructure)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "inverted_index_postings",
     oracle="""
     WITH tok AS (
@@ -2681,7 +2635,7 @@ def q_inverted_index_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Shannon entropy of per-user event mix (quantized micro-nats)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "event_type_entropy",
     oracle="""
     WITH c AS (
@@ -2738,7 +2692,7 @@ def q_event_type_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Lag-1 autocorrelation of the daily order count series
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "autocorr_lag1_daily",
     oracle="""
     WITH d AS (
@@ -2815,7 +2769,7 @@ def q_autocorr_lag1_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Deterministic weighted sampling without replacement (Efraimidis-Spirakis)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "weighted_sample_es",
     oracle="""
     WITH k AS (
@@ -2874,7 +2828,7 @@ def q_weighted_sample_es(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DSIR importance weights (hashed n-gram target/raw log-likelihood ratio)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "dsir_importance_weights",
     oracle="""
     WITH tok AS (
@@ -2975,7 +2929,7 @@ def q_dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Mutual information of the (lang, source) contingency table
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "lang_source_mutual_info",
     oracle="""
     WITH c AS (
@@ -3047,7 +3001,7 @@ def q_lang_source_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Benford first-digit conformance audit on order totals
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "benford_digit_audit",
     oracle="""
     WITH c AS (
@@ -3106,7 +3060,7 @@ def q_benford_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # actual binary codec in the loop)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "wav_roundtrip_frame_energy",
     oracle="""
     WITH c AS (
@@ -3163,11 +3117,17 @@ def q_wav_roundtrip_frame_energy(spark: SparkSession,
             rows = {"clip": [], "frame_no": [], "energy": []}
             for clip, samples in zip(pdf["clip"], pdf["samples"]):
                 s = np.asarray(samples, dtype=np.int64)
-                assert s.min() >= -32768 and s.max() <= 32767
+                if s.min() < -32768 or s.max() > 32767:
+                    raise ValueError(
+                        f"clip {clip}: samples outside the int16 range"
+                    )
                 decoded, rate = decode_wav(
                     encode_wav(s.astype(np.int16), 16000)
                 )
-                assert rate == 16000
+                if rate != 16000:
+                    raise RuntimeError(
+                        f"wav round trip returned rate {rate}, not 16000"
+                    )
                 v = decoded[:, 0].astype(np.int64)
                 e = (v * v).reshape(-1, 160).sum(axis=1)
                 rows["clip"].extend([int(clip)] * len(e))
@@ -3184,7 +3144,7 @@ def q_wav_roundtrip_frame_energy(spark: SparkSession,
 # version must contain
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "snapshot_time_travel_audit",
     oracle="""
     WITH base AS (
@@ -3257,7 +3217,7 @@ def q_snapshot_time_travel_audit(spark: SparkSession,
 # Order-free table checksums (CHECKSUM TABLE / data-integrity surface)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "table_checksum_audit",
     oracle="""
     WITH o AS (
@@ -3363,7 +3323,7 @@ def q_table_checksum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Adamic-Adar link prediction on the co-purchase graph
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "adamic_adar_linkpred",
     oracle="""
     WITH b AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -3469,7 +3429,7 @@ def _bt_oracle(iters: int = 3) -> str:
     )
 
 
-@_stage(
+@register(
     "bradley_terry_strength",
     oracle=_bt_oracle(),
     doc="Bradley-Terry pairwise-preference strengths via the classic MM "
@@ -3575,7 +3535,7 @@ def q_bradley_terry_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Flesch reading ease per language (readability audit)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "flesch_reading_ease",
     oracle=r"""
     WITH d AS (
@@ -3645,7 +3605,7 @@ def q_flesch_reading_ease(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Jensen-Shannon divergence between source length distributions
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "js_divergence_sources",
     oracle="""
     WITH d AS (
@@ -3769,7 +3729,7 @@ def q_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Expected-calibration-error bins (integer-exact reliability diagram)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "ece_calibration_bins",
     oracle="""
     WITH s AS (
@@ -3831,7 +3791,7 @@ def q_ece_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Unicode character-class profile per language
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "unicode_script_profile",
     oracle=r"""
     WITH d AS (
@@ -3912,9 +3872,3 @@ def q_unicode_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("whitespace * 1000000 div total_chars").cast("long")
         .alias("ws_frac_e6"),
     ).orderBy("lang")
-
-
-# Self-register at module bottom: by the time execution reaches here,
-# .queries is initialized far enough (register/REGISTRY are defined above
-# its own bottom import of this module), under EITHER import order.
-register_all()

@@ -1,54 +1,18 @@
-"""Round-8 query wave — written during round 7, registered in round 8.
-
-Staged behind ``SPARK_GRAFT_R8=1`` through round 7 (same pattern as
-queries_r7; see its module docstring), then flipped to unconditional
-registration once CORRECTNESS_r07 confirmed the full round-7 driver window
-green (50/50 hash-match). All 34 entries were hash-verified locally at
-3 SFs + strict parity + shuffle3/noaqe/noansi perturbations before the
-driver ever saw them (SCALE.md)."""
+"""Round-8 queries. All 34 entries were hash-verified at 3 SFs + strict
+parity + shuffle3/noaqe/noansi perturbations (SCALE.md).
+"""
 
 from __future__ import annotations
-
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.money import cents_nonneg
 
-from .queries import _t
-
-# name -> (fn, oracle, headline, doc); materialized into the real registry
-# by register_all() at module bottom.
-STAGED: dict[str, tuple] = {}
+from .registry import _t, register
 
 
-def _stage(name: str, oracle: str | None = None, headline: bool = False,
-           doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        STAGED[name] = (fn, oracle, headline, doc)
-        return fn
-    return deco
-
-
-def register_all() -> None:
-    """Register the staged queries — idempotent by fn identity;
-    raises on a name collision with a DIFFERENT query (see queries_r7)."""
-    from .queries import REGISTRY, register
-
-    for name, (fn, oracle, headline, doc) in STAGED.items():
-        if name in REGISTRY:
-            if REGISTRY[name].fn is fn:
-                continue  # repeat register_all() under both import orders
-            raise ValueError(
-                f"register_all: staged query name {name!r} already "
-                "registered by a different module — a silent skip would "
-                "ship the OLD query under this wave's name"
-            )
-        register(name, oracle=oracle, headline=headline, doc=doc)(fn)
-
-
-@_stage(
+@register(
     "viterbi_event_paths",
     oracle="""
     WITH RECURSIVE
@@ -150,22 +114,15 @@ def q_viterbi_event_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("step")
 
 
-def _recall_pq_oracle() -> str | None:
+def _recall_pq_oracle() -> str:
     """Exact fixed-point L2 top-5 vs the PQ-ADC top-5 (the pq_fixed_topk
     oracle embedded verbatim as a subquery), joined per query into a
-    recall@5 report. Falls back to rows-only if the PQ oracle can't be
-    built (missing training corpus)."""
+    recall@5 report."""
+    from .operators.similarity import FIXED_POINT_SCALE
     from .queries_ext import _pq_fixed_oracle
 
-    pq = _pq_fixed_oracle()
-    if pq is None:
-        return None
-    try:
-        from .operators.similarity import FIXED_POINT_SCALE
-    except Exception:
-        return None
     return f"""
-    WITH pq AS ({pq}),
+    WITH pq AS ({_pq_fixed_oracle()}),
     v AS (
       SELECT vec_id,
              list_transform(CAST(embedding AS DOUBLE[]),
@@ -194,7 +151,7 @@ def _recall_pq_oracle() -> str | None:
     """
 
 
-@_stage(
+@register(
     "recall_pq_vs_exact",
     oracle=_recall_pq_oracle(),
     doc="Retrieval-evaluation operator: recall@5 of the product-quantized "
@@ -257,7 +214,7 @@ def q_recall_pq_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "markov_next_event_accuracy",
     oracle="""
     WITH pairs AS (
@@ -342,7 +299,7 @@ def q_markov_next_event_accuracy(spark: SparkSession, sf_dir: str
     )
 
 
-@_stage(
+@register(
     "seq_pattern_support",
     oracle="""
     WITH pos AS (
@@ -424,7 +381,7 @@ def q_seq_pattern_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "debounce_suppressed_counts",
     oracle="""
     WITH d AS (
@@ -489,7 +446,7 @@ def q_debounce_suppressed_counts(spark: SparkSession, sf_dir: str
     )
 
 
-@_stage(
+@register(
     "mrr_next_event",
     oracle="""
     WITH pairs AS (
@@ -574,7 +531,7 @@ def q_mrr_next_event(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_stage(
+@register(
     "encoding_advisor_events",
     oracle="""
     WITH o AS (
@@ -692,7 +649,7 @@ def q_encoding_advisor_events(spark: SparkSession, sf_dir: str
 # family: pagerank/LPA/triangles/CC/k-core exist, shortest paths did not)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "bfs_hops_from_hub",
     oracle="""
     WITH RECURSIVE
@@ -774,7 +731,7 @@ def q_bfs_hops_from_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Calendar gap fill + last-observation-carried-forward (ETL spine surface)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "gap_fill_locf_daily",
     oracle="""
     WITH d AS (
@@ -859,7 +816,7 @@ def q_gap_fill_locf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Haar wavelet multi-resolution energy of the daily order series
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "haar_wavelet_energy",
     oracle="""
     WITH d AS (
@@ -946,7 +903,7 @@ def q_haar_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Interpolated quartiles (percentile_cont) in exact dyadic arithmetic
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "percentile_cont_quartiles",
     oracle="""
     WITH c AS (
@@ -1000,7 +957,7 @@ def q_percentile_cont_quartiles(spark: SparkSession,
 # Stratified k-fold cross-validation assignment (ML split surface)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "stratified_kfold_assignment",
     oracle="""
     WITH d AS (
@@ -1095,7 +1052,7 @@ def _hits_oracle(rounds: int = 2) -> str:
     )
 
 
-@_stage(
+@register(
     "hits_fixed_scores",
     oracle=_hits_oracle(),
     doc="HITS hubs-and-authorities (Kleinberg 1999, JACM) on the "
@@ -1227,7 +1184,7 @@ def _panel_retrieval_top10(spark: SparkSession, sf_dir: str):
     return d, q, top
 
 
-@_stage(
+@register(
     "ndcg_ranking_eval",
     oracle=_ndcg_oracle(),
     doc="NDCG@10 retrieval evaluation (Jarvelin & Kekalainen 2002) of "
@@ -1278,7 +1235,7 @@ def q_ndcg_ranking_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Mutual nearest-neighbor pairs (reciprocal-NN dedup panel)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "mutual_nn_pairs",
     oracle="""
     WITH fx AS (
@@ -1354,7 +1311,7 @@ def q_mutual_nn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # CUPED variance reduction (pre-period covariate adjustment)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "cuped_variance_reduction",
     oracle="""
     WITH u AS (
@@ -1445,7 +1402,7 @@ def q_cuped_variance_reduction(spark: SparkSession,
 # ROC AUC by source (exact midrank Mann-Whitney, integer arithmetic)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "roc_auc_by_source",
     oracle="""
     WITH g AS (
@@ -1528,7 +1485,7 @@ def q_roc_auc_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 # binaryFile source scan of real WAV shards (Spark built-in binary source)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "binaryfile_wav_scan",
     oracle="""
     WITH c AS (
@@ -1638,7 +1595,7 @@ def _pass_ratio_sql(k: int) -> str:
     return f"CAST(floor((1.0 - {terms}) * 1000000000) AS BIGINT)"
 
 
-@_stage(
+@register(
     "pass_at_k_estimator",
     oracle=f"""
     WITH u AS (
@@ -1709,7 +1666,7 @@ def q_pass_at_k_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Isotonic calibration of the reliability bins (minimax closed form)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "isotonic_calibration_bins",
     oracle="""
     WITH s AS (
@@ -1824,7 +1781,7 @@ def q_isotonic_calibration_bins(spark: SparkSession,
 # Split-conformal prediction interval + empirical coverage audit
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "conformal_quantile_coverage",
     oracle="""
     WITH d AS (
@@ -1927,7 +1884,7 @@ def q_conformal_quantile_coverage(spark: SparkSession,
 # Effective sample size of weighted sampling schemes (Kish ESS)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "ess_weighted_sampling",
     oracle="""
     WITH w AS (
@@ -2003,7 +1960,7 @@ _ALLEN_CASE = """CASE
 END"""
 
 
-@_stage(
+@register(
     "allen_interval_census",
     oracle=f"""
     WITH iv AS (
@@ -2125,7 +2082,7 @@ def _lsh_planner_oracle() -> str:
     """
 
 
-@_stage(
+@register(
     "lsh_band_planner",
     oracle=_lsh_planner_oracle(),
     doc="LSH band/row planner (Leskovec-Rajaraman-Ullman ch. 3 S-curve "
@@ -2184,7 +2141,7 @@ def q_lsh_band_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
 # l-diversity audit (sensitive-attribute diversity per QI group)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "l_diversity_audit",
     oracle="""
     WITH e AS (
@@ -2273,7 +2230,7 @@ def q_l_diversity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # STL-lite seasonal decomposition of the daily revenue series
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "stl_lite_decomposition",
     oracle="""
     WITH d AS (
@@ -2395,7 +2352,7 @@ def q_stl_lite_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # MAP@10 of the fixed-point retrieval (completes the ranking-eval family)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "map_at_10_eval",
     oracle="""
     WITH fx AS (
@@ -2482,7 +2439,7 @@ def q_map_at_10_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Fano-factor burstiness of event arrivals (point-process diagnostic)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "fano_burstiness_by_type",
     oracle="""
     WITH h AS (
@@ -2544,7 +2501,7 @@ def q_fano_burstiness_by_type(spark: SparkSession,
 # Character-level entropy per language (corpus compressibility)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "char_entropy_by_lang",
     oracle="""
     WITH ch AS (
@@ -2612,7 +2569,7 @@ def q_char_entropy_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Perceptual average-hash image dedup through the REAL PNG codec
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "image_ahash_pairs",
     oracle="""
     WITH px AS (
@@ -2788,7 +2745,7 @@ def _brandes_oracle(maxh: int = 4) -> str:
     """
 
 
-@_stage(
+@register(
     "brandes_dependency_hub",
     oracle=_brandes_oracle(),
     doc="Brandes single-source betweenness dependency (Brandes 2001, "
@@ -2879,7 +2836,7 @@ def q_brandes_dependency_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Laspeyres / Paasche / Fisher price indices (index-number family)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "price_index_fisher",
     oracle="""
     WITH py AS (
@@ -2974,7 +2931,7 @@ def q_price_index_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Good-Turing smoothing table (counts-of-counts + discounted estimates)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "good_turing_smoothing",
     oracle="""
     WITH ws AS (
@@ -3071,7 +3028,7 @@ def q_good_turing_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # RANSAC robust trend fit (deterministic md5 trials, integer inlier test)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "ransac_trend_fit",
     oracle="""
     WITH d AS (
@@ -3204,7 +3161,6 @@ def q_ransac_trend_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("trial")
 
 
-
 # ---------------------------------------------------------------------------
 # Round-8 live additions (registered this round; the window math allows up
 # to 16 new never-green entries on top of the 34-query formerly-staged wave)
@@ -3289,7 +3245,7 @@ GROUP BY lang ORDER BY lang
 """
 
 
-@_stage(
+@register(
     "bpe_tokenize_fertility_fixed",
     oracle=_BPE_TOKENIZE_ORACLE,
     doc="BPE tokenization promoted to hash-grade (the r7 verdict ask): "
@@ -3345,12 +3301,11 @@ def q_bpe_tokenize_fertility_fixed(
     )
 
 
-
 # ---------------------------------------------------------------------------
 # KMV (bottom-k) distinct sketch — exact replayable estimator
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "kmv_distinct_estimate",
     oracle="""
     WITH pk AS (SELECT DISTINCT l_partkey FROM lineitem),
@@ -3406,7 +3361,7 @@ def q_kmv_distinct_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Interval union coverage (sweep-line as a window function)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "interval_union_coverage",
     oracle="""
     WITH iv AS (
@@ -3467,7 +3422,7 @@ def q_interval_union_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Maximum drawdown of the daily revenue equity curve
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "max_drawdown_daily",
     oracle="""
     WITH d AS (
@@ -3535,7 +3490,7 @@ def q_max_drawdown_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Ordinal pattern census (permutation patterns of the daily series)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "ordinal_pattern_census",
     oracle="""
     WITH d AS (
@@ -3597,12 +3552,11 @@ def q_ordinal_pattern_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
 # ---------------------------------------------------------------------------
 # Leave-one-out source influence (data valuation primitive)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "loo_group_influence",
     oracle="""
     WITH g AS (
@@ -3660,7 +3614,7 @@ def q_loo_group_influence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Difference-in-differences estimator (2x2 design, exact cents)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "did_estimator",
     oracle="""
     WITH cells AS (
@@ -3725,7 +3679,7 @@ def q_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Exact Shapley attribution over 3 channels (coalition enumeration)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "shapley_attribution_3ch",
     oracle="""
     WITH fp AS (
@@ -3840,7 +3794,7 @@ def q_shapley_attribution_3ch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # t-closeness audit (ordered EMD between group and global distributions)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "t_closeness_audit",
     oracle="""
     WITH b AS (
@@ -3927,7 +3881,6 @@ def q_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
 # ---------------------------------------------------------------------------
 # Katz centrality (attenuated path counting, exact fixed point)
 # ---------------------------------------------------------------------------
@@ -3967,7 +3920,7 @@ _KATZ_ORACLE = """
     """
 
 
-@_stage(
+@register(
     "katz_centrality_fixed",
     oracle=_KATZ_ORACLE,
     doc="Katz centrality (Katz 1953) over the co-purchase part graph: "
@@ -4044,7 +3997,7 @@ _TEXTRANK_ORACLE = """
     """
 
 
-@_stage(
+@register(
     "textrank_keywords",
     oracle=_TEXTRANK_ORACLE,
     doc="TextRank keyword extraction (Mihalcea & Tarau, EMNLP 2004): "
@@ -4216,7 +4169,7 @@ _MARKOV_REMOVAL_ORACLE = """
     """
 
 
-@_stage(
+@register(
     "markov_removal_attribution",
     oracle=_MARKOV_REMOVAL_ORACLE,
     doc="Markov removal-effect attribution (Anderl et al. 2016): build "
@@ -4394,7 +4347,7 @@ FROM tots t, clip1 c1, clip2 c2
 """
 
 
-@_stage(
+@register(
     "bleu_selfsim_eval",
     oracle=_BLEU_ORACLE,
     doc="Corpus BLEU-2 without brevity penalty (Papineni et al., ACL "
@@ -4465,9 +4418,3 @@ def q_bleu_selfsim_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("bp_would_apply"),
         )
     )
-
-
-# Self-register at module bottom: by the time execution reaches here,
-# .queries is initialized far enough (register/REGISTRY are defined above
-# its own bottom import of this module), under EITHER import order.
-register_all()

@@ -1,55 +1,15 @@
-"""Round-9 queries: the 19-entry wave staged during round 8 (flipped
-live in round 9 once CORRECTNESS_r08 confirmed the round-8 window
-green) PLUS the 17 live round-9 additions appended under the
-"Round-9 LIVE additions" banner below — all registered unconditionally
-via register_all() at the module bottom.
-
-Same staging pattern as queries_r7/queries_r8 (see their module
-docstrings); the round-10 wave flipped live in queries_r10.py, and
-round-11 staging continues in queries_r11.py behind ``SPARK_GRAFT_R11``.
+"""Round-9 queries: a 19-entry wave plus the 17 additions under the
+"Round-9 LIVE additions" banner below.
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.money import cents_nonneg, cents_signed
 
-from .queries import _t
-
-# name -> (fn, oracle, headline, doc); materialized into the real registry
-# by register_all() at module bottom (live since round 9).
-STAGED: dict[str, tuple] = {}
-
-
-def _stage(name: str, oracle: str | None = None, headline: bool = False,
-           doc: str = ""):
-    def deco(fn: Callable[[SparkSession, str], DataFrame]):
-        STAGED[name] = (fn, oracle, headline, doc)
-        return fn
-    return deco
-
-
-def register_all() -> None:
-    """Register the staged queries — idempotent by fn identity;
-    raises on a name collision with a DIFFERENT query (see queries_r7)."""
-    from .queries import REGISTRY, register
-
-    for name, (fn, oracle, headline, doc) in STAGED.items():
-        if name in REGISTRY:
-            if REGISTRY[name].fn is fn:
-                continue  # repeat register_all() under both import orders
-            raise ValueError(
-                f"register_all: staged query name {name!r} already "
-                "registered by a different module — a silent skip would "
-                "ship the OLD query under this wave's name"
-            )
-        register(name, oracle=oracle, headline=headline, doc=doc)(fn)
-
-
+from .registry import _t, register
 
 
 # ---------------------------------------------------------------------------
@@ -68,7 +28,7 @@ def _bday_expr(d: str) -> str:
     return f"5 * (({d}) // 7) + ({_BDAY_PREFIX.format(d=d)})"
 
 
-@_stage(
+@register(
     "business_day_ship_lag",
     oracle=f"""
     WITH x AS (
@@ -137,7 +97,7 @@ def q_business_day_ship_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
 # McNemar test on paired first-half / second-half user outcomes
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "mcnemar_paired_halves",
     oracle="""
     WITH span AS (
@@ -232,7 +192,7 @@ def q_mcnemar_paired_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Stratified ATE adjustment (exact post-stratification)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "stratified_ate_adjustment",
     oracle="""
     WITH c AS (
@@ -305,7 +265,7 @@ def q_stratified_ate_adjustment(
 # SAX symbolization + motif census of the daily revenue series
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "sax_motif_census",
     oracle="""
     WITH d AS (
@@ -409,13 +369,11 @@ def q_sax_motif_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
 # ---------------------------------------------------------------------------
 # KMV set-operation estimates (theta-sketch style union/intersection)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "kmv_set_ops_estimate",
     oracle="""
     WITH a AS (
@@ -511,7 +469,7 @@ def q_kmv_set_ops_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Croston's method for intermittent demand (two interleaved SES streams)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "croston_intermittent_demand",
     oracle="""
     WITH dem AS (
@@ -615,7 +573,7 @@ def q_croston_intermittent_demand(
 # Exact 0/1 knapsack over top parts (DP as an engine-side fold)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "knapsack_budget_parts",
     oracle="""
     WITH RECURSIVE items AS (
@@ -694,7 +652,7 @@ def q_knapsack_budget_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 # WAV roundtrip zero-crossing rate (order-sensitive codec certification)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "wav_zcr_frames",
     oracle="""
     WITH c AS (
@@ -758,7 +716,10 @@ def q_wav_zcr_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
                 decoded, rate = decode_wav(
                     encode_wav(s_arr.astype(np.int16), 16000)
                 )
-                assert rate == 16000
+                if rate != 16000:
+                    raise RuntimeError(
+                        f"wav round trip returned rate {rate}, not 16000"
+                    )
                 v = decoded[:, 0].astype(np.int64).reshape(-1, 160)
                 flips = ((v[:, :-1] >= 0) != (v[:, 1:] >= 0)).sum(axis=1)
                 peak = np.abs(v).max(axis=1)
@@ -770,8 +731,6 @@ def q_wav_zcr_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield pd.DataFrame(rows)
 
     return with_samples.mapInPandas(run, schema=out_schema)
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -862,7 +821,7 @@ def _hilbert_oracle() -> str:
     """
 
 
-@_stage(
+@register(
     "hilbert_order_audit",
     oracle=_hilbert_oracle(),
     doc="Hilbert-curve vs Z-order vs row-major layout audit (Moon et al., "
@@ -964,8 +923,6 @@ def q_hilbert_order_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
 # ---------------------------------------------------------------------------
 # PCA leading eigenvector via integer power iteration on the gram matrix
 # ---------------------------------------------------------------------------
@@ -1018,7 +975,7 @@ _PCA_ORACLE = """
     """
 
 
-@_stage(
+@register(
     "pca_power_iter_fixed",
     oracle=_PCA_ORACLE,
     doc="Leading principal direction of the embedding corpus by POWER "
@@ -1050,8 +1007,6 @@ def q_pca_power_iter_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("dim")
     )
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -1145,7 +1100,7 @@ def _subword_vocab(spark: SparkSession, sf_dir: str):
     return w, vocab
 
 
-@_stage(
+@register(
     "wordpiece_tokenize_fixed",
     oracle=_WORDPIECE_ORACLE,
     doc="WordPiece tokenization (Wu et al. 2016, the BERT tokenizer "
@@ -1426,7 +1381,7 @@ _UNIGRAM_ORACLE = """
     """
 
 
-@_stage(
+@register(
     "unigram_lm_segment_fixed",
     oracle=_UNIGRAM_ORACLE,
     doc="Unigram-LM subword segmentation (Kudo, ACL 2018 — the "
@@ -1507,13 +1462,11 @@ def q_unigram_lm_segment_fixed(
     ).orderBy("word")
 
 
-
-
 # ---------------------------------------------------------------------------
 # Rich-club coefficient over the co-purchase graph
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "rich_club_coefficient",
     oracle="""
     WITH b AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
@@ -1593,7 +1546,7 @@ def q_rich_club_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Burrows' Delta stylometric distance between sources
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "burrows_delta_sources",
     oracle="""
     WITH w AS (
@@ -1718,8 +1671,6 @@ def q_burrows_delta_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
 # ---------------------------------------------------------------------------
 # Greedy max-coverage document selection (submodular curation primitive)
 # ---------------------------------------------------------------------------
@@ -1800,7 +1751,7 @@ _COVERAGE_ORACLE = """
     """
 
 
-@_stage(
+@register(
     "greedy_max_coverage",
     oracle=_COVERAGE_ORACLE,
     doc="Greedy maximum-coverage document selection (the (1-1/e) "
@@ -1966,7 +1917,7 @@ _KCENTER_ORACLE = """
     """
 
 
-@_stage(
+@register(
     "gonzalez_kcenter_fixed",
     oracle=_KCENTER_ORACLE,
     doc="Gonzalez farthest-first traversal (Gonzalez 1985, the 2-approx "
@@ -2044,8 +1995,6 @@ def q_gonzalez_kcenter_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     for r_ in rows[1:]:
         out = out.unionByName(r_)
     return out.orderBy("round")
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -2134,7 +2083,7 @@ _PHASH_ORACLE = """
     """
 
 
-@_stage(
+@register(
     "image_phash_pairs",
     oracle=_PHASH_ORACLE,
     doc="Perceptual DCT hash (pHash) near-duplicate image pairs with the "
@@ -2218,8 +2167,6 @@ def q_image_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-
-
 # ---------------------------------------------------------------------------
 # Token-bucket admission replay (rate-limiter semantics over event logs)
 # ---------------------------------------------------------------------------
@@ -2240,10 +2187,11 @@ from .streaming.stateful import (  # noqa: E402
 # ~1.1e12 admitted events per user before the registers would collide —
 # a bound no per-user event log approaches (2^20 overflowed at 1M).
 _TB_PACK = 1 << 40
-assert _TB_CAP * _TB_PACK < (1 << 63) - _TB_PACK
+if _TB_CAP * _TB_PACK >= (1 << 63) - _TB_PACK:
+    raise RuntimeError("_TB_CAP * _TB_PACK overflows the int64 register pack")
 
 
-@_stage(
+@register(
     "token_bucket_admissions",
     oracle=f"""
     WITH RECURSIVE e AS (
@@ -2333,13 +2281,11 @@ def q_token_bucket_admissions(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id")
 
 
-
-
 # ---------------------------------------------------------------------------
 # Network robustness under targeted hub removal
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "robustness_hub_removal",
     oracle="""
     WITH RECURSIVE b AS (
@@ -2445,7 +2391,7 @@ def q_robustness_hub_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Kruskal-Wallis rank test across document sources
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "kruskal_wallis_sources",
     oracle="""
     WITH r AS (
@@ -2544,7 +2490,7 @@ def q_kruskal_wallis_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Brier score decomposition (Murphy 1973) of a purchase-propensity forecast
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "brier_decomposition",
     oracle="""
     WITH half AS (
@@ -2637,7 +2583,7 @@ def q_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Ljung-Box portmanteau whiteness test on the daily order-count series
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "ljung_box_whiteness",
     oracle="""
     WITH daily AS (
@@ -2735,7 +2681,7 @@ def q_ljung_box_whiteness(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Decision-stump split selection by exact weighted Gini impurity
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "decision_stump_split",
     oracle="""
     WITH li AS (
@@ -2824,7 +2770,7 @@ def q_decision_stump_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Theil inequality index with within/between-nation decomposition
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "theil_inequality_decomposition",
     oracle="""
     WITH cust AS (
@@ -2921,7 +2867,7 @@ def q_theil_inequality_decomposition(
 # Little's law accounting audit over sessionized events (L = lambda * W)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "littles_law_audit",
     oracle="""
     WITH e AS (
@@ -3087,7 +3033,7 @@ def _dft_oracle() -> str:
     """
 
 
-@_stage(
+@register(
     "dft_power_topfreq",
     oracle=_dft_oracle(),
     doc="Single-bin integer DFT (Goertzel-style direct correlation) of "
@@ -3143,7 +3089,7 @@ def q_dft_power_topfreq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LZ78 phrase complexity (compression-proxy text quality signal)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "lz78_phrase_complexity",
     oracle="""
     WITH RECURSIVE toks AS (
@@ -3304,7 +3250,7 @@ def _ppr_oracle(iters: int = 3, k: int = 20) -> str:
     """
 
 
-@_stage(
+@register(
     "ppr_copurchase_topk",
     oracle=_ppr_oracle(),
     doc="Personalized PageRank (Haveliwala WWW'02) from the co-purchase "
@@ -3332,7 +3278,7 @@ def q_ppr_copurchase_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # AMS tug-of-war F2 sketch vs the exact second frequency moment
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "f2_moment_ams",
     oracle="""
     WITH f AS (
@@ -3405,7 +3351,7 @@ def q_f2_moment_ams(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Consistent-hash vs modulo resharding migration audit
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "consistent_hash_migration",
     oracle="""
     WITH keys AS (
@@ -3492,7 +3438,7 @@ def q_consistent_hash_migration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Differential-privacy contribution-bounding audit
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "dp_contribution_bounds",
     oracle="""
     WITH contrib AS (
@@ -3657,7 +3603,7 @@ def _goertzel_oracle() -> str:
     """
 
 
-@_stage(
+@register(
     "wav_goertzel_band_energy",
     oracle=_goertzel_oracle(),
     doc="Per-clip spectral band energy via integer-table Goertzel "
@@ -3709,7 +3655,10 @@ def q_wav_goertzel_band_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 decoded, rate = decode_wav(
                     encode_wav(s_arr.astype(np.int16), 16000)
                 )
-                assert rate == 16000
+                if rate != 16000:
+                    raise RuntimeError(
+                        f"wav round trip returned rate {rate}, not 16000"
+                    )
                 v = decoded[:160, 0].astype(np.int64)
                 for k, (ct, st) in sorted(tabs.items()):
                     x = int((v * ct).sum())
@@ -3802,7 +3751,7 @@ _HW_ORACLE = """
 """
 
 
-@_stage(
+@register(
     "holt_winters_seasonal",
     oracle=_HW_ORACLE,
     doc="Additive Holt-Winters (triple exponential, Winters Mgmt Sci "
@@ -3897,7 +3846,7 @@ def q_holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Hill tail-index estimator (heavy-tail diagnostic for customer revenue)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "hill_tail_index",
     oracle="""
     WITH cust AS (
@@ -3970,7 +3919,7 @@ def q_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Newsvendor optimal stock levels (critical-ratio quantiles, exact)
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "newsvendor_stock_level",
     oracle="""
     WITH daily AS (
@@ -4051,7 +4000,7 @@ def q_newsvendor_stock_level(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Markov-chain entropy rate of the per-user event process
 # ---------------------------------------------------------------------------
 
-@_stage(
+@register(
     "markov_entropy_rate",
     oracle="""
     WITH seq AS (
@@ -4159,9 +4108,3 @@ def q_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy("event_type")
     )
-
-
-# Self-register unconditionally: CORRECTNESS_r08 confirmed the round-8
-# window green, so the round-9 wave is now live. register_all() is
-# idempotent, so the double-trigger via queries.py is harmless.
-register_all()

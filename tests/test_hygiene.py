@@ -16,11 +16,17 @@
    ``events_session_window`` DuckDB oracle encodes the same rule (new
    session only when diff is STRICTLY greater than the gap) — this test is
    the empirical pin for that exact-boundary agreement (ADVICE r3).
+
+3. Loud failures: no package module guards with a bare ``assert`` (stripped
+   under ``python -O``) or swallows every exception with a handler whose
+   body is only ``pass`` or ``return None``.
 """
 
 from __future__ import annotations
 
+import ast
 import datetime
+import pathlib
 
 from pyspark.sql import functions as F
 
@@ -167,3 +173,26 @@ def test_scratch_dir_queries_materialize_before_rmtree():
     )
     # the pin only means something while the pattern has users
     assert seen_pattern_users >= 3, seen_pattern_users
+
+
+def _swallows_everything(handler: ast.ExceptHandler) -> bool:
+    broad = handler.type is None or (
+        isinstance(handler.type, ast.Name)
+        and handler.type.id in ("Exception", "BaseException")
+    )
+    body = [ast.unparse(stmt) for stmt in handler.body]
+    return broad and body in (["pass"], ["return None"], ["return"])
+
+
+def test_package_fails_loudly():
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "gan_deeplearning4j_spark"
+    bad = []
+    for path in sorted(pkg.rglob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            where = f"{path.relative_to(pkg)}:{getattr(node, 'lineno', 0)}"
+            if isinstance(node, ast.Assert):
+                bad.append(f"{where} assert")
+            elif (isinstance(node, ast.ExceptHandler)
+                  and _swallows_everything(node)):
+                bad.append(f"{where} swallowed exception")
+    assert not bad, bad

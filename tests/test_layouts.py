@@ -210,7 +210,7 @@ def test_greedy_bin_plan_matches_query_fold(spark, sf_dir):
     independently."""
     from pyspark.sql import functions as F
 
-    from gan_deeplearning4j_spark.queries_r12 import STAGED
+    from gan_deeplearning4j_spark.queries import REGISTRY
     from gan_deeplearning4j_spark.sources.layouts import greedy_bin_plan
 
     # replicate the query's bucket relation (o_custkey % 32 row counts)
@@ -263,7 +263,7 @@ def test_greedy_bin_plan_matches_query_fold(spark, sf_dir):
 
     # the registered query (one physical file per bucket) agrees
     want_query = {(r["bin_id"], r["n_src_files"], r["bin_rows"])
-                  for r in STAGED["compaction_plan_audit"][0](spark, sf_dir)
+                  for r in REGISTRY["compaction_plan_audit"].fn(spark, sf_dir)
                   .collect()}
     assert got == want_query
 

@@ -1,5 +1,5 @@
-"""Round-10 staged-query pins: pure-python replays (hash parity is covered
-by the gated replica runs; these pin the SEMANTICS against an independent
+"""Round-10 query pins: pure-python replays (hash parity is covered
+by the replica runs; these pin the SEMANTICS against an independent
 reimplementation)."""
 
 from __future__ import annotations
@@ -10,13 +10,11 @@ import math
 import numpy as np
 import pandas as pd
 
-# import order matters: queries_r10 is re-entered by queries.py's bottom
-import gan_deeplearning4j_spark.queries  # noqa: F401
-from gan_deeplearning4j_spark.queries_r10 import STAGED
+from gan_deeplearning4j_spark.queries import REGISTRY
 
 
 def _fn(name):
-    return STAGED[name][0]
+    return REGISTRY[name].fn
 
 
 def _tdiv(a, b):  # truncation toward zero == Spark div / DuckDB //

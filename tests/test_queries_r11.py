@@ -1,5 +1,5 @@
-"""Round-11 staged-query pins: pure-python replays (hash parity is covered
-by the gated replica runs; these pin the SEMANTICS against an independent
+"""Round-11 query pins: pure-python replays (hash parity is covered
+by the replica runs; these pin the SEMANTICS against an independent
 reimplementation), plus the operator-level plan/equivalence tests for the
 skew-ladder additions (salted two-phase agg, halo-chunked RANGE frame,
 2-bit multi-probe LSH)."""
@@ -15,13 +15,11 @@ import numpy as np
 import pandas as pd
 import pytest
 
-# import order matters: queries_r11 is re-entered by queries.py's bottom
-import gan_deeplearning4j_spark.queries  # noqa: F401
-from gan_deeplearning4j_spark.queries_r11 import STAGED
+from gan_deeplearning4j_spark.queries import REGISTRY
 
 
 def _fn(name):
-    return STAGED[name][0]
+    return REGISTRY[name].fn
 
 
 def _h60(s):

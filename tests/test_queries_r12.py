@@ -1,5 +1,5 @@
-"""Round-12 staged-query pins: pure-python replays (hash parity is covered
-by the gated replica runs; these pin the SEMANTICS against an independent
+"""Round-12 query pins: pure-python replays (hash parity is covered
+by the replica runs; these pin the SEMANTICS against an independent
 reimplementation) for the engine-surface wave — map higher-order
 functions, GROUP BY ALL, calendar month clamping, DataFrame.transpose,
 the _metadata compaction plan, and the near-dup quality election."""
@@ -13,13 +13,11 @@ from collections import defaultdict
 
 import pandas as pd
 
-# import order matters: queries modules are re-entered by queries.py
-import gan_deeplearning4j_spark.queries  # noqa: F401
-from gan_deeplearning4j_spark.queries_r12 import STAGED
+from gan_deeplearning4j_spark.queries import REGISTRY
 
 
 def _fn(name):
-    return STAGED[name][0]
+    return REGISTRY[name].fn
 
 
 def test_map_transform_audit_matches_pandas(spark, sf_dir):

@@ -1,6 +1,6 @@
-"""Round-12 staged-query pins (queries_r13.py): pure-python replays for
+"""Round-12 query pins (queries_r13.py): pure-python replays for
 the parser/scripting/regex/calendar wave — hash parity is covered by the
-gated replica runs; these pin the SEMANTICS against an independent
+replica runs; these pin the SEMANTICS against an independent
 reimplementation."""
 
 from __future__ import annotations
@@ -11,13 +11,12 @@ from collections import defaultdict
 
 import pandas as pd
 
-# import order matters: queries modules are re-entered by queries.py
-import gan_deeplearning4j_spark.queries  # noqa: F401
-from gan_deeplearning4j_spark.queries_r13 import STAGED
+from gan_deeplearning4j_spark.queries import REGISTRY
+from registry_checks import assert_module_registered
 
 
 def _fn(name):
-    return STAGED[name][0]
+    return REGISTRY[name].fn
 
 
 def _cents(x):
@@ -144,18 +143,7 @@ def test_regexp_position_family_matches_python(spark, sf_dir):
 
 
 def test_r13_queries_registered_live():
-    """Round-12 flip (r11 verdict ask #2): every queries_r13 entry is now
-    LIVE in the registry — registered by NAME and by object identity, all
-    oracled."""
-    from gan_deeplearning4j_spark import queries_r13
-    from gan_deeplearning4j_spark.queries import REGISTRY
-
-    staged = set(queries_r13.STAGED)
-    assert staged and staged <= set(REGISTRY)
-    for name, (fn, oracle, headline, doc) in queries_r13.STAGED.items():
-        assert oracle, name
-        assert REGISTRY[name].fn is fn, name
-        assert REGISTRY[name].oracle == oracle, name
+    assert_module_registered("queries_r13")
 
 
 def test_bround_half_even_matches_python(spark, sf_dir):

@@ -1,5 +1,5 @@
-"""Round-13 staged-query pins (queries_r14.py): pure-python replays for
-the data-quality-curation wave — hash parity is covered by the gated
+"""Round-13 query pins (queries_r14.py): pure-python replays for
+the data-quality-curation wave — hash parity is covered by the
 replica runs; these pin the SEMANTICS against an independent
 reimplementation (pandas/stdlib tokenize + rule battery)."""
 
@@ -10,8 +10,7 @@ from collections import Counter, defaultdict
 
 import pandas as pd
 
-# import order matters: queries modules are re-entered by queries.py
-import gan_deeplearning4j_spark.queries  # noqa: F401
+from gan_deeplearning4j_spark.queries import REGISTRY
 from gan_deeplearning4j_spark.queries_r14 import (
     _MAX_TOP_BIGRAM_PM,
     _MIN_STOP_TYPES,
@@ -19,12 +18,17 @@ from gan_deeplearning4j_spark.queries_r14 import (
     _MWL_HI,
     _MWL_LO,
     _STOPWORDS,
-    STAGED,
+)
+from registry_checks import (
+    assert_module_registered,
+    assert_window_covers,
+    declared_names,
+    unbound_oracles,
 )
 
 
 def _fn(name):
-    return STAGED[name][0]
+    return REGISTRY[name].fn
 
 
 def _toks(text: str) -> list[str]:
@@ -230,63 +234,15 @@ def test_curation_keep_report_matches_python(spark, sf_dir):
 
 
 def test_r14_wave_is_registered_live():
-    """The round-12 mid-round flip (the r10/r11 live-addition precedent):
-    every queries_r14 entry is LIVE in the registry — registered by NAME
-    and by object identity with its EXACT oracle (register_all silently
-    skips colliding names, so oracle equality is the collision net)."""
-    from gan_deeplearning4j_spark import queries_r14
-    from gan_deeplearning4j_spark.queries import REGISTRY
-
-    staged = set(queries_r14.STAGED)
-    assert staged and staged <= set(REGISTRY)
-    for name, (fn, oracle, headline, doc) in queries_r14.STAGED.items():
-        assert oracle, name
-        assert REGISTRY[name].fn is fn, name
-        assert REGISTRY[name].oracle == oracle, name
+    assert_module_registered("queries_r14")
 
 
 def test_r14_driver_window_covers_every_unverified_entry():
-    """Round-12 window contract after the live addition: never-green =
-    5 bracket-oracle promotions + 8 r13 + 8 r14 = 21 entries, all inside
-    the first 50 positions."""
-    from gan_deeplearning4j_spark import queries_r14
-    from gan_deeplearning4j_spark.queries import (
-        _verification_evidence,
-        queries,
-    )
-
-    ordered = list(queries())
-    ev = _verification_evidence()
-    never = [n for n in ordered if n not in ev]
-    assert len(never) <= 50
-    assert ordered[: len(never)] == never
-    for name in queries_r14.STAGED:
-        assert name in ev or name in never[:50], name
+    assert_window_covers("queries_r14")
 
 
 def test_r14_staged_oracles_bind_in_duckdb(sf_dir):
-    """Staged round-13 oracles must keep binding in DuckDB (EXPLAIN only)
-    even though they are not yet in the live registry — catches SQL
-    bitrot a round early."""
-    import duckdb
-
-    from gan_deeplearning4j_spark import queries_r14
-    from gan_deeplearning4j_spark.io import TABLES
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    bad = []
-    for name, (fn, oracle, headline, doc) in queries_r14.STAGED.items():
-        if not oracle:
-            continue
-        try:
-            con.sql("EXPLAIN " + oracle)
-        except Exception as exc:  # noqa: BLE001
-            bad.append((name, str(exc)[:120]))
-    assert not bad, bad
+    assert not unbound_oracles(sf_dir, declared_names("queries_r14"))
 
 
 def test_quality_queries_survive_zero_token_docs(spark, sf_dir, tmp_path):

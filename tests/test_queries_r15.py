@@ -12,13 +12,17 @@ from functools import reduce
 import numpy as np
 import pandas as pd
 
-# import order matters: queries modules are re-entered by queries.py
-import gan_deeplearning4j_spark.queries  # noqa: F401
-from gan_deeplearning4j_spark.queries_r15 import STAGED
+from gan_deeplearning4j_spark.queries import REGISTRY
+from registry_checks import (
+    assert_module_registered,
+    assert_window_covers,
+    declared_names,
+    unbound_oracles,
+)
 
 
 def _fn(name):
-    return STAGED[name][0]
+    return REGISTRY[name].fn
 
 
 def test_grouping_id_rollup_matches_python(spark, sf_dir):
@@ -201,62 +205,15 @@ def test_matryoshka_truncation_matches_python(spark, sf_dir):
 
 
 def test_r15_wave_is_registered_live():
-    """The round-13 flip: every queries_r15 entry is LIVE in the
-    registry — registered by NAME, by object identity, and with its
-    EXACT oracle (register_all now RAISES on foreign collisions, but the
-    identity assertions stay as the belt to that suspender)."""
-    from gan_deeplearning4j_spark import queries_r15
-    from gan_deeplearning4j_spark.queries import REGISTRY
-
-    staged = set(queries_r15.STAGED)
-    assert staged and staged <= set(REGISTRY)
-    for name, (fn, oracle, headline, doc) in queries_r15.STAGED.items():
-        assert oracle, name
-        assert REGISTRY[name].fn is fn, name
-        assert REGISTRY[name].oracle == oracle, name
+    assert_module_registered("queries_r15")
 
 
 def test_r15_driver_window_covers_every_unverified_entry():
-    """Round-13 window contract after the flip: every never-green entry
-    (the 10 r15 queries plus any r16 wave registered later this round)
-    sorts to the front of queries() and fits the driver's 50 slots."""
-    from gan_deeplearning4j_spark import queries_r15
-    from gan_deeplearning4j_spark.queries import (
-        _verification_evidence,
-        queries,
-    )
-
-    ordered = list(queries())
-    ev = _verification_evidence()
-    never = [n for n in ordered if n not in ev]
-    assert len(never) <= 50
-    assert ordered[: len(never)] == never
-    for name in queries_r15.STAGED:
-        assert name in ev or name in never[:50], name
+    assert_window_covers("queries_r15")
 
 
 def test_r15_staged_oracles_bind_in_duckdb(sf_dir):
-    """Round-13 wave oracles must keep binding in DuckDB (EXPLAIN
-    only) — catches SQL bitrot without running anything."""
-    import duckdb
-
-    from gan_deeplearning4j_spark import queries_r15
-    from gan_deeplearning4j_spark.io import TABLES
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    bad = []
-    for name, (fn, oracle, headline, doc) in queries_r15.STAGED.items():
-        if not oracle:
-            continue
-        try:
-            con.sql("EXPLAIN " + oracle)
-        except Exception as exc:  # noqa: BLE001
-            bad.append((name, str(exc)[:120]))
-    assert not bad, bad
+    assert not unbound_oracles(sf_dir, declared_names("queries_r15"))
 
 
 def test_corr_covar_bracket_matches_python(spark, sf_dir):

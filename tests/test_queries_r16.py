@@ -1,6 +1,6 @@
 """Round-14-wave pins (queries_r16.py, flipped LIVE mid-round 13):
 pure-python replays for
-the packing/ordering wave — hash parity is covered by the gated replica
+the packing/ordering wave — hash parity is covered by the replica
 runs; these pin the SEMANTICS against an independent reimplementation
 (hashlib/stdlib). NOTE on signed modular arithmetic: the queries use the
 explicit ((x % n) + n) % n form in BOTH engines, and python's % already
@@ -13,13 +13,17 @@ from collections import defaultdict
 
 import pandas as pd
 
-# import order matters: queries modules are re-entered by queries.py
-import gan_deeplearning4j_spark.queries  # noqa: F401
-from gan_deeplearning4j_spark.queries_r16 import STAGED
+from gan_deeplearning4j_spark.queries import REGISTRY
+from registry_checks import (
+    assert_module_registered,
+    assert_window_covers,
+    declared_names,
+    unbound_oracles,
+)
 
 
 def _fn(name):
-    return STAGED[name][0]
+    return REGISTRY[name].fn
 
 
 def _toks(sf_dir):
@@ -198,58 +202,12 @@ def test_repack_delta_matches_python(spark, sf_dir):
 
 
 def test_r16_wave_is_registered_live():
-    """The mid-round-13 flip (the r10/r12/r14 live-addition precedent):
-    every queries_r16 entry is LIVE in the registry — by NAME, by object
-    identity, and with its EXACT oracle (register_all raises on foreign
-    collisions; the identity asserts stay as the belt)."""
-    from gan_deeplearning4j_spark import queries_r16
-    from gan_deeplearning4j_spark.queries import REGISTRY
-
-    staged = set(queries_r16.STAGED)
-    assert staged and staged <= set(REGISTRY)
-    for name, (fn, oracle, headline, doc) in queries_r16.STAGED.items():
-        assert oracle, name
-        assert REGISTRY[name].fn is fn, name
-        assert REGISTRY[name].oracle == oracle, name
+    assert_module_registered("queries_r16")
 
 
 def test_r16_driver_window_covers_every_unverified_entry():
-    """Window contract after the live addition: never-green = 10 r15 +
-    6 r16 = 16 entries, all inside the driver's first 50 positions."""
-    from gan_deeplearning4j_spark import queries_r15, queries_r16
-    from gan_deeplearning4j_spark.queries import (
-        _verification_evidence,
-        queries,
-    )
-
-    ordered = list(queries())
-    ev = _verification_evidence()
-    never = [n for n in ordered if n not in ev]
-    assert len(never) <= 50
-    assert ordered[: len(never)] == never
-    for name in list(queries_r15.STAGED) + list(queries_r16.STAGED):
-        assert name in ev or name in never[:50], name
+    assert_window_covers("queries_r16")
 
 
 def test_r16_staged_oracles_bind_in_duckdb(sf_dir):
-    """Round-14-wave oracles must keep binding in DuckDB (EXPLAIN
-    only) — catches SQL bitrot without running anything."""
-    import duckdb
-
-    from gan_deeplearning4j_spark import queries_r16
-    from gan_deeplearning4j_spark.io import TABLES
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    bad = []
-    for name, (fn, oracle, headline, doc) in queries_r16.STAGED.items():
-        if not oracle:
-            continue
-        try:
-            con.sql("EXPLAIN " + oracle)
-        except Exception as exc:  # noqa: BLE001
-            bad.append((name, str(exc)[:120]))
-    assert not bad, bad
+    assert not unbound_oracles(sf_dir, declared_names("queries_r16"))

@@ -1,21 +1,18 @@
 """Round-7 query pins: pure-python replays of the trickiest round-7
 queries (DuckDB hash parity is covered by the replica runs; these pin the
 SEMANTICS against an independent reimplementation so a later refactor
-cannot silently change both engines in the same wrong way).
-
-Queries are exercised through ``queries_r7.STAGED`` directly (the same
-callables the registry holds — the wave registered in round 7)."""
+cannot silently change both engines in the same wrong way)."""
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
 
-from gan_deeplearning4j_spark.queries_r7 import STAGED
+from gan_deeplearning4j_spark.queries import REGISTRY
 
 
 def _fn(name):
-    return STAGED[name][0]
+    return REGISTRY[name].fn
 
 
 def test_wilcoxon_signed_rank_matches_scipy_style_replay(spark, sf_dir):
@@ -202,9 +199,6 @@ def test_bpe_fixed_oracle_self_pair_parity_rule():
     ('dddd' -> [dd,dd] -> [dddd]) against the trainer's local engine."""
     import duckdb
 
-    # import order matters: queries_r7 imports .queries, whose module
-    # bottom re-enters queries_r7 — initialize queries first
-    import gan_deeplearning4j_spark.queries  # noqa: F401
     from gan_deeplearning4j_spark import queries_r7 as r7
     from gan_deeplearning4j_spark.operators.bpe import _local_train
 

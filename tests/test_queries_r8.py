@@ -1,5 +1,5 @@
-"""Round-8 staged-query pins: pure-python replays (hash parity is covered
-by the gated replica runs; these pin the SEMANTICS against an independent
+"""Round-8 query pins: pure-python replays (hash parity is covered
+by the replica runs; these pin the SEMANTICS against an independent
 reimplementation)."""
 
 from __future__ import annotations
@@ -7,13 +7,11 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-# import order matters: queries_r8 is re-entered by queries.py's bottom
-import gan_deeplearning4j_spark.queries  # noqa: F401
-from gan_deeplearning4j_spark.queries_r8 import STAGED
+from gan_deeplearning4j_spark.queries import REGISTRY
 
 
 def _fn(name):
-    return STAGED[name][0]
+    return REGISTRY[name].fn
 
 
 def test_viterbi_matches_python_dp(spark, sf_dir):

@@ -1,5 +1,5 @@
-"""Round-9 staged-query pins: pure-python replays (hash parity is covered
-by the gated replica runs; these pin the SEMANTICS against an independent
+"""Round-9 query pins: pure-python replays (hash parity is covered
+by the replica runs; these pin the SEMANTICS against an independent
 reimplementation)."""
 
 from __future__ import annotations
@@ -9,13 +9,11 @@ import hashlib
 import numpy as np
 import pandas as pd
 
-# import order matters: queries_r9 is re-entered by queries.py's bottom
-import gan_deeplearning4j_spark.queries  # noqa: F401
-from gan_deeplearning4j_spark.queries_r9 import STAGED
+from gan_deeplearning4j_spark.queries import REGISTRY
 
 
 def _fn(name):
-    return STAGED[name][0]
+    return REGISTRY[name].fn
 
 
 def _rot(n, x, y, rx, ry):

@@ -4,12 +4,26 @@ anything), names stay stable snake_case."""
 
 from __future__ import annotations
 
+import hashlib
+import importlib
+import json
+import os
+import pathlib
 import re
+import subprocess
+import sys
+from concurrent.futures import ThreadPoolExecutor
 
-import duckdb
+import pytest
 
-from gan_deeplearning4j_spark.io import TABLES
-from gan_deeplearning4j_spark.queries import REGISTRY
+from gan_deeplearning4j_spark.queries import BODY_MODULES, REGISTRY
+from registry_checks import (
+    assert_module_registered,
+    assert_window_covers,
+    declared_names,
+    never_green,
+    unbound_oracles,
+)
 
 
 def test_every_query_is_documented_and_named_sanely():
@@ -19,19 +33,7 @@ def test_every_query_is_documented_and_named_sanely():
 
 
 def test_every_oracle_binds_in_duckdb(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-        )
-    bad = []
-    for name, q in REGISTRY.items():
-        if not q.oracle:
-            continue
-        try:
-            con.sql("EXPLAIN " + q.oracle)
-        except Exception as exc:  # noqa: BLE001
-            bad.append((name, str(exc)[:120]))
+    bad = unbound_oracles(sf_dir, REGISTRY)
     assert not bad, bad
 
 
@@ -99,367 +101,159 @@ def test_headline_set_is_stable_and_registered():
         assert anchor in hs, anchor
 
 
-def test_r7_driver_window_covers_every_unverified_entry():
-    """Round-7 window contract: every entry without a green driver row must
-    sit inside the first 50 `queries()` positions — the driver checks
-    ~50/round, so this guarantees CORRECTNESS_r07 gives the whole tail a
-    row. Unverified entries lacking driver evidence = the 20 newly
-    registered round-7 queries plus any round-7 additions; rows-only
-    entries that already returned rows in past windows sort after fresh
-    oracled ones. Fails if a new query lands ahead of the tail or the tail
-    outgrows the window (stage behind SPARK_GRAFT_R8 instead)."""
-    from gan_deeplearning4j_spark import queries_r7
-    from gan_deeplearning4j_spark.queries import (
-        _verification_evidence,
-        queries,
-    )
-
-    ordered = list(queries())
-    ev = _verification_evidence()
-    never = [n for n in ordered if n not in ev]
-    assert len(never) <= 50, (
-        f"{len(never)} unverified entries exceed the ~50/round driver "
-        "window; the tail would slip to the next round"
-    )
-    # unverified entries form a strict prefix (also checked by the
-    # ordering test, re-asserted here so this test fails self-contained)
-    assert ordered[: len(never)] == never
-    # the 20 round-7 registrations must be inside the window until
-    # CORRECTNESS_r07 lands (after which they carry evidence and leave
-    # `never` — both states are legal here)
-    for name in queries_r7.STAGED:
-        assert name in ev or name in never[:50], name
+# sha256 over the sorted (name, oracle, headline) triples: the contract
+# content of the registry. A change here must be deliberate.
+REGISTRY_DIGEST = (
+    "7a1924dd34299c6f60266a44b2eeef8cf8329f5342a3df8f0d9d67f525a0e243"
+)
 
 
-def test_r7_wave_is_registered():
-    """The round-7 wave flipped from staged to registered: every STAGED
-    name is live in the registry with its oracle attached."""
-    from gan_deeplearning4j_spark import queries_r7
-    from gan_deeplearning4j_spark.queries import REGISTRY
-
-    staged = set(queries_r7.STAGED)
-    assert staged and staged <= set(REGISTRY)
-    # every r7 entry carries an oracle (hash-grade on registration)
-    for name, (fn, oracle, headline, doc) in queries_r7.STAGED.items():
-        assert oracle, name
-        assert REGISTRY[name].oracle == oracle, name
+def test_registry_digest_is_pinned():
+    triples = sorted([n, q.oracle, q.headline] for n, q in REGISTRY.items())
+    digest = hashlib.sha256(json.dumps(triples).encode()).hexdigest()
+    assert (len(REGISTRY), digest) == (472, REGISTRY_DIGEST)
 
 
-def test_r8_wave_is_registered():
-    """The round-8 wave flipped from staged to registered: every STAGED
-    name is live in the registry with its oracle attached."""
-    from gan_deeplearning4j_spark import queries_r8
-    from gan_deeplearning4j_spark.queries import REGISTRY
-
-    staged = set(queries_r8.STAGED)
-    assert staged and staged <= set(REGISTRY)
-    # every r8 entry carries an oracle (hash-grade on registration)
-    for name, (fn, oracle, headline, doc) in queries_r8.STAGED.items():
-        assert oracle, name
-        assert REGISTRY[name].oracle == oracle, name
+def test_registry_is_every_module_in_module_order():
+    """REGISTRY is the concatenation of each body module's declared names,
+    modules in BODY_MODULES order, each in source order."""
+    assert list(REGISTRY) == [
+        n for mod in BODY_MODULES for n in declared_names(mod)
+    ]
 
 
-def test_r8_driver_window_covers_every_unverified_entry():
-    """Round-8 window contract: every entry without a green driver row must
-    sit inside the first 50 `queries()` positions — the driver checks
-    ~50/round, so this guarantees CORRECTNESS_r08 gives the whole tail a
-    row. Unverified entries = the 34 newly registered round-8 queries plus
-    any round-8 live additions. Fails if a new query lands ahead of the
-    tail or the tail outgrows the window (stage behind SPARK_GRAFT_R9
-    instead)."""
-    from gan_deeplearning4j_spark import queries_r8
-    from gan_deeplearning4j_spark.queries import (
-        _verification_evidence,
-        queries,
-    )
+def test_register_rejects_a_taken_name():
+    from gan_deeplearning4j_spark.registry import register
 
-    ordered = list(queries())
-    ev = _verification_evidence()
-    never = [n for n in ordered if n not in ev]
-    assert len(never) <= 50, (
-        f"{len(never)} unverified entries exceed the ~50/round driver "
-        "window; the tail would slip to the next round"
-    )
-    # unverified entries form a strict prefix (also checked by the
-    # ordering test, re-asserted here so this test fails self-contained)
-    assert ordered[: len(never)] == never
-    # the 34 round-8 registrations must be inside the window until
-    # CORRECTNESS_r08 lands (after which they carry evidence and leave
-    # `never` — both states are legal here)
-    for name in queries_r8.STAGED:
-        assert name in ev or name in never[:50], name
-
-
-def test_r9_wave_is_registered():
-    """The round-9 wave flipped from staged to registered: every STAGED
-    name is live in the registry with its oracle attached."""
-    from gan_deeplearning4j_spark import queries_r9
-    from gan_deeplearning4j_spark.queries import REGISTRY
-
-    staged = set(queries_r9.STAGED)
-    assert staged and staged <= set(REGISTRY)
-    # every r9 entry carries an oracle (hash-grade on registration)
-    for name, (fn, oracle, headline, doc) in queries_r9.STAGED.items():
-        assert oracle, name
-        assert REGISTRY[name].oracle == oracle, name
-
-
-def test_r9_driver_window_covers_every_unverified_entry():
-    """Round-9 window contract: every entry without a green driver row must
-    sit inside the first 50 `queries()` positions — the driver checks
-    ~50/round, so this guarantees CORRECTNESS_r09 gives the whole tail a
-    row. Unverified entries = the 19 newly registered round-9 queries plus
-    any round-9 live additions. Fails if a new query lands ahead of the
-    tail or the tail outgrows the window (stage behind SPARK_GRAFT_R10
-    instead)."""
-    from gan_deeplearning4j_spark import queries_r9
-    from gan_deeplearning4j_spark.queries import (
-        _verification_evidence,
-        queries,
-    )
-
-    ordered = list(queries())
-    ev = _verification_evidence()
-    never = [n for n in ordered if n not in ev]
-    assert len(never) <= 50, (
-        f"{len(never)} unverified entries exceed the ~50/round driver "
-        "window; the tail would slip to the next round"
-    )
-    # unverified entries form a strict prefix (also checked by the
-    # ordering test, re-asserted here so this test fails self-contained)
-    assert ordered[: len(never)] == never
-    # the 19 round-9 registrations must be inside the window until
-    # CORRECTNESS_r09 lands (after which they carry evidence and leave
-    # `never` — both states are legal here)
-    for name in queries_r9.STAGED:
-        assert name in ev or name in never[:50], name
-
-
-def test_r10_wave_is_registered():
-    """The round-10 wave flipped from staged to registered: every STAGED
-    name is live in the registry with its oracle attached."""
-    from gan_deeplearning4j_spark import queries_r10
-    from gan_deeplearning4j_spark.queries import REGISTRY
-
-    staged = set(queries_r10.STAGED)
-    assert staged and staged <= set(REGISTRY)
-    # every r10 entry carries an oracle (hash-grade on registration)
-    for name, (fn, oracle, headline, doc) in queries_r10.STAGED.items():
-        assert oracle, name
-        assert REGISTRY[name].oracle == oracle, name
-
-
-def test_r10_driver_window_covers_every_unverified_entry():
-    """Round-10 window contract: every entry without a green driver row must
-    sit inside the first 50 `queries()` positions — the driver checks
-    ~50/round, so this guarantees CORRECTNESS_r10 gives the whole tail a
-    row. Unverified entries = the 17 newly registered round-10 queries plus
-    any round-10 live additions. Fails if a new query lands ahead of the
-    tail or the tail outgrows the window (stage behind SPARK_GRAFT_R11
-    instead)."""
-    from gan_deeplearning4j_spark import queries_r10
-    from gan_deeplearning4j_spark.queries import (
-        _verification_evidence,
-        queries,
-    )
-
-    ordered = list(queries())
-    ev = _verification_evidence()
-    never = [n for n in ordered if n not in ev]
-    assert len(never) <= 50, (
-        f"{len(never)} unverified entries exceed the ~50/round driver "
-        "window; the tail would slip to the next round"
-    )
-    # unverified entries form a strict prefix (also checked by the
-    # ordering test, re-asserted here so this test fails self-contained)
-    assert ordered[: len(never)] == never
-    # the 17 round-10 registrations must be inside the window until
-    # CORRECTNESS_r10 lands (after which they carry evidence and leave
-    # `never` — both states are legal here)
-    for name in queries_r10.STAGED:
-        assert name in ev or name in never[:50], name
-
-
-def test_r11_wave_is_registered():
-    """The round-11 wave flipped from staged to registered: every STAGED
-    name is live in the registry with its oracle attached."""
-    from gan_deeplearning4j_spark import queries_r11
-    from gan_deeplearning4j_spark.queries import REGISTRY
-
-    staged = set(queries_r11.STAGED)
-    assert staged and staged <= set(REGISTRY)
-    # every r11 entry carries an oracle (hash-grade on registration)
-    for name, (fn, oracle, headline, doc) in queries_r11.STAGED.items():
-        assert oracle, name
-        assert REGISTRY[name].oracle == oracle, name
-
-
-def test_r11_driver_window_covers_every_unverified_entry():
-    """Round-11 window contract: every entry without a green driver row must
-    sit inside the first 50 `queries()` positions — the driver checks
-    ~50/round, so this guarantees CORRECTNESS_r11 gives the whole tail a
-    row. Unverified entries = the 17 newly registered round-11 queries plus
-    any round-11 live additions. Fails if a new query lands ahead of the
-    tail or the tail outgrows the window (stage behind the CURRENT
-    staging gate — SPARK_GRAFT_R13 as of round 11 — instead)."""
-    from gan_deeplearning4j_spark import queries_r11
-    from gan_deeplearning4j_spark.queries import (
-        _verification_evidence,
-        queries,
-    )
-
-    ordered = list(queries())
-    ev = _verification_evidence()
-    never = [n for n in ordered if n not in ev]
-    assert len(never) <= 50, (
-        f"{len(never)} unverified entries exceed the ~50/round driver "
-        "window; the tail would slip to the next round"
-    )
-    assert ordered[: len(never)] == never
-    # the 17 round-11 registrations must be inside the window until
-    # CORRECTNESS_r11 lands (after which they carry evidence and leave
-    # `never` — both states are legal here)
-    for name in queries_r11.STAGED:
-        assert name in ev or name in never[:50], name
-
-
-def test_r12_wave_is_registered():
-    """The round-11 live additions (queries_r12.py, certified under the
-    SPARK_GRAFT_R12 gate then flipped mid-round): every STAGED name is
-    live with its EXACT oracle attached — `register_all` silently skips
-    colliding names, so the oracle equality check is what catches a
-    name collision with an older query (it caught two in round 11)."""
-    from gan_deeplearning4j_spark import queries_r12
-    from gan_deeplearning4j_spark.queries import REGISTRY
-
-    staged = set(queries_r12.STAGED)
-    assert staged and staged <= set(REGISTRY)
-    for name, (fn, oracle, headline, doc) in queries_r12.STAGED.items():
-        assert oracle, name
-        assert REGISTRY[name].oracle == oracle, name
-        assert REGISTRY[name].fn is fn, name
-
-
-def test_r12_driver_window_covers_every_unverified_entry():
-    """Round-11 window contract after the live additions: never-green =
-    17 r11 + 11 r12 = 28 entries, all inside the first 50 positions."""
-    from gan_deeplearning4j_spark import queries_r12
-    from gan_deeplearning4j_spark.queries import (
-        _verification_evidence,
-        queries,
-    )
-
-    ordered = list(queries())
-    ev = _verification_evidence()
-    never = [n for n in ordered if n not in ev]
-    assert len(never) <= 50
-    assert ordered[: len(never)] == never
-    for name in queries_r12.STAGED:
-        assert name in ev or name in never[:50], name
-
-
-def test_r11_staged_oracles_bind_in_duckdb(sf_dir):
-    """Staged round-11 oracles must keep binding in DuckDB (EXPLAIN only)
-    even though they are not yet in the live registry — catches SQL
-    bitrot a round early."""
-    from gan_deeplearning4j_spark import queries_r11
-
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
+    name = next(iter(REGISTRY))
+    before = REGISTRY[name]
+    with pytest.raises(ValueError, match=name):
+        register(name, oracle="SELECT 1", doc="a second query")(
+            lambda spark, sf_dir: None
         )
-    bad = []
-    for name, (fn, oracle, headline, doc) in queries_r11.STAGED.items():
-        if not oracle:
-            continue
-        try:
-            con.sql("EXPLAIN " + oracle)
-        except Exception as exc:  # noqa: BLE001
-            bad.append((name, str(exc)[:120]))
-    assert not bad, bad
+    assert REGISTRY[name] is before
 
 
-def test_r13_wave_is_registered():
-    """The round-12 flip (r11 verdict ask #2): every queries_r13 STAGED
-    name is live with its EXACT oracle attached — `register_all` silently
-    skips colliding names, so the oracle equality check is what catches a
-    name collision with an older query."""
-    from gan_deeplearning4j_spark import queries_r13
-    from gan_deeplearning4j_spark.queries import REGISTRY
-
-    staged = set(queries_r13.STAGED)
-    assert staged and staged <= set(REGISTRY)
-    for name, (fn, oracle, headline, doc) in queries_r13.STAGED.items():
-        assert oracle, name
-        assert REGISTRY[name].oracle == oracle, name
-        assert REGISTRY[name].fn is fn, name
+def test_never_green_entries_fit_the_check_window():
+    never_green()
 
 
-def test_r13_driver_window_covers_every_unverified_entry():
-    """Round-12 window contract after the flips: never-green = 8 r13
-    queries + the 5 round-12 bracket-oracle promotions (whose old
-    rows-only evidence stops counting once promoted), all inside the
-    first 50 positions."""
-    from gan_deeplearning4j_spark import queries_r13
-    from gan_deeplearning4j_spark.queries import (
-        REGISTRY,
-        _verification_evidence,
-        queries,
+@pytest.mark.parametrize("make_oracle", [
+    "queries_r6._ivf_fixed_oracle",
+    "queries_ext._pq_fixed_oracle",
+    "queries_ext._ivfpq_fixed_oracle",
+    "queries_r8._recall_pq_oracle",
+])
+def test_fixed_point_oracles_raise_when_reference_books_fail(monkeypatch,
+                                                             make_oracle):
+    """A reference-book failure surfaces with its cause instead of leaving
+    the query registered without an oracle."""
+    from gan_deeplearning4j_spark.operators import similarity
+
+    def broken(*args, **kwargs):
+        raise OSError("reference corpus unreadable")
+
+    monkeypatch.setattr(similarity, "ivfpq_fixed_reference", broken)
+    monkeypatch.setattr(similarity, "pq_fixed_reference_books", broken)
+    mod, fn = make_oracle.split(".")
+    build = getattr(
+        importlib.import_module(f"gan_deeplearning4j_spark.{mod}"), fn
     )
+    with pytest.raises(OSError, match="reference corpus unreadable"):
+        build()
 
-    ordered = list(queries())
-    ev = _verification_evidence()
-    never = [n for n in ordered if n not in ev]
-    assert len(never) <= 50
-    assert ordered[: len(never)] == never
-    for name in queries_r13.STAGED:
-        assert name in ev or name in never[:50], name
-    # the 5 promotions must be re-drawn: rows-only evidence no longer
-    # counts for an oracled query
-    for name in ("approx_quantiles", "approx_distinct",
-                 "heavy_hitters_approx", "hll_mergeable_daily_users",
-                 "gan_grid_inference"):
-        assert REGISTRY[name].oracle is not None, name
-        assert name in ev or name in never[:50], name
+
+_IMPORT_FIRST = """
+import importlib, json, sys
+first = "gan_deeplearning4j_spark." + sys.argv[1]
+importlib.import_module(first)
+loaded = "gan_deeplearning4j_spark.queries" in sys.modules
+import gan_deeplearning4j_spark.queries as Q
+print(json.dumps({"loaded_queries": loaded and first != Q.__name__,
+                  "registry": list(Q.REGISTRY),
+                  "queries": list(Q.queries())}))
+"""
 
 
 def test_direct_import_of_any_query_module_works():
-    """Import-order regression (round-12 catch): importing ANY queries_r*
-    module directly — before gan_deeplearning4j_spark.queries — must fully
-    populate the registry. The flip pattern that breaks this is queries.py
-    calling <module>.register_all() (an attribute access on a
-    partially-initialized module through the circular import); the safe
-    pattern is unconditional self-registration at each module's bottom."""
-    import os
-    import pathlib
-    import subprocess
-    import sys
-
-    from gan_deeplearning4j_spark.queries import REGISTRY
-
-    full = len(REGISTRY)
-    # queries_ext and queries_r7 are excluded BY DESIGN: queries_r8
-    # consumes names from BOTH at registration time
-    # (queries_ext._pq_fixed_oracle, queries_r7._BPE_FIX_BEST...), so an
-    # ext- or r7-FIRST import cannot complete (the provider is still
-    # partially initialized when r8 registers). The documented rule for
-    # those two is "import the package (or queries) first"; every module
-    # nothing name-imports from must support BOTH orders.
-    mods = ["queries_r4", "queries_r5", "queries_r6",
-            "queries_r8", "queries_r9", "queries_r10",
-            "queries_r11", "queries_r12", "queries_r13", "queries_r14",
-            "queries_r15", "queries_r16"]
-    for mod in mods:
+    """Importing any body module first, then queries, gives the same
+    REGISTRY and queries() order as importing queries first, and no body
+    module imports queries (so the module graph has no cycle)."""
+    def run(mod):
         out = subprocess.run(
-            [sys.executable, "-c",
-             f"import gan_deeplearning4j_spark.{mod};"
-             "from gan_deeplearning4j_spark.queries import REGISTRY;"
-             "print(len(REGISTRY))"],
-            env={k: v for k, v in os.environ.items()
-                 if not k.startswith("SPARK_GRAFT_R")},
+            [sys.executable, "-c", _IMPORT_FIRST, mod],
             cwd=str(pathlib.Path(__file__).resolve().parents[1]),
-            capture_output=True, text=True, timeout=120,
+            env=dict(os.environ), capture_output=True, text=True,
+            timeout=300,
         )
         assert out.returncode == 0, (mod, out.stderr[-1500:])
-        assert out.stdout.strip() == str(full), (mod, out.stdout)
+        return json.loads(out.stdout)
+
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        runs = dict(zip(BODY_MODULES, pool.map(run, BODY_MODULES)))
+    base = runs["queries"]
+    assert len(base["registry"]) == len(REGISTRY)
+    for mod, got in runs.items():
+        assert not got["loaded_queries"], f"{mod} imports queries"
+        assert got["registry"] == base["registry"], mod
+        assert got["queries"] == base["queries"], mod
+
+
+def test_r7_wave_is_registered():
+    assert_module_registered("queries_r7")
+
+
+def test_r7_driver_window_covers_every_unverified_entry():
+    assert_window_covers("queries_r7")
+
+
+def test_r8_wave_is_registered():
+    assert_module_registered("queries_r8")
+
+
+def test_r8_driver_window_covers_every_unverified_entry():
+    assert_window_covers("queries_r8")
+
+
+def test_r9_wave_is_registered():
+    assert_module_registered("queries_r9")
+
+
+def test_r9_driver_window_covers_every_unverified_entry():
+    assert_window_covers("queries_r9")
+
+
+def test_r10_wave_is_registered():
+    assert_module_registered("queries_r10")
+
+
+def test_r10_driver_window_covers_every_unverified_entry():
+    assert_window_covers("queries_r10")
+
+
+def test_r11_wave_is_registered():
+    assert_module_registered("queries_r11")
+
+
+def test_r11_driver_window_covers_every_unverified_entry():
+    assert_window_covers("queries_r11")
+
+
+def test_r11_staged_oracles_bind_in_duckdb(sf_dir):
+    assert not unbound_oracles(sf_dir, declared_names("queries_r11"))
+
+
+def test_r12_wave_is_registered():
+    assert_module_registered("queries_r12")
+
+
+def test_r12_driver_window_covers_every_unverified_entry():
+    assert_window_covers("queries_r12")
+
+
+def test_r13_wave_is_registered():
+    assert_module_registered("queries_r13")
+
+
+def test_r13_driver_window_covers_every_unverified_entry():
+    assert_window_covers("queries_r13")

@@ -868,13 +868,12 @@ def test_streaming_balance_equals_batch_fold(spark, sf_dir, tmp_path):
 
 def test_streaming_debounce_matches_batch(spark, sf_dir, tmp_path):
     """Per-(user,type) streaming debounce counters over ordered
-    micro-batches must equal the batch LAG computation (the staged
+    micro-batches must equal the batch LAG computation (the registered
     debounce_suppressed_counts query) when rolled up per event type."""
     import os as _os
     import time as _time
 
-    import gan_deeplearning4j_spark.queries  # noqa: F401 (init order)
-    from gan_deeplearning4j_spark.queries_r8 import STAGED
+    from gan_deeplearning4j_spark.queries import REGISTRY
     from gan_deeplearning4j_spark.streaming.stateful import (
         streaming_debounce_counts,
     )
@@ -924,7 +923,7 @@ def test_streaming_debounce_matches_batch(spark, sf_dir, tmp_path):
     """).toPandas().reset_index(drop=True)
 
     want = (
-        STAGED["debounce_suppressed_counts"][0](spark, sf_dir).toPandas()
+        REGISTRY["debounce_suppressed_counts"].fn(spark, sf_dir).toPandas()
         .sort_values("event_type").reset_index(drop=True)
     )
     for col in ("n_events", "n_kept", "n_suppressed"):
@@ -1057,8 +1056,7 @@ def test_streaming_weighted_sample_matches_batch(spark, sf_dir, tmp_path):
     import os as _os
     import time as _time
 
-    import gan_deeplearning4j_spark.queries  # noqa: F401 (init order)
-    from gan_deeplearning4j_spark.queries_r7 import STAGED
+    from gan_deeplearning4j_spark.queries import REGISTRY
     from gan_deeplearning4j_spark.streaming.stateful import (
         streaming_weighted_sample,
     )
@@ -1100,7 +1098,7 @@ def test_streaming_weighted_sample_matches_batch(spark, sf_dir, tmp_path):
         order by segment, rank
     """).toPandas()
     batch = (
-        STAGED["weighted_sample_es"][0](spark, sf_dir).toPandas()
+        REGISTRY["weighted_sample_es"].fn(spark, sf_dir).toPandas()
         .sort_values(["c_mktsegment", "rank"]).reset_index(drop=True)
     )
     assert got["segment"].tolist() == batch["c_mktsegment"].tolist()
@@ -1112,14 +1110,14 @@ def test_streaming_weighted_sample_matches_batch(spark, sf_dir, tmp_path):
 
 def test_streaming_token_bucket_equals_batch_fold(spark, sf_dir, tmp_path):
     """The GroupState token bucket must land EXACTLY on the batch replay
-    (token_bucket_admissions, staged queries_r9) once the stream drains —
+    (token_bucket_admissions, queries_r9) once the stream drains —
     admitted/denied counts and the remaining micro-token level are the
     same non-linear fold carried across micro-batches. Same ordered
     file-replay harness as the balance twin."""
     import os as _os
     import time as _time
 
-    from gan_deeplearning4j_spark.queries_r9 import STAGED
+    from gan_deeplearning4j_spark.queries import REGISTRY
     from gan_deeplearning4j_spark.streaming.stateful import (
         streaming_token_bucket,
     )
@@ -1165,7 +1163,7 @@ def test_streaming_token_bucket_equals_batch_fold(spark, sf_dir, tmp_path):
     """).toPandas().sort_values("user_id").reset_index(drop=True)
 
     want = (
-        STAGED["token_bucket_admissions"][0](spark, sf_dir).toPandas()
+        REGISTRY["token_bucket_admissions"].fn(spark, sf_dir).toPandas()
         .sort_values("user_id").reset_index(drop=True)
     )
     for col in ("user_id", "n_events", "n_admitted", "n_denied",
@@ -1229,7 +1227,7 @@ def test_incremental_neardup_stream_equals_batch_resume(spark, sf_dir,
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from gan_deeplearning4j_spark.queries_r11 import STAGED as R11
+    from gan_deeplearning4j_spark.queries import REGISTRY
     from gan_deeplearning4j_spark.streaming.dedup import (
         incremental_neardup_stream,
         incremental_resume_summary,
@@ -1281,7 +1279,7 @@ def test_incremental_neardup_stream_equals_batch_resume(spark, sf_dir,
         incremental_resume_summary(spark, pairs_dir).collect()
     )
     want = sorted(
-        tuple(r) for r in R11["minhash_incremental_resume"][0](
+        tuple(r) for r in REGISTRY["minhash_incremental_resume"].fn(
             spark, sf_dir).collect()
     )
     assert got == want and got, "stream != batch resume (or vacuous)"
