@@ -14,6 +14,12 @@ becomes one ``(n, d)`` array through ``list_to_matrix`` with no per-row
 Python objects. Weights travel as a broadcast dict (they are MB-scale; data
 is the TB-scale side).
 
+Each layer kind is defined once, as one ``Layer`` entry of ``LAYERS``: its
+parameter init, its forward and its backward, as DL4J's layer classes each
+carry theirs. ``forward``, ``forward_cached``, ``backward`` and
+``init_weights`` walk a network's ``LayerSpec`` list through that table and
+hold no per-kind code, so a new layer kind is one entry.
+
 At 100 TB: inference is embarrassingly parallel — no shuffle at all, the
 kernel pipeline fuses into a single mapInArrow stage over the scan.
 """
@@ -21,7 +27,7 @@ kernel pipeline fuses into a single mapInArrow stage over the scan.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -37,7 +43,7 @@ Weights = dict[str, dict[str, np.ndarray]]
 class LayerSpec:
     """One named layer of a network DAG (the reference's addLayer(name, ...)).
 
-    kinds and cfg keys:
+    ``kind`` names its entry in ``LAYERS``; kinds and cfg keys:
     - dense:     units, activation
     - conv2d:    filters, kernel, stride, pad, activation   (NCHW)
     - maxpool:   kernel, stride
@@ -122,12 +128,16 @@ def k_conv2d(
     return out.transpose(0, 3, 1, 2)
 
 
+def _pool_cols(x: np.ndarray, kernel: int, stride: int):
+    """Each channel's ``kernel``×``kernel`` windows: ``(n·c, oh, ow, k²)``."""
+    n, c, h, w = x.shape
+    return _im2col(x.reshape(n * c, 1, h, w), kernel, kernel, stride, 0)
+
+
 def k_maxpool(x: np.ndarray, kernel: int = 2, stride: int = 1) -> np.ndarray:
     """K3: sliding-window max over NCHW (kernel 2×2 stride 1, java:141-144)."""
-    n, c, h, w = x.shape
-    x4 = x.reshape(n * c, 1, h, w)
-    cols, oh, ow = _im2col(x4, kernel, kernel, stride, 0)
-    return cols.max(axis=-1).reshape(n, c, oh, ow)
+    cols, oh, ow = _pool_cols(x, kernel, stride)
+    return cols.max(axis=-1).reshape(x.shape[0], x.shape[1], oh, ow)
 
 
 def k_upsample(x: np.ndarray, factor: int = 2) -> np.ndarray:
@@ -151,11 +161,6 @@ def clip_grad(g: np.ndarray, threshold: float = 1.0) -> np.ndarray:
     return np.clip(g, -threshold, threshold)
 
 
-# ---------------------------------------------------------------------------
-# backward kernels (the training-side halves of K1-K5; RMSProp/clip K8/K9
-# live in pipeline.py)
-# ---------------------------------------------------------------------------
-
 def _col2im(dcols: np.ndarray, x_shape, kh: int, kw: int, stride: int, pad: int) -> np.ndarray:
     """Scatter-add inverse of _im2col. dcols: (n, oh, ow, c*kh*kw)."""
     n, c, h, w = x_shape
@@ -170,22 +175,75 @@ def _col2im(dcols: np.ndarray, x_shape, kh: int, kw: int, stride: int, pad: int)
     return dxp[:, :, pad : pad + h, pad : pad + w] if pad else dxp
 
 
+# ---------------------------------------------------------------------------
+# the layer table: one entry per kind. ``init(in_shape, cfg, rng)`` draws the
+# kind's tensors for a per-row input shape; ``forward(x, w, cfg, training)``
+# returns ``(y, cache)``; ``backward(d, cache)`` takes dL/dy and returns
+# ``(dL/dx, grads)``, folding the activation its cache names under
+# ``activation`` (``backward`` blanks it for the output layer).
+# ---------------------------------------------------------------------------
+
+def _xavier(rng, fan_in: int, fan_out: int, shape: tuple) -> np.ndarray:
+    """Xavier uniform init (java:127)."""
+    limit = np.sqrt(6.0 / (fan_in + fan_out))
+    return rng.uniform(-limit, limit, shape).astype(np.float32)
+
+
+def _dense_init(in_shape, cfg, rng) -> dict:
+    fan_in, units = int(np.prod(in_shape)), cfg["units"]
+    return {"W": _xavier(rng, fan_in, units, (fan_in, units)),
+            "b": np.zeros(units, dtype=np.float32)}
+
+
+def _dense_forward(x, w, cfg, training):
+    in_shape = x.shape
+    if x.ndim > 2:
+        x = x.reshape(x.shape[0], -1)
+    activation = cfg.get("activation", "tanh")
+    y = act(k_dense(x, w["W"], w["b"]), activation)
+    return y, {"x": x, "y": y, "W": w["W"], "activation": activation, "in_shape": in_shape}
+
+
+def _dense_backward(d, cache):
+    d = d * act_grad(cache["y"], cache["activation"])
+    grads = {"W": cache["x"].T @ d, "b": d.sum(axis=0)}
+    return (d @ cache["W"].T).reshape(cache["in_shape"]), grads
+
+
+def _conv2d_init(in_shape, cfg, rng) -> dict:
+    c, f, k = in_shape[0], cfg["filters"], cfg["kernel"]
+    return {"W": _xavier(rng, c * k * k, f * k * k, (f, c, k, k)),
+            "b": np.zeros(f, dtype=np.float32)}
+
+
+def _conv2d_forward(x, w, cfg, training):
+    stride, pad = cfg.get("stride", 1), cfg.get("pad", 0)
+    activation = cfg.get("activation", "tanh")
+    y = act(k_conv2d(x, w["W"], w["b"], stride, pad), activation)
+    return y, {"x": x, "x_shape": x.shape, "W": w["W"], "y": y, "stride": stride,
+               "pad": pad, "activation": activation}
+
+
 def conv2d_backward(dy: np.ndarray, cache: dict) -> tuple[np.ndarray, dict]:
     """K2 backward. dy: (n, out_c, oh, ow) gradient wrt post-activation.
 
-    For stride 1, dx is the full correlation of ``dpre`` with the flipped,
-    channel-transposed kernel: one ``_im2col`` of ``dpre`` padded by
-    ``k - 1 - pad`` and one matmul. Strided convs scatter-add their column
-    gradients back through ``_col2im``."""
-    cols, W, y, stride, pad, x_shape, activation = (
-        cache["cols"], cache["W"], cache["y"], cache["stride"], cache["pad"],
+    The cache holds the layer's input, not its im2col columns, so no pass
+    keeps columns past their layer; dW re-derives them. For stride 1, dx is
+    the full correlation of ``dpre`` with the flipped, channel-transposed
+    kernel: one ``_im2col`` of ``dpre`` padded by ``k - 1 - pad`` and one
+    matmul. Strided convs scatter-add their column gradients back through
+    ``_col2im``."""
+    W, y, stride, pad, x_shape, activation = (
+        cache["W"], cache["y"], cache["stride"], cache["pad"],
         cache["x_shape"], cache["activation"],
     )
     out_c, in_c, kh, kw = W.shape
     dpre = (dy * act_grad(y, activation)).transpose(0, 2, 3, 1)  # (n, oh, ow, oc)
+    cols, _, _ = _im2col(cache["x"], kh, kw, stride, pad)
     dW = (
         dpre.reshape(-1, out_c).T @ cols.reshape(-1, cols.shape[-1])
     ).reshape(W.shape)
+    del cols
     db = dpre.sum(axis=(0, 1, 2))
     if stride == 1 and kh == kw and pad < kh:
         dcols, _, _ = _im2col(dpre.transpose(0, 3, 1, 2), kh, kw, 1, kh - 1 - pad)
@@ -196,46 +254,62 @@ def conv2d_backward(dy: np.ndarray, cache: dict) -> tuple[np.ndarray, dict]:
     return dx, {"W": dW, "b": db}
 
 
-def maxpool_backward(dy: np.ndarray, cache: dict) -> np.ndarray:
+def _maxpool_forward(x, w, cfg, training):
+    kernel, stride = cfg.get("kernel", 2), cfg.get("stride", 1)
+    return k_maxpool(x, kernel, stride), {"x": x, "kernel": kernel, "stride": stride}
+
+
+def _maxpool_backward(dy, cache):
     """K3 backward: route gradient to the (first) max element per window."""
-    cols, x_shape, kernel, stride = (
-        cache["cols"], cache["x_shape"], cache["kernel"], cache["stride"]
-    )
-    n, c, h, w = x_shape
-    oh, ow = dy.shape[2], dy.shape[3]
-    flat = cols.reshape(n * c, oh, ow, kernel * kernel)
-    am = flat.argmax(axis=-1)
-    dcols = np.zeros_like(flat)
+    x, kernel, stride = cache["x"], cache["kernel"], cache["stride"]
+    n, c, h, w = x.shape
+    cols, oh, ow = _pool_cols(x, kernel, stride)
+    dcols = np.zeros_like(cols)
     np.put_along_axis(
-        dcols, am[..., None], dy.reshape(n * c, oh, ow, 1), axis=-1
+        dcols, cols.argmax(axis=-1)[..., None], dy.reshape(n * c, oh, ow, 1), axis=-1
     )
     dx = _col2im(dcols, (n * c, 1, h, w), kernel, kernel, stride, 0)
-    return dx.reshape(n, c, h, w)
+    return dx.reshape(n, c, h, w), {}
 
 
-def upsample_backward(dy: np.ndarray, factor: int) -> np.ndarray:
+def _upsample_forward(x, w, cfg, training):
+    factor = cfg.get("factor", 2)
+    return k_upsample(x, factor), {"factor": factor}
+
+
+def _upsample_backward(dy, cache):
     """K5 backward: sum-pool the gradient over each f×f block."""
+    f = cache["factor"]
     n, c, H, W = dy.shape
-    h, w = H // factor, W // factor
-    return dy.reshape(n, c, h, factor, w, factor).sum(axis=(3, 5))
+    return dy.reshape(n, c, H // f, f, W // f, f).sum(axis=(3, 5)), {}
 
 
-def batchnorm_forward_train(x: np.ndarray, gamma, beta, eps: float = 1e-5):
-    """A5 training mode: batch statistics (per-channel for NCHW)."""
-    if x.ndim == 4:
-        axes, shp = (0, 2, 3), (1, -1, 1, 1)
-    else:
-        axes, shp = (0,), (1, -1)
+def _batchnorm_init(in_shape, cfg, rng) -> dict:
+    nf = in_shape[0] if len(in_shape) == 3 else int(np.prod(in_shape))
+    return {"gamma": np.ones(nf, dtype=np.float32), "beta": np.zeros(nf, dtype=np.float32),
+            "mean": np.zeros(nf, dtype=np.float32), "var": np.ones(nf, dtype=np.float32)}
+
+
+def _batchnorm_forward(x, w, cfg, training):
+    """A5: inference normalizes with the running mean/var; training with the
+    batch statistics (per-channel for NCHW), which the cache hands to
+    ``update_running_stats`` under ``running``."""
+    eps = cfg.get("eps", 1e-5)
+    if not training:
+        return k_batchnorm(x, w["gamma"], w["beta"], w["mean"], w["var"], eps), {}
+    axes, shp = ((0, 2, 3), (1, -1, 1, 1)) if x.ndim == 4 else ((0,), (1, -1))
     mu = x.mean(axis=axes)
     var = x.var(axis=axes)
     xhat = (x - mu.reshape(shp)) / np.sqrt(var.reshape(shp) + eps)
-    y = xhat * gamma.reshape(shp) + beta.reshape(shp)
-    cache = {"xhat": xhat, "var": var, "gamma": gamma, "eps": eps,
-             "axes": axes, "shp": shp, "m": int(np.prod([x.shape[a] for a in axes]))}
-    return y, cache, mu, var
+    y = xhat * w["gamma"].reshape(shp) + w["beta"].reshape(shp)
+    return y, {"xhat": xhat, "var": var, "gamma": w["gamma"], "eps": eps, "axes": axes,
+               "shp": shp, "m": int(np.prod([x.shape[a] for a in axes])),
+               "running": {"mean": mu, "var": var}}
 
 
 def batchnorm_backward(dy: np.ndarray, cache: dict) -> tuple[np.ndarray, dict]:
+    if "xhat" not in cache:
+        raise RuntimeError("cannot backprop through eval-mode batchnorm")
     xhat, var, gamma, eps, axes, shp, m = (
         cache["xhat"], cache["var"], cache["gamma"], cache["eps"],
         cache["axes"], cache["shp"], cache["m"],
@@ -252,6 +326,78 @@ def batchnorm_backward(dy: np.ndarray, cache: dict) -> tuple[np.ndarray, dict]:
     return dx, {"gamma": dgamma, "beta": dbeta}
 
 
+def _reshape_forward(x, w, cfg, training):
+    return x.reshape(x.shape[0], *cfg["shape"]), {"in_shape": x.shape}
+
+
+def _flatten_forward(x, w, cfg, training):
+    return x.reshape(x.shape[0], -1), {"in_shape": x.shape}
+
+
+def _unshape_backward(d, cache):
+    return d.reshape(cache["in_shape"]), {}
+
+
+@dataclass(frozen=True)
+class Layer:
+    """One layer kind: ``forward`` and ``backward``, plus ``init`` for a
+    kind with parameters (see the section comment for the signatures)."""
+
+    forward: Callable
+    backward: Callable
+    init: Callable | None = None
+
+
+LAYERS: dict[str, Layer] = {
+    "dense": Layer(_dense_forward, _dense_backward, _dense_init),
+    "conv2d": Layer(_conv2d_forward, conv2d_backward, _conv2d_init),
+    "maxpool": Layer(_maxpool_forward, _maxpool_backward),
+    "upsample": Layer(_upsample_forward, _upsample_backward),
+    "batchnorm": Layer(_batchnorm_forward, batchnorm_backward, _batchnorm_init),
+    "reshape": Layer(_reshape_forward, _unshape_backward),
+    "flatten": Layer(_flatten_forward, _unshape_backward),
+}
+
+
+def _layer(kind: str) -> Layer:
+    try:
+        return LAYERS[kind]
+    except KeyError:
+        raise ValueError(f"unknown layer kind {kind!r}") from None
+
+
+# ---------------------------------------------------------------------------
+# network passes over the table (K10)
+# ---------------------------------------------------------------------------
+
+def init_weights(
+    specs: list[LayerSpec], input_dim: int | tuple, seed: int = DEFAULT_SEED
+) -> Weights:
+    """Xavier init (java:127), deterministic per (seed, layer index): layer
+    ``i`` draws from ``default_rng(seed + i * 1009)``. Each layer's input
+    shape comes from running the layers before it on one zero row.
+    ``input_dim``: flat feature count, or an (C, H, W) shape for conv input."""
+    weights: Weights = {}
+    dim = (input_dim,) if isinstance(input_dim, int) else tuple(input_dim)
+    x = np.zeros((1, *dim), dtype=np.float32)
+    for i, spec in enumerate(specs):
+        layer = _layer(spec.kind)
+        if layer.init is not None:
+            rng = np.random.default_rng(seed + i * 1009)
+            weights[spec.name] = layer.init(x.shape[1:], spec.cfg, rng)
+        x = layer.forward(x, weights.get(spec.name, {}), spec.cfg, False)[0]
+    return weights
+
+
+def forward(x: np.ndarray, specs: list[LayerSpec], weights: Weights) -> np.ndarray:
+    """K10 full forward pass (net.output, java:170 et al.): the inference
+    half of ``forward_cached``, dropping each layer's cache as it returns."""
+    out = x.astype(np.float32)
+    for spec in specs:
+        out = _layer(spec.kind).forward(out, weights.get(spec.name, {}), spec.cfg, False)[0]
+    return out
+
+
 def forward_cached(
     x: np.ndarray, specs: list[LayerSpec], weights: Weights, training: bool = True
 ) -> tuple[np.ndarray, list]:
@@ -261,192 +407,39 @@ def forward_cached(
     out = x.astype(np.float32)
     caches: list = []
     for spec in specs:
-        w = weights.get(spec.name, {})
-        if spec.kind == "dense":
-            in_shape = out.shape
-            if out.ndim > 2:
-                out = out.reshape(out.shape[0], -1)
-            activation = spec.cfg.get("activation", "tanh")
-            pre = k_dense(out, w["W"], w["b"])
-            y = act(pre, activation)
-            caches.append({"kind": "dense", "x": out, "y": y, "W": w["W"],
-                           "activation": activation, "in_shape": in_shape})
-            out = y
-        elif spec.kind == "conv2d":
-            stride, pad = spec.cfg.get("stride", 1), spec.cfg.get("pad", 0)
-            activation = spec.cfg.get("activation", "tanh")
-            out_c, in_c, kh, kw = w["W"].shape
-            cols, oh, ow = _im2col(out, kh, kw, stride, pad)
-            pre = (cols @ w["W"].reshape(out_c, -1).T + w["b"]).transpose(0, 3, 1, 2)
-            y = act(pre, activation)
-            caches.append({"kind": "conv2d", "cols": cols, "W": w["W"], "y": y,
-                           "stride": stride, "pad": pad, "x_shape": out.shape,
-                           "activation": activation})
-            out = y
-        elif spec.kind == "maxpool":
-            kernel, stride = spec.cfg.get("kernel", 2), spec.cfg.get("stride", 1)
-            n, c, h, w_ = out.shape
-            cols, oh, ow = _im2col(out.reshape(n * c, 1, h, w_), kernel, kernel, stride, 0)
-            caches.append({"kind": "maxpool", "cols": cols, "x_shape": out.shape,
-                           "kernel": kernel, "stride": stride})
-            out = cols.max(axis=-1).reshape(n, c, oh, ow)
-        elif spec.kind == "upsample":
-            f = spec.cfg.get("factor", 2)
-            caches.append({"kind": "upsample", "factor": f})
-            out = k_upsample(out, f)
-        elif spec.kind == "batchnorm":
-            if training:
-                y, cache, mu, var = batchnorm_forward_train(
-                    out, w["gamma"], w["beta"], spec.cfg.get("eps", 1e-5)
-                )
-                cache["kind"] = "batchnorm"
-                cache["batch_mu"], cache["batch_var"] = mu, var
-                caches.append(cache)
-                out = y
-            else:
-                caches.append({"kind": "batchnorm_eval"})
-                out = k_batchnorm(out, w["gamma"], w["beta"], w["mean"], w["var"],
-                                  spec.cfg.get("eps", 1e-5))
-        elif spec.kind == "reshape":
-            caches.append({"kind": "reshape", "in_shape": out.shape})
-            out = out.reshape(out.shape[0], *spec.cfg["shape"])
-        elif spec.kind == "flatten":
-            caches.append({"kind": "flatten", "in_shape": out.shape})
-            out = out.reshape(out.shape[0], -1)
-        else:
-            raise ValueError(spec.kind)
+        out, cache = _layer(spec.kind).forward(out, weights.get(spec.name, {}), spec.cfg, training)
+        caches.append(cache)
     return out, caches
 
 
 def backward(
     dout: np.ndarray, specs: list[LayerSpec], weights: Weights, caches: list
 ) -> tuple[Weights, np.ndarray]:
-    """Reverse sweep. ``dout`` is dL/d(post-activation of the last layer) for
-    non-dense tails, or dL/dpre when the caller already folded the
-    activation+loss pair (dense sigmoid-XENT / softmax-MCXENT — pass
-    ``dout_is_dpre=True`` semantics by pre-multiplying)."""
+    """Reverse sweep over ``forward_cached``'s caches. ``dout`` is dL/dpre
+    of the output layer: the caller pairs its activation with the loss
+    (sigmoid-XENT, softmax-MCXENT), so that layer backpropagates as
+    identity; every other layer folds its own activation gradient. Returns
+    the gradients of the layers with parameters, and dL/dx."""
     grads: Weights = {}
     d = dout
     for i in range(len(specs) - 1, -1, -1):
-        spec, cache = specs[i], caches[i]
-        kind = cache["kind"]
-        if kind == "dense":
-            # d is dL/dpre for the output layer (set by loss pairing) or
-            # dL/dy for hidden layers — callers of net_grads handle this by
-            # multiplying act_grad before recursing; here we expect dL/dpre.
-            dW = cache["x"].T @ d
-            db = d.sum(axis=0)
-            grads[spec.name] = {"W": dW, "b": db}
-            d = d @ cache["W"].T
-            if len(cache["in_shape"]) > 2:
-                d = d.reshape(cache["in_shape"])
-        elif kind == "conv2d":
-            d, g = conv2d_backward(d, cache)
-            grads[spec.name] = g
-        elif kind == "maxpool":
-            d = maxpool_backward(d, cache)
-        elif kind == "upsample":
-            d = upsample_backward(d, cache["factor"])
-        elif kind == "batchnorm":
-            d, g = batchnorm_backward(d, cache)
-            grads[spec.name] = g
-        elif kind == "batchnorm_eval":
-            raise RuntimeError("cannot backprop through eval-mode batchnorm")
-        elif kind == "reshape":
-            d = d.reshape(cache["in_shape"])
-        elif kind == "flatten":
-            d = d.reshape(cache["in_shape"])
-        # convention: dense layers receive dL/dpre. After stepping past a
-        # layer, if the earlier layer is dense, convert dL/dy → dL/dpre via
-        # its activation (conv layers fold their own act_grad internally).
-        if i > 0 and specs[i - 1].kind == "dense":
-            prev_cache = caches[i - 1]
-            d = d * act_grad(prev_cache["y"], prev_cache["activation"])
+        cache = caches[i] if i < len(specs) - 1 else {**caches[i], "activation": None}
+        d, g = _layer(specs[i].kind).backward(d, cache)
+        if g:
+            grads[specs[i].name] = g
     return grads, d
 
 
-# ---------------------------------------------------------------------------
-# network forward (K10)
-# ---------------------------------------------------------------------------
-
-def init_weights(
-    specs: list[LayerSpec], input_dim: int | tuple, seed: int = DEFAULT_SEED
-) -> Weights:
-    """Xavier init (java:127), deterministic per (seed, layer index).
-    ``input_dim``: flat feature count, or an (C, H, W) shape for conv input."""
-    weights: Weights = {}
-    dim: tuple = (input_dim,) if isinstance(input_dim, int) else tuple(input_dim)
-    for i, spec in enumerate(specs):
-        rng = np.random.default_rng(seed + i * 1009)
-        if spec.kind == "dense":
-            fan_in = int(np.prod(dim))
-            units = spec.cfg["units"]
-            limit = np.sqrt(6.0 / (fan_in + units))
-            weights[spec.name] = {
-                "W": rng.uniform(-limit, limit, (fan_in, units)).astype(np.float32),
-                "b": np.zeros(units, dtype=np.float32),
-            }
-            dim = (units,)
-        elif spec.kind == "conv2d":
-            c = dim[0]
-            f, k = spec.cfg["filters"], spec.cfg["kernel"]
-            limit = np.sqrt(6.0 / (c * k * k + f * k * k))
-            weights[spec.name] = {
-                "W": rng.uniform(-limit, limit, (f, c, k, k)).astype(np.float32),
-                "b": np.zeros(f, dtype=np.float32),
-            }
-            stride, pad = spec.cfg.get("stride", 1), spec.cfg.get("pad", 0)
-            oh = (dim[1] + 2 * pad - k) // stride + 1
-            ow = (dim[2] + 2 * pad - k) // stride + 1
-            dim = (f, oh, ow)
-        elif spec.kind == "batchnorm":
-            nf = dim[0] if len(dim) == 3 else int(np.prod(dim))
-            weights[spec.name] = {
-                "gamma": np.ones(nf, dtype=np.float32),
-                "beta": np.zeros(nf, dtype=np.float32),
-                "mean": np.zeros(nf, dtype=np.float32),
-                "var": np.ones(nf, dtype=np.float32),
-            }
-        elif spec.kind == "maxpool":
-            k, stride = spec.cfg.get("kernel", 2), spec.cfg.get("stride", 1)
-            dim = (dim[0], (dim[1] - k) // stride + 1, (dim[2] - k) // stride + 1)
-        elif spec.kind == "upsample":
-            f = spec.cfg.get("factor", 2)
-            dim = (dim[0], dim[1] * f, dim[2] * f)
-        elif spec.kind == "reshape":
-            dim = tuple(spec.cfg["shape"])
-        elif spec.kind == "flatten":
-            dim = (int(np.prod(dim)),)
-    return weights
-
-
-def forward(x: np.ndarray, specs: list[LayerSpec], weights: Weights) -> np.ndarray:
-    """K10 full forward pass (net.output, java:170 et al.)."""
-    out = x.astype(np.float32)
-    for spec in specs:
-        w = weights.get(spec.name, {})
-        if spec.kind == "dense":
-            if out.ndim > 2:
-                out = out.reshape(out.shape[0], -1)
-            out = act(k_dense(out, w["W"], w["b"]), spec.cfg.get("activation", "tanh"))
-        elif spec.kind == "conv2d":
-            out = act(
-                k_conv2d(out, w["W"], w["b"], spec.cfg.get("stride", 1), spec.cfg.get("pad", 0)),
-                spec.cfg.get("activation", "tanh"),
-            )
-        elif spec.kind == "maxpool":
-            out = k_maxpool(out, spec.cfg.get("kernel", 2), spec.cfg.get("stride", 1))
-        elif spec.kind == "upsample":
-            out = k_upsample(out, spec.cfg.get("factor", 2))
-        elif spec.kind == "batchnorm":
-            out = k_batchnorm(out, w["gamma"], w["beta"], w["mean"], w["var"], spec.cfg.get("eps", 1e-5))
-        elif spec.kind == "reshape":
-            out = out.reshape(out.shape[0], *spec.cfg["shape"])
-        elif spec.kind == "flatten":
-            out = out.reshape(out.shape[0], -1)
-        else:
-            raise ValueError(f"unknown layer kind {spec.kind}")
-    return out
+def update_running_stats(
+    specs: list[LayerSpec], weights: Weights, caches: list, momentum: float
+) -> None:
+    """Fold the batch statistics a training-mode ``forward_cached`` left
+    under ``running`` (batchnorm's mean and var) into the running averages
+    in ``weights``, in place: ``momentum · old + (1 - momentum) · batch``."""
+    for spec, cache in zip(specs, caches):
+        for pname, batch in cache.get("running", {}).items():
+            w = weights[spec.name]
+            w[pname] = (momentum * w[pname] + (1 - momentum) * batch).astype(np.float32)
 
 
 # ---------------------------------------------------------------------------

@@ -18,12 +18,18 @@ is therefore the exact set the next driver round will grade, computed from
 the CORRECTNESS files present at run time. Each run prints a round-stamp
 (latest CORRECTNESS round seen + git HEAD) so a recorded transcript pins
 which evidence state produced that window.
+
+A query whose Spark run or oracle raises prints ``name ERROR <type>:
+<message>``, counts as failed, and the run goes on to the next query; any
+failure makes the exit status 1.
 """
 
 import math
+import os
 import sys
 
-sys.path.insert(0, '/root/repo')
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 import duckdb
 from pyspark.sql import SparkSession
 
@@ -31,8 +37,6 @@ import __spark_entry__ as E
 
 
 def main() -> int:
-    import os
-
     builder = (SparkSession.builder.master("local[4]")
                .config("spark.sql.session.timeZone", "America/New_York")
                .config("spark.ui.enabled", "false"))
@@ -48,7 +52,8 @@ def main() -> int:
     elif perturb:
         raise SystemExit(f"unknown SPARK_GRAFT_PERTURB={perturb!r}")
     spark = builder.getOrCreate()
-    assert len(E.entry(spark).collect()) > 0   # sf0.001 smoke
+    if not E.entry(spark).collect():  # sf0.001 smoke
+        raise SystemExit("smoke: entry(spark) returned no rows")
 
     # SPARK_GRAFT_REPLICA_SF_DIR: run the same gate at another scale
     # factor (e.g. sf0.001 for empty-group/small-regime edge cases)
@@ -83,12 +88,12 @@ def main() -> int:
     import subprocess
     rounds = sorted(
         int(m.group(1))
-        for p in glob.glob("/root/repo/CORRECTNESS_r*.json")
+        for p in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))
         if (m := re.search(r"CORRECTNESS_r(\d+)\.json$", p))
     )
     try:
         head = subprocess.run(
-            ["git", "-C", "/root/repo", "rev-parse", "--short", "HEAD"],
+            ["git", "-C", REPO, "rev-parse", "--short", "HEAD"],
             capture_output=True, text=True, timeout=10,
         ).stdout.strip()
     except Exception:  # noqa: BLE001
@@ -110,12 +115,20 @@ def main() -> int:
         # correct standalone, not because an earlier query on the shared
         # session happened to set UTC (the driver's run order is its own)
         spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        sdf = qs[name](spark, sf).toPandas()
-        if name in oracles:
-            sc, sr = canon(sdf)
-            oc, orows = canon(con.sql(oracles[name]).df())
-            if not (sc == oc and sr == orows):
-                fails.append(name)
+        try:
+            sdf = qs[name](spark, sf).toPandas()
+            if name in oracles:
+                sc, sr = canon(sdf)
+                oc, orows = canon(con.sql(oracles[name]).df())
+                if not (sc == oc and sr == orows):
+                    fails.append(name)
+        except Exception as e:  # noqa: BLE001 — one query's error must not end the run
+            fails.append(name)
+            # first line and last line: a Python worker's error ends its traceback
+            lines = str(e).strip().splitlines() or [""]
+            msg = " ... ".join(dict.fromkeys([lines[0], lines[-1]]))
+            print(f"{name} ERROR {type(e).__name__}: {msg}", flush=True)
+            continue
         # a 0-row result still hash-matches a 0-row oracle — loud flag
         # so vacuous greens get eyeballed (some are legit: sparse-graph
         # ops can be empty at one SF; a NEW query should never be)

@@ -28,9 +28,13 @@ Usage:
     SPARK_GRAFT_CPUS=32 python scripts/sf1_spot_bench.py
     SPARK_GRAFT_CPUS=8  python scripts/sf1_spot_bench.py
 
-Prints one JSON line: {"cpus": N, "queries": {name: sec, ...}}.
-The data dir (/tmp/sf1x10) is built once and reused; it is scratch
-(NOT under /root/testdata, which is read-only driver data).
+Prints one JSON line: {"cpus": N, "queries": {name: sec, ...},
+"corpus": {table: {"rows": n, "digest": d}, ...}}. The data dir
+(``DST``) is built once and reused; it is scratch, apart from the
+read-only source data (``SRC``). Because a reused dir may
+come from another version of this script, the line names the corpus its
+timings ran on: each table's row count and ``sum(xxhash64(*cols))``, a
+digest that does not depend on row order or file layout.
 """
 
 from __future__ import annotations
@@ -67,6 +71,7 @@ KEYED = {
     "events": ["user_id", "event_id"],
 }
 FIXED = ["region", "nation"]
+TABLES = FIXED + list(KEYED) + ["documents", "embeddings"]
 
 
 def build(spark) -> None:
@@ -132,11 +137,24 @@ def build(spark) -> None:
     open(os.path.join(DST, "_DONE"), "w").write("ok\n")
 
 
+def corpus(spark, root: str) -> dict[str, dict]:
+    """Row count and order-independent content digest of each table."""
+    out = {}
+    for t in TABLES:
+        df = spark.read.parquet(f"{root}/{t}.parquet")
+        rows, digest = df.agg(
+            F.count("*"), F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)"))
+        ).first()
+        out[t] = {"rows": rows, "digest": str(digest)}
+    return out
+
+
 def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     spark = get_spark("sf1-spot-bench", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
     build(spark)
+    tables = corpus(spark, DST)
     # warm the python worker pool (bench.py discipline)
     spark.range(64).repartition(cpus).mapInPandas(
         lambda it: it, "id long"
@@ -162,7 +180,7 @@ def main() -> None:
         print(f"# {name}: med {out[name]} (min {runs[0]:.3f})", flush=True)
     print(json.dumps({"cpus": cpus, "sf": "sf0.1 x10 synthetic",
                       "repeats": repeats, "queries": out,
-                      "total": round(sum(out.values()), 3)}))
+                      "total": round(sum(out.values()), 3), "corpus": tables}))
     spark.stop()
 
 

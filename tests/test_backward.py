@@ -145,3 +145,23 @@ def test_conv_gan_trains_end_to_end(spark):
     assert len(h1) == 2
     assert all(np.isfinite(h["dis_loss"]) and np.isfinite(h["gan_loss"]) for h in h1)
     assert h1 == h2  # bitwise-deterministic distributed conv training
+
+
+def test_net_grads_folds_batch_stats_into_running_averages():
+    """A training step moves batchnorm's running mean/var toward the batch
+    statistics by ``1 - bn_momentum`` (A5); inference then reads them."""
+    from gan_deeplearning4j_spark.kernels import forward
+
+    specs = [
+        LayerSpec("d1", "dense", {"units": 4, "activation": "tanh"}),
+        LayerSpec("bn", "batchnorm", {}),
+        LayerSpec("out", "dense", {"units": 1, "activation": "sigmoid"}),
+    ]
+    w = init_weights(specs, 3, seed=1)
+    x = RNG.standard_normal((16, 3)).astype(np.float32)
+    y = RNG.integers(0, 2, (16, 1)).astype(np.float32)
+    h = forward(x, specs[:1], w)  # the batchnorm layer's input
+    net_grads(x, y, specs, w, bn_momentum=0.8)
+    np.testing.assert_allclose(w["bn"]["mean"], 0.2 * h.mean(axis=0), rtol=1e-5, atol=1e-7)
+    np.testing.assert_allclose(w["bn"]["var"], 0.8 + 0.2 * h.var(axis=0), rtol=1e-5)
+    assert w["bn"]["mean"].dtype == w["bn"]["var"].dtype == np.float32

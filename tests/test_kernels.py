@@ -13,6 +13,7 @@ from gan_deeplearning4j_spark.kernels import (
     act,
     apply_network,
     forward,
+    forward_cached,
     init_weights,
     k_batchnorm,
     k_conv2d,
@@ -178,3 +179,76 @@ def test_apply_network_null_features_raise(spark):
     df = spark.createDataFrame([(0, [1.0, 2.0]), (1, None)], "id: long, features: array<float>")
     with pytest.raises(PySparkException, match="null rows"):
         apply_network(df.coalesce(1), specs, w).collect()
+
+
+# a stack that uses every layer kind, on (1, 8, 8) images
+EVERY_KIND = [
+    LayerSpec("r", "reshape", {"shape": (1, 8, 8)}),
+    LayerSpec("c", "conv2d", {"filters": 3, "kernel": 3, "stride": 1, "pad": 1}),
+    LayerSpec("bn", "batchnorm"),
+    LayerSpec("p", "maxpool", {"kernel": 2, "stride": 2}),
+    LayerSpec("u", "upsample", {"factor": 2}),
+    LayerSpec("c2", "conv2d", {"filters": 2, "kernel": 5, "stride": 2, "pad": 0}),
+    LayerSpec("f", "flatten"),
+    LayerSpec("bn2", "batchnorm"),
+    LayerSpec("d", "dense", {"units": 5}),
+    LayerSpec("o", "dense", {"units": 1, "activation": "sigmoid"}),
+]
+
+
+def test_init_weights_shapes_cover_every_kind():
+    """Each layer's tensors are shaped by its input, as the layers before it
+    produce it: conv 8×8 pad 1 → pool /2 → up ×2 → 5×5 stride 2 → 2·2·2."""
+    w = init_weights(EVERY_KIND, 64, seed=3)
+    shapes = {l: {p: a.shape for p, a in ps.items()} for l, ps in w.items()}
+    bn = lambda n: {"gamma": (n,), "beta": (n,), "mean": (n,), "var": (n,)}  # noqa: E731
+    assert shapes == {
+        "c": {"W": (3, 1, 3, 3), "b": (3,)},
+        "bn": bn(3),
+        "c2": {"W": (2, 3, 5, 5), "b": (2,)},
+        "bn2": bn(8),
+        "d": {"W": (8, 5), "b": (5,)},
+        "o": {"W": (5, 1), "b": (1,)},
+    }
+    assert all(a.dtype == np.float32 for ps in w.values() for a in ps.values())
+
+
+@pytest.mark.parametrize("entry", ["init_weights", "forward", "forward_cached"])
+def test_unknown_layer_kind_raises(entry):
+    specs = [LayerSpec("d", "dense", {"units": 2}), LayerSpec("x", "dens")]
+    x = np.zeros((3, 4), dtype=np.float32)
+    w = init_weights(specs[:1], 4)
+    call = {
+        "init_weights": lambda: init_weights(specs, 4),
+        "forward": lambda: forward(x, specs, w),
+        "forward_cached": lambda: forward_cached(x, specs, w),
+    }[entry]
+    with pytest.raises(ValueError, match="unknown layer kind 'dens'"):
+        call()
+
+
+@pytest.mark.parametrize("net", ["dis", "gen", "gan", "cv", "every_kind"])
+def test_forward_equals_forward_cached_inference(net):
+    """``forward`` is ``forward_cached(training=False)`` without the caches,
+    bitwise, on the four dcgan nets and on a batchnorm/maxpool/upsample
+    stack."""
+    from gan_deeplearning4j_spark.pipeline import GanPipeline
+
+    rng = np.random.default_rng(5)
+    if net == "every_kind":
+        specs, w, d = EVERY_KIND, init_weights(EVERY_KIND, 64, seed=3), 64
+        # non-trivial running statistics, so eval-mode batchnorm is exercised
+        for bn in ("bn", "bn2"):
+            n = len(w[bn]["mean"])
+            w[bn]["mean"] = rng.normal(0, 0.1, n).astype(np.float32)
+            w[bn]["var"] = rng.uniform(0.5, 2, n).astype(np.float32)
+    else:
+        g = GanPipeline.dcgan(base_filters=4)
+        g._classifier()
+        n = getattr(g, net)
+        specs, w, d = n.specs, n.weights, 2 if net in ("gen", "gan") else 784
+    x = rng.uniform(0, 1, (7, d))
+    want, _ = forward_cached(x, specs, w, training=False)
+    got = forward(x, specs, w)
+    assert got.dtype == want.dtype == np.float32
+    np.testing.assert_array_equal(got, want)
