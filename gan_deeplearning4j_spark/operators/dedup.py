@@ -19,10 +19,11 @@ from __future__ import annotations
 
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import fingerprint64, portable_hash60
+from .graph import checkpoint_round, round_rule
 from .relational import assert_small
 
 # Mersenne prime 2^31-1: modulus for the universal-hash family. 31-bit so
@@ -714,18 +715,23 @@ def simhash_portable_oracle(bits: int = 60, bands: int = 4) -> str:
     """
 
 
-def minhash_dedup(
-    df: DataFrame, text_col: str, id_col: str, threshold: float = 0.8,
+def minhash_verified_pairs(
+    df: DataFrame, text_col: str, id_col: str, threshold: float,
     num_hashes: int = 32, bands: int = 8,
 ) -> DataFrame:
-    """Full near-dedup: LSH candidates → Jaccard verify → keep min-id winner
-    per connected pair (single-link, one hop — ``dedup_clusters`` does the
-    full transitive closure).
+    """Near-duplicate edges ``(id_a, id_b, jaccard)``: MinHash-LSH
+    candidates, verified by Jaccard over each doc's hashed gram set, kept
+    at ``jaccard >= threshold``. The edge builder of ``minhash_dedup`` and
+    of ``dedup_clusters``' LSH path.
 
     One ``minhash_features`` pass feeds both the band join and the verify
     joins; the verify reads the already-computed gram-hash sets instead of
     re-deriving grams from text (``ngram_jaccard_hashed`` stays as the
-    standalone form for externally-supplied pairs).
+    standalone form for externally-supplied pairs). Jaccard over the
+    hashed sets is value-identical to the string-shingle form up to hash
+    collisions (~n²/2³¹ per pair; verified exactly equal — sets AND
+    values — at sf0.1; dedup_clusters' edge build measured 1.57 -> 1.23 s
+    at sf0.1 against the string-shingle verify).
 
     The features relation is materialized once via ``localCheckpoint``:
     three plan branches consume it (the band join and both verify joins),
@@ -736,7 +742,13 @@ def minhash_dedup(
     caches live in the CacheManager until explicitly unpersisted — on a
     shared session running many queries that's a leak. At cluster scale the
     same role is played by materializing features to storage once per
-    corpus."""
+    corpus.
+
+    The features are NOT pruned to candidate ids before the verify: the
+    r13 A/B measured the semi-join prune slower at every bench SF
+    (1.55 -> 1.71 s); on a cluster where candidate docs are a vanishing
+    fraction of the corpus the prune becomes the right call — see
+    OPTIMIZATION_r13.md for the recorded experiment."""
     feats = minhash_features(df, text_col, id_col, num_hashes).localCheckpoint(
         eager=True
     )
@@ -751,9 +763,22 @@ def minhash_dedup(
     )
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
     union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    verified = j.select(
+    return j.select(
         "id_a", "id_b", (inter / union).alias("jaccard")
     ).filter(F.col("jaccard") >= threshold)
+
+
+def minhash_dedup(
+    df: DataFrame, text_col: str, id_col: str, threshold: float = 0.8,
+    num_hashes: int = 32, bands: int = 8,
+) -> DataFrame:
+    """Full near-dedup: LSH candidates → Jaccard verify
+    (``minhash_verified_pairs``) → keep min-id winner per connected pair
+    (single-link, one hop — ``dedup_clusters`` does the full transitive
+    closure)."""
+    verified = minhash_verified_pairs(
+        df, text_col, id_col, threshold, num_hashes, bands
+    )
     # no distinct on losers: left_anti is set-semantic on the probe side
     # already, so deduplicating first would only add an exchange
     losers = verified.select(F.col("id_b").alias(id_col))
@@ -763,7 +788,6 @@ def minhash_dedup(
 def connected_components(
     edges: DataFrame, src: str = "id_a", dst: str = "id_b",
     max_iter: int = 20, mode: str = "prop",
-    broadcast_nodes_max: int = 10_000_000,
 ) -> DataFrame:
     """Connected components. Two interchangeable engines (identical
     output: (node, comp) for every node incident to an edge, comp = min
@@ -812,18 +836,17 @@ def connected_components(
     # its whole upstream subtree (LSH candidates + Jaccard verify in the
     # dedup pipeline) per round — measured 836 s vs ~150 s at the 100x
     # dense stress (27M edges, ~5 rounds re-running a 114 s verify)
-    n_und = Observation()
-    und = e.union(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    ).observe(
-        n_und, F.approx_count_distinct("a").alias("n")
-    ).localCheckpoint(eager=True)
+    und, seen = checkpoint_round(
+        e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b"))),
+        n=F.approx_count_distinct("a"),
+    )
     # The label table and the per-round neighbor-min table are both
-    # O(nodes) — broadcast them into the round's two joins while they fit
-    # an executor, shuffled joins above the threshold (the same
-    # automatic-fallback contract as pagerank_fixed's rank join). The
-    # threshold tests the NODE count (approx_count_distinct observed
-    # during the checkpoint job itself — no separate job): r13 tested
+    # O(nodes) — they take graph.round_rule's join hint: broadcast into
+    # the round's two joins while they fit an executor, shuffled joins
+    # above the threshold. Only the hint: every round is checkpointed
+    # anyway, for its convergence metric. The threshold tests the NODE
+    # count (approx_count_distinct observed during the checkpoint job
+    # itself — no separate job): r13 tested
     # the edge count as a free conservative bound, and the r14 sf1 spot
     # bench showed that conservatism is a cliff on dense graphs (edges
     # past the threshold with nodes far below it silently fell onto the
@@ -832,12 +855,7 @@ def connected_components(
     # for the CC loop — at that scale the win is all removed
     # exchange/task overhead; at 100 TB the broadcast skips shuffling
     # the edge list per round until nodes outgrow the threshold.
-    if n_und.get["n"] <= broadcast_nodes_max:
-        def label_join(vec: DataFrame) -> DataFrame:
-            return F.broadcast(vec)
-    else:
-        def label_join(vec: DataFrame) -> DataFrame:
-            return vec
+    label_join = round_rule(seen["n"]).hint
     converged = False
     labels: DataFrame | None = None
     for _ in range(max_iter):
@@ -875,13 +893,11 @@ def connected_components(
         # convergence detection rides the checkpoint job as an observed
         # metric (r14): the separate filter/limit/count probe was two
         # extra jobs per round of pure scheduling overhead
-        ch_obs = Observation()
-        new_labels = new_labels.observe(
-            ch_obs, F.count_if(F.col("__ch")).alias("ch")
-        ).localCheckpoint(eager=True)
-        changed = ch_obs.get["ch"]
+        new_labels, seen = checkpoint_round(
+            new_labels, ch=F.count_if(F.col("__ch"))
+        )
         labels = new_labels.drop("__ch")
-        if changed == 0:
+        if seen["ch"] == 0:
             converged = True
             break
     if not converged:
@@ -927,13 +943,13 @@ def _cc_star_contraction(
     Convergence = the (checkpointed, bounded) edge set is a fixed point,
     detected EXACTLY via count + one-sided exceptAll — no hash-signature
     shortcut that could stop early on a collision."""
-    n_obs = Observation()
-    E = (
+    # edge-set cardinality rides each checkpoint job as an observed
+    # metric (r14): the separate count jobs were pure scheduling overhead
+    E, seen = checkpoint_round(
         edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .observe(n_obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        .distinct(),
+        n=F.count(F.lit(1)),
     )
     # contract parity with mode="prop": a node whose ONLY edges are
     # self-loops is still "incident to an edge" and must come out as its
@@ -950,9 +966,7 @@ def _cc_star_contraction(
         )
         .select("node", F.col("node").alias("comp"))
     )
-    # edge-set cardinality rides each checkpoint job as an observed
-    # metric (r14): the separate count jobs were pure scheduling overhead
-    n_prev = n_obs.get["n"]
+    n_prev = seen["n"]
     converged = False
     for _ in range(max_iter):
         # ---- large-star: ∀u, m = min(Γ(u) ∪ {u}); emit (v, m) ∀v∈Γ(u), v>u
@@ -974,17 +988,15 @@ def _cc_star_contraction(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
         smin = dirhl.groupBy("u").agg(F.min("v").alias("__m"))
-        rn_obs = Observation()
-        E_new = (
+        E_new, seen = checkpoint_round(
             dirhl.join(smin, "u")
             .select(F.col("v").alias("u"), F.col("__m").alias("v"))
             .union(smin.select("u", F.col("__m").alias("v")))
             .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .observe(rn_obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .distinct(),
+            n=F.count(F.lit(1)),
         )
-        n_new = rn_obs.get["n"]
+        n_new = seen["n"]
         # exact fixed-point test: same cardinality + no edge of E_new
         # outside E (both are distinct sets, so this implies equality)
         if n_new == n_prev and E_new.exceptAll(E).limit(1).count() == 0:
@@ -1015,7 +1027,7 @@ def dedup_clusters(
     df: DataFrame, text_col: str, id_col: str, threshold: float = 0.5,
     exact_pairs: bool = False, num_hashes: int = 32, bands: int = 8,
     max_iter: int = 20, max_exact_rows: int = 25_000,
-    contract_exact: bool = True, cc_mode: str = "prop",
+    contract_exact: bool = True,
 ) -> DataFrame:
     """Full transitive near-dedup: similar pairs → connected components →
     (doc, cluster_id, cluster_size). Default edges come from MinHash-LSH
@@ -1040,9 +1052,9 @@ def dedup_clusters(
     the corpus (released immediately below), but skips the recursive call
     and the join-back.
 
-    ``cc_mode``: forwarded to connected_components — "prop" (min-label
-    propagation, O(diameter) rounds, default) or "logn" (star
-    contraction, O(log^2 n) rounds, for chain-shaped dup graphs)."""
+    Clustering is ``connected_components``' default min-label propagation,
+    which escalates to star contraction past ``max_iter`` rounds, so a
+    chain-shaped dup graph still gets exact clusters."""
     if contract_exact:
         # ONE shuffle of (id, text) keyed on the text: the window computes
         # the representative (min id) and the family size in the same pass
@@ -1052,15 +1064,13 @@ def dedup_clusters(
         # the family-existence probe rides the checkpoint job as an
         # observed metric (r14): the separate filter/limit/count probe
         # was two extra jobs of scheduling overhead per call
-        fam_obs = Observation()
-        base = (
+        base, seen = checkpoint_round(
             df.select(id_col, text_col)
             .withColumn("__rep", F.min(id_col).over(wt))
-            .withColumn("__grp_n", F.count("*").over(wt))
-            .observe(fam_obs, F.count_if(F.col("__grp_n") > 1).alias("fam"))
-            .localCheckpoint(eager=True)
+            .withColumn("__grp_n", F.count("*").over(wt)),
+            fam=F.count_if(F.col("__grp_n") > 1),
         )
-        if fam_obs.get["fam"] == 0:
+        if seen["fam"] == 0:
             # no exact-dup family anywhere: contraction is a no-op —
             # release the checkpointed probe relation (the plain path
             # below never touches it) and fall through on the original.
@@ -1086,7 +1096,7 @@ def dedup_clusters(
             reps, text_col, id_col, threshold,
             exact_pairs=exact_pairs, num_hashes=num_hashes, bands=bands,
             max_iter=max_iter, max_exact_rows=max_exact_rows,
-            contract_exact=False, cc_mode=cc_mode,
+            contract_exact=False,
         ).select(
             F.col(id_col).alias("__rep"), "cluster_id"
         )
@@ -1128,41 +1138,10 @@ def dedup_clusters(
             .filter(F.col("jaccard") >= threshold)
         )
     else:
-        # ONE featurize pass serves candidate generation AND the verify
-        # (r14, the minhash_dedup shape adopted): the former form
-        # re-shingled the corpus with STRING shingles for the Jaccard
-        # verify — a second pass of interpreted zip_with chains over
-        # text — while the featurize kernel had already computed each
-        # doc's distinct gram-hash set. Jaccard over the hashed sets is
-        # value-identical up to hash collisions (~n²/2³¹ per pair;
-        # verified exactly equal — sets AND values — at sf0.1, and the
-        # full oracle replica pins the cluster output at 3 SFs). Edge
-        # build measured 1.57 -> 1.23 s at sf0.1.
-        # Still NOT pruned to candidate ids before the verify: the r13
-        # A/B measured the semi-join prune slower at every bench SF
-        # (1.55 -> 1.71 s); on a cluster where candidate docs are a
-        # vanishing fraction of the corpus the prune becomes the right
-        # call — see OPTIMIZATION_r13.md for the recorded experiment.
-        feats = minhash_features(
-            df, text_col, id_col, num_hashes
-        ).localCheckpoint(eager=True)
-        cands = minhash_lsh_candidates(
-            df, text_col, id_col, num_hashes, bands, features=feats
+        pairs = minhash_verified_pairs(
+            df, text_col, id_col, threshold, num_hashes, bands
         )
-        sh = feats.select(F.col(id_col).alias("__id"), "__sh")
-        j = (
-            cands
-            .join(sh.withColumnsRenamed({"__id": "id_a", "__sh": "sh_a"}),
-                  "id_a")
-            .join(sh.withColumnsRenamed({"__id": "id_b", "__sh": "sh_b"}),
-                  "id_b")
-        )
-        inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-        union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-        pairs = j.select(
-            "id_a", "id_b", (inter / union).alias("jaccard")
-        ).filter(F.col("jaccard") >= threshold)
-    comp = connected_components(pairs, "id_a", "id_b", max_iter, mode=cc_mode)
+    comp = connected_components(pairs, "id_a", "id_b", max_iter)
     # size via a count window: one comp-keyed shuffle instead of a
     # groupBy + join-back pair over the same key
     wsz = Window.partitionBy("comp")

@@ -5,20 +5,79 @@ with its dedup-clustering consumers; this module holds the general-purpose
 iterative ops. Like the fixed-point ANN paths, PageRank here runs in an
 exact integer domain so a SQL oracle can replay it hash-for-hash — float
 PageRank sums diverge across engines at the ulp level after one iteration.
+
+Every iterative operator here and in operators/dedup.py runs its rounds
+through two helpers:
+
+- ``checkpoint_round`` materializes a frame (``localCheckpoint(eager=True)``)
+  and returns the ``observe`` metrics computed in that same job — a node
+  count, a seed, a convergence flag — so a round's decision costs no job
+  of its own.
+- ``round_rule`` maps an observed node count to the round's join hint and
+  checkpoint cadence. Up to ``BROADCAST_NODES_MAX`` nodes the O(nodes)
+  vector is broadcast into the round's join and the lineage is
+  materialized every ``CHECKPOINT_EVERY`` rounds (each broadcast build
+  materializes its level once inside the final job chain, so earlier
+  checkpoints are pure overhead at small round counts). Above it the join
+  is a plain shuffled join and every round is materialized: an
+  unmaterialized shuffled-join chain re-derives every prior round (the r6
+  dense-dedup stress measured that class of bug at 4x wall-clock).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, Window
+from typing import Callable, NamedTuple
+
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 PR_SCALE = 1_000_000          # rank fixed-point scale (ppm)
 PR_DAMP_NUM, PR_DAMP_DEN = 85, 100   # damping 0.85 as an exact ratio
 
+# Nodes up to which a round broadcasts its O(nodes) vector into the edge
+# join (one row per node, ~1e7 fits an executor), and the broadcast
+# rounds between lineage checkpoints.
+BROADCAST_NODES_MAX = 10_000_000
+CHECKPOINT_EVERY = 8
+
+
+def checkpoint_round(df: DataFrame, **metrics: Column) -> tuple[DataFrame, dict]:
+    """``localCheckpoint(eager=True)`` of ``df`` plus the named aggregate
+    ``metrics`` over its rows, observed in that same job: returns the
+    checkpointed frame and ``{name: value}``."""
+    obs = Observation()
+    df = df.observe(
+        obs, *(col.alias(name) for name, col in metrics.items())
+    ).localCheckpoint(eager=True)
+    return df, obs.get
+
+
+class Rounds(NamedTuple):
+    """A round rule: ``hint`` wraps the O(nodes) side of the round's join
+    (``F.broadcast`` or the identity); ``settle`` materializes every
+    ``every``-th round and always the last, so callers receive a
+    lineage-truncated relation."""
+    hint: Callable[[DataFrame], DataFrame]
+    every: int
+
+    def settle(self, df: DataFrame, it: int, iters: int) -> DataFrame:
+        if (it + 1) % self.every == 0 or it == iters - 1:
+            return df.localCheckpoint(eager=True)
+        return df
+
+
+def round_rule(n_nodes: int) -> Rounds:
+    """The rounds of a graph with ``n_nodes`` nodes: broadcast joins and a
+    checkpoint every ``CHECKPOINT_EVERY`` rounds up to
+    ``BROADCAST_NODES_MAX`` nodes, shuffled joins and a checkpoint every
+    round above it."""
+    if n_nodes <= BROADCAST_NODES_MAX:
+        return Rounds(F.broadcast, CHECKPOINT_EVERY)
+    return Rounds(lambda vec: vec, 1)
+
 
 def pagerank_fixed(
     edges: DataFrame, src: str = "src", dst: str = "dst", iters: int = 3,
-    broadcast_nodes_max: int = 10_000_000, checkpoint_every: int = 8,
 ) -> DataFrame:
     """Fixed-point PageRank over an UNDIRECTED view of ``edges``.
 
@@ -43,22 +102,12 @@ def pagerank_fixed(
     state here is one count, so the hot task is scan-bound, not
     memory-bound.
 
-    Iterations: rank_{k} is broadcast into the edge join while the node
-    count fits ``broadcast_nodes_max`` (approx_count_distinct collected
-    as an ``observe`` metric DURING the prep checkpoint job — no
+    Iterations follow ``round_rule`` (module docstring) on the node count
+    (approx_count_distinct observed DURING the prep checkpoint job — no
     separate count job, and no dense-graph cliff: the r13 edge-count
-    bound silently shuffled graphs whose nodes fit the threshold),
-    and the per-iteration lineage is left UNmaterialized between
-    checkpoints — each broadcast build materializes its level exactly
-    once inside the single final job chain, so intermediate
-    ``localCheckpoint`` rounds (one extra job + RDD write each) are pure
-    overhead at small ``iters`` (measured 3.0 -> 2.3 s for the 3-iter
-    headline). ``checkpoint_every`` bounds the nested-plan depth for
-    large ``iters``; the shuffled-join fallback above the broadcast
-    threshold OVERRIDES it and checkpoints EVERY round (an
-    unmaterialized shuffled-join chain re-derives every prior round —
-    the r6 dense-dedup stress measured that class of bug at 4x
-    wall-clock).
+    bound silently shuffled graphs whose nodes fit the threshold). Under
+    the broadcast threshold the deferred checkpoints measured 3.0 -> 2.3 s
+    for the 3-iter headline.
 
     Round 1 is join-free (r14 optimization pass): rank_0 is the
     constant PR_SCALE for every node, so the first rank join is the
@@ -83,22 +132,11 @@ def pagerank_fixed(
     # silently taking the shuffled + checkpoint-every-round path at
     # 27 s vs ~4 s broadcast. ±2% HLL error is irrelevant against an
     # order-of-magnitude memory threshold.)
-    n_und = Observation()
-    und_deg = und.withColumn(
-        "deg", F.count("*").over(Window.partitionBy("s"))
-    ).observe(
-        n_und, F.approx_count_distinct("s").alias("n")
-    ).localCheckpoint(eager=True)
-    ckpt_every = checkpoint_every
-    if n_und.get["n"] <= broadcast_nodes_max:
-        def rank_join(vec: DataFrame) -> DataFrame:
-            return F.broadcast(vec)
-    else:
-        def rank_join(vec: DataFrame) -> DataFrame:
-            return vec
-        # the caller's cadence is deliberately ignored here: every
-        # shuffled round MUST materialize (see docstring)
-        ckpt_every = 1
+    und_deg, seen = checkpoint_round(
+        und.withColumn("deg", F.count("*").over(Window.partitionBy("s"))),
+        n=F.approx_count_distinct("s"),
+    )
+    rule = round_rule(seen["n"])
     base = (PR_SCALE * (PR_DAMP_DEN - PR_DAMP_NUM)) // PR_DAMP_DEN
     ranks: DataFrame | None = None
     for it in range(iters):
@@ -109,7 +147,7 @@ def pagerank_fixed(
             )
         else:
             contrib = und_deg.join(
-                rank_join(ranks), und_deg.s == ranks.node
+                rule.hint(ranks), und_deg.s == ranks.node
             ).select(F.col("d"), F.expr("rank div deg").alias("c"))
         ranks = contrib.groupBy("d").agg(
             (
@@ -117,16 +155,12 @@ def pagerank_fixed(
                 + F.expr(f"({PR_DAMP_NUM} * sum(c)) div {PR_DAMP_DEN}")
             ).alias("rank")
         ).select(F.col("d").alias("node"), "rank")
-        # final round always materializes (the eager-iterative contract:
-        # callers receive a lineage-truncated relation)
-        if (it + 1) % ckpt_every == 0 or it == iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+        ranks = rule.settle(ranks, it, iters)
     return ranks
 
 
 def ppr_fixed(
     edges: DataFrame, src: str = "src", dst: str = "dst", iters: int = 3,
-    broadcast_nodes_max: int = 10_000_000,
 ) -> DataFrame:
     """Personalized PageRank (Haveliwala WWW'02) from the max-degree
     seed node, fixed-point int64 — the localized variant of
@@ -143,10 +177,10 @@ def ppr_fixed(
 
     Scale shape: identical to pagerank_fixed — degree folded into the
     edge list once, per iteration one src-keyed join + one dst-keyed
-    aggregate, rank table checkpointed per round, broadcast only under
-    the node-count threshold. The nodes table rides along so zero-mass
-    nodes persist (a left join, not an inner one: the seed must receive
-    its restart mass even in rounds where nothing flows into it).
+    aggregate, joins and checkpoints per ``round_rule`` on the node
+    count. The nodes table rides along so zero-mass nodes persist (a
+    left join, not an inner one: the seed must receive its restart mass
+    even in rounds where nothing flows into it).
 
     Round 1 is O(seed-degree) (r14 optimization pass): rank_0 is zero
     everywhere except the seed, so the first rank join degenerates to a
@@ -167,15 +201,12 @@ def ppr_fixed(
     # was pure scheduling overhead (r14; node ids are nonnegative in
     # every caller, and an exotic negative id would fail loudly in the
     # ANSI negation rather than mis-seed)
-    seed_obs = Observation()
-    und_deg = und.withColumn(
-        "deg", F.count("*").over(Window.partitionBy("s"))
-    ).observe(
-        seed_obs,
-        F.max(F.struct(F.col("deg").alias("dg"),
-                       (-F.col("s")).alias("ns"))).alias("mx"),
-    ).localCheckpoint(eager=True)
-    mx = seed_obs.get["mx"]
+    und_deg, seen = checkpoint_round(
+        und.withColumn("deg", F.count("*").over(Window.partitionBy("s"))),
+        mx=F.max(F.struct(F.col("deg").alias("dg"),
+                          (-F.col("s")).alias("ns"))),
+    )
+    mx = seen["mx"]
     # empty edge list: no seed exists — the NULL literal makes every
     # seed comparison false, reproducing the pre-r14 empty-result
     # behavior (empty nodes table -> empty ranks) instead of crashing
@@ -183,20 +214,11 @@ def ppr_fixed(
     seed = F.lit(seed_node).cast("long")
     # node count observed during the nodes checkpoint job itself (r14:
     # no separate count job — same discipline as pagerank_fixed)
-    n_obs = Observation()
-    nodes = (
-        und_deg.select(F.col("s").alias("node")).distinct()
-        .observe(n_obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+    nodes, seen = checkpoint_round(
+        und_deg.select(F.col("s").alias("node")).distinct(),
+        n=F.count(F.lit(1)),
     )
-    if n_obs.get["n"] <= broadcast_nodes_max:
-        def rank_join(vec: DataFrame) -> DataFrame:
-            return F.broadcast(vec)
-        checkpoint_every = 8
-    else:
-        def rank_join(vec: DataFrame) -> DataFrame:
-            return vec
-        checkpoint_every = 1
+    rule = round_rule(seen["n"])
     base = (PR_SCALE * (PR_DAMP_DEN - PR_DAMP_NUM)) // PR_DAMP_DEN
     ranks: DataFrame | None = None
     for it in range(iters):
@@ -209,18 +231,16 @@ def ppr_fixed(
             )
         else:
             contrib = und_deg.join(
-                rank_join(ranks), und_deg.s == ranks.node
+                rule.hint(ranks), und_deg.s == ranks.node
             ).select(F.col("d"), F.expr("rank div deg").alias("c"))
         inflow = contrib.groupBy("d").agg(
             F.expr(f"({PR_DAMP_NUM} * sum(c)) div {PR_DAMP_DEN}")
             .alias("flow")
         )
-        # inflow is O(nodes) — broadcast it into the left join under the
-        # same threshold as the rank join (removes both of the join's
-        # shuffles per iteration); intermediate checkpoints are deferred
-        # under broadcast mode exactly as in pagerank_fixed
+        # inflow is O(nodes) — it takes the rank join's hint (a broadcast
+        # removes both of the left join's shuffles per iteration)
         ranks = (
-            nodes.join(rank_join(inflow), nodes.node == inflow.d, "left")
+            nodes.join(rule.hint(inflow), nodes.node == inflow.d, "left")
             .select(
                 "node",
                 (
@@ -230,8 +250,7 @@ def ppr_fixed(
                 ).cast("long").alias("rank"),
             )
         )
-        if (it + 1) % checkpoint_every == 0 or it == iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+        ranks = rule.settle(ranks, it, iters)
     return ranks
 
 
@@ -303,7 +322,6 @@ HITS_SCALE = 1_000_000        # hub/authority fixed-point scale
 def hits_fixed(
     edges: DataFrame, src: str = "c", dst: str = "s",
     weight: str = "w", rounds: int = 2,
-    broadcast_nodes_max: int = 10_000_000,
 ) -> tuple[DataFrame, DataFrame]:
     """HITS hubs & authorities (Kleinberg 1999) on a weighted directed
     edge list, max-normalized to HITS_SCALE after every half-step so
@@ -315,13 +333,14 @@ def hits_fixed(
     Scale shape: each half-step joins the e6 score vector into one
     edge-list aggregate — O(rounds) joins, no re-shuffle of the edge
     list (materialized once); the 1-row max normalizer is a broadcast
-    cross join. The score-vector join is broadcast ONLY while the
-    vector (one row per node on that side) fits an executor: a cheap
-    approx-distinct probe on the materialized edge list picks the hint
-    when both sides are under ``broadcast_nodes_max`` (~1e7 default)
-    and falls back to a plain shuffled join above it — measured at
-    58.7M edges the broadcast path was the bottleneck (SCALE.md), so
-    the fallback is automatic rather than a documented caveat. Weights
+    cross join. The score-vector join takes ``round_rule``'s hint on the
+    larger side's approx-distinct node count (observed on the
+    materialized edge list): broadcast while the vector fits an
+    executor, a plain shuffled join above ``BROADCAST_NODES_MAX`` —
+    measured at 58.7M edges the broadcast path was the bottleneck
+    (SCALE.md), so the fallback is automatic rather than a documented
+    caveat. No round is checkpointed: each half-step reads the
+    materialized edge list, and ``rounds`` is small. Weights
     must be positive: an all-zero (or null-cast) weight column would
     make the max-normalizer divide by zero and propagate nulls through
     every later round, so it is rejected loudly on entry. int64 bound:
@@ -333,29 +352,22 @@ def hits_fixed(
     # the probe (weight validity + the per-side node counts that decide
     # the join strategy below) rides the edge-materialization job as an
     # observed metric set (r14) — no separate probe job
-    probe_obs = Observation()
-    e = edges.select(
-        F.col(src).alias("c"), F.col(dst).alias("s"),
-        F.col(weight).cast("long").alias("w"),
-    ).observe(
-        probe_obs,
-        F.count_if(F.col("w").isNull() | (F.col("w") <= 0)).alias("bad"),
-        F.approx_count_distinct("c").alias("nc"),
-        F.approx_count_distinct("s").alias("ns"),
-    ).localCheckpoint(eager=True)
-    probe = probe_obs.get
+    e, probe = checkpoint_round(
+        edges.select(
+            F.col(src).alias("c"), F.col(dst).alias("s"),
+            F.col(weight).cast("long").alias("w"),
+        ),
+        bad=F.count_if(F.col("w").isNull() | (F.col("w") <= 0)),
+        nc=F.approx_count_distinct("c"),
+        ns=F.approx_count_distinct("s"),
+    )
     if probe["bad"]:
         raise ValueError(
             f"hits_fixed: {probe['bad']} edges have null/zero/negative "
             f"{weight!r} — weights must be positive (a degenerate weight "
             "column would null out the max-normalizer)"
         )
-    if max(probe["nc"], probe["ns"]) <= broadcast_nodes_max:
-        def score_join(vec: DataFrame) -> DataFrame:
-            return F.broadcast(vec)
-    else:
-        def score_join(vec: DataFrame) -> DataFrame:
-            return vec
+    score_join = round_rule(max(probe["nc"], probe["ns"])).hint
     h = e.select("c").distinct().select(
         "c", F.lit(HITS_SCALE).cast("long").alias("h")
     )
@@ -414,7 +426,6 @@ def co_purchase_pairs(lineitem: DataFrame, min_orders: int = 2) -> DataFrame:
 
 def katz_scores(
     pairs: DataFrame, a: str = "p1", b: str = "p2", iters: int = 3,
-    broadcast_nodes_max: int = 10_000_000, checkpoint_every: int = 8,
 ) -> DataFrame:
     """Katz centrality scores (Katz 1953) over one-directional pairs:
     score = 1e6 + (sum of neighbor scores) div 2 per iteration, exact
@@ -427,12 +438,8 @@ def katz_scores(
     Scale shape (r14: the pagerank_fixed contract propagated — r13
     verdict ask #8): the undirected edge list is materialized once, its
     approximate node count (``approx_count_distinct``) observed during
-    that job deciding the join strategy; the O(nodes) score vector is
-    broadcast into the per-iteration edge join while that count is at
-    most ``broadcast_nodes_max``, with lineage left unmaterialized
-    between ``checkpoint_every`` rounds, and falls back to a shuffled
-    join with per-round checkpoints above it (an unmaterialized
-    shuffled-join chain re-derives prior rounds — the r6 4x lesson).
+    that job; the O(nodes) score vector's join and the checkpoint
+    cadence follow ``round_rule`` on that count (module docstring).
     Round 1 is join-free: score_0 is the constant 1e6, so
     score_1(u) = 1e6 + (deg(u)*1e6) div 2 straight off the edge list
     (deg*1e6 is even, so div 2 is exact — identical to the summed
@@ -441,24 +448,17 @@ def katz_scores(
     # node count (the broadcast vector is O(nodes)), observed during the
     # materialization job — see pagerank_fixed on why the threshold must
     # test nodes, not the conservative edge-count bound
-    n_obs = Observation()
-    e = pr.select(F.col("p1").alias("u"), F.col("p2").alias("v")).unionByName(
-        pr.select(F.col("p2").alias("u"), F.col("p1").alias("v"))
-    ).observe(
-        n_obs, F.approx_count_distinct("u").alias("n")
-    ).localCheckpoint(eager=True)
+    e, seen = checkpoint_round(
+        pr.select(F.col("p1").alias("u"), F.col("p2").alias("v")).unionByName(
+            pr.select(F.col("p2").alias("u"), F.col("p1").alias("v"))
+        ),
+        n=F.approx_count_distinct("u"),
+    )
     if iters < 1:
         return e.select(F.col("u").alias("node")).distinct().withColumn(
             "score", F.lit(1_000_000).cast("long")
         )
-    ckpt_every = checkpoint_every
-    if n_obs.get["n"] <= broadcast_nodes_max:
-        def score_join(vec: DataFrame) -> DataFrame:
-            return F.broadcast(vec)
-    else:
-        def score_join(vec: DataFrame) -> DataFrame:
-            return vec
-        ckpt_every = 1
+    rule = round_rule(seen["n"])
     x: DataFrame | None = None
     for it in range(iters):
         if x is None:
@@ -471,17 +471,14 @@ def katz_scores(
             )
         else:
             x = (
-                e.join(score_join(x), e.v == x.node)
+                e.join(rule.hint(x), e.v == x.node)
                 .groupBy(F.col("u").alias("node"))
                 .agg(
                     (F.lit(1_000_000) + F.expr("sum(score) div 2"))
                     .cast("long").alias("score")
                 )
             )
-        # truncate lineage on cadence (final round always materializes —
-        # same eager-iterative contract as pagerank_fixed)
-        if (it + 1) % ckpt_every == 0 or it == iters - 1:
-            x = x.localCheckpoint(eager=True)
+        x = rule.settle(x, it, iters)
     return x
 
 
@@ -512,18 +509,16 @@ def sssp_weighted(
                     (F.col("dist") + F.col("w")).alias("dist"))
             .groupBy("node").agg(F.min("dist").alias("dist"))
         )
-        imp_obs = Observation()
-        improved = (
+        # frontier emptiness observed during the checkpoint job (r14) —
+        # the separate isEmpty probe was an extra job per round
+        improved, seen = checkpoint_round(
             nxt.join(best.select("node", F.col("dist").alias("old")),
                      "node", "left")
             .filter(F.col("old").isNull() | (F.col("dist") < F.col("old")))
-            .select("node", "dist")
-            .observe(imp_obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .select("node", "dist"),
+            n=F.count(F.lit(1)),
         )
-        # frontier emptiness observed during the checkpoint job (r14) —
-        # the separate isEmpty probe was an extra job per round
-        if imp_obs.get["n"] == 0:
+        if seen["n"] == 0:
             break
         best = (
             best.unionByName(improved)

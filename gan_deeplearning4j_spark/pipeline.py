@@ -17,8 +17,9 @@ Re-expression of the reference's distributed adversarial training:
   one task per worker, no shuffle), each task fitting its shard of every
   round and returning its trained tensors as one float32 buffer; the reduce
   side is a fixed-order float64 mean of the N buffers in the driver.
-  ``fit_distributed`` runs the same local fit and reduce over a DataFrame's
-  rows (``repartition(n).mapInArrow``) for inputs that live in Spark.
+  ``fit_distributed`` collects a DataFrame's rows to the driver in one
+  Arrow job and runs them as a one-round ``fit_rounds``, for inputs that
+  live in Spark.
 - J1 weight sync    → ``copy_weights_dict`` (name-mapped parameter copy,
   java:429-460/:474-510/:516-542); the DataFrame form lives in
   operators/weights.py.
@@ -55,7 +56,6 @@ from typing import Iterator
 
 import numpy as np
 import pyarrow as pa
-from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -184,8 +184,7 @@ class Network:
     lr_by_layer: dict[str, float]
 
 
-# one row per worker fit; ``round`` indexes the job's rounds (0 for a
-# DataFrame round)
+# one row per worker fit; ``round`` indexes the job's rounds
 _FIT_DDL = "round int, worker int, loss double, params binary"
 _FIT_SCHEMA = pa.schema([("round", pa.int32()), ("worker", pa.int32()),
                          ("loss", pa.float64()), ("params", pa.binary())])
@@ -320,15 +319,14 @@ def fit_distributed(
     seed: int = DEFAULT_SEED,
 ) -> float:
     """One averaging round over a DataFrame's rows, for inputs that live in
-    Spark (micro-batches of ``streaming.train``); driver-held batches go
-    through ``fit_rounds``.
+    Spark (micro-batches of ``streaming.train``).
 
-    ``repartition(n_workers)`` deals the rows round-robin into N equal
-    shards; it is a user-sized exchange, so AQE never coalesces it and the
-    N local fits run as N tasks, each a ``mapInArrow`` kernel that reads its
-    shard as two ``(n, d)`` arrays and runs ``_fit_shard`` with its
-    partition id as the worker. The starting weights ride a broadcast; the
-    reduce (``_reduce_round``) is the one ``fit_rounds`` uses.
+    The rows come to the driver in one ``toArrow()`` job, become two
+    ``(n, d)`` arrays (``list_to_matrix``) and run as a one-round
+    ``fit_rounds``: the same kernel, deal (worker ``w`` fits rows
+    ``w::n_workers``) and reduce as the pipeline's driver-held batches.
+    The driver holds one round's rows, as it does for those batches; a
+    streaming micro-batch is bounded by its trigger.
 
     Every round starts RMSProp from an empty cache on every worker, where
     the reference's ParameterAveragingTrainingMaster averages the updater
@@ -342,26 +340,9 @@ def fit_distributed(
     Returns the mean final local loss across workers. Updates net.weights
     in place.
     """
-    specs, lr_by_layer = net.specs, net.lr_by_layer
-    bc_w = df.sparkSession.sparkContext.broadcast(net.weights)
-
-    def local_fit(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        batches = [b for b in batches if b.num_rows]
-        if not batches:
-            return  # fewer rows than workers: this shard sits the round out
-        shard = pa.Table.from_batches(batches)
-        x, y = (
-            list_to_matrix(shard.column(c).combine_chunks()).astype(np.float32)
-            for c in (features_col, label_col)
-        )
-        worker = TaskContext.get().partitionId()
-        fit = _fit_shard(Network(specs, bc_w.value, lr_by_layer), x, y, worker,
-                         local_steps, batch_size, seed)
-        yield _fit_rows([(0, worker, *fit)])
-
-    rows = df.repartition(n_workers).mapInArrow(local_fit, _FIT_DDL).collect()
-    bc_w.unpersist()
-    return _reduce_round(net, rows)
+    rows = df.select(features_col, label_col).toArrow()
+    x, y = (list_to_matrix(rows.column(c).combine_chunks()) for c in (features_col, label_col))
+    return fit_rounds(df.sparkSession, [(net, x, y)], n_workers, local_steps, batch_size, seed)[0]
 
 
 # ---------------------------------------------------------------------------

@@ -2228,32 +2228,28 @@ def q_k_core_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # their checkpoint jobs as observed metrics (r14: the separate
     # limit/count probes were 4 extra jobs per peeling round — ~40 jobs
     # over the data-driven ~10 rounds at sf0.1)
-    from pyspark.sql import Observation
+    from .operators.graph import checkpoint_round
 
     for _ in range(100):  # safety cap far above the data-driven ~10 rounds
         und = edges.select(F.col("p1").alias("node")).union(
             edges.select(F.col("p2").alias("node"))
         )
-        n_bad = Observation()
-        bad = (
+        bad, seen = checkpoint_round(
             und.groupBy("node").agg(F.count("*").alias("deg"))
             .filter(F.col("deg") < _KCORE_K)
-            .select("node")
-            .observe(n_bad, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .select("node"),
+            n=F.count(F.lit(1)),
         )
-        if n_bad.get["n"] == 0:
+        if seen["n"] == 0:
             break
-        n_edges = Observation()
-        edges = (
+        edges, seen = checkpoint_round(
             edges.join(
                 bad.withColumnRenamed("node", "p1"), "p1", "left_anti"
             )
-            .join(bad.withColumnRenamed("node", "p2"), "p2", "left_anti")
-            .observe(n_edges, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
+            .join(bad.withColumnRenamed("node", "p2"), "p2", "left_anti"),
+            n=F.count(F.lit(1)),
         )
-        if n_edges.get["n"] == 0:
+        if seen["n"] == 0:
             break
     und = edges.select(F.col("p1").alias("node")).union(
         edges.select(F.col("p2").alias("node"))

@@ -7,10 +7,11 @@ shard, reduce = element-wise mean of the workers' parameter buffers, with the
 averaged weights carried across micro-batches in the driver-held Network —
 exactly the state the reference's TrainingMaster holds between `fit` calls.
 
-Scale shape: the per-batch work is ``fit_distributed`` (one mapInArrow task
-per round-robin worker shard — executors never see the full stream, and each
-returns one float32 buffer), the weight state is O(model), and the stream
-source provides backpressure/checkpointing. This is
+Scale shape: the per-batch work is ``fit_distributed`` (the micro-batch's
+rows collected to the driver in one Arrow job, then one ``fit_rounds`` task
+per worker fitting rows ``w::n`` and returning one float32 buffer — no task
+ever sees more than one micro-batch), the weight state is O(model), and the
+stream source provides backpressure/checkpointing. This is
 the `foreachBatch` variant SURVEY §2.9 O4 defers: deterministic driver loop
 first, streaming facade on top.
 """

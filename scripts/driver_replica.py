@@ -30,6 +30,11 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
+# the Python workers the session starts import the package too, whatever
+# directory the script is started from
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    p for p in (REPO, os.environ.get("PYTHONPATH")) if p
+)
 import duckdb
 from pyspark.sql import SparkSession
 

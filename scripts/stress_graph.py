@@ -89,7 +89,11 @@ def main() -> int:
         # the shuffled-join fallback at this scale (the past-the-cliff
         # stress row; hash-equality of the two paths is pinned in
         # tests/test_operators.py)
-        bc_max = int(os.environ.get("SPARK_GRAFT_HITS_BCMAX", 10_000_000))
+        from gan_deeplearning4j_spark.operators import graph as G
+
+        bc_max = int(os.environ.get("SPARK_GRAFT_HITS_BCMAX",
+                                    G.BROADCAST_NODES_MAX))
+        G.BROADCAST_NODES_MAX = bc_max
         # Loud heap guard (SCALE.md round-8 note): in single-JVM local
         # mode the checkpointed 58.7M-edge list plus per-half-step join
         # buffers starve an 8 g heap — the broadcast path crawled and the
@@ -109,9 +113,7 @@ def main() -> int:
                 "or fewer SPARK_GRAFT_STRESS_COPIES."
             )
         t0 = time.perf_counter()
-        auth, hub = hits_fixed(
-            big, "c", "s", "w", rounds=2, broadcast_nodes_max=bc_max
-        )
+        auth, hub = hits_fixed(big, "c", "s", "w", rounds=2)
         rows = auth.count() + hub.count()
         dt = time.perf_counter() - t0
         print(f"hits x{copies_n} (bc_max={bc_max}): edges={n} -> "

@@ -41,14 +41,11 @@ SLOW_TESTS = {
     "test_io.py::test_python_streaming_datasource_matches_batch",
     "test_io.py::test_sharded_jsonl_sink_two_phase_commit",
     "test_operators.py::test_approx_distinct_within_rsd",
-    "test_operators.py::test_connected_components_broadcast_fallback_identical",
     "test_operators.py::test_connected_components_logn_deep_chain",
     "test_operators.py::test_connected_components_logn_matches_prop",
     "test_operators.py::test_connected_components_prop_escalates_past_max_iter",
-    "test_operators.py::test_dedup_clusters_cc_mode_logn_identical",
     "test_operators.py::test_dedup_clusters_contract_exact_identical_output",
     "test_operators.py::test_dedup_clusters_lsh_matches_exact",
-    "test_operators.py::test_hits_fixed_shuffle_fallback_matches_broadcast",
     "test_operators.py::test_hyperplane_bits_udf_matches_sql_form",
     "test_operators.py::test_ivf_topk_stable_under_repartition",
     "test_operators.py::test_ivfpq_topk_recall_and_pruning",

@@ -391,21 +391,6 @@ def test_connected_components_logn_deep_chain(spark):
     assert {r["node"] for r in out} == set(range(1024))
 
 
-def test_dedup_clusters_cc_mode_logn_identical(spark, sf_dir):
-    """dedup_clusters(cc_mode='logn') is a drop-in: identical
-    (doc, cluster, size) rows to the default propagation engine on the
-    planted near-dups."""
-    from gan_deeplearning4j_spark.operators.dedup import dedup_clusters
-
-    docs = load_table(spark, sf_dir, "documents")
-    base = {tuple(r) for r in
-            dedup_clusters(docs, "text", "doc_id", 0.5).collect()}
-    logn = {tuple(r) for r in
-            dedup_clusters(docs, "text", "doc_id", 0.5,
-                           cc_mode="logn").collect()}
-    assert base == logn
-
-
 def test_dedup_clusters_lsh_matches_exact(spark, sf_dir):
     """The LSH-edged cluster path must agree with the exact-pair path on the
     planted testdata near-dups (recall 1 at threshold 0.5 here)."""
@@ -1196,16 +1181,6 @@ def test_pagerank_fixed_hand_graph(spark):
     expect = {1: 936250, 2: 1127500, 3: 936250}
     assert run(edges) == expect
     assert run(edges.repartition(5)) == expect
-    # past the broadcast threshold the rank join falls back to a plain
-    # shuffled join with IDENTICAL ranks (int64 arithmetic is join-
-    # strategy invariant) — same automatic-fallback contract as HITS
-    shuffled = {
-        r["node"]: r["rank"]
-        for r in pagerank_fixed(
-            edges, iters=2, broadcast_nodes_max=0
-        ).collect()
-    }
-    assert shuffled == expect
 
 
 def test_hll_sketch_merge_consistency(spark, sf_dir):
@@ -1431,41 +1406,6 @@ def test_hits_fixed_rejects_degenerate_weights(spark):
         hits_fixed(nulls, "c", "s", "w")
 
 
-def test_hits_fixed_shuffle_fallback_matches_broadcast(spark):
-    """Past the broadcast_nodes_max probe threshold the score-vector join
-    must drop the broadcast hint (plain shuffled join) and still produce
-    IDENTICAL e6 scores — the 100x behavior is automatic, not documented
-    (VERDICT r7 #4)."""
-    import random
-
-    from gan_deeplearning4j_spark.operators.graph import hits_fixed
-
-    rng = random.Random(8)
-    edges = spark.createDataFrame(
-        [(rng.randrange(40), 100 + rng.randrange(30), 1 + rng.randrange(5))
-         for _ in range(200)],
-        "c long, s long, w long",
-    )
-
-    def run(df_pair):
-        auth, hub = df_pair
-        return (
-            sorted((r["node"], r["score_e6"]) for r in auth.collect()),
-            sorted((r["node"], r["score_e6"]) for r in hub.collect()),
-        )
-
-    bc = hits_fixed(edges, "c", "s", "w", rounds=2)
-    sh = hits_fixed(edges, "c", "s", "w", rounds=2, broadcast_nodes_max=0)
-    # the fallback plan really dropped the hint on the score join: only
-    # the 1-row normalizer broadcast remains (rendered as
-    # `strategy=broadcast` on the optimized plan's Join nodes)
-    plan_bc = bc[0]._jdf.queryExecution().optimizedPlan().toString()
-    plan_sh = sh[0]._jdf.queryExecution().optimizedPlan().toString()
-    assert plan_bc.count("strategy=broadcast") > plan_sh.count(
-        "strategy=broadcast")
-    assert run(bc) == run(sh)
-
-
 def test_apply_bpe_matches_trainer_final_symbols(spark):
     """The apply path replays the merge table over arbitrary words; on the
     training vocabulary itself it must reproduce the trainer's final
@@ -1599,44 +1539,149 @@ def test_token_spans_rejects_bad_shards(spark, sf_dir):
         token_spans(docs, shards=0)
 
 
-def test_connected_components_broadcast_fallback_identical(spark):
-    """r13 optimization pin: the propagation rounds broadcast the label
-    and neighbor-min tables under the edge-count threshold; above it
-    (forced here with broadcast_nodes_max=0) the shuffled-join fallback
-    must produce IDENTICAL (node, comp) labels."""
+# one fixed small graph for the iterative operators: a 4-cycle with a
+# 2-tail (a 6-node component) plus a separate 2-node component
+_PIN_EDGES = [(1, 2), (2, 3), (3, 4), (4, 1), (2, 5), (5, 6), (7, 8)]
+
+
+def _fallback_cases(spark):
+    """operator name → a call returning its result frames (uncollected,
+    so a plan can still be read)."""
     import random
 
+    from gan_deeplearning4j_spark.operators import graph as G
     from gan_deeplearning4j_spark.operators.dedup import connected_components
 
+    rng = random.Random(8)
+    hits_edges = spark.createDataFrame(
+        [(rng.randrange(40), 100 + rng.randrange(30), 1 + rng.randrange(5))
+         for _ in range(200)],
+        "c long, s long, w long",
+    )
     rng = random.Random(13)
-    edges = spark.createDataFrame(
+    cc_edges = spark.createDataFrame(
         [(rng.randrange(80), rng.randrange(80)) for _ in range(90)],
         "id_a long, id_b long",
     )
-    bcast = {(r["node"], r["comp"])
-             for r in connected_components(edges).collect()}
-    shuffled = {(r["node"], r["comp"])
-                for r in connected_components(
-                    edges, broadcast_nodes_max=0).collect()}
-    assert bcast == shuffled and len(bcast) > 0
+    path = spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long")
+    pairs = spark.createDataFrame(_PIN_EDGES, "p1 long, p2 long")
+    return {
+        "pagerank_fixed": lambda: [G.pagerank_fixed(path, iters=2)],
+        "ppr_fixed": lambda: [G.ppr_fixed(pairs.toDF("src", "dst"), iters=4)],
+        "katz_scores": lambda: [G.katz_scores(pairs, iters=4)],
+        "hits_fixed": lambda: list(G.hits_fixed(hits_edges, rounds=2)),
+        "connected_components": lambda: [connected_components(cc_edges)],
+    }
 
 
-def test_pagerank_checkpoint_cadence_invariant(spark):
-    """r13 optimization pin: ranks are invariant to the checkpoint
-    cadence — the deferred-materialization chain (checkpoint_every=8
-    default) must equal per-round checkpointing (checkpoint_every=1)
-    bit-for-bit (int64 arithmetic is materialization-invariant)."""
-    from gan_deeplearning4j_spark.operators.graph import pagerank_fixed
+@pytest.mark.parametrize("op", [
+    "pagerank_fixed", "ppr_fixed", "katz_scores",
+    # >= 7 s each: the slow tier, where their single-operator tests were
+    pytest.param("hits_fixed", marks=pytest.mark.slow),
+    pytest.param("connected_components", marks=pytest.mark.slow),
+])
+def test_shuffled_fallback_matches_broadcast(spark, monkeypatch, op):
+    """Past BROADCAST_NODES_MAX (forced here to 0) each iterative operator
+    drops the broadcast hint on its O(nodes) vector join, falls back to a
+    plain shuffled join, and returns IDENTICAL rows — int64 arithmetic is
+    join-strategy invariant, and the fallback is automatic rather than a
+    documented caveat."""
+    from gan_deeplearning4j_spark.operators import graph as G
+
+    run = _fallback_cases(spark)[op]
+    bcast = run()
+    monkeypatch.setattr(G, "BROADCAST_NODES_MAX", 0)
+    shuffled = run()
+    if op == "hits_fixed":
+        # hits checkpoints no round, so its plan still shows the hint:
+        # only the 1-row normalizer broadcast remains on the fallback
+        # (rendered as `strategy=broadcast` on the optimized Join nodes)
+        def hints(df):
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            return plan.count("strategy=broadcast")
+        assert hints(bcast[0]) > hints(shuffled[0])
+    got = [sorted(tuple(r) for r in df.collect()) for df in shuffled]
+    want = [sorted(tuple(r) for r in df.collect()) for df in bcast]
+    assert got == want and all(want)
+
+
+@pytest.mark.parametrize("op", ["pagerank_fixed", "ppr_fixed", "katz_scores"])
+def test_checkpoint_cadence_invariant(spark, monkeypatch, op):
+    """r13 optimization pin: results are invariant to the checkpoint
+    cadence — the deferred-materialization chain (CHECKPOINT_EVERY = 8)
+    must equal per-round checkpointing (CHECKPOINT_EVERY = 1) bit-for-bit
+    (int64 arithmetic is materialization-invariant)."""
+    from gan_deeplearning4j_spark.operators import graph as G
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 1), (2, 5)], "src long, dst long"
     )
-    deferred = {r["node"]: r["rank"]
-                for r in pagerank_fixed(edges, iters=4).collect()}
-    eager = {r["node"]: r["rank"]
-             for r in pagerank_fixed(
-                 edges, iters=4, checkpoint_every=1).collect()}
+    run = {
+        "pagerank_fixed": lambda: G.pagerank_fixed(edges, iters=4),
+        "ppr_fixed": lambda: G.ppr_fixed(edges, iters=4),
+        "katz_scores": lambda: G.katz_scores(edges, "src", "dst", iters=4),
+    }[op]
+    deferred = {tuple(r) for r in run().collect()}
+    monkeypatch.setattr(G, "CHECKPOINT_EVERY", 1)
+    eager = {tuple(r) for r in run().collect()}
     assert deferred == eager and len(deferred) == 5
+
+
+def _pin_runs(spark):
+    """operator name → a call that runs it to a collected result."""
+    from gan_deeplearning4j_spark.operators import graph as G
+    from gan_deeplearning4j_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame(_PIN_EDGES, "p1 long, p2 long")
+    edges = pairs.toDF("src", "dst")
+    weighted = spark.createDataFrame(
+        [(a, 10 + b, 1 + (a + b) % 3) for a, b in _PIN_EDGES],
+        "c long, s long, w long",
+    )
+    und = spark.createDataFrame(
+        [(a, b, 1 + (a * b) % 4) for a, b in _PIN_EDGES]
+        + [(b, a, 1 + (a * b) % 4) for a, b in _PIN_EDGES],
+        "node long, nb long, w long",
+    )
+    seeds = spark.createDataFrame([(1,)], "node long")
+    return {
+        "pagerank_fixed": lambda: G.pagerank_fixed(edges, iters=3).collect(),
+        "ppr_fixed": lambda: G.ppr_fixed(edges, iters=3).collect(),
+        "katz_scores": lambda: G.katz_scores(pairs, iters=3).collect(),
+        "hits_fixed": lambda: [
+            df.collect() for df in G.hits_fixed(weighted, rounds=2)
+        ],
+        "connected_components": lambda: connected_components(
+            pairs.toDF("id_a", "id_b")
+        ).collect(),
+        "sssp_weighted": lambda: G.sssp_weighted(
+            und.localCheckpoint(eager=True), seeds, rounds=8
+        ).collect(),
+    }
+
+
+@pytest.mark.parametrize("op, jobs", [
+    ("pagerank_fixed", 9),
+    ("ppr_fixed", 14),
+    ("katz_scores", 8),
+    ("hits_fixed", 38),
+    ("connected_components", 16),
+    ("sssp_weighted", 37),
+])
+def test_iterative_operator_job_count_pinned(spark, op, jobs):
+    """Each iterative graph operator, run to a collected result on one
+    fixed small graph, takes a pinned number of Spark jobs: a round that
+    gains a materialization, a probe or a lost broadcast shows here."""
+    run = _pin_runs(spark)[op]
+    sc = spark.sparkContext
+    group = f"test_iterative_operator_job_count_pinned:{op}"
+    sc.setJobGroup(group, group)
+    try:
+        run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
 
 
 def test_hyperplane_band_vals_pack_matches_bits_fold(spark):
