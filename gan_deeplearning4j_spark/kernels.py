@@ -27,7 +27,7 @@ kernel pipeline fuses into a single mapInArrow stage over the scan.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable, Iterator
+from typing import Callable, Collection, Iterator
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -413,21 +413,28 @@ def forward_cached(
 
 
 def backward(
-    dout: np.ndarray, specs: list[LayerSpec], weights: Weights, caches: list
-) -> tuple[Weights, np.ndarray]:
+    dout: np.ndarray, specs: list[LayerSpec], weights: Weights, caches: list,
+    layers: Collection[str] | None = None,
+) -> tuple[Weights, np.ndarray | None]:
     """Reverse sweep over ``forward_cached``'s caches. ``dout`` is dL/dpre
     of the output layer: the caller pairs its activation with the loss
     (sigmoid-XENT, softmax-MCXENT), so that layer backpropagates as
     identity; every other layer folds its own activation gradient. Returns
-    the gradients of the layers with parameters, and dL/dx."""
+    the gradients of the swept layers with parameters, and dL/dx.
+
+    ``layers`` names the layers whose gradients the caller wants (default:
+    all). The sweep stops after the earliest of them, so the layers below it
+    cost nothing; dL/dx is then ``None`` unless that layer is the first."""
+    stop = 0 if layers is None else min(
+        (i for i, spec in enumerate(specs) if spec.name in layers), default=len(specs))
     grads: Weights = {}
     d = dout
-    for i in range(len(specs) - 1, -1, -1):
+    for i in range(len(specs) - 1, stop - 1, -1):
         cache = caches[i] if i < len(specs) - 1 else {**caches[i], "activation": None}
         d, g = _layer(specs[i].kind).backward(d, cache)
         if g:
             grads[specs[i].name] = g
-    return grads, d
+    return grads, d if stop == 0 else None
 
 
 def update_running_stats(

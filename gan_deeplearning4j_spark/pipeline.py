@@ -52,7 +52,7 @@ import json
 import math
 import os
 from dataclasses import dataclass
-from typing import Iterator
+from typing import Collection, Iterator
 
 import numpy as np
 import pyarrow as pa
@@ -107,10 +107,12 @@ def net_grads(
     specs: list[LayerSpec],
     weights: Weights,
     bn_momentum: float = 0.9,
+    layers: Collection[str] | None = None,
 ) -> tuple[Weights, float]:
     """Backprop through an arbitrary layer stack (dense/conv2d/maxpool/
     upsample/batchnorm/reshape/flatten) via kernels.forward_cached +
-    kernels.backward.
+    kernels.backward. ``layers`` names the layers whose gradients are
+    wanted (default: all); the backward sweep stops after the earliest.
 
     Output-layer loss pairing follows the reference: sigmoid→XENT
     (java:159-163), softmax→MCXENT (:357-363); both give dL/dpre = (p - y)/n,
@@ -129,7 +131,7 @@ def net_grads(
     else:
         loss = float(-(y * np.log(p + eps) + (1 - y) * np.log(1 - p + eps)).mean())
     dout = (p - y) / x.shape[0]
-    grads, _ = backward(dout, specs, weights, caches)
+    grads, _ = backward(dout, specs, weights, caches, layers)
     update_running_stats(specs, weights, caches, bn_momentum)
     return grads, loss
 
@@ -203,7 +205,9 @@ def _fit_shard(
 ) -> tuple[float, bytes] | None:
     """One worker's local fit: ``local_steps`` RMSProp steps on a copy of
     ``net.weights``, each on a minibatch of ``min(batch_size, len(x))``
-    shard rows drawn by an RNG seeded ``seed + worker``.
+    shard rows drawn by an RNG seeded ``seed + worker``. Each step's
+    backward sweep stops at the earliest trained layer: the classifier
+    round backpropagates through its head only.
 
     Returns the last step's loss and the trained tensors (``_trainable``
     layout) as one float32 buffer; ``None`` for an empty shard, which sits
@@ -211,14 +215,15 @@ def _fit_shard(
     if not len(x):
         return None
     w = {l: {p: a.copy() for p, a in ps.items()} for l, ps in net.weights.items()}
+    trained = _trainable(net)
     cache: Weights = {}
     rng = np.random.default_rng(seed + worker)
     loss = math.nan
     for _ in range(local_steps):
         idx = rng.choice(len(x), size=min(batch_size, len(x)), replace=False)
-        grads, loss = net_grads(x[idx], y[idx], net.specs, w)
+        grads, loss = net_grads(x[idx], y[idx], net.specs, w, layers=trained)
         rmsprop_update(w, grads, cache, net.lr_by_layer)
-    buf = np.concatenate([np.ravel(w[l][p]) for l, ps in _trainable(net).items() for p in ps])
+    buf = np.concatenate([np.ravel(w[l][p]) for l, ps in trained.items() for p in ps])
     return loss, buf.astype(np.float32).tobytes()
 
 

@@ -125,6 +125,36 @@ def test_conv_input_gradient_matches_scatter_form(layer):
     assert np.abs(dx - scatter).max() <= 1e-5 * np.abs(scatter).max()
 
 
+@pytest.mark.parametrize("name", ["dis", "gan", "cv"])
+def test_sweep_to_trainable_layers_matches_full_sweep(name):
+    """``net_grads`` asked for a round's trainable layers stops its sweep at
+    the earliest of them and gives those layers the full sweep's gradients,
+    bit for bit. The cv net trains its head only, so its sweep stops there."""
+    from gan_deeplearning4j_spark.pipeline import _trainable
+
+    rng = np.random.default_rng(5)
+    g = GanPipeline.dcgan(base_filters=4)
+    net = {"dis": g.dis, "gan": g.gan, "cv": g._classifier()}[name]
+    x = rng.uniform(0, 1, (13, 28 * 28)) if name != "gan" else rng.uniform(-1, 1, (13, 2))
+    y = (np.eye(10)[rng.integers(0, 10, 13)] if name == "cv"
+         else rng.integers(0, 2, (13, 1))).astype(np.float32)
+    trained = _trainable(net)
+
+    full, full_loss = net_grads(x, y, net.specs, _copy(net.weights))
+    swept, loss = net_grads(x, y, net.specs, _copy(net.weights), layers=trained)
+    assert loss == full_loss
+    assert set(trained) <= set(swept) <= set(full)
+    for layer, params in trained.items():
+        for p in params:
+            assert np.array_equal(swept[layer][p], full[layer][p]), (layer, p)
+    if name == "cv":
+        assert set(swept) == {"cv_output"}
+
+
+def _copy(weights):
+    return {l: {p: a.copy() for p, a in ps.items()} for l, ps in weights.items()}
+
+
 def test_conv_gan_trains_end_to_end(spark):
     """A small DCGAN — conv discriminator, upsampling conv generator — runs
     the full distributed adversarial loop (the reference's actual topology

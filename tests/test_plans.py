@@ -88,6 +88,24 @@ def test_inference_is_shuffle_free(spark):
     assert "MapInArrow" in plan, plan
 
 
+def test_second_rotation_compiles_nothing(spark):
+    """A driver that re-runs the same queries compiles each generated class
+    once: the codegen cache (session.CODEGEN_CACHE_ENTRIES) holds a rotation
+    that overflows Spark's default of 100 entries, which would evict and
+    recompile on every pass."""
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def rotation() -> int:
+        before = compiles.getCount()
+        for k in range(7919, 7919 + 60):  # 60 distinct literals → 60 distinct sources
+            spark.range(0, 8, 1, 1).select((F.col("id") * k + 7).alias("v")).collect()
+        return compiles.getCount() - before
+
+    first = rotation()
+    assert first > 100, first
+    assert rotation() == 0
+
+
 @pytest.mark.parametrize("name", [
     "pq_encode", "pq_topk", "ivfpq_topk",
     "pq_topk_fixed", "ivfpq_topk_fixed", "lsh_topk_fixed", "ivf_topk_fixed",
