@@ -104,77 +104,6 @@ def main() -> None:
     if repeats > 1:
         out["repeats"] = repeats
         out["sigma"] = sigmas
-    # like-for-like subtotals: the headline set GROWS round over round
-    # (r6 added dedup_clusters, r7 adds ivfpq_fixed_topk), so the full
-    # total is not comparable across rounds by itself. These fixed
-    # subsets keep a stable cross-round series next to the full total.
-    _SUBSETS = {
-        # the 13 queries benched every round since r5
-        "r5_13q": (
-            "argmax_accuracy", "param_average", "topk_per_group",
-            "tpch_q1_pricing", "tpch_q3_shipping", "tpch_q5_volume",
-            "events_tumbling", "doc_stats", "cosine_topk", "minhash_dedup",
-            "embedding_neardup_lsh", "heavy_hitters_exact", "bigram_top20",
-        ),
-        # + dedup_clusters (added r6)
-        "r6_14q": (
-            "argmax_accuracy", "param_average", "topk_per_group",
-            "tpch_q1_pricing", "tpch_q3_shipping", "tpch_q5_volume",
-            "events_tumbling", "doc_stats", "cosine_topk", "minhash_dedup",
-            "embedding_neardup_lsh", "heavy_hitters_exact", "bigram_top20",
-            "dedup_clusters",
-        ),
-        # + ivfpq_fixed_topk (added r7)
-        "r7_15q": (
-            "argmax_accuracy", "param_average", "topk_per_group",
-            "tpch_q1_pricing", "tpch_q3_shipping", "tpch_q5_volume",
-            "events_tumbling", "doc_stats", "cosine_topk", "minhash_dedup",
-            "embedding_neardup_lsh", "heavy_hitters_exact", "bigram_top20",
-            "dedup_clusters", "ivfpq_fixed_topk",
-        ),
-        # + pagerank_fixed_topk (added r8) — the 16-query set benched
-        # unchanged through r9-r11 (the judge's cross-round anchor)
-        "r8_16q": (
-            "argmax_accuracy", "param_average", "topk_per_group",
-            "tpch_q1_pricing", "tpch_q3_shipping", "tpch_q5_volume",
-            "events_tumbling", "doc_stats", "cosine_topk", "minhash_dedup",
-            "embedding_neardup_lsh", "heavy_hitters_exact", "bigram_top20",
-            "dedup_clusters", "ivfpq_fixed_topk", "pagerank_fixed_topk",
-        ),
-        # + quality_filter_funnel + contamination_13gram_audit (added r12:
-        # the curation-wave scan battery and the 13-gram decontam join) —
-        # the full current headline set
-        "r12_18q": (
-            "argmax_accuracy", "param_average", "topk_per_group",
-            "tpch_q1_pricing", "tpch_q3_shipping", "tpch_q5_volume",
-            "events_tumbling", "doc_stats", "cosine_topk", "minhash_dedup",
-            "embedding_neardup_lsh", "heavy_hitters_exact", "bigram_top20",
-            "dedup_clusters", "ivfpq_fixed_topk", "pagerank_fixed_topk",
-            "quality_filter_funnel", "contamination_13gram_audit",
-        ),
-        # + token_window_packing (added r13: the packing-wave headline) —
-        # the full current headline set
-        "r13_19q": (
-            "argmax_accuracy", "param_average", "topk_per_group",
-            "tpch_q1_pricing", "tpch_q3_shipping", "tpch_q5_volume",
-            "events_tumbling", "doc_stats", "cosine_topk", "minhash_dedup",
-            "embedding_neardup_lsh", "heavy_hitters_exact", "bigram_top20",
-            "dedup_clusters", "ivfpq_fixed_topk", "pagerank_fixed_topk",
-            "quality_filter_funnel", "contamination_13gram_audit",
-            "token_window_packing",
-        ),
-    }
-    out["subtotals_median"] = {
-        label: round(sum(timings[n] for n in names), 3)
-        for label, names in _SUBSETS.items()
-        if all(n in timings for n in names)
-    }
-    out["subtotals_single_shot"] = {
-        label: round(sum(firsts[n] for n in names), 3)
-        for label, names in _SUBSETS.items()
-        if all(n in firsts for n in names)
-    }
-
     # Isolated per-query medians (r8 verdict ask #4): the in-suite numbers
     # above interleave 3-second iterative-graph/dedup headliners whose
     # GC/JIT pressure moves sub-second queries ±10-22% round-over-round
@@ -240,19 +169,9 @@ def main() -> None:
         out["sigma_isolated"] = iso_sigmas
         out["iso_repeats"] = iso_repeats
         out["total_isolated_median"] = round(sum(iso.values()), 3)
-        out["subtotals_isolated_median"] = {
-            label: round(sum(iso[n] for n in names), 3)
-            for label, names in _SUBSETS.items()
-            if all(n in iso for n in names)
-        }
         out["queries_exec_only_median"] = exc_only
         out["sigma_exec_only"] = exc_sigmas
         out["total_exec_only_median"] = round(sum(exc_only.values()), 3)
-        out["subtotals_exec_only_median"] = {
-            label: round(sum(exc_only[n] for n in names), 3)
-            for label, names in _SUBSETS.items()
-            if all(n in exc_only for n in names)
-        }
         # construction share per query: (wall - exec) / wall — a high
         # share means the query's cross-round wall drift is driver-side
         # plan building, not engine execution
@@ -289,19 +208,18 @@ def main() -> None:
         # its exec-only number covers only the final stage (r13
         # measurement: dedup_clusters 2.49 s wall / 0.17 s exec,
         # construction_share 0.93; pagerank 0.99). For those, quote the
-        # WALL. The set is curated with the headline set itself; a
-        # misclassified entry shows up immediately as construction_share
-        # > 0.85 at sf0.1 (declarative headliners sit at 0.16-0.68).
-        _EAGER_ITERATIVE = {"dedup_clusters", "pagerank_fixed_topk"}
+        # WALL. They are the queries whose construction_share exceeds
+        # 0.85 (declarative headliners sit at 0.16-0.68 at sf0.1).
         out["quote_this_series"] = "queries_exec_only_median"
         out["quote_wall_for_eager_iterative"] = sorted(
-            _EAGER_ITERATIVE & set(exc_only)
+            n for n, share in out["construction_share"].items()
+            if share > 0.85
         )
 
     if errors:
         out["errors"] = errors
     # Full diagnostics record first (every series: single-shot, in-suite,
-    # isolated, exec-only, sigmas, subtotals) — nothing is dropped...
+    # isolated, exec-only, sigmas) — nothing is dropped...
     print(json.dumps(out))
     # ...then the driver-parseable contract line LAST. The driver keeps
     # only the last ~2000 chars of bench output and json-parses the last

@@ -48,15 +48,32 @@ def distinct_ratio(text: Column) -> Column:
     return F.size(F.array_distinct(toks)) / F.size(toks)
 
 
-def avg_token_len(text: Column) -> Column:
-    toks = tokens(text)
-    total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
-    return total.cast("double") / F.size(toks)
+def quality_signals(text: Column) -> tuple[Column, Column, Column]:
+    """The document quality signals of the quality-filter queries:
+    ``(n_tok, ddr, pr)`` = single-space token count, distinct-token ratio
+    and the share of characters outside ``[a-zA-Z0-9 ]``. Tokens are a
+    plain ``split(text, ' ')`` (no trim), as the queries' SQL oracles
+    count them."""
+    toks = F.split(text, " ")
+    n_tok = F.size(toks)
+    ddr = F.size(F.array_distinct(toks)) * 1.0 / n_tok
+    pr = (
+        F.length(F.regexp_replace(text, "[a-zA-Z0-9 ]", "")) * 1.0
+        / F.length(text)
+    )
+    return n_tok, ddr, pr
 
 
-def punct_ratio(text: Column) -> Column:
-    stripped = F.regexp_replace(text, r"[^\p{Punct}]", "")
-    return F.length(stripped).cast("double") / F.length(text)
+def quality_verdict(text: Column) -> Column:
+    """The first failing quality rule of a document ('too_short',
+    'low_diversity', 'high_punct'), or 'keep'."""
+    n_tok, ddr, pr = quality_signals(text)
+    return (
+        F.when(n_tok < 20, "too_short")
+        .when(ddr < 0.4, "low_diversity")
+        .when(pr > 0.1, "high_punct")
+        .otherwise("keep")
+    )
 
 
 def lang_id(text: Column) -> Column:

@@ -50,7 +50,3 @@ def cosine_similarity(a: Column, b: Column) -> Column:
 def vec_scale(a: Column, s: Column | float) -> Column:
     s = F.lit(s) if not isinstance(s, Column) else s
     return F.transform(a, lambda v: v * s)
-
-
-def vec_add(a: Column, b: Column) -> Column:
-    return F.zip_with(a, b, lambda x, y: x + y)

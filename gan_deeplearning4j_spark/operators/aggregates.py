@@ -23,7 +23,7 @@ rows × dim — use the array fold form, one shuffle row per group).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -109,3 +109,95 @@ def accuracy(df: DataFrame, pred: Column, label: Column, keys: list[str] | None 
     gb = df.groupBy(*keys) if keys else df.groupBy()
     out = gb.agg(*agg)
     return out.withColumn("acc", F.round(F.col("n_correct") / F.col("n"), 6))
+
+
+def pearson_moments() -> list[Column]:
+    """Exact integer moment sums of columns ``x`` and ``z`` as
+    decimal(38,0) aggregates: n, sx, sz, sxz, sxx, szz. Integer sums are
+    order-free, so ``pearson_ppm`` over them is engine-exact."""
+    x, z = F.col("x"), F.col("z")
+    return [
+        F.count("*").cast("decimal(38,0)").alias("n"),
+        F.sum(x).cast("decimal(38,0)").alias("sx"),
+        F.sum(z).cast("decimal(38,0)").alias("sz"),
+        F.sum(x * z).cast("decimal(38,0)").alias("sxz"),
+        F.sum(x * x).cast("decimal(38,0)").alias("sxx"),
+        F.sum(z * z).cast("decimal(38,0)").alias("szz"),
+    ]
+
+
+def pearson_ppm() -> Column:
+    """floor(1e6 · Pearson r) (long) from the ``pearson_moments`` columns:
+    the exact integer cross terms cast to double once, then one
+    correctly-rounded double expression (no transcendental), identical
+    bits in Spark and DuckDB."""
+    n, sx, sz = F.col("n"), F.col("sx"), F.col("sz")
+    num = (n * F.col("sxz") - sx * sz).cast("double")
+    dx = (n * F.col("sxx") - sx * sx).cast("double")
+    dz = (n * F.col("szz") - sz * sz).cast("double")
+    return F.floor(
+        num / F.sqrt(dx) / F.sqrt(dz) * F.lit(1000000.0)
+    ).cast("long")
+
+
+def calibration_scores(docs: DataFrame) -> DataFrame:
+    """The calibration queries' scored documents: (score_e6, pos, bin)
+    with a length score ``least(n_chars, 2000) * 500`` in e6 units, the
+    label ``pos`` = 1 for English, and ``bin`` its equal-width confidence
+    bin ``score_e6 div 1e5`` clamped to 9 — all 64-bit integers."""
+    return docs.select(
+        (F.least(F.col("n_chars"), F.lit(2000)) * 500).cast("long")
+        .alias("score_e6"),
+        F.when(F.col("lang") == "en", 1).otherwise(0).alias("pos"),
+    ).withColumn(
+        "bin",
+        F.least(F.expr("score_e6 div 100000"), F.lit(9)).cast("long"),
+    )
+
+
+def price_percentile_brackets(
+    lineitem: DataFrame, pcts: list[int], accuracy: int,
+) -> DataFrame:
+    """Guarantee bracket of Spark's ``approx_percentile(c, p, accuracy)``
+    per l_returnflag over the line prices in integer cents ``c``: for each
+    percent p in ``pcts``, the exact values at ranks (p/100 ∓ 2/accuracy)·n
+    (clamped to [1, n]) as ``lo{p}_c``/``hi{p}_c``, and ``within{p}`` —
+    whether the sketch's answer lies between them. The bracket is exact
+    integer rank arithmetic, so an oracle replays it; the sketch value
+    itself is layout-dependent and surfaces only through the verdict."""
+    key = "l_returnflag"
+    df = lineitem.select(
+        key,
+        F.expr("CAST(round(l_extendedprice * 100) AS BIGINT)").alias("c"),
+    )
+    a = accuracy
+    r = df.withColumn(
+        "r", F.row_number().over(Window.partitionBy(key).orderBy("c"))
+    )
+    ranks = []
+    for p in pcts:
+        mid = p * a // 100
+        ranks += [
+            F.greatest(F.lit(1).cast("long"),
+                       F.expr(f"({mid - 2} * n) div {a}")).alias(f"lo{p}r"),
+            F.least(F.col("n"), F.expr(f"({mid + 2} * n + {a - 1}) div {a}"))
+            .alias(f"hi{p}r"),
+        ]
+    k = df.groupBy(key).agg(F.count("*").alias("n")).select(key, "n", *ranks)
+    brackets = r.join(k, key).groupBy(key).agg(*(
+        F.min(F.when(F.col("r") == F.col(f"{b}{p}r"), F.col("c")))
+        .alias(f"{b}{p}_c")
+        for p in pcts for b in ("lo", "hi")
+    ))
+    approx = df.groupBy(key).agg(*(
+        F.expr(f"approx_percentile(c, {p / 100}D, {a})").alias(f"a{p}")
+        for p in pcts
+    ))
+    out = []
+    for p in pcts:
+        out += [
+            f"lo{p}_c", f"hi{p}_c",
+            F.col(f"a{p}").between(F.col(f"lo{p}_c"), F.col(f"hi{p}_c"))
+            .alias(f"within{p}"),
+        ]
+    return brackets.join(approx, key).select(key, *out).orderBy(key)

@@ -787,29 +787,21 @@ def minhash_dedup(
 
 def connected_components(
     edges: DataFrame, src: str = "id_a", dst: str = "id_b",
-    max_iter: int = 20, mode: str = "prop",
+    max_iter: int = 20,
 ) -> DataFrame:
-    """Connected components. Two interchangeable engines (identical
-    output: (node, comp) for every node incident to an edge, comp = min
-    node id in the component — equivalence-pinned by tests):
-
-    ``mode="prop"`` (default): iterative min-label propagation — each node
+    """Connected components by iterative min-label propagation: each node
     repeatedly takes the minimum component id among itself and its
     neighbors; converges in O(graph diameter) rounds. Cheapest per round
-    (one join + one agg), the right pick for real dup graphs, whose
+    (one join + one agg), the right engine for real dup graphs, whose
     components are shallow (near-clique families; measured diameters are
     single-digit). If the diameter exceeds ``max_iter`` it ESCALATES to
-    the star-contraction engine automatically (original edges + the
-    partial labels as shortcut edges) and still returns exact components
-    — never a possibly-split labeling.
-
-    ``mode="logn"``: alternating large-star/small-star contraction
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14) — converges in O(log^2 n) rounds REGARDLESS of diameter.
-    Costlier per round (two grouped passes + a distinct), but the right
-    pick when the graph is KNOWN chain-shaped (quote-chains, boilerplate
-    series): a 10k-long path costs prop max_iter rounds before its
-    escalation kicks in, while logn goes straight there in ~a dozen.
+    ``_cc_star_contraction`` (alternating large-star/small-star, Kiveris
+    et al., "Connected Components in MapReduce and Beyond", SoCC'14 —
+    O(log^2 n) rounds regardless of diameter) over the original edges
+    plus the partial labels as shortcut edges, and still returns exact
+    components — never a possibly-split labeling. Chain-shaped graphs
+    (quote-chains, boilerplate series) therefore cost ``max_iter``
+    propagation rounds before the escalation takes over.
 
     This is the transitive-closure step minhash_dedup's single-hop keep-rule
     deliberately skips (dup clusters are chains: A~B~C with A≁C). Returns
@@ -826,10 +818,6 @@ def connected_components(
     growing lineage each round (iterative plans otherwise re-derive every
     prior round).
     """
-    if mode == "logn":
-        return _cc_star_contraction(edges, src, dst, max_iter=max(max_iter, 30))
-    if mode != "prop":
-        raise ValueError(f"connected_components: unknown mode {mode!r}")
     e = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     # materialize the undirected edge list ONCE: every propagation round
     # joins against it, and an unmaterialized edge relation re-executes
@@ -928,7 +916,7 @@ def connected_components(
 def _cc_star_contraction(
     edges: DataFrame, src: str, dst: str, max_iter: int = 30,
 ) -> DataFrame:
-    """``connected_components(mode="logn")`` engine: alternating
+    """The escalation engine of ``connected_components``: alternating
     large-star/small-star (Kiveris et al., SoCC'14, Algorithm 3).
 
     Invariant: the edge set's connectivity (and each component's minimum
@@ -951,7 +939,7 @@ def _cc_star_contraction(
         .distinct(),
         n=F.count(F.lit(1)),
     )
-    # contract parity with mode="prop": a node whose ONLY edges are
+    # contract parity with propagation: a node whose ONLY edges are
     # self-loops is still "incident to an edge" and must come out as its
     # own singleton component — the u != v filter above would otherwise
     # drop it from the output entirely
@@ -1007,17 +995,17 @@ def _cc_star_contraction(
     if not converged:
         # Raise, never return: partial star-forest labels can be SPLIT
         # components, and this engine is the exactness escalation target
-        # for mode="prop" — a warning with a wrong answer attached would
+        # for propagation — a warning with a wrong answer attached would
         # reintroduce the silent-split path the escalation exists to
         # close. O(log^2 n) rounds is double-digit for any feasible
         # graph, so hitting the cap means a bug or an absurd max_iter.
         raise RuntimeError(
-            f"connected_components(mode='logn'): not converged after "
+            f"connected_components star contraction: not converged after "
             f"{max_iter} rounds (O(log^2 n) expected — raise max_iter); "
             "refusing to return a possibly-split labeling"
         )
     # stars: (member, root) edges with root < member; roots label themselves;
-    # self-loop-only nodes rejoin as singletons (parity with mode="prop")
+    # self-loop-only nodes rejoin as singletons (parity with propagation)
     return E.select(F.col("u").alias("node"), F.col("v").alias("comp")).union(
         E.select(F.col("v").alias("node"), F.col("v").alias("comp")).distinct()
     ).distinct().union(loop_singletons)

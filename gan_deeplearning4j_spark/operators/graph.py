@@ -276,11 +276,7 @@ def adamic_adar_topk(
     degree d emits d^2/2 candidate pairs — cap or drop top-degree hubs
     upstream for power-law graphs (the LSH-bucket cap discipline)."""
     pr = pairs.select(F.col(a).alias("p1"), F.col(b).alias("p2"))
-    e = pr.select(
-        F.col("p1").alias("u"), F.col("p2").alias("v")
-    ).unionByName(
-        pr.select(F.col("p2").alias("u"), F.col("p1").alias("v"))
-    ).localCheckpoint(eager=True)
+    e = undirected(pr).localCheckpoint(eager=True)
     wt = (
         e.groupBy("u").agg(F.count("*").alias("d"))
         .filter(F.col("d") >= 2)
@@ -397,14 +393,18 @@ def hits_fixed(
     )
 
 
-def co_purchase_pairs(lineitem: DataFrame, min_orders: int = 2) -> DataFrame:
-    """The repo's canonical sparse product graph: one-directional part
-    pairs (p1 < p2) that share at least ``min_orders`` distinct orders.
-    Single definition shared by the link-prediction, BFS and Brandes
-    queries plus the stress harness so the graph contract cannot drift
-    between them (the >=2 threshold is what keeps the graph sparse —
-    the >=1 co-supply variant is near-complete at every SF and useless
-    for graph ops). One distinct-project plus one orderkey-keyed
+CO_PURCHASE_MIN_ORDERS = 2   # shared orders that make two parts an edge
+
+
+def co_purchase_counts(lineitem: DataFrame) -> DataFrame:
+    """The repo's canonical sparse product graph with its edge weights:
+    one-directional part pairs (p1 < p2) that share at least
+    ``CO_PURCHASE_MIN_ORDERS`` distinct orders, and ``n_orders``, how
+    many they share. Single definition shared by every co-purchase
+    graph query plus the stress harness so the graph contract cannot
+    drift between them (the >=2 threshold is what keeps the graph
+    sparse — the >=1 co-supply variant is near-complete at every SF and
+    useless for graph ops). One distinct-project plus one orderkey-keyed
     self-join; the pair aggregate is map-side combinable."""
     b = lineitem.select("l_orderkey", "l_partkey").distinct()
     a, c = b.alias("a"), b.alias("c")
@@ -418,9 +418,25 @@ def co_purchase_pairs(lineitem: DataFrame, min_orders: int = 2) -> DataFrame:
             F.col("a.l_partkey").alias("p1"),
             F.col("c.l_partkey").alias("p2"),
         )
-        .agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= min_orders)
-        .select("p1", "p2")
+        .agg(F.count("*").alias("n_orders"))
+        .filter(F.col("n_orders") >= CO_PURCHASE_MIN_ORDERS)
+    )
+
+
+def co_purchase_pairs(lineitem: DataFrame) -> DataFrame:
+    """``co_purchase_counts`` without the weight: the (p1, p2) edges."""
+    return co_purchase_counts(lineitem).select("p1", "p2")
+
+
+def undirected(pairs: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
+    """Both directions of one-directional ``(p1, p2, *rest)`` pairs, as
+    ``(u, v, *rest)``: every edge once as p1 -> p2 and once as p2 -> p1,
+    carrying the remaining columns (an edge weight) along."""
+    rest = [c for c in pairs.columns if c not in ("p1", "p2")]
+    return pairs.select(
+        F.col("p1").alias(u), F.col("p2").alias(v), *rest
+    ).unionByName(
+        pairs.select(F.col("p2").alias(u), F.col("p1").alias(v), *rest)
     )
 
 
@@ -448,12 +464,7 @@ def katz_scores(
     # node count (the broadcast vector is O(nodes)), observed during the
     # materialization job — see pagerank_fixed on why the threshold must
     # test nodes, not the conservative edge-count bound
-    e, seen = checkpoint_round(
-        pr.select(F.col("p1").alias("u"), F.col("p2").alias("v")).unionByName(
-            pr.select(F.col("p2").alias("u"), F.col("p1").alias("v"))
-        ),
-        n=F.approx_count_distinct("u"),
-    )
+    e, seen = checkpoint_round(undirected(pr), n=F.approx_count_distinct("u"))
     if iters < 1:
         return e.select(F.col("u").alias("node")).distinct().withColumn(
             "score", F.lit(1_000_000).cast("long")

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.money import cents_nonneg
 from ..functions.windows import bounded_window
 from .. import DEFAULT_SEED
 
@@ -342,3 +343,24 @@ def a_es_keyed(df: DataFrame, id_col: str, weight: "Column",
         "*", weight.alias("w"), key.alias("key"),
         F.floor(key * 1e12).cast("long").alias("key_e12"),
     )
+
+
+def hourly_grid(ev: DataFrame) -> DataFrame:
+    """Hourly resampling grid of events (user_id, ts, value): one row
+    (user_id, bar, v) per hour from each user's first to last event hour,
+    ``v`` the bar's summed value cents, null where the user had no event
+    that hour. The gaps are what the resample queries fill."""
+    hourly = ev.groupBy(
+        "user_id", F.date_trunc("hour", F.col("ts")).alias("bar")
+    ).agg(F.sum(cents_nonneg(F.col("value"))).alias("v"))
+    bounds = ev.groupBy("user_id").agg(
+        F.date_trunc("hour", F.min("ts")).alias("t0"),
+        F.date_trunc("hour", F.max("ts")).alias("t1"),
+    )
+    grid = bounds.select(
+        "user_id",
+        F.explode(
+            F.sequence("t0", "t1", F.expr("INTERVAL 1 HOUR"))
+        ).alias("bar"),
+    )
+    return grid.join(hourly, ["user_id", "bar"], "left")

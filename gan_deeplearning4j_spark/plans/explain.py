@@ -43,15 +43,6 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return count_operator(df, "BroadcastHashJoin") > 0
 
 
-def shuffle_count(df: DataFrame) -> int:
-    """Exchange operators, excluding BroadcastExchange (broadcast is the
-    cheap kind — the expensive one is hashpartitioning shuffle)."""
-    plan = formatted_plan(df)
-    return len(re.findall(r"\n[^\n]*\bExchange\b(?! hashpartitioning)?", plan)) - plan.count(
-        "BroadcastExchange"
-    )
-
-
 def read_columns(df: DataFrame) -> list[list[str]]:
     """ReadSchema column lists per scan — column pruning check."""
     out = []

@@ -15,7 +15,6 @@ plan across pipeline stages (stage boundaries are logical, not physical).
 from __future__ import annotations
 
 from pyspark.ml import Transformer
-from pyspark.ml.param import Param, Params
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -59,46 +58,6 @@ class ClipTransformer(_ColTransformer):
         return df.withColumn(
             self.outputCol,
             F.greatest(F.least(F.col(self.inputCol), F.lit(self.hi)), F.lit(self.lo)),
-        )
-
-
-class ActivationTransformer(_ColTransformer):
-    """K6 over an array column: tanh | sigmoid | softmax."""
-
-    def __init__(self, inputCol: str, outputCol: str, activation: str = "tanh"):
-        super().__init__(inputCol, outputCol)
-        self.activation = activation
-
-    def _transform(self, df: DataFrame) -> DataFrame:
-        from ..functions.elementwise import softmax_arr, tanh_arr
-
-        col = F.col(self.inputCol).cast("array<double>")
-        if self.activation == "tanh":
-            out = tanh_arr(col)
-        elif self.activation == "sigmoid":
-            out = F.transform(col, lambda v: F.lit(1.0) / (F.lit(1.0) + F.exp(-v)))
-        elif self.activation == "softmax":
-            out = softmax_arr(col)
-        else:
-            raise ValueError(self.activation)
-        return df.withColumn(self.outputCol, out)
-
-
-class NetworkTransformer(Transformer):
-    """K10 forward inference as a pipeline stage (mapInArrow kernels)."""
-
-    def __init__(self, specs, weights, featuresCol: str = "features",
-                 outputCol: str = "output"):
-        super().__init__()
-        self.specs, self.weights = specs, weights
-        self.featuresCol, self.outputCol = featuresCol, outputCol
-
-    def _transform(self, df: DataFrame) -> DataFrame:
-        from ..kernels import apply_network
-
-        return apply_network(
-            df, self.specs, self.weights,
-            features_col=self.featuresCol, output_col=self.outputCol,
         )
 
 

@@ -30,6 +30,7 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .functions.dates import in_year
 from .functions.money import cents_nonneg
 
 from .session import ensure_engine_conf
@@ -42,14 +43,13 @@ from .operators.aggregates import (
     categorical_xent,
     parameter_average_sql,
 )
-from .operators.dedup import exact_dedup, minhash_dedup
+from .operators.dedup import minhash_dedup
 from .operators.relational import (
-    deterministic_key,
     stratified_sample_exact,
     top_k_per_group,
     vstack,
 )
-from .operators.similarity import brute_force_topk, lsh_bucketed_topk
+from .operators.similarity import lsh_bucketed_topk
 from .operators.weights import copy_weights
 from .functions.random import latent_grid
 from .queries_ext import _banded_lsh_neardup_oracle, _sql_arr
@@ -695,63 +695,10 @@ def q_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vs exact in tests/test_operators.py",
 )
 def q_approx_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_returnflag",
-        F.expr("CAST(round(l_extendedprice * 100) AS BIGINT)").alias("c"),
-    )
-    w = Window.partitionBy("l_returnflag").orderBy("c")
-    r = li.withColumn("r", F.row_number().over(w))
-    n = li.groupBy("l_returnflag").agg(F.count("*").alias("n"))
-    k = n.select(
-        "l_returnflag", "n",
-        F.greatest(F.lit(1).cast("long"),
-                   F.expr("(498 * n) div 1000")).alias("lo50r"),
-        F.least(F.col("n"), F.expr("(502 * n + 999) div 1000")).alias("hi50r"),
-        F.greatest(F.lit(1).cast("long"),
-                   F.expr("(948 * n) div 1000")).alias("lo95r"),
-        F.least(F.col("n"), F.expr("(952 * n + 999) div 1000")).alias("hi95r"),
-        F.greatest(F.lit(1).cast("long"),
-                   F.expr("(988 * n) div 1000")).alias("lo99r"),
-        F.least(F.col("n"), F.expr("(992 * n + 999) div 1000")).alias("hi99r"),
-    )
-    brackets = (
-        r.join(k, "l_returnflag")
-        .groupBy("l_returnflag")
-        .agg(
-            F.min(F.when(F.col("r") == F.col("lo50r"), F.col("c")))
-            .alias("lo50_c"),
-            F.min(F.when(F.col("r") == F.col("hi50r"), F.col("c")))
-            .alias("hi50_c"),
-            F.min(F.when(F.col("r") == F.col("lo95r"), F.col("c")))
-            .alias("lo95_c"),
-            F.min(F.when(F.col("r") == F.col("hi95r"), F.col("c")))
-            .alias("hi95_c"),
-            F.min(F.when(F.col("r") == F.col("lo99r"), F.col("c")))
-            .alias("lo99_c"),
-            F.min(F.when(F.col("r") == F.col("hi99r"), F.col("c")))
-            .alias("hi99_c"),
-        )
-    )
-    approx = li.groupBy("l_returnflag").agg(
-        F.expr("approx_percentile(c, 0.5D, 1000)").alias("a50"),
-        F.expr("approx_percentile(c, 0.95D, 1000)").alias("a95"),
-        F.expr("approx_percentile(c, 0.99D, 1000)").alias("a99"),
-    )
-    return (
-        brackets.join(approx, "l_returnflag")
-        .select(
-            "l_returnflag",
-            "lo50_c", "hi50_c",
-            F.col("a50").between(F.col("lo50_c"), F.col("hi50_c"))
-            .alias("within50"),
-            "lo95_c", "hi95_c",
-            F.col("a95").between(F.col("lo95_c"), F.col("hi95_c"))
-            .alias("within95"),
-            "lo99_c", "hi99_c",
-            F.col("a99").between(F.col("lo99_c"), F.col("hi99_c"))
-            .alias("within99"),
-        )
-        .orderBy("l_returnflag")
+    from .operators.aggregates import price_percentile_brackets
+
+    return price_percentile_brackets(
+        _t(spark, sf_dir, "lineitem"), [50, 95, 99], 1000
     )
 
 
@@ -773,8 +720,7 @@ def q_tpch_q6_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     return (
         li.filter(
-            (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
+            in_year("l_shipdate", 1997)
             & F.col("l_discount").between(0.05, 0.07)
             & (F.col("l_quantity") < 24)
         )
@@ -943,15 +889,13 @@ def q_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "expressions in the scan stage — no shuffle at any scale",
 )
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators.packing import n_tokens_col
+
     docs = _t(spark, sf_dir, "documents")
-    ws = F.size(F.filter(
-        F.split(F.trim(F.col("text")), r"\s+"),
-        lambda t: F.length(t) > 0,
-    ))
     return docs.select(
         "doc_id",
         TX.token_count_bpe_ish(F.col("text")).cast("long").alias("n_bpe_tokens"),
-        ws.cast("long").alias("n_ws_tokens"),
+        n_tokens_col().alias("n_ws_tokens"),
     )
 
 
@@ -981,19 +925,7 @@ def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    n_tok = F.size(toks)
-    ddr = F.size(F.array_distinct(toks)) * 1.0 / n_tok
-    pr = (
-        F.length(F.regexp_replace(F.col("text"), "[a-zA-Z0-9 ]", "")) * 1.0
-        / F.length("text")
-    )
-    verdict = (
-        F.when(n_tok < 20, "too_short")
-        .when(ddr < 0.4, "low_diversity")
-        .when(pr > 0.1, "high_punct")
-        .otherwise("keep")
-    )
+    verdict = TX.quality_verdict(F.col("text"))
     return docs.select("doc_id", verdict.alias("verdict"))
 
 
@@ -2342,8 +2274,7 @@ def q_tpch_q4_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tpch_q12_priority_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
+        in_year("l_shipdate", 1997)
     )
     orders = _t(spark, sf_dir, "orders")
     high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
@@ -2557,10 +2488,7 @@ def q_full_outer_yearly_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def year_slice(y: int, alias: str) -> DataFrame:
         return (
-            orders.filter(
-                (F.col("o_orderdate") >= F.lit(f"{y}-01-01").cast("timestamp"))
-                & (F.col("o_orderdate") < F.lit(f"{y + 1}-01-01").cast("timestamp"))
-            )
+            orders.filter(in_year("o_orderdate", y))
             .groupBy("o_custkey")
             .agg(F.round(F.sum("o_totalprice"), 2).alias(alias))
             .withColumnRenamed("o_custkey", f"ck_{y}")

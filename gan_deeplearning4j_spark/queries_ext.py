@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .functions.dates import in_year
 from .functions.money import cents_nonneg, cents_signed
 
 from .functions.windows import bounded_window
@@ -574,17 +575,13 @@ def q_domain_mix_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_length_bucket_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
+    from .operators.packing import n_tokens_col
+
     docs = _t(spark, sf_dir, "documents")
-    n_tokens = F.size(
-        F.filter(
-            F.split(F.trim(F.col("text")), r"\s+"),
-            lambda t: F.length(t) > 0,
-        )
-    ).cast("long")
     toks = docs.select(
         "doc_id",
         F.floor(F.col("n_chars") / 128).cast("long").alias("bucket"),
-        n_tokens.alias("n_tokens"),
+        n_tokens_col().alias("n_tokens"),
     )
     w = (
         Window.partitionBy("bucket")
@@ -1088,16 +1085,10 @@ def q_events_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    from .functions.text import portable_hash60
+    from .functions.text import portable_hash60, quality_signals
 
     docs = _t(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    n_tok = F.size(toks)
-    ddr = F.size(F.array_distinct(toks)) * 1.0 / n_tok
-    pr = (
-        F.length(F.regexp_replace(F.col("text"), "[a-zA-Z0-9 ]", "")) * 1.0
-        / F.length("text")
-    )
+    n_tok, ddr, pr = quality_signals(F.col("text"))
     kept = docs.select(
         "doc_id", "source", "lang", "text", n_tok.alias("n_tok"),
         ddr.alias("ddr"), pr.alias("pr"),
@@ -1247,28 +1238,11 @@ def q_semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_events_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
-    ev = _t(spark, sf_dir, "events").filter(F.col("user_id") < 40)
-    hourly = (
-        ev.groupBy(
-            "user_id", F.date_trunc("hour", F.col("ts")).alias("bar")
-        )
-        .agg(
-            F.sum(cents_nonneg(F.col("value"))).alias(
-                "bar_value_c"
-            )
-        )
+    from .operators.relational import hourly_grid
+
+    j = hourly_grid(
+        _t(spark, sf_dir, "events").filter(F.col("user_id") < 40)
     )
-    bounds = ev.groupBy("user_id").agg(
-        F.date_trunc("hour", F.min("ts")).alias("t0"),
-        F.date_trunc("hour", F.max("ts")).alias("t1"),
-    )
-    grid = bounds.select(
-        "user_id",
-        F.explode(
-            F.sequence("t0", "t1", F.expr("INTERVAL 1 HOUR"))
-        ).alias("bar"),
-    )
-    j = grid.join(hourly, ["user_id", "bar"], "left")
     w = (
         W.partitionBy("user_id")
         .orderBy("bar")
@@ -1278,10 +1252,9 @@ def q_events_resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.unix_micros(F.col("bar")).alias("bar_us"),
         F.coalesce(
-            F.col("bar_value_c"),
-            F.last("bar_value_c", ignorenulls=True).over(w),
+            F.col("v"), F.last("v", ignorenulls=True).over(w),
         ).alias("value_c"),
-        F.when(F.col("bar_value_c").isNull(), 1).otherwise(0).alias("filled"),
+        F.when(F.col("v").isNull(), 1).otherwise(0).alias("filled"),
     )
 
 
@@ -1643,6 +1616,15 @@ def q_prefix_filter_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return prefix_filter_neardup(docs, "text", "doc_id", threshold=0.5)
 
 
+def _codebook_rows(books) -> str:
+    """Integer PQ codebooks as DuckDB ``VALUES`` rows (j, c, cent)."""
+    return ",\n      ".join(
+        f"({j}, {c}, [{', '.join(str(v) for v in cent)}]::BIGINT[])"
+        for j, book in enumerate(books)
+        for c, cent in enumerate(book)
+    )
+
+
 def _pq_fixed_oracle(dim: int = 64, m: int = 8, n_codes: int = 16,
                      k: int = 5, nq: int = 4) -> str:
     """DuckDB replica of the fixed-point ADC pipeline with the trained
@@ -1657,11 +1639,7 @@ def _pq_fixed_oracle(dim: int = 64, m: int = 8, n_codes: int = 16,
 
     books = pq_fixed_reference_books(dim=dim, m=m, k=n_codes)
     sub = dim // m
-    rows = ",\n      ".join(
-        f"({j}, {c}, [{', '.join(str(v) for v in cent)}]::BIGINT[])"
-        for j, book in enumerate(books)
-        for c, cent in enumerate(book)
-    )
+    rows = _codebook_rows(books)
     return f"""
     WITH cb(j, c, cent) AS (VALUES
       {rows}),
@@ -1736,11 +1714,7 @@ def _ivfpq_fixed_oracle(dim: int = 64, m: int = 8, n_codes: int = 16,
         f"({cid}, [{', '.join(str(v) for v in cent)}]::BIGINT[])"
         for cid, cent in enumerate(coarse)
     )
-    cb_rows = ",\n      ".join(
-        f"({j}, {c}, [{', '.join(str(v) for v in cent)}]::BIGINT[])"
-        for j, book in enumerate(books)
-        for c, cent in enumerate(book)
-    )
+    cb_rows = _codebook_rows(books)
     return f"""
     WITH cc(cid, cent) AS (VALUES
       {cc_rows}),
@@ -2069,10 +2043,7 @@ def q_intersect_except_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
 
     def year(y):
-        return orders.filter(
-            (F.col("o_orderdate") >= F.lit(f"{y}-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit(f"{y + 1}-01-01").cast("timestamp"))
-        ).select("o_custkey")
+        return orders.filter(in_year("o_orderdate", y)).select("o_custkey")
 
     flagged = orders.filter(F.col("o_orderstatus") == "F").select("o_custkey")
     # subtract == EXCEPT DISTINCT (set semantics, matching the SQL oracle)
@@ -2135,10 +2106,9 @@ def q_interval_join_attribution_outer(
         "+ spark.sql), exercising that path in the driver window too",
 )
 def q_null_aware_not_in(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sql import register_tables
+    from .sql import sql
 
-    register_tables(spark, sf_dir)
-    return spark.sql("""
+    return sql(spark, sf_dir, """
         SELECT
           (SELECT COUNT(*) FROM customer WHERE c_custkey NOT IN
              (SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'))

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .functions.dates import epoch_day, in_year
 from .registry import _t, register
 
 
@@ -578,12 +579,8 @@ def q_max_nonoverlap_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("l_shipdate").alias("maxship"))
         .select(
             F.col("o_custkey").alias("cust"),
-            F.datediff(F.col("o_orderdate").cast("date"),
-                       F.lit("1970-01-01").cast("date")).cast("long")
-            .alias("sd"),
-            F.datediff(F.col("maxship").cast("date"),
-                       F.lit("1970-01-01").cast("date")).cast("long")
-            .alias("ed"),
+            epoch_day("o_orderdate").cast("long").alias("sd"),
+            epoch_day("maxship").cast("long").alias("ed"),
         )
     )
     packed = spans.groupBy("cust").agg(
@@ -1178,9 +1175,7 @@ def q_stl_mad_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = _t(spark, sf_dir, "orders")
     daily = orders.select(
-        F.datediff(F.col("o_orderdate").cast("date"),
-                   F.lit("1970-01-01").cast("date")).cast("long")
-        .alias("day")
+        epoch_day("o_orderdate").cast("long").alias("day")
     ).groupBy("day").agg(F.count("*").cast("long").alias("x"))
     bounds = daily.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
     spine = bounds.select(
@@ -1548,18 +1543,13 @@ def q_optimal_partition_changepoints(
 
     orders = _t(spark, sf_dir, "orders")
     daily = orders.filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01").cast("timestamp"))
+        in_year("o_orderdate", 1996)
     ).select(
-        F.datediff(F.col("o_orderdate").cast("date"),
-                   F.lit("1970-01-01").cast("date")).cast("long")
-        .alias("day"),
+        epoch_day("o_orderdate").cast("long").alias("day"),
         F.expr("cast(round(o_totalprice / 1000) as long)").alias("kd"),
     ).groupBy("day").agg(F.sum("kd").cast("long").alias("kd"))
-    lo = F.datediff(F.lit("1996-01-01").cast("date"),
-                    F.lit("1970-01-01").cast("date")).cast("long")
-    hi = F.datediff(F.lit("1996-12-31").cast("date"),
-                    F.lit("1970-01-01").cast("date")).cast("long")
+    lo = epoch_day(F.lit("1996-01-01")).cast("long")
+    hi = epoch_day(F.lit("1996-12-31")).cast("long")
     spine = spark.range(1).select(
         F.explode(F.sequence(lo, hi)).alias("day")
     ).join(daily, "day", "left").select(
@@ -1682,16 +1672,12 @@ def q_weighted_interval_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("o_custkey").alias("cust"),
             F.least(
-                F.datediff(F.col("o_orderdate").cast("date"),
-                           F.lit("1970-01-01").cast("date")),
-                F.datediff(F.col("maxship").cast("date"),
-                           F.lit("1970-01-01").cast("date")),
+                epoch_day("o_orderdate"),
+                epoch_day("maxship"),
             ).cast("long").alias("lo"),
             F.greatest(
-                F.datediff(F.col("o_orderdate").cast("date"),
-                           F.lit("1970-01-01").cast("date")),
-                F.datediff(F.col("maxship").cast("date"),
-                           F.lit("1970-01-01").cast("date")),
+                epoch_day("o_orderdate"),
+                epoch_day("maxship"),
             ).cast("long").alias("hi"),
             F.expr("cast(round(o_totalprice * 100) as long) div 1000")
             .alias("w"),
@@ -1892,10 +1878,9 @@ def q_join_order_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_recursive_cte_part_hierarchy(
     spark: SparkSession, sf_dir: str,
 ) -> DataFrame:
-    from .sql import register_tables
+    from .sql import sql
 
-    register_tables(spark, sf_dir)
-    return spark.sql("""
+    return sql(spark, sf_dir, """
         WITH RECURSIVE walk(node, depth, cents) AS (
           SELECT CAST(p_partkey AS BIGINT) AS node,
                  0 AS depth,
@@ -2002,10 +1987,9 @@ def q_sql_udf_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "DuckDB runs the identical LATERAL text.",
 )
 def q_lateral_topk_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sql import register_tables
+    from .sql import sql
 
-    register_tables(spark, sf_dir)
-    return spark.sql("""
+    return sql(spark, sf_dir, """
         SELECT n.n_name, c.c_custkey, c.bal_cents
         FROM nation n, LATERAL (
           SELECT c_custkey,
@@ -2055,10 +2039,9 @@ def q_lateral_topk_acctbal(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_collation_lcase_grouping(
     spark: SparkSession, sf_dir: str,
 ) -> DataFrame:
-    from .sql import register_tables
+    from .sql import sql
 
-    register_tables(spark, sf_dir)
-    return spark.sql("""
+    return sql(spark, sf_dir, """
         WITH v AS (
           SELECT CASE CAST(p_partkey % 3 AS INT)
                    WHEN 0 THEN p_type || ' ' || p_brand
@@ -2494,22 +2477,13 @@ def q_entity_resolution_golden(
         "all-pairs.",
 )
 def q_sssp_weighted_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    bd = li.select("l_orderkey", "l_partkey").distinct()
-    a, c = bd.alias("a"), bd.alias("c")
-    e = (
-        a.join(c, (F.col("c.l_orderkey") == F.col("a.l_orderkey"))
-               & (F.col("c.l_partkey") > F.col("a.l_partkey")))
-        .groupBy(F.col("a.l_partkey").alias("pa"),
-                 F.col("c.l_partkey").alias("pb"))
-        .agg(F.count("*").alias("cnt"))
-        .filter(F.col("cnt") >= 2)
-        .select("pa", "pb", F.expr("1 + 1000 div cnt").alias("w"))
+    from .operators.graph import co_purchase_counts, sssp_weighted, undirected
+
+    e = co_purchase_counts(_t(spark, sf_dir, "lineitem")).select(
+        "p1", "p2", F.expr("1 + 1000 div n_orders").alias("w")
     )
-    und = e.select(F.col("pa").alias("node"), F.col("pb").alias("nb"), "w") \
-        .union(e.select(F.col("pb"), F.col("pa"), "w")) \
+    und = undirected(e, "node", "nb") \
         .localCheckpoint(eager=True)  # joined every relaxation round
-    from .operators.graph import sssp_weighted
 
     hub = (
         und.groupBy("node").agg(F.count("*").alias("deg"))
@@ -2548,10 +2522,9 @@ def q_sssp_weighted_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_listagg_region_nations(
     spark: SparkSession, sf_dir: str,
 ) -> DataFrame:
-    from .sql import register_tables
+    from .sql import sql
 
-    register_tables(spark, sf_dir)
-    return spark.sql("""
+    return sql(spark, sf_dir, """
         SELECT r.r_name,
                CAST(COUNT(*) AS BIGINT) AS n_nations,
                listagg(n.n_name, ',')
@@ -2656,10 +2629,9 @@ def q_arrow_argmax_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exchange.",
 )
 def q_pipe_syntax_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sql import register_tables
+    from .sql import sql
 
-    register_tables(spark, sf_dir)
-    return spark.sql("""
+    return sql(spark, sf_dir, """
         FROM lineitem
         |> WHERE l_quantity < 40
         |> EXTEND CAST(round(l_extendedprice * 100) AS BIGINT) AS price_c,
@@ -2757,13 +2729,10 @@ def q_parameterized_sql_binding(
 def q_sql_scripting_compound(
     spark: SparkSession, sf_dir: str,
 ) -> DataFrame:
-    from .sql import register_tables
+    from .sql import scripting, sql
 
-    register_tables(spark, sf_dir)
-    old = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
-        return spark.sql("""
+    with scripting(spark):
+        return sql(spark, sf_dir, """
             BEGIN
               DECLARE folded BIGINT DEFAULT 0;
               DECLARE q INT DEFAULT 1;
@@ -2783,11 +2752,6 @@ def q_sql_scripting_compound(
                        AS n_orders_1995;
             END
         """)
-    finally:
-        if old is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", old)
 
 
 # ---------------------------------------------------------------------------
@@ -2941,10 +2905,9 @@ def q_deletion_cascade_impact(
         "bitmaps instead of re-scanning history.",
 )
 def q_bitmap_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sql import register_tables
+    from .sql import sql
 
-    register_tables(spark, sf_dir)
-    return spark.sql("""
+    return sql(spark, sf_dir, """
         SELECT event_type,
                CAST(SUM(n_ev) AS BIGINT) AS n_events,
                CAST(SUM(bitmap_count(bm)) AS BIGINT) AS n_users
@@ -3007,10 +2970,9 @@ def q_bitmap_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         "on the group key.",
 )
 def q_luhn_checksum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sql import register_tables
+    from .sql import sql
 
-    register_tables(spark, sf_dir)
-    return spark.sql("""
+    return sql(spark, sf_dir, """
         WITH acct AS (
           SELECT c_nationkey,
                  lpad(CAST(c_custkey * 37 + (c_custkey % 10) AS STRING),

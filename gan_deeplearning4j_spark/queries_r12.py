@@ -158,10 +158,9 @@ ORDER BY ALL
         "the aggregate buffer update, adding no second pass.",
 )
 def q_group_by_all_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sql import register_tables
+    from .sql import sql
 
-    register_tables(spark, sf_dir)
-    return spark.sql(_GROUP_BY_ALL_SQL)
+    return sql(spark, sf_dir, _GROUP_BY_ALL_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -204,10 +203,9 @@ def q_group_by_all_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_calendar_month_clamp_audit(
     spark: SparkSession, sf_dir: str,
 ) -> DataFrame:
-    from .sql import register_tables
+    from .sql import sql
 
-    register_tables(spark, sf_dir)
-    return spark.sql("""
+    return sql(spark, sf_dir, """
         WITH base AS (
           SELECT o_orderpriority AS pri, CAST(o_orderdate AS DATE) AS d,
                  CAST(o_orderkey % 25 AS INT) - 12 AS k
@@ -632,10 +630,9 @@ def q_session_variable_pricing(
 def q_hll_sketch_union_bracket(
     spark: SparkSession, sf_dir: str,
 ) -> DataFrame:
-    from .sql import register_tables
+    from .sql import sql
 
-    register_tables(spark, sf_dir)
-    return spark.sql("""
+    return sql(spark, sf_dir, """
         WITH shard AS (
           SELECT event_type, CAST(user_id % 8 AS BIGINT) AS bucket,
                  hll_sketch_agg(user_id, 14) AS s
@@ -878,10 +875,9 @@ def q_split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_width_bucket_histogram(
     spark: SparkSession, sf_dir: str,
 ) -> DataFrame:
-    from .sql import register_tables
+    from .sql import sql
 
-    register_tables(spark, sf_dir)
-    return spark.sql("""
+    return sql(spark, sf_dir, """
         WITH c AS (
           SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents
           FROM orders

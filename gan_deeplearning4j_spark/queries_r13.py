@@ -10,9 +10,8 @@ try_sum overflow-to-NULL.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from .registry import _t, register
+from .registry import register
 
 
 # ---------------------------------------------------------------------------
@@ -51,10 +50,9 @@ from .registry import _t, register
         "date math, one exchange on the ~14 boundary-week keys.",
 )
 def q_iso_week_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sql import register_tables
+    from .sql import sql
 
-    register_tables(spark, sf_dir)
-    return spark.sql("""
+    return sql(spark, sf_dir, """
         WITH d AS (
           SELECT CAST(o_orderdate AS DATE) AS dt,
                  CAST(round(o_totalprice * 100) AS BIGINT) AS cents
@@ -117,10 +115,9 @@ FROM priced GROUP BY l_returnflag ORDER BY l_returnflag
 def q_lateral_alias_pricing_chain(
     spark: SparkSession, sf_dir: str,
 ) -> DataFrame:
-    from .sql import register_tables
+    from .sql import sql
 
-    register_tables(spark, sf_dir)
-    return spark.sql(_LATERAL_ALIAS_SQL)
+    return sql(spark, sf_dir, _LATERAL_ALIAS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -163,10 +160,9 @@ def q_lateral_alias_pricing_chain(
 def q_unpivot_sql_include_nulls(
     spark: SparkSession, sf_dir: str,
 ) -> DataFrame:
-    from .sql import register_tables
+    from .sql import sql
 
-    register_tables(spark, sf_dir)
-    return spark.sql("""
+    return sql(spark, sf_dir, """
         WITH base AS (
           SELECT o_orderpriority AS pri,
                  CAST(round(o_totalprice * 100) AS BIGINT) AS total_cents,
@@ -228,13 +224,10 @@ def q_unpivot_sql_include_nulls(
 def q_sql_scripting_for_cursor(
     spark: SparkSession, sf_dir: str,
 ) -> DataFrame:
-    from .sql import register_tables
+    from .sql import scripting, sql
 
-    register_tables(spark, sf_dir)
-    old = spark.conf.get("spark.sql.scripting.enabled", None)
-    spark.conf.set("spark.sql.scripting.enabled", "true")
-    try:
-        return spark.sql("""
+    with scripting(spark):
+        return sql(spark, sf_dir, """
         BEGIN
           DECLARE acc BIGINT DEFAULT 0;
           DECLARE n_steps BIGINT DEFAULT 0;
@@ -254,13 +247,6 @@ def q_sql_scripting_for_cursor(
           SELECT n_steps, acc AS fold_acc;
         END
         """)
-    finally:
-        # restore the shared session (the ★sql_scripting_compound
-        # pattern): a later query must not inherit scripting mode
-        if old is None:
-            spark.conf.unset("spark.sql.scripting.enabled")
-        else:
-            spark.conf.set("spark.sql.scripting.enabled", old)
 
 
 # ---------------------------------------------------------------------------
@@ -299,10 +285,9 @@ def q_sql_scripting_for_cursor(
         "codegen string work; the shape rollup is the one exchange.",
 )
 def q_mask_builtin_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sql import register_tables
+    from .sql import sql
 
-    register_tables(spark, sf_dir)
-    return spark.sql("""
+    return sql(spark, sf_dir, """
         WITH ids AS (
           SELECT s_nationkey,
                  concat('ID-', upper(substr(s_name, 1, 8)), '-',
@@ -356,10 +341,9 @@ def q_mask_builtin_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_regexp_position_family(
     spark: SparkSession, sf_dir: str,
 ) -> DataFrame:
-    from .sql import register_tables
+    from .sql import sql
 
-    register_tables(spark, sf_dir)
-    return spark.sql("""
+    return sql(spark, sf_dir, """
         WITH m AS (
           SELECT p_partkey,
                  CAST(regexp_count(p_name, '[aeiou]{2}') AS BIGINT)
@@ -412,10 +396,9 @@ def q_regexp_position_family(
 def q_bround_half_even_audit(
     spark: SparkSession, sf_dir: str,
 ) -> DataFrame:
-    from .sql import register_tables
+    from .sql import sql
 
-    register_tables(spark, sf_dir)
-    return spark.sql("""
+    return sql(spark, sf_dir, """
         WITH h AS (
           SELECT c_nationkey,
                  CAST(round(c_acctbal * 100) AS BIGINT) / 2.0 AS x
@@ -474,10 +457,9 @@ def q_bround_half_even_audit(
 def q_try_sum_overflow_audit(
     spark: SparkSession, sf_dir: str,
 ) -> DataFrame:
-    from .sql import register_tables
+    from .sql import sql
 
-    register_tables(spark, sf_dir)
-    return spark.sql("""
+    return sql(spark, sf_dir, """
         WITH v AS (
           SELECT o_orderpriority AS pri,
                  CAST(round(o_totalprice * 100) AS BIGINT)

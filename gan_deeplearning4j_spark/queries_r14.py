@@ -84,22 +84,6 @@ def _doc_metrics(docs: DataFrame) -> DataFrame:
 _SQL_STOP = ", ".join(f"'{w}'" for w in _STOPWORDS)
 
 
-def _bigrams(toks: DataFrame) -> DataFrame:
-    """(doc_id, nbg, g) exploded bigrams — zip_with over shifted slices
-    (never a per-element array recompute inside a lambda), truncated to
-    the n-1 real bigram positions."""
-    col = F.col("t")
-    g = F.zip_with(
-        F.slice(col, 1, 10**9), F.slice(col, 2, 10**9),
-        lambda a, b: F.concat_ws(" ", a, b),
-    )
-    return toks.filter(F.size("t") >= 2).select(
-        "doc_id",
-        (F.size("t") - 1).cast("long").alias("nbg"),
-        F.explode(F.slice(g, 1, F.size(col) - 1)).alias("g"),
-    )
-
-
 # A doc's most-repeated-bigram count as a MAP-SIDE column expression
 # (r13 perf pass): sort the doc's bigram array and take the longest
 # equal-run — identical to the grouped max count because bigram strings

@@ -17,7 +17,7 @@ name).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.money import cents_nonneg
@@ -37,6 +37,37 @@ def _agree_or_both_undefined(cmp: "F.Column", native: "F.Column",
     is behaving correctly."""
     return F.coalesce(
         cmp, closed.isNull() & (native.isNull() | F.isnan(native))
+    )
+
+
+def _returnflag_moments(
+    spark: SparkSession, sf_dir: str, *native: "F.Column",
+) -> DataFrame:
+    """Exact int64 moments per l_returnflag of x = l_quantity and
+    y = l_discount in basis points (n, sx, sy, sxy, sxx, syy), plus the
+    ``native`` aggregates over the same rows in the same pass."""
+    p = _t(spark, sf_dir, "lineitem").select(
+        "l_returnflag",
+        F.col("l_quantity").cast("long").alias("x"),
+        F.round(F.col("l_discount") * 10000, 0).cast("long").alias("y"),
+    )
+    return p.groupBy("l_returnflag").agg(
+        F.count("*").cast("long").alias("n"),
+        F.sum("x").cast("long").alias("sx"),
+        F.sum("y").cast("long").alias("sy"),
+        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
+        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
+        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
+        *native,
+    )
+
+
+def _sd_pop(s: str, ss: str) -> "F.Column":
+    """Population standard deviation from the exact moments n, ``s`` and
+    ``ss``: sqrt(n·ss − s²) / n, one double expression."""
+    return (
+        F.sqrt((F.col("n") * F.col(ss) - F.col(s) * F.col(s))
+               * F.lit(1.0)) / F.col("n")
     )
 
 
@@ -92,20 +123,9 @@ def _agree_or_both_undefined(cmp: "F.Column", native: "F.Column",
         "aggregate rides the same pass.",
 )
 def q_regr_native_bracket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = li.select(
-        "l_returnflag",
-        F.col("l_quantity").cast("long").alias("x"),
-        F.round(F.col("l_discount") * 10000, 0).cast("long").alias("y"),
-    )
-    mo = p.groupBy("l_returnflag").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        # syy feeds only the verdict tolerance scale, never the hash
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
+    # syy feeds only the verdict tolerance scale, never the hash
+    mo = _returnflag_moments(
+        spark, sf_dir,
         F.expr("regr_slope(CAST(y AS DOUBLE), CAST(x AS DOUBLE))")
         .alias("nslope"),
         F.expr("regr_intercept(CAST(y AS DOUBLE), CAST(x AS DOUBLE))")
@@ -127,14 +147,8 @@ def q_regr_native_bracket(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and flip on accumulation order (ADVICE r12). The 1e-12 additive
     # floor keeps a degenerate constant-column group from zeroing the
     # scale entirely.
-    sd_x = (
-        F.sqrt((F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
-               * F.lit(1.0)) / F.col("n")
-    )
-    sd_y = (
-        F.sqrt((F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
-               * F.lit(1.0)) / F.col("n")
-    )
+    sd_x = _sd_pop("sx", "sxx")
+    sd_y = _sd_pop("sy", "syy")
     mean_x_abs = F.abs(F.col("sx") * F.lit(1.0) / F.col("n"))
     return mo.select(
         "l_returnflag", "n", "sx", "sy",
@@ -695,19 +709,8 @@ def q_xml_xpath_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         "carries everything.",
 )
 def q_corr_covar_bracket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    p = li.select(
-        "l_returnflag",
-        F.col("l_quantity").cast("long").alias("x"),
-        F.round(F.col("l_discount") * 10000, 0).cast("long").alias("y"),
-    )
-    mo = p.groupBy("l_returnflag").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum("y").cast("long").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("syy"),
+    mo = _returnflag_moments(
+        spark, sf_dir,
         F.corr(F.col("y").cast("double"), F.col("x").cast("double"))
         .alias("ncorr"),
         F.covar_pop(F.col("y").cast("double"), F.col("x").cast("double"))
@@ -725,20 +728,14 @@ def q_corr_covar_bracket(spark: SparkSession, sf_dir: str) -> DataFrame:
                  * F.lit(1.0))
     )
     closed_covar = c_num / F.col("n") / F.col("n")
-    closed_std = (
-        F.sqrt((F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
-               * F.lit(1.0)) / F.col("n")
-    )
+    closed_std = _sd_pop("sy", "syy")
     # Tolerances scale to each statistic's natural magnitude (corr is
     # bounded in [-1,1] so scale 1; covariance scales as sd_x*sd_y;
     # stddev scales as itself) — NOT to the near-cancelling closed value,
     # which is ~0 for uncorrelated quantity/discount and would collapse
     # the tolerance to ~1e-15 absolute (ADVICE r12). 1e-12 floor guards
     # a degenerate constant-column group.
-    sd_x = (
-        F.sqrt((F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
-               * F.lit(1.0)) / F.col("n")
-    )
+    sd_x = _sd_pop("sx", "sxx")
     return mo.select(
         "l_returnflag", "n",
         F.floor(closed_corr * 1e9).cast("long").alias("corr_e9"),

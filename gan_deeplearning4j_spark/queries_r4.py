@@ -34,7 +34,10 @@ from pyspark.sql import functions as F
 from .functions.money import cents_nonneg
 
 from .functions.windows import bounded_window
-from .functions.text import portable_hash60, portable_hash60_sql
+from .functions.text import (
+    portable_hash60, portable_hash60_sql, quality_verdict,
+)
+from .operators.aggregates import pearson_moments, pearson_ppm
 from .registry import _t, register
 
 # ---------------------------------------------------------------------------
@@ -504,6 +507,50 @@ def q_covariance_pairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Exact equi-depth histogram boundaries (percentile_disc replay, no floats)
 # ---------------------------------------------------------------------------
 
+def _priority_prices(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(o_orderpriority, price_c): each order's price in integer cents."""
+    return _t(spark, sf_dir, "orders").select(
+        "o_orderpriority",
+        cents_nonneg(F.col("o_totalprice")).alias("price_c"),
+    )
+
+
+def _priority_price_cum(o: DataFrame) -> DataFrame:
+    """Exact per-priority cumulative weights of distinct prices:
+    (o_orderpriority, price_c, cw = orders priced <= price_c, n = the
+    priority's orders). Two-level cumulative decomposition (see
+    mad_robust_scale): price cents are near-unique, so a per-group cumsum
+    over distinct values would run at |groups| parallelism over
+    fact-scale rows; bucketing by ``price_c div 1000`` adds a bucket
+    prefix sum and keeps the row-level window per (group, bucket)."""
+    agg = o.groupBy("o_orderpriority", "price_c").agg(
+        F.count("*").alias("cnt")
+    ).withColumn("bkt", F.expr("price_c div 1000"))
+    bstat = agg.groupBy("o_orderpriority", "bkt").agg(
+        F.sum("cnt").alias("bc")
+    )
+    wb = (
+        Window.partitionBy("o_orderpriority").orderBy("bkt")
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    bcum = bstat.select(
+        "o_orderpriority", "bkt",
+        F.coalesce(F.sum("bc").over(wb), F.lit(0)).alias("before"),
+        F.sum("bc").over(
+            Window.partitionBy("o_orderpriority")
+        ).alias("n"),
+    )
+    wi = (
+        Window.partitionBy("o_orderpriority", "bkt").orderBy("price_c")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return agg.join(F.broadcast(bcum), ["o_orderpriority", "bkt"]).select(
+        "o_orderpriority", "price_c",
+        (F.col("before") + F.sum("cnt").over(wi)).alias("cw"),
+        "n",
+    )
+
+
 @register(
     "equi_depth_boundaries",
     oracle="""
@@ -543,39 +590,7 @@ def q_covariance_pairs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "conditional MIN folds the three quartiles in one pass",
 )
 def q_equi_depth_boundaries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderpriority",
-        cents_nonneg(F.col("o_totalprice")).alias("price_c"),
-    )
-    # two-level cumulative decomposition (see mad_robust_scale): price
-    # cents are near-unique, so a per-group cumsum over distinct values
-    # would run at |groups| parallelism over fact-scale rows
-    agg = o.groupBy("o_orderpriority", "price_c").agg(
-        F.count("*").alias("cnt")
-    ).withColumn("bkt", F.expr("price_c div 1000"))
-    bstat = agg.groupBy("o_orderpriority", "bkt").agg(
-        F.sum("cnt").alias("bc")
-    )
-    wb = (
-        Window.partitionBy("o_orderpriority").orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    bcum = bstat.select(
-        "o_orderpriority", "bkt",
-        F.coalesce(F.sum("bc").over(wb), F.lit(0)).alias("before"),
-        F.sum("bc").over(
-            Window.partitionBy("o_orderpriority")
-        ).alias("n"),
-    )
-    wi = (
-        Window.partitionBy("o_orderpriority", "bkt").orderBy("price_c")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = agg.join(F.broadcast(bcum), ["o_orderpriority", "bkt"]).select(
-        "o_orderpriority", "price_c",
-        (F.col("before") + F.sum("cnt").over(wi)).alias("cw"),
-        "n",
-    )
+    cum = _priority_price_cum(_priority_prices(spark, sf_dir))
     cw, n = F.col("cw"), F.col("n")
     return cum.groupBy("o_orderpriority").agg(
         F.min("n").alias("n"),
@@ -820,6 +835,41 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Interpolated Kneser-Ney bigram LM (n-gram LM training, pure integer math)
 # ---------------------------------------------------------------------------
 
+def _doc_bigrams(docs: DataFrame, *keep: str) -> DataFrame:
+    """One row (*keep, w1, w2) per adjacent word pair of each document's
+    single-space split."""
+    w = F.split(F.col("text"), " ")
+    n = F.size(w)
+    pairs = F.zip_with(
+        F.slice(w, 1, n - 1),
+        F.slice(w, 2, n - 1),
+        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+    )
+    return docs.select(*keep, F.explode(pairs).alias("p")).select(
+        *keep, "p.w1", "p.w2"
+    )
+
+
+def _kn_bigram_table(big: DataFrame) -> DataFrame:
+    """Interpolated Kneser-Ney (d = 3/4) over the bigram occurrences
+    ``big``: one row per bigram type, (w1, w2, c12, p_ppm) with
+    P_KN(w2|w1) in exact integer ppm."""
+    c = big.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
+    bt = c.agg(F.count("*").alias("bt"))  # |bigram types|: one scalar
+    return c.select(
+        "w1", "w2", "c12",
+        F.sum("c12").over(Window.partitionBy("w1")).alias("c1"),
+        F.count("*").over(Window.partitionBy("w1")).alias("nf1"),
+        F.count("*").over(Window.partitionBy("w2")).alias("npre2"),
+    ).crossJoin(F.broadcast(bt)).select(
+        "w1", "w2", "c12",
+        F.expr(
+            "(4 * c12 - 3) * 1000000 div (4 * c1)"
+            " + ((3 * nf1 * 1000000) div (4 * c1)) * npre2 div bt"
+        ).alias("p_ppm"),
+    )
+
+
 @register(
     "kneser_ney_bigram_lm",
     oracle="""
@@ -857,32 +907,10 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "TakeOrderedAndProject",
 )
 def q_kneser_ney_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    w = F.split(F.col("text"), " ")
-    n = F.size(w)
-    pairs = F.zip_with(
-        F.slice(w, 1, n - 1),
-        F.slice(w, 2, n - 1),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-    )
-    big = docs.select(F.explode(pairs).alias("p")).select("p.w1", "p.w2")
-    c = big.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
-    bt = c.agg(F.count("*").alias("bt"))  # |bigram types|: one scalar
-    k = c.select(
-        "w1", "w2", "c12",
-        F.sum("c12").over(Window.partitionBy("w1")).alias("c1"),
-        F.count("*").over(Window.partitionBy("w1")).alias("nf1"),
-        F.count("*").over(Window.partitionBy("w2")).alias("npre2"),
-    ).crossJoin(F.broadcast(bt))
+    k = _kn_bigram_table(_doc_bigrams(_t(spark, sf_dir, "documents")))
     return (
         k.filter(F.col("c12") >= 5)
-        .select(
-            "w1", "w2", "c12",
-            F.expr(
-                "(4 * c12 - 3) * 1000000 div (4 * c1)"
-                " + ((3 * nf1 * 1000000) div (4 * c1)) * npre2 div bt"
-            ).alias("p_kn_ppm"),
-        )
+        .select("w1", "w2", "c12", F.col("p_ppm").alias("p_kn_ppm"))
         .orderBy(F.desc("p_kn_ppm"), "w1", "w2")
         .limit(50)
     )
@@ -1013,31 +1041,8 @@ def q_running_balance_clamped(spark: SparkSession, sf_dir: str) -> DataFrame:
         "reuses the partitioning — and the per-doc aggregate is tiny",
 )
 def q_kn_doc_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    w = F.split(F.col("text"), " ")
-    n = F.size(w)
-    pairs = F.zip_with(
-        F.slice(w, 1, n - 1),
-        F.slice(w, 2, n - 1),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-    )
-    big = docs.select(
-        "doc_id", F.explode(pairs).alias("p")
-    ).select("doc_id", "p.w1", "p.w2")
-    c = big.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
-    bt = c.agg(F.count("*").alias("bt"))
-    k = c.select(
-        "w1", "w2", "c12",
-        F.sum("c12").over(Window.partitionBy("w1")).alias("c1"),
-        F.count("*").over(Window.partitionBy("w1")).alias("nf1"),
-        F.count("*").over(Window.partitionBy("w2")).alias("npre2"),
-    ).crossJoin(F.broadcast(bt)).select(
-        "w1", "w2",
-        F.expr(
-            "(4 * c12 - 3) * 1000000 div (4 * c1)"
-            " + ((3 * nf1 * 1000000) div (4 * c1)) * npre2 div bt"
-        ).alias("p_ppm"),
-    )
+    big = _doc_bigrams(_t(spark, sf_dir, "documents"), "doc_id")
+    k = _kn_bigram_table(big).select("w1", "w2", "p_ppm")
     scored = big.join(k, ["w1", "w2"]).select(
         "doc_id",
         F.floor(
@@ -1643,6 +1648,37 @@ def q_session_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Simple-exponential-smoothing one-step-ahead backtest (struct-acc fold)
 # ---------------------------------------------------------------------------
 
+def _daily_event_fold(
+    spark: SparkSession, sf_dir: str, init, step,
+) -> DataFrame:
+    """Per event_type, the day-ordered daily event counts ``xs`` folded by
+    ``step`` from the second day on, starting at ``init`` (which reads the
+    first day as ``F.element_at("xs", 1)``): (event_type, n_days, a = the
+    final accumulator)."""
+    ev = _t(spark, sf_dir, "events")
+    daily = ev.groupBy(
+        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("d")
+    ).agg(F.count("*").alias("n"))
+    return (
+        daily.select(
+            "event_type", F.struct(F.col("d"), F.col("n")).alias("t")
+        )
+        .groupBy("event_type")
+        .agg(F.sort_array(F.collect_list("t")).alias("ts"))
+        .select(
+            "event_type",
+            F.transform(F.col("ts"), lambda t: t["n"]).alias("xs"),
+        )
+        .select(
+            "event_type",
+            F.size("xs").cast("long").alias("n_days"),
+            F.aggregate(
+                F.slice("xs", 2, F.size("xs") - 1), init, step
+            ).alias("a"),
+        )
+    )
+
+
 @register(
     "ses_forecast_backtest",
     oracle="""
@@ -1692,21 +1728,6 @@ def q_session_pattern_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         "baseline",
 )
 def q_ses_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("d")
-    ).agg(F.count("*").alias("n"))
-    seq = (
-        daily.select(
-            "event_type", F.struct(F.col("d"), F.col("n")).alias("t")
-        )
-        .groupBy("event_type")
-        .agg(F.sort_array(F.collect_list("t")).alias("ts"))
-        .select(
-            "event_type",
-            F.transform(F.col("ts"), lambda t: t["n"]).alias("xs"),
-        )
-    )
     init = F.struct(
         F.element_at("xs", 1).alias("lv"),
         F.lit(0).cast("long").alias("sae"),
@@ -1720,13 +1741,7 @@ def q_ses_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             (acc["k"] + 1).alias("k"),
         )
 
-    fold = seq.select(
-        "event_type",
-        F.size("xs").cast("long").alias("n_days"),
-        F.aggregate(
-            F.slice("xs", 2, F.size("xs") - 1), init, step
-        ).alias("a"),
-    )
+    fold = _daily_event_fold(spark, sf_dir, init, step)
     return fold.select(
         "event_type", "n_days",
         F.col("a.lv").alias("level_final"),
@@ -1783,37 +1798,8 @@ def q_ses_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "shuffle",
 )
 def q_winsorized_mean_price(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders").select(
-        "o_orderpriority",
-        cents_nonneg(F.col("o_totalprice")).alias("price_c"),
-    )
-    # same two-level cumsum decomposition as equi_depth_boundaries
-    agg = o.groupBy("o_orderpriority", "price_c").agg(
-        F.count("*").alias("cnt")
-    ).withColumn("bkt", F.expr("price_c div 1000"))
-    bstat = agg.groupBy("o_orderpriority", "bkt").agg(
-        F.sum("cnt").alias("bc")
-    )
-    wb = (
-        Window.partitionBy("o_orderpriority").orderBy("bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    bcum = bstat.select(
-        "o_orderpriority", "bkt",
-        F.coalesce(F.sum("bc").over(wb), F.lit(0)).alias("before"),
-        F.sum("bc").over(
-            Window.partitionBy("o_orderpriority")
-        ).alias("n"),
-    )
-    wi = (
-        Window.partitionBy("o_orderpriority", "bkt").orderBy("price_c")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = agg.join(F.broadcast(bcum), ["o_orderpriority", "bkt"]).select(
-        "o_orderpriority", "price_c",
-        (F.col("before") + F.sum("cnt").over(wi)).alias("cw"),
-        "n",
-    )
+    o = _priority_prices(spark, sf_dir)
+    cum = _priority_price_cum(o)
     cw, n = F.col("cw"), F.col("n")
     bounds = cum.groupBy("o_orderpriority").agg(
         F.min(F.when(20 * cw >= n, F.col("price_c"))).alias("lo"),
@@ -2018,6 +2004,51 @@ def q_max_concurrency_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Exact 1-D Wasserstein (EMD) drift matrix between source distributions
 # ---------------------------------------------------------------------------
 
+def _source_pair_cdfs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact cumulative document-length counts of every source pair
+    (sa < sb) over their pooled distinct lengths: (sa, sb, na, nb, v,
+    fa, fb) with na/nb the pair's document counts and fa/fb each
+    source's documents of length <= v."""
+    docs = _t(spark, sf_dir, "documents")
+    c = docs.groupBy(
+        "source", F.col("n_chars").cast("long").alias("v")
+    ).agg(F.count("*").alias("cnt"))
+    tot = c.groupBy("source").agg(F.sum("cnt").alias("n"))
+    a, b = tot.alias("a"), tot.alias("b")
+    pairs = a.join(b, F.col("a.source") < F.col("b.source")).select(
+        F.col("a.source").alias("sa"), F.col("b.source").alias("sb"),
+        F.col("a.n").alias("na"), F.col("b.n").alias("nb"),
+    )
+    tagged = (
+        F.broadcast(pairs)
+        .join(
+            c,
+            (F.col("source") == F.col("sa"))
+            | (F.col("source") == F.col("sb")),
+        )
+        .groupBy("sa", "sb", "na", "nb", "v")
+        .agg(
+            F.sum(
+                F.when(F.col("source") == F.col("sa"), F.col("cnt"))
+                .otherwise(0)
+            ).alias("ca"),
+            F.sum(
+                F.when(F.col("source") == F.col("sb"), F.col("cnt"))
+                .otherwise(0)
+            ).alias("cb"),
+        )
+    )
+    wc = (
+        Window.partitionBy("sa", "sb").orderBy("v")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return tagged.select(
+        "sa", "sb", "na", "nb", "v",
+        F.sum("ca").over(wc).alias("fa"),
+        F.sum("cb").over(wc).alias("fb"),
+    )
+
+
 @register(
     "emd_drift_matrix",
     oracle="""
@@ -2067,45 +2098,8 @@ def q_max_concurrency_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "sweeps over value-distinct rows, no global sort",
 )
 def q_emd_drift_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    c = docs.groupBy(
-        "source", F.col("n_chars").cast("long").alias("v")
-    ).agg(F.count("*").alias("cnt"))
-    tot = c.groupBy("source").agg(F.sum("cnt").alias("n"))
-    a, b = tot.alias("a"), tot.alias("b")
-    pairs = a.join(b, F.col("a.source") < F.col("b.source")).select(
-        F.col("a.source").alias("sa"), F.col("b.source").alias("sb"),
-        F.col("a.n").alias("na"), F.col("b.n").alias("nb"),
-    )
-    tagged = (
-        F.broadcast(pairs)
-        .join(
-            c,
-            (F.col("source") == F.col("sa"))
-            | (F.col("source") == F.col("sb")),
-        )
-        .groupBy("sa", "sb", "na", "nb", "v")
-        .agg(
-            F.sum(
-                F.when(F.col("source") == F.col("sa"), F.col("cnt"))
-                .otherwise(0)
-            ).alias("ca"),
-            F.sum(
-                F.when(F.col("source") == F.col("sb"), F.col("cnt"))
-                .otherwise(0)
-            ).alias("cb"),
-        )
-    )
-    wc = (
-        Window.partitionBy("sa", "sb").orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    wl = Window.partitionBy("sa", "sb").orderBy("v")
-    cum = tagged.select(
-        "sa", "sb", "na", "nb", "v",
-        F.sum("ca").over(wc).alias("fa"),
-        F.sum("cb").over(wc).alias("fb"),
-        F.lead("v").over(wl).alias("nv"),
+    cum = _source_pair_cdfs(spark, sf_dir).withColumn(
+        "nv", F.lead("v").over(Window.partitionBy("sa", "sb").orderBy("v"))
     )
     return (
         cum.filter(F.col("nv").isNotNull())
@@ -2470,44 +2464,7 @@ def q_token_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value), pair-partitioned cumulative windows, no global sort",
 )
 def q_ks_drift_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    c = docs.groupBy(
-        "source", F.col("n_chars").cast("long").alias("v")
-    ).agg(F.count("*").alias("cnt"))
-    tot = c.groupBy("source").agg(F.sum("cnt").alias("n"))
-    a, b = tot.alias("a"), tot.alias("b")
-    pairs = a.join(b, F.col("a.source") < F.col("b.source")).select(
-        F.col("a.source").alias("sa"), F.col("b.source").alias("sb"),
-        F.col("a.n").alias("na"), F.col("b.n").alias("nb"),
-    )
-    tagged = (
-        F.broadcast(pairs)
-        .join(
-            c,
-            (F.col("source") == F.col("sa"))
-            | (F.col("source") == F.col("sb")),
-        )
-        .groupBy("sa", "sb", "na", "nb", "v")
-        .agg(
-            F.sum(
-                F.when(F.col("source") == F.col("sa"), F.col("cnt"))
-                .otherwise(0)
-            ).alias("ca"),
-            F.sum(
-                F.when(F.col("source") == F.col("sb"), F.col("cnt"))
-                .otherwise(0)
-            ).alias("cb"),
-        )
-    )
-    wc = (
-        Window.partitionBy("sa", "sb").orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = tagged.select(
-        "sa", "sb", "na", "nb",
-        F.sum("ca").over(wc).alias("fa"),
-        F.sum("cb").over(wc).alias("fb"),
-    )
+    cum = _source_pair_cdfs(spark, sf_dir)
     return (
         cum.groupBy("sa", "sb")
         .agg(
@@ -3134,29 +3091,11 @@ def q_acf_daily_lag7(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a.y").alias("x"),
         F.col("b.y").alias("z"),
     )
-    m = lagged.groupBy("event_type").agg(
-        F.count("*").cast("decimal(38,0)").alias("n"),
-        F.sum("x").cast("decimal(38,0)").alias("sx"),
-        F.sum("z").cast("decimal(38,0)").alias("sz"),
-        F.sum(F.col("x") * F.col("z")).cast("decimal(38,0)").alias("sxz"),
-        F.sum(F.col("x") * F.col("x")).cast("decimal(38,0)").alias("sxx"),
-        F.sum(F.col("z") * F.col("z")).cast("decimal(38,0)").alias("szz"),
-    )
-    num = (F.col("n") * F.col("sxz") - F.col("sx") * F.col("sz")).cast(
-        "double"
-    )
-    dx = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
-        "double"
-    )
-    dz = (F.col("n") * F.col("szz") - F.col("sz") * F.col("sz")).cast(
-        "double"
-    )
+    m = lagged.groupBy("event_type").agg(*pearson_moments())
     return m.select(
         "event_type",
         F.col("n").cast("long").alias("n_pairs"),
-        F.floor(
-            num / F.sqrt(dx) / F.sqrt(dz) * F.lit(1000000.0)
-        ).cast("long").alias("acf7_ppm"),
+        pearson_ppm().alias("acf7_ppm"),
     ).orderBy("event_type")
 
 
@@ -3402,23 +3341,10 @@ def q_cusum_drift_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "bar) agg shuffle, two ordered window passes per user",
 )
 def q_events_resample_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from .operators.relational import hourly_grid
+
     ev = _t(spark, sf_dir, "events").filter(F.col("user_id") < 40)
-    hourly = ev.groupBy(
-        "user_id", F.date_trunc("hour", F.col("ts")).alias("bar")
-    ).agg(
-        F.sum(cents_nonneg(F.col("value"))).alias("v")
-    )
-    bounds = ev.groupBy("user_id").agg(
-        F.date_trunc("hour", F.min("ts")).alias("t0"),
-        F.date_trunc("hour", F.max("ts")).alias("t1"),
-    )
-    grid = bounds.select(
-        "user_id",
-        F.explode(
-            F.sequence("t0", "t1", F.expr("INTERVAL 1 HOUR"))
-        ).alias("bar"),
-    )
-    g = grid.join(hourly, ["user_id", "bar"], "left").select(
+    g = hourly_grid(ev).select(
         "user_id",
         F.expr("unix_micros(bar) div 3600000000").alias("h"),
         "v",
@@ -3910,29 +3836,11 @@ def q_ccf_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(a)
         .join(b, F.col("db") == F.expr("date_add(da, lag)"))
     )
-    m = paired.groupBy("lag").agg(
-        F.count("*").cast("decimal(38,0)").alias("n"),
-        F.sum("x").cast("decimal(38,0)").alias("sx"),
-        F.sum("z").cast("decimal(38,0)").alias("sz"),
-        F.sum(F.col("x") * F.col("z")).cast("decimal(38,0)").alias("sxz"),
-        F.sum(F.col("x") * F.col("x")).cast("decimal(38,0)").alias("sxx"),
-        F.sum(F.col("z") * F.col("z")).cast("decimal(38,0)").alias("szz"),
-    )
-    num = (F.col("n") * F.col("sxz") - F.col("sx") * F.col("sz")).cast(
-        "double"
-    )
-    dx = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
-        "double"
-    )
-    dz = (F.col("n") * F.col("szz") - F.col("sz") * F.col("sz")).cast(
-        "double"
-    )
+    m = paired.groupBy("lag").agg(*pearson_moments())
     return m.select(
         F.col("lag").cast("long").alias("lag"),
         F.col("n").cast("long").alias("n_pairs"),
-        F.floor(
-            num / F.sqrt(dx) / F.sqrt(dz) * F.lit(1000000.0)
-        ).cast("long").alias("ccf_ppm"),
+        pearson_ppm().alias("ccf_ppm"),
     ).orderBy("lag")
 
 
@@ -4416,25 +4324,9 @@ def _lpa_oracle(iters: int = 3) -> str:
         "localCheckpoint'd like connected_components",
 )
 def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    b = li.select("l_orderkey", "l_partkey").distinct()
-    a, c = b.alias("a"), b.alias("c")
-    pr = (
-        a.join(
-            c,
-            (F.col("c.l_orderkey") == F.col("a.l_orderkey"))
-            & (F.col("c.l_partkey") > F.col("a.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("p1"),
-            F.col("c.l_partkey").alias("p2"),
-        )
-        .agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= 2)
-    )
-    e = pr.select(
-        F.col("p1").alias("u"), F.col("p2").alias("v")
-    ).unionByName(pr.select(F.col("p2").alias("u"), F.col("p1").alias("v")))
+    from .operators.graph import co_purchase_pairs, undirected
+
+    e = undirected(co_purchase_pairs(_t(spark, sf_dir, "lineitem")))
     e = e.localCheckpoint()
     labels = e.select(F.col("u").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
@@ -4511,27 +4403,10 @@ _G_EDGES_SQL = """
         "lists; per-node credit is a map-side-combinable count",
 )
 def q_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    b = li.select("l_orderkey", "l_partkey").distinct()
-    a, c = b.alias("a"), b.alias("c")
-    pr = (
-        a.join(
-            c,
-            (F.col("c.l_orderkey") == F.col("a.l_orderkey"))
-            & (F.col("c.l_partkey") > F.col("a.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("p1"),
-            F.col("c.l_partkey").alias("p2"),
-        )
-        .agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("p1", "p2")
-        .localCheckpoint()
-    )
-    e = pr.unionByName(
-        pr.select(F.col("p2").alias("p1"), F.col("p1").alias("p2"))
-    )
+    from .operators.graph import co_purchase_pairs, undirected
+
+    pr = co_purchase_pairs(_t(spark, sf_dir, "lineitem")).localCheckpoint()
+    e = undirected(pr, "p1", "p2")
     deg = e.groupBy(F.col("p1").alias("u")).agg(F.count("*").alias("d"))
     ab, bc, ac = pr.alias("ab"), pr.alias("bc"), pr.alias("ac")
     triples = (
@@ -4606,27 +4481,10 @@ def q_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFrame:
         "scan + degree table joins; a single moment aggregate",
 )
 def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    b = li.select("l_orderkey", "l_partkey").distinct()
-    a, c = b.alias("a"), b.alias("c")
-    pr = (
-        a.join(
-            c,
-            (F.col("c.l_orderkey") == F.col("a.l_orderkey"))
-            & (F.col("c.l_partkey") > F.col("a.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("p1"),
-            F.col("c.l_partkey").alias("p2"),
-        )
-        .agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("p1", "p2")
-        .localCheckpoint()
-    )
-    e = pr.select(F.col("p1").alias("u"), F.col("p2").alias("v")).unionByName(
-        pr.select(F.col("p2").alias("u"), F.col("p1").alias("v"))
-    )
+    from .operators.graph import co_purchase_pairs, undirected
+
+    pr = co_purchase_pairs(_t(spark, sf_dir, "lineitem")).localCheckpoint()
+    e = undirected(pr)
     deg = e.groupBy(F.col("u").alias("n_")).agg(F.count("*").alias("d"))
     de = (
         e.join(deg.withColumnRenamed("d", "x"), e.u == F.col("n_"))
@@ -4634,28 +4492,10 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(deg.withColumnRenamed("d", "z"), e.v == F.col("n_"))
         .select("x", "z")
     )
-    m = de.agg(
-        F.count("*").cast("decimal(38,0)").alias("n"),
-        F.sum("x").cast("decimal(38,0)").alias("sx"),
-        F.sum("z").cast("decimal(38,0)").alias("sz"),
-        F.sum(F.col("x") * F.col("z")).cast("decimal(38,0)").alias("sxz"),
-        F.sum(F.col("x") * F.col("x")).cast("decimal(38,0)").alias("sxx"),
-        F.sum(F.col("z") * F.col("z")).cast("decimal(38,0)").alias("szz"),
-    )
-    num = (F.col("n") * F.col("sxz") - F.col("sx") * F.col("sz")).cast(
-        "double"
-    )
-    dx = (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
-        "double"
-    )
-    dz = (F.col("n") * F.col("szz") - F.col("sz") * F.col("sz")).cast(
-        "double"
-    )
+    m = de.agg(*pearson_moments())
     return m.select(
         F.col("n").cast("long").alias("n_directed_edges"),
-        F.floor(
-            num / F.sqrt(dx) / F.sqrt(dz) * F.lit(1000000.0)
-        ).cast("long").alias("assortativity_ppm"),
+        pearson_ppm().alias("assortativity_ppm"),
     )
 
 
@@ -4900,19 +4740,7 @@ def q_dedup_distribution_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_filter_impact_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
-    n_tok = F.size(toks)
-    ddr = F.size(F.array_distinct(toks)) * 1.0 / n_tok
-    pr = (
-        F.length(F.regexp_replace(F.col("text"), "[a-zA-Z0-9 ]", "")) * 1.0
-        / F.length("text")
-    )
-    verdict = (
-        F.when(n_tok < 20, "too_short")
-        .when(ddr < 0.4, "low_diversity")
-        .when(pr > 0.1, "high_punct")
-        .otherwise("keep")
-    )
+    verdict = quality_verdict(F.col("text"))
     v = docs.select(
         verdict.alias("verdict"),
         F.col("n_chars").cast("long").alias("n_chars"),
@@ -5272,21 +5100,6 @@ def q_frequent_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         "daily pre-aggregate, one tiny ordered fold per group",
 )
 def q_holt_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _t(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.to_date(F.date_trunc("day", "ts")).alias("d")
-    ).agg(F.count("*").alias("n"))
-    seq = (
-        daily.select(
-            "event_type", F.struct(F.col("d"), F.col("n")).alias("t")
-        )
-        .groupBy("event_type")
-        .agg(F.sort_array(F.collect_list("t")).alias("ts"))
-        .select(
-            "event_type",
-            F.transform(F.col("ts"), lambda t: t["n"]).alias("xs"),
-        )
-    )
     init = F.struct(
         F.element_at("xs", 1).alias("lv"),
         F.lit(0).cast("long").alias("tr"),
@@ -5304,13 +5117,7 @@ def q_holt_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
             (acc["sae"] + F.abs(err)).alias("sae"),
         )
 
-    fold = seq.select(
-        "event_type",
-        F.size("xs").cast("long").alias("n_days"),
-        F.aggregate(
-            F.slice("xs", 2, F.size("xs") - 1), init, step
-        ).alias("a"),
-    )
+    fold = _daily_event_fold(spark, sf_dir, init, step)
     return fold.select(
         "event_type", "n_days",
         F.col("a.lv").alias("level_final"),

@@ -22,6 +22,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .functions.dates import epoch_day
 from .functions.windows import bounded_window
 from .registry import _t, register
 
@@ -559,6 +560,20 @@ def q_order_event_window_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Theil-Sen robust slope over the daily revenue series
 # ---------------------------------------------------------------------------
 
+def _daily_cents_1996_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(day, cents): exact order revenue per epoch day over
+    [1996-01-01, 1996-03-01), the trend tests' daily series."""
+    orders = _t(spark, sf_dir, "orders").select(
+        F.col("o_orderdate").cast("timestamp").alias("odate"),
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
+    ).filter(
+        (F.col("odate") >= "1996-01-01") & (F.col("odate") < "1996-03-01")
+    )
+    return orders.groupBy(epoch_day("odate").alias("day")).agg(
+        F.sum("cents").alias("cents")
+    )
+
+
 @register(
     "theil_sen_slope_daily",
     oracle="""
@@ -594,18 +609,7 @@ def q_order_event_window_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "aggregate with the date filter pushed down",
 )
 def q_theil_sen_slope_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").select(
-        F.col("o_orderdate").cast("timestamp").alias("odate"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    ).filter(
-        (F.col("odate") >= "1996-01-01") & (F.col("odate") < "1996-03-01")
-    )
-    d = (
-        orders.groupBy(
-            F.datediff(F.to_date("odate"), F.lit("1970-01-01")).alias("day")
-        )
-        .agg(F.sum("cents").alias("cents"))
-    )
+    d = _daily_cents_1996_q1(spark, sf_dir)
     a = d.alias("a")
     b = d.alias("b")
     pairs = a.join(b, F.col("b.day") > F.col("a.day")).select(
@@ -670,19 +674,7 @@ def q_theil_sen_slope_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pushed down",
 )
 def q_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    orders = _t(spark, sf_dir, "orders").select(
-        F.col("o_orderdate").cast("timestamp").alias("odate"),
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("cents"),
-    ).filter(
-        (F.col("odate") >= "1996-01-01") & (F.col("odate") < "1996-03-01")
-    )
-    d = (
-        orders.groupBy(
-            F.datediff(F.to_date("odate"), F.lit("1970-01-01")).alias("day")
-        )
-        .agg(F.sum("cents").alias("cents"))
-        .localCheckpoint()
-    )
+    d = _daily_cents_1996_q1(spark, sf_dir).localCheckpoint()
     a, b = d.alias("a"), d.alias("b")
     s = a.join(b, F.col("b.day") > F.col("a.day")).agg(
         F.sum(
@@ -869,7 +861,7 @@ def q_ols_multi_cramer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type") == "purchase"
     ).select(
         F.hour("ts").alias("h"),
-        ((F.datediff(F.to_date("ts"), F.lit("1970-01-01")) + 4) % 7).alias("d"),
+        ((epoch_day("ts") + 4) % 7).alias("d"),
         F.round(F.col("value") * 100).cast("long").alias("y"),
     )
     s = f.agg(
@@ -1453,7 +1445,7 @@ def q_rolling_7d_active_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     du = (
         _t(spark, sf_dir, "events")
         .select(
-            F.datediff(F.to_date("ts"), F.lit("1970-01-01"))
+            epoch_day("ts")
             .cast("long")
             .alias("day"),
             "user_id",

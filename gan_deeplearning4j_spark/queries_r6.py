@@ -22,7 +22,7 @@ boundaries) so the verdict bit cannot flip on ulp differences.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .functions.money import cents_nonneg
@@ -236,52 +236,10 @@ def q_lsh_fixed_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "same cost class as the quantiles exact query",
 )
 def q_approx_quantile_bracket(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_returnflag",
-        F.expr("CAST(round(l_extendedprice * 100) AS BIGINT)").alias("c"),
-    )
-    w = Window.partitionBy("l_returnflag").orderBy("c")
-    r = li.withColumn("r", F.row_number().over(w))
-    n = li.groupBy("l_returnflag").agg(F.count("*").alias("n"))
-    k = n.select(
-        "l_returnflag", "n",
-        F.greatest(F.lit(1).cast("long"),
-                   F.expr("(48 * n) div 100")).alias("lo50r"),
-        F.least(F.col("n"), F.expr("(52 * n + 99) div 100")).alias("hi50r"),
-        F.greatest(F.lit(1).cast("long"),
-                   F.expr("(88 * n) div 100")).alias("lo90r"),
-        F.least(F.col("n"), F.expr("(92 * n + 99) div 100")).alias("hi90r"),
-    )
-    brackets = (
-        r.join(k, "l_returnflag")
-        .groupBy("l_returnflag")
-        .agg(
-            F.min(F.when(F.col("r") == F.col("lo50r"), F.col("c")))
-            .alias("lo50_c"),
-            F.min(F.when(F.col("r") == F.col("hi50r"), F.col("c")))
-            .alias("hi50_c"),
-            F.min(F.when(F.col("r") == F.col("lo90r"), F.col("c")))
-            .alias("lo90_c"),
-            F.min(F.when(F.col("r") == F.col("hi90r"), F.col("c")))
-            .alias("hi90_c"),
-        )
-    )
-    approx = li.groupBy("l_returnflag").agg(
-        F.expr("approx_percentile(c, 0.5D, 100)").alias("a50"),
-        F.expr("approx_percentile(c, 0.9D, 100)").alias("a90"),
-    )
-    return (
-        brackets.join(approx, "l_returnflag")
-        .select(
-            "l_returnflag",
-            "lo50_c", "hi50_c",
-            F.col("a50").between(F.col("lo50_c"), F.col("hi50_c"))
-            .alias("within50"),
-            "lo90_c", "hi90_c",
-            F.col("a90").between(F.col("lo90_c"), F.col("hi90_c"))
-            .alias("within90"),
-        )
-        .orderBy("l_returnflag")
+    from .operators.aggregates import price_percentile_brackets
+
+    return price_percentile_brackets(
+        _t(spark, sf_dir, "lineitem"), [50, 90], 100
     )
 
 
@@ -480,15 +438,10 @@ _PACK_BUDGET = 256  # tokens per training bin
 def q_greedy_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
+    from .operators.packing import n_tokens_col
+
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "source",
-        "doc_id",
-        F.size(F.filter(
-            F.split(F.trim(F.col("text")), r"\s+"),
-            lambda t: F.length(t) > 0,
-        )).cast("long").alias("tok"),
-    )
+    toks = docs.select("source", "doc_id", n_tokens_col().alias("tok"))
     budget = _PACK_BUDGET
 
     def pack(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -555,9 +508,10 @@ def q_greedy_pack_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         "is the textbook WITH RECURSIVE walk. Scale: each level is one "
         "shuffle-on-parent equi-join over the remaining edge set — O(depth) "
         "jobs; when depth can be adversarial the star-contraction engine "
-        "(connected_components(mode='logn'), operators/dedup.py — O(log^2 "
-        "n) rounds regardless of diameter, equivalence-pinned) is the "
-        "drop-in upgrade. No driver-side fact data: loop control reads "
+        "(operators/dedup.py _cc_star_contraction, the escalation target "
+        "of connected_components — O(log^2 n) rounds regardless of "
+        "diameter, equivalence-pinned) is the drop-in upgrade. No "
+        "driver-side fact data: loop control reads "
         "only take(1) emptiness per level",
 )
 def q_bom_explosion_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

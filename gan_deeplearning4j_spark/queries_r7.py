@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .functions.dates import epoch_day
 from .functions.money import cents_nonneg, cents_signed
 
 from .functions.windows import bounded_window
@@ -1431,8 +1432,7 @@ def q_kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("o_orderdate") < "1996-04-01")
     )
     d = o.groupBy(
-        F.datediff(F.col("o_orderdate").cast("date"),
-                   F.lit("1970-01-01").cast("date")).alias("day")
+        epoch_day("o_orderdate").alias("day")
     ).agg(
         F.sum(cents_nonneg(F.col("o_totalprice")))
         .cast("long").alias("cents")
@@ -2206,29 +2206,15 @@ _KCORE_ORACLE = f"""
         "(10 at sf0.01), never a hard-coded depth",
 )
 def q_k_core_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = _t(spark, sf_dir, "lineitem")
-    b = li.select("l_orderkey", "l_partkey").distinct()
-    a, c = b.alias("a"), b.alias("c")
-    edges = (
-        a.join(
-            c,
-            (F.col("c.l_orderkey") == F.col("a.l_orderkey"))
-            & (F.col("c.l_partkey") > F.col("a.l_partkey")),
-        )
-        .groupBy(
-            F.col("a.l_partkey").alias("p1"),
-            F.col("c.l_partkey").alias("p2"),
-        )
-        .agg(F.count("*").alias("w"))
-        .filter(F.col("w") >= 2)
-        .select("p1", "p2")
-        .localCheckpoint(eager=True)
+    from .operators.graph import checkpoint_round, co_purchase_pairs
+
+    edges = co_purchase_pairs(_t(spark, sf_dir, "lineitem")).localCheckpoint(
+        eager=True
     )
     # per round, the peel-set emptiness and the edge-set emptiness ride
     # their checkpoint jobs as observed metrics (r14: the separate
     # limit/count probes were 4 extra jobs per peeling round — ~40 jobs
     # over the data-driven ~10 rounds at sf0.1)
-    from .operators.graph import checkpoint_round
 
     for _ in range(100):  # safety cap far above the data-driven ~10 rounds
         und = edges.select(F.col("p1").alias("node")).union(
@@ -2436,9 +2422,10 @@ def q_cms_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
         "into fixed-point 1/8-wide grid cells (floor(x*8) is "
         "engine-exact), cells with >= 10 points are 'dense', and dense "
         "cells merge through 8-neighbourhood connectivity — computed with "
-        "the package connected_components(mode='logn') star-contraction "
-        "engine (its first registered consumer; isolated dense cells "
-        "become singleton clusters via the left join). Output: per "
+        "the package connected_components (min-label propagation that "
+        "escalates to star contraction past its round cap; isolated "
+        "dense cells become singleton clusters via the left join). "
+        "Output: per "
         "cluster (id = min cell id), cell and point counts. The oracle "
         "replays CC as min-label propagation in a recursive CTE with one "
         "trick: the adjacency CTE carries a SELF-LOOP per node, so the "
@@ -2475,7 +2462,7 @@ def q_dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.abs(F.col("a.gy") - F.col("b.gy")) <= 1)
         & (F.col("b.cell") > F.col("a.cell")),
     ).select(F.col("a.cell").alias("id_a"), F.col("b.cell").alias("id_b"))
-    labels = connected_components(edges, mode="logn")
+    labels = connected_components(edges)
     assigned = cells.join(
         labels.withColumnRenamed("node", "cell"), "cell", "left"
     ).select(
@@ -2729,10 +2716,7 @@ def q_event_type_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_autocorr_lag1_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "orders").groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"),
-            F.lit("1970-01-01").cast("date"),
-        ).alias("day")
+        epoch_day("o_orderdate").alias("day")
     ).agg(F.count("*").cast("long").alias("x"))
     a, b = d.alias("a"), d.alias("b")
     p = a.join(b, F.col("b.day") == F.col("a.day") + 1).select(
@@ -3273,7 +3257,7 @@ def q_table_checksum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cast(cast(round(" + c + " * 100) as long) as string)"
         )
 
-    def epoch_day(c: str):
+    def day_sql(c: str):
         return (
             "cast(datediff(cast(" + c + " as date),"
             " cast('1970-01-01' as date)) as string)"
@@ -3283,7 +3267,7 @@ def q_table_checksum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "concat(cast(o_orderkey as string), '|',"
         " cast(o_custkey as string), '|', o_orderstatus, '|', "
         + cents("o_totalprice") + ", '|', "
-        + epoch_day("o_orderdate") + ", '|', o_orderpriority)"
+        + day_sql("o_orderdate") + ", '|', o_orderpriority)"
     )
     l_row = (
         "concat(cast(l_orderkey as string), '|',"
@@ -3293,7 +3277,7 @@ def q_table_checksum_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         + cents("l_extendedprice") + ", '|', "
         + cents("l_discount") + ", '|', " + cents("l_tax")
         + ", '|', l_returnflag, '|', l_linestatus, '|', "
-        + epoch_day("l_shipdate") + ")"
+        + day_sql("l_shipdate") + ")"
     )
 
     def digest(df: DataFrame, row_expr: str, name: str) -> DataFrame:
@@ -3759,16 +3743,10 @@ def q_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
         "aggregate over the scan; everything after runs on 10 rows",
 )
 def q_ece_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _t(spark, sf_dir, "documents")
-    s = docs.select(
-        (F.least(F.col("n_chars"), F.lit(2000)) * 500).cast("long")
-        .alias("score_e6"),
-        F.when(F.col("lang") == "en", 1).otherwise(0).alias("pos"),
-    )
-    b = s.groupBy(
-        F.least(F.expr("score_e6 div 100000"), F.lit(9)).cast("long")
-        .alias("bin")
-    ).agg(
+    from .operators.aggregates import calibration_scores
+
+    s = calibration_scores(_t(spark, sf_dir, "documents"))
+    b = s.groupBy("bin").agg(
         F.count("*").cast("long").alias("n"),
         F.sum("pos").cast("long").alias("pos"),
         F.sum("score_e6").cast("long").alias("sum_score_e6"),

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .functions.dates import epoch_day
 from .functions.money import cents_nonneg
 
 from .registry import _t, register
@@ -214,6 +215,38 @@ def q_recall_pq_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _next_event_transitions(
+    spark: SparkSession, sf_dir: str,
+) -> tuple[DataFrame, DataFrame]:
+    """The next-event prediction split: ``valid`` holds every consecutive
+    event-type transition (a, b) of a user's stream and ``is_train``, true
+    for the users whose 60-bit md5 hash mod 10 is below 8; it is
+    materialized once for its model and test consumers. ``ranked`` ranks
+    the training transitions out of each state a by count (desc, then b)
+    as (a, b, r)."""
+    from .functions.text import portable_hash60
+
+    ev = _t(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    pairs = ev.select(
+        "user_id", F.col("event_type").alias("a"),
+        F.lead("event_type").over(w).alias("b"),
+    ).filter(F.col("b").isNotNull())
+    valid = pairs.select(
+        "a", "b",
+        (portable_hash60(F.col("user_id").cast("string")) % 10 < 8)
+        .alias("is_train"),
+    ).localCheckpoint(eager=True)
+    wm = Window.partitionBy("a").orderBy(F.desc("cnt"), "b")
+    ranked = (
+        valid.filter("is_train")
+        .groupBy("a", "b").agg(F.count("*").alias("cnt"))
+        .withColumn("r", F.row_number().over(wm).cast("long"))
+        .select("a", "b", "r")
+    )
+    return valid, ranked
+
+
 @register(
     "markov_next_event_accuracy",
     oracle="""
@@ -261,26 +294,9 @@ def q_recall_pq_vs_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_markov_next_event_accuracy(spark: SparkSession, sf_dir: str
                                  ) -> DataFrame:
-    from .functions.text import portable_hash60
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = ev.select(
-        "user_id", F.col("event_type").alias("a"),
-        F.lead("event_type").over(w).alias("b"),
-    ).filter(F.col("b").isNotNull())
-    valid = pairs.select(
-        "a", "b",
-        (portable_hash60(F.col("user_id").cast("string")) % 10 < 8)
-        .alias("is_train"),
-    ).localCheckpoint(eager=True)  # consumed by model + test sides
-    wm = Window.partitionBy("a").orderBy(F.desc("cnt"), "b")
-    model = (
-        valid.filter("is_train")
-        .groupBy("a", "b").agg(F.count("*").alias("cnt"))
-        .withColumn("rn", F.row_number().over(wm))
-        .filter(F.col("rn") == 1)
-        .select("a", F.col("b").alias("pred"))
+    valid, ranked = _next_event_transitions(spark, sf_dir)
+    model = ranked.filter(F.col("r") == 1).select(
+        "a", F.col("b").alias("pred")
     )
     return (
         valid.filter(~F.col("is_train"))
@@ -490,26 +506,7 @@ def q_debounce_suppressed_counts(spark: SparkSession, sf_dir: str
         "stream, one final aggregate",
 )
 def q_mrr_next_event(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .functions.text import portable_hash60
-
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    pairs = ev.select(
-        "user_id", F.col("event_type").alias("a"),
-        F.lead("event_type").over(w).alias("b"),
-    ).filter(F.col("b").isNotNull())
-    valid = pairs.select(
-        "a", "b",
-        (portable_hash60(F.col("user_id").cast("string")) % 10 < 8)
-        .alias("is_train"),
-    ).localCheckpoint(eager=True)  # model + test consumers
-    wm = Window.partitionBy("a").orderBy(F.desc("cnt"), "b")
-    ranked = (
-        valid.filter("is_train")
-        .groupBy("a", "b").agg(F.count("*").alias("cnt"))
-        .withColumn("r", F.row_number().over(wm).cast("long"))
-        .select("a", "b", "r")
-    )
+    valid, ranked = _next_event_transitions(spark, sf_dir)
     return (
         valid.filter(~F.col("is_train"))
         .join(F.broadcast(ranked), ["a", "b"])
@@ -698,11 +695,10 @@ def q_encoding_advisor_events(spark: SparkSession, sf_dir: str
         "value is the hub id",
 )
 def q_bfs_hops_from_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.graph import co_purchase_pairs
+    from .operators.graph import co_purchase_pairs, undirected
 
-    e = co_purchase_pairs(_t(spark, sf_dir, "lineitem"))
-    und = e.select(F.col("p1").alias("node"), F.col("p2").alias("nb")).union(
-        e.select(F.col("p2").alias("node"), F.col("p1").alias("nb"))
+    und = undirected(
+        co_purchase_pairs(_t(spark, sf_dir, "lineitem")), "node", "nb"
     ).localCheckpoint(eager=True)  # consumed once per BFS round
 
     hub = (
@@ -769,10 +765,7 @@ def q_bfs_hops_from_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_gap_fill_locf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "orders").groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"),
-            F.lit("1970-01-01").cast("date"),
-        ).alias("day")
+        epoch_day("o_orderdate").alias("day")
     ).agg(
         F.count("*").cast("long").alias("n_orders"),
         F.sum(
@@ -860,10 +853,7 @@ def q_gap_fill_locf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_haar_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _t(spark, sf_dir, "orders").groupBy(
-        F.datediff(
-            F.col("o_orderdate").cast("date"),
-            F.lit("1970-01-01").cast("date"),
-        ).alias("day")
+        epoch_day("o_orderdate").alias("day")
     ).agg(F.count("*").cast("long").alias("x"))
     base = d.agg(F.min("day").alias("lo"))
     spine = spark.range(256).select(F.col("id").alias("off"))
@@ -1724,16 +1714,10 @@ def q_isotonic_calibration_bins(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     from .functions.windows import bounded_window
 
-    docs = _t(spark, sf_dir, "documents")
-    s = docs.select(
-        (F.least(F.col("n_chars"), F.lit(2000)) * 500).cast("long")
-        .alias("score_e6"),
-        F.when(F.col("lang") == "en", 1).otherwise(0).alias("pos"),
-    )
-    b = s.groupBy(
-        F.least(F.expr("score_e6 div 100000"), F.lit(9)).cast("long")
-        .alias("bin")
-    ).agg(
+    from .operators.aggregates import calibration_scores
+
+    s = calibration_scores(_t(spark, sf_dir, "documents"))
+    b = s.groupBy("bin").agg(
         F.count("*").cast("long").alias("n"),
         F.sum("pos").cast("long").alias("pos"),
     ).localCheckpoint()  # 10 rows; consumed by c, inner_min, final join
@@ -2308,7 +2292,7 @@ def q_stl_lite_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     w7 = bounded_window().orderBy("day").rowsBetween(-3, 3)
     t = d.select(
         "day", "cents",
-        ((F.datediff(F.col("day"), F.lit("1970-01-01").cast("date")) + 3)
+        ((epoch_day("day") + 3)
          % 7).cast("long").alias("dow"),
         F.sum("cents").over(w7).cast("long").alias("s7"),
         F.count("*").over(w7).cast("long").alias("c7"),
@@ -2766,12 +2750,11 @@ def _brandes_oracle(maxh: int = 4) -> str:
         "standard sampled-sources sum over this exact kernel",
 )
 def q_brandes_dependency_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .operators.graph import co_purchase_pairs
+    from .operators.graph import co_purchase_pairs, undirected
 
     maxh = 4
-    e = co_purchase_pairs(_t(spark, sf_dir, "lineitem"))
-    und = e.select(F.col("p1").alias("node"), F.col("p2").alias("nb")).union(
-        e.select(F.col("p2").alias("node"), F.col("p1").alias("nb"))
+    und = undirected(
+        co_purchase_pairs(_t(spark, sf_dir, "lineitem")), "node", "nb"
     ).localCheckpoint(eager=True)  # consumed per forward + backward level
 
     hub = (
@@ -3097,8 +3080,7 @@ def q_ransac_trend_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = _t(spark, sf_dir, "orders")
     d = o.groupBy(
-        F.datediff(F.col("o_orderdate").cast("date"),
-                   F.lit("1970-01-01").cast("date")).cast("long").alias("x")
+        epoch_day("o_orderdate").cast("long").alias("x")
     ).agg(
         F.sum(cents_nonneg(F.col("o_totalprice")))
         .cast("long").alias("y")
@@ -3460,8 +3442,7 @@ def q_max_drawdown_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = _t(spark, sf_dir, "orders")
     d = o.groupBy(
-        F.datediff(F.col("o_orderdate").cast("date"),
-                   F.lit("1970-01-01").cast("date")).alias("day")
+        epoch_day("o_orderdate").alias("day")
     ).agg(
         F.sum(cents_nonneg(F.col("o_totalprice")))
         .cast("long").alias("cents")
@@ -3527,8 +3508,7 @@ def q_ordinal_pattern_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = _t(spark, sf_dir, "orders")
     d = o.groupBy(
-        F.datediff(F.col("o_orderdate").cast("date"),
-                   F.lit("1970-01-01").cast("date")).alias("day")
+        epoch_day("o_orderdate").alias("day")
     ).agg(
         F.sum(cents_nonneg(F.col("o_totalprice")))
         .cast("long").alias("r0")

@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .functions.dates import epoch_day
 from .functions.money import cents_nonneg, cents_signed
 
 from .registry import _t, register
@@ -66,13 +67,11 @@ def _bday_expr(d: str) -> str:
 def q_business_day_ship_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag",
-        F.datediff(F.col("l_shipdate").cast("date"),
-                   F.lit("1970-01-01").cast("date")).alias("sd"),
+        epoch_day("l_shipdate").alias("sd"),
     )
     o = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.datediff(F.col("o_orderdate").cast("date"),
-                   F.lit("1970-01-01").cast("date")).alias("od"),
+        epoch_day("o_orderdate").alias("od"),
     )
     sp_expr = _bday_expr("sd").replace("//", "div") + \
         " - (" + _bday_expr("od").replace("//", "div") + ")"
@@ -320,8 +319,7 @@ def q_sax_motif_census(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = _t(spark, sf_dir, "orders")
     d = o.groupBy(
-        F.datediff(F.col("o_orderdate").cast("date"),
-                   F.lit("1970-01-01").cast("date")).alias("day")
+        epoch_day("o_orderdate").alias("day")
     ).agg(
         F.expr("sum(cast(round(o_totalprice * 100) as long)) div 10000")
         .cast("long").alias("v")
@@ -331,27 +329,18 @@ def q_sax_motif_census(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("v").cast("long").alias("s"),
         F.sum(F.col("v") * F.col("v")).cast("long").alias("ss"),
     )
+    dev = F.col("v") * F.col("n") - F.col("s")
+    q = (
+        F.lit(0.6744897501960817)
+        * F.sqrt((F.col("n") * F.col("ss")
+                  - F.col("s") * F.col("s")).cast("double"))
+        / F.col("n")
+    )
     z = d.crossJoin(F.broadcast(m)).select(
         "day",
-        F.when(
-            F.col("v") * F.col("n") - F.col("s")
-            < -F.floor(
-                F.lit(0.6744897501960817)
-                * F.sqrt((F.col("n") * F.col("ss")
-                          - F.col("s") * F.col("s")).cast("double"))
-                / F.col("n")
-            ),
-            "a",
-        )
-        .when(F.col("v") * F.col("n") - F.col("s") < 0, "b")
-        .when(
-            (F.col("v") * F.col("n") - F.col("s")).cast("double")
-            < F.lit(0.6744897501960817)
-            * F.sqrt((F.col("n") * F.col("ss")
-                      - F.col("s") * F.col("s")).cast("double"))
-            / F.col("n"),
-            "c",
-        )
+        F.when(dev < -F.floor(q), "a")
+        .when(dev < 0, "b")
+        .when(dev.cast("double") < q, "c")
         .otherwise("d").alias("sym"),
     )
     bw = bounded_window(F.col("day"))
@@ -532,8 +521,7 @@ def q_croston_intermittent_demand(
 ) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem")
     dem = li.filter(F.col("l_quantity") == 50).groupBy(
-        F.datediff(F.col("l_shipdate").cast("date"),
-                   F.lit("1970-01-01").cast("date")).alias("day")
+        epoch_day("l_shipdate").alias("day")
     ).agg(F.count("*").cast("long").alias("x"))
     from .functions.windows import bounded_window
 
@@ -2364,7 +2352,7 @@ def q_robustness_hub_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = None
     for variant, edges in (("dehubbed", dehubbed), ("full", pr)):
-        lab = connected_components(edges, "p1", "p2", mode="logn")
+        lab = connected_components(edges, "p1", "p2")
         comps = lab.groupBy("comp").agg(
             F.count("*").cast("long").alias("sz")
         )
@@ -2634,9 +2622,7 @@ def q_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ljung_box_whiteness(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     daily = orders.select(
-        F.datediff(F.col("o_orderdate").cast("date"),
-                   F.lit("1970-01-01").cast("date")).cast("long")
-        .alias("day")
+        epoch_day("o_orderdate").cast("long").alias("day")
     ).groupBy("day").agg(F.count("*").cast("long").alias("c"))
     tot = daily.agg(
         F.count("*").cast("long").alias("n"),
@@ -3051,9 +3037,7 @@ def _dft_oracle() -> str:
 def q_dft_power_topfreq(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     daily = orders.select(
-        F.datediff(F.col("o_orderdate").cast("date"),
-                   F.lit("1970-01-01").cast("date")).cast("long")
-        .alias("day"),
+        epoch_day("o_orderdate").cast("long").alias("day"),
         F.expr("cast(round(o_totalprice * 100) as long)").alias("cents"),
     ).groupBy("day").agg(F.sum("cents").cast("long").alias("c"))
     tot = daily.agg(
@@ -3772,9 +3756,7 @@ _HW_ORACLE = """
 def q_holt_winters_seasonal(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     daily = orders.select(
-        F.datediff(F.col("o_orderdate").cast("date"),
-                   F.lit("1970-01-01").cast("date")).cast("long")
-        .alias("day")
+        epoch_day("o_orderdate").cast("long").alias("day")
     ).groupBy("day").agg(F.count("*").cast("long").alias("c"))
     packed = daily.agg(
         F.expr(
@@ -3964,9 +3946,7 @@ def q_newsvendor_stock_level(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = _t(spark, sf_dir, "orders")
     daily = orders.select(
-        F.datediff(F.col("o_orderdate").cast("date"),
-                   F.lit("1970-01-01").cast("date")).cast("long")
-        .alias("day")
+        epoch_day("o_orderdate").cast("long").alias("day")
     ).groupBy("day").agg(F.count("*").cast("long").alias("d"))
     hist = daily.groupBy("d").agg(F.count("*").cast("long").alias("t"))
     wc = bounded_window("d").rowsBetween(

@@ -47,12 +47,6 @@ def write_time_partitioned(
     df.withColumn("__pt", part).write.mode("overwrite").partitionBy("__pt").parquet(path)
 
 
-def repartition_for_join(df: DataFrame, keys: list[str], n: int | None = None) -> DataFrame:
-    """Pre-shuffle once on the join key so N downstream joins/aggs on the
-    same key reuse the partitioning (Exchange reuse)."""
-    return df.repartition(n, *[F.col(k) for k in keys]) if n else df.repartition(*[F.col(k) for k in keys])
-
-
 def zorder_value(cols: list, bits: int = 16):
     """Z-order (Morton) interleave of N integer columns into one long.
 

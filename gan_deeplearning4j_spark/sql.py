@@ -10,6 +10,9 @@ plans both identically — the view layer below adds zero execution cost
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from typing import Iterator
+
 from pyspark.sql import DataFrame, SparkSession
 
 from .io import TABLES, load_table
@@ -31,6 +34,23 @@ def sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:
     """One-shot: register views and run a SQL query against them."""
     register_tables(spark, sf_dir)
     return spark.sql(query)
+
+
+@contextmanager
+def scripting(spark: SparkSession) -> Iterator[None]:
+    """Enable SQL scripting (BEGIN..END blocks) for the ``with`` block, then
+    restore the session's previous setting, so a later query on the shared
+    session does not inherit scripting mode."""
+    key = "spark.sql.scripting.enabled"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "true")
+    try:
+        yield
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
 
 
 # SQL scalar UDFs (Spark SQL `CREATE FUNCTION ... RETURN <expr>`): the

@@ -52,22 +52,6 @@ def tumbling_agg(events: DataFrame, width: str = "1 hour",
     )
 
 
-def sliding_agg(events: DataFrame, width: str = "1 hour", slide: str = "15 minutes",
-                watermark: str = "2 hours") -> DataFrame:
-    """Sliding-window variant (each event lands in width/slide windows)."""
-    src = events.withWatermark("ts", watermark) if events.isStreaming else events
-    return (
-        src.groupBy(F.window("ts", width, slide).alias("win"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
-    )
-
-
 def session_agg(events: DataFrame, gap: str = "30 minutes",
                 watermark: str = "2 hours") -> DataFrame:
     """Session-window aggregate per user: Spark merges gap-connected events

@@ -20,6 +20,10 @@
 3. Loud failures: no package module guards with a bare ``assert`` (stripped
    under ``python -O``) or swallows every exception with a handler whose
    body is only ``pass`` or ``return None``.
+
+4. One definition per piece of query logic: no expression of
+   ``_COPY_MIN_NODES`` or more AST nodes appears twice across the query
+   modules — a repeated block calls one shared helper instead.
 """
 
 from __future__ import annotations
@@ -31,6 +35,8 @@ import pathlib
 from pyspark.sql import functions as F
 
 from gan_deeplearning4j_spark.queries import REGISTRY
+
+_PKG = pathlib.Path(__file__).resolve().parents[1] / "gan_deeplearning4j_spark"
 
 
 def _cache_empty(spark) -> bool:
@@ -185,7 +191,7 @@ def _swallows_everything(handler: ast.ExceptHandler) -> bool:
 
 
 def test_package_fails_loudly():
-    pkg = pathlib.Path(__file__).resolve().parents[1] / "gan_deeplearning4j_spark"
+    pkg = _PKG
     bad = []
     for path in sorted(pkg.rglob("*.py")):
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
@@ -196,3 +202,38 @@ def test_package_fails_loudly():
                   and _swallows_everything(node)):
                 bad.append(f"{where} swallowed exception")
     assert not bad, bad
+
+
+# Smallest expression (in AST nodes) counted as a hand copy: a two-line
+# column expression is about 50 nodes, so a repeat of this size is a
+# block of logic, not a shared idiom such as F.col("x").cast("long").
+_COPY_MIN_NODES = 50
+
+
+def _large_expressions(tree: ast.AST):
+    """(node, ast.dump) for every expression of >= _COPY_MIN_NODES nodes."""
+    sizes: dict[int, int] = {}
+
+    def size(node: ast.AST) -> int:
+        n = 1 + sum(size(c) for c in ast.iter_child_nodes(node))
+        sizes[id(node)] = n
+        return n
+
+    size(tree)
+    for node in ast.walk(tree):
+        if isinstance(node, ast.expr) and sizes[id(node)] >= _COPY_MIN_NODES:
+            yield node, ast.dump(node)
+
+
+def test_query_modules_repeat_no_expression():
+    seen: dict[str, str] = {}
+    copies = []
+    for path in sorted(_PKG.glob("queries*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        for node, key in _large_expressions(tree):
+            where = f"{path.name}:{node.lineno}"
+            if key in seen:
+                copies.append(f"{where} repeats {seen[key]}")
+            else:
+                seen[key] = where
+    assert not copies, copies

@@ -335,17 +335,21 @@ def test_connected_components_transitive_chains(spark):
 
 
 def test_connected_components_logn_matches_prop(spark):
-    """mode='logn' (alternating large-star/small-star, Kiveris et al.
-    SoCC'14) must produce IDENTICAL (node, comp) labels to min-label
-    propagation — random graphs across densities, plus the chain fixture."""
+    """Star contraction (``_cc_star_contraction``, alternating
+    large-star/small-star, Kiveris et al. SoCC'14) must produce IDENTICAL
+    (node, comp) labels to min-label propagation — random graphs across
+    densities, plus the chain fixture."""
     import random
 
-    from gan_deeplearning4j_spark.operators.dedup import connected_components
+    from gan_deeplearning4j_spark.operators.dedup import (
+        _cc_star_contraction,
+        connected_components,
+    )
 
     cases = [
         [(0, 1), (1, 2), (2, 3), (10, 11), (20, 21), (21, 22)],
         # self-loop contract (ADVICE r7): node 7 has ONLY a self-loop and
-        # must come out as its own singleton in BOTH modes; node 1 has a
+        # must come out as its own singleton in BOTH engines; node 1 has a
         # self-loop AND real edges and must appear exactly once
         [(0, 1), (1, 1), (7, 7), (3, 4)],
     ]
@@ -358,13 +362,13 @@ def test_connected_components_logn_matches_prop(spark):
     # prop needs max_iter >= the min node's eccentricity: the seed-3 graph
     # has a 38-node tree component that the default 20 rounds do NOT cover
     # (writing this test caught prop warning-and-splitting on it while
-    # logn was exact) — which is the whole point of the logn engine
+    # star contraction was exact) — which is why propagation escalates
     for edges in cases:
         df = spark.createDataFrame(edges, "id_a long, id_b long")
         prop = {(r["node"], r["comp"])
                 for r in connected_components(df, max_iter=100).collect()}
-        logn = {(r["node"], r["comp"])
-                for r in connected_components(df, mode="logn").collect()}
+        logn = {(r["node"], r["comp"]) for r in
+                _cc_star_contraction(df, "id_a", "id_b").collect()}
         assert prop == logn, (sorted(prop - logn)[:5], sorted(logn - prop)[:5])
 
 
@@ -376,7 +380,7 @@ def test_connected_components_logn_deep_chain(spark):
     import random
     import warnings as w
 
-    from gan_deeplearning4j_spark.operators.dedup import connected_components
+    from gan_deeplearning4j_spark.operators.dedup import _cc_star_contraction
 
     rng = random.Random(666)
     perm = list(range(1024))
@@ -385,7 +389,7 @@ def test_connected_components_logn_deep_chain(spark):
     df = spark.createDataFrame(edges, "id_a long, id_b long")
     with w.catch_warnings():
         w.simplefilter("error", RuntimeWarning)  # non-convergence = failure
-        out = connected_components(df, mode="logn").collect()
+        out = _cc_star_contraction(df, "id_a", "id_b").collect()
     assert len(out) == 1024
     assert {r["comp"] for r in out} == {0}
     assert {r["node"] for r in out} == set(range(1024))
@@ -1472,13 +1476,16 @@ def test_gram_power_eigvec_rejects_degenerate_input(spark):
 def test_connected_components_prop_escalates_past_max_iter(spark):
     """A 256-node shuffled path (diameter 255) with max_iter=5: min-label
     propagation cannot converge, and must escalate to the star-contraction
-    engine and return EXACT components — identical to mode='logn' — with
-    no RuntimeWarning (the warn-and-return-split-labels path is deleted;
-    r8 verdict ask #3)."""
+    engine and return EXACT components — identical to star contraction
+    run directly — with no RuntimeWarning (the warn-and-return-split-labels
+    path is deleted; r8 verdict ask #3)."""
     import random
     import warnings as w
 
-    from gan_deeplearning4j_spark.operators.dedup import connected_components
+    from gan_deeplearning4j_spark.operators.dedup import (
+        _cc_star_contraction,
+        connected_components,
+    )
 
     rng = random.Random(9)
     perm = list(range(256))
@@ -1493,7 +1500,7 @@ def test_connected_components_prop_escalates_past_max_iter(spark):
         prop = {(r["node"], r["comp"])
                 for r in connected_components(df, max_iter=5).collect()}
     logn = {(r["node"], r["comp"])
-            for r in connected_components(df, mode="logn").collect()}
+            for r in _cc_star_contraction(df, "id_a", "id_b").collect()}
     assert prop == logn
     assert {c for _, c in prop} == {0, 300, 400}
     assert len(prop) == 260

@@ -179,7 +179,7 @@ def test_snapshot_stale_claim_repair(spark, tmp_path, monkeypatch):
 def test_connected_components_logn_raises_on_round_cap(spark):
     """Star contraction must never RETURN a possibly-split labeling: with
     an absurdly low max_iter on a chain it raises instead of warning —
-    the escalation path from mode='prop' relies on this strictness
+    the escalation path from propagation relies on this strictness
     (ADVICE r9)."""
     from gan_deeplearning4j_spark.operators.dedup import _cc_star_contraction
 
